@@ -1,8 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated star-schema snapshot (TESTDATA.md).
   *
@@ -18,7 +23,74 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * with no Spark job. Spark's non-merging inference reads ONE footer —
+    * `_common_metadata`, else `_metadata`, else the first data file of
+    * the sorted leaf listing — but inside a parallelized job even for
+    * one file, so every table read paid a whole job. This reads that
+    * footer here and converts it with Spark's own code, so the Spark
+    * row-metadata key still wins over the logical types (the precedence
+    * [[guardLegacyLongTs]] arbitrates) and the nanosAsLong/NTZ rules
+    * are the session's. An empty directory or a missing path fails with
+    * inference's error condition (UNABLE_TO_INFER_SCHEMA,
+    * PATH_NOT_FOUND); a TIMESTAMP(NANOS) footer without the legacy conf
+    * fails with the [[GraftSession.requireNanosConf]] remedy, not
+    * PARQUET_TYPE_ILLEGAL. `spark.sql.parquet.mergeSchema` is not
+    * mirrored: no graft session turns it on. */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): StructType = {
+    val leaves = parquetLeaves(spark, path).getOrElse(
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> path)))
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val file = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(leaves.find(f => !isSummary(f)))
+      .getOrElse(throw new AnalysisException(
+        "UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    catch {
+      case e: AnalysisException
+          if Option(e.getMessage).exists(_.contains("NANOS")) =>
+        GraftSession.requireNanosConf(spark) // throws the canonical remedy
+        throw e // conf on yet NANOS still rejected — surface the original
+    }
+  }
+
+  /** Leaf files under `path` as Spark's file index lists them, sorted
+    * by path: directories walked, hidden names (`_x`, `.x`,
+    * `x._COPYING_`) skipped except the parquet summary files; a file
+    * path is its own leaf. None when the path does not exist. */
+  private def parquetLeaves(spark: SparkSession,
+      path: String): Option[Seq[FileStatus]] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !n.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) &&
+        !n.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    try Some(walk(fs.getFileStatus(root)).sortBy(_.getPath.toString))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private def isSummary(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    n == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE ||
+      n == ParquetFileWriter.PARQUET_METADATA_FILE
+  }
 
   /** Per-table scanned-schema expectations: column → the catalog type
     * strings the loaders and declared queries are known to handle.
@@ -72,14 +144,16 @@ object Tables {
     * `SnapshotIngest.headerDrift` philosophy applied to the fixture
     * seam: a snapshot writer changing an encoding (as the events table's
     * ts has, twice) surfaces here as a named diff naming the table, the
-    * column, and both types. Footer-only reads — costs one file listing
-    * per table, no data scan. Extra columns are tolerated (queries
-    * select by name; a snapshot growing a column breaks nothing). */
+    * column, and both types. Footer-only reads: one file listing and
+    * one footer per table, read on the driver by [[footerSchema]] — no
+    * DataFrame, no Spark job, no data scan. Extra columns are tolerated
+    * (queries select by name; a snapshot growing a column breaks
+    * nothing). */
   def validate(spark: SparkSession, dir: String,
       tables: Seq[String] = all): Unit = {
     val diffs = tables.flatMap { t =>
       try {
-        val scanned = spark.read.parquet(s"$dir/$t.parquet").schema
+        val scanned = footerSchema(spark, s"$dir/$t.parquet")
         // events.ts scanning as LONG is a legal legacy encoding ONLY
         // when the footer agrees it is nanos — run the stale-metadata
         // arbitration here too, or the gate would bless a snapshot
@@ -99,14 +173,10 @@ object Tables {
           }
         }
       } catch {
-        case e: IllegalStateException => throw e // loader remedies pass through
+        // loader remedies (stale metadata, nanos without the conf) pass
+        // through with their named fix
+        case e: IllegalStateException => throw e
         case e: Exception =>
-          // a nanos snapshot read without the legacy conf fails footer
-          // conversion before the per-column diff can run — route it to
-          // the same canonical requireNanosConf remedy the loaders give,
-          // not a generic "unreadable" line burying the fix
-          if (Option(e.getMessage).exists(_.contains("NANOS")))
-            GraftSession.requireNanosConf(spark) // throws the remedy if conf off
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             .linesIterator.take(1).mkString
           Seq(s"$t: unreadable ($msg)")
@@ -146,18 +216,10 @@ object Tables {
     *    NTZ-epoch `timestampadd` — i.e. the naive rendering of the
     *    instant in UTC, matching what a DuckDB oracle reads natively. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    // a nanos snapshot without the legacy conf fails Spark's (eager)
-    // footer-schema conversion before the type branch below can run —
-    // intercept that one failure so the remedy is named here, not in a
-    // PARQUET_TYPE_ILLEGAL wall of text
-    val raw =
-      try spark.read.parquet(s"$dir/events.parquet")
-      catch {
-        case e: Exception
-            if Option(e.getMessage).exists(_.contains("NANOS")) =>
-          GraftSession.requireNanosConf(spark) // throws the canonical remedy
-          throw e // conf on yet NANOS still rejected — surface the original
-      }
+    // a nanos snapshot without the legacy conf fails the footer-schema
+    // conversion before the type branch below can run — footerSchema
+    // names the remedy then, not a PARQUET_TYPE_ILLEGAL wall of text
+    val raw = read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case TimestampNTZType => raw
       case LongType =>
@@ -203,19 +265,10 @@ object Tables {
   private[graft] def guardLegacyLongTs(spark: SparkSession, path: String,
       column: String = "ts"): Unit = {
     import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val hPath = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = hPath.getFileSystem(conf)
-    val files: Seq[org.apache.hadoop.fs.Path] =
-      try {
-        if (fs.getFileStatus(hPath).isFile) Seq(hPath)
-        else fs.listStatus(hPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map(_.getPath).toSeq
-      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val files = parquetLeaves(spark, path).getOrElse(Seq.empty)
+      .filterNot(isSummary).map(_.getPath)
     files.foreach { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       val ann =

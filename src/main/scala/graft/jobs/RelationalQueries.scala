@@ -405,15 +405,19 @@ object RelationalQueries {
 
   // ---------------------------------------------------------------- q26
   /** Pearson correlation matrix over lineitem measures (SURVEY M2's
-    * distributed half): one aggregation pass, no shuffle of raw rows. */
+    * distributed half): one aggregation pass, no shuffle of raw rows.
+    * A near-zero negative correlation rounds to −0.0 in DuckDB but to
+    * +0.0 in Spark (its round goes through BigDecimal, which has no
+    * signed zero); `+ 0.0` (−0.0 + 0.0 = +0.0 in IEEE 754) declares
+    * +0.0 on both sides of the pair, oracle SQL included. */
   def q26CorrMatrix(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+    def r(a: String, b: String) = round(corr(col(a), col(b)), 4) + 0.0
     t(spark, dir, "lineitem")
       .agg(
-        round(corr($"l_quantity", $"l_extendedprice"), 4).as("corr_qty_price"),
-        round(corr($"l_quantity", $"l_discount"), 4).as("corr_qty_disc"),
-        round(corr($"l_extendedprice", $"l_tax"), 4).as("corr_price_tax"),
-        round(corr($"l_discount", $"l_tax"), 4).as("corr_disc_tax"))
+        r("l_quantity", "l_extendedprice").as("corr_qty_price"),
+        r("l_quantity", "l_discount").as("corr_qty_disc"),
+        r("l_extendedprice", "l_tax").as("corr_price_tax"),
+        r("l_discount", "l_tax").as("corr_disc_tax"))
   }
 
   // ---------------------------------------------------------------- q38
@@ -619,10 +623,10 @@ object RelationalQueries {
          UNION
          SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996""",
     "q26_corr_matrix" ->
-      """SELECT round(corr(l_quantity, l_extendedprice),4) AS corr_qty_price,
-         round(corr(l_quantity, l_discount),4) AS corr_qty_disc,
-         round(corr(l_extendedprice, l_tax),4) AS corr_price_tax,
-         round(corr(l_discount, l_tax),4) AS corr_disc_tax
+      """SELECT round(corr(l_quantity, l_extendedprice),4) + 0.0 AS corr_qty_price,
+         round(corr(l_quantity, l_discount),4) + 0.0 AS corr_qty_disc,
+         round(corr(l_extendedprice, l_tax),4) + 0.0 AS corr_price_tax,
+         round(corr(l_discount, l_tax),4) + 0.0 AS corr_disc_tax
          FROM lineitem""",
     "q27_global_topk" ->
       """SELECT o_orderkey, o_custkey, round(o_totalprice,4) AS o_totalprice

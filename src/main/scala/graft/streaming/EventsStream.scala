@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -41,12 +41,13 @@ object EventsStream {
   /** Streaming read of an events parquet DIRECTORY (Spark's file source
     * requires a directory it can watch for new files; schema must be
     * declared). Schema-adaptive like the batch loader
-    * ([[graft.Tables]] `loadEvents`): a one-off batch peek of the
-    * directory's footer schema picks the generation, then the declared
-    * stream schema and the normalization match it. Downstream contract
-    * is unchanged either way: `ts` emerges as TimestampType (watermark
-    * column), micros precision, instant = the snapshot's naive micros
-    * read as UTC — timezone-invariant in every branch
+    * ([[graft.Tables]] `loadEvents`): one driver-side footer read
+    * (`Tables.footerSchema`, no Spark job) picks the generation, then
+    * the declared stream schema and the normalization match it.
+    * Downstream contract is unchanged either way: `ts` emerges as
+    * TimestampType (watermark column), micros precision, instant = the
+    * snapshot's naive micros read as UTC — timezone-invariant in every
+    * branch
     * (`timestampdiff` against an NTZ epoch is pure naive arithmetic;
     * `timestamp_micros` of the raw nanos never consults the session
     * TZ). The nanos branch still requires the legacy conf from the
@@ -78,16 +79,10 @@ object EventsStream {
       emptyDirEncoding: org.apache.spark.sql.types.DataType =
         TimestampNTZType): DataFrame = {
     val scanned =
-      try spark.read.parquet(eventsDir).schema("ts").dataType
+      try graft.Tables.footerSchema(spark, eventsDir)("ts").dataType
       catch {
-        case e: Exception
-            if Option(e.getMessage).exists(_.contains("NANOS")) =>
-          graft.GraftSession.requireNanosConf(spark) // throws the remedy
-          throw e                                    // conf on ⇒ unreachable
-        case e: Exception
-            if Option(e.getMessage).exists(m =>
-              m.contains("UNABLE_TO_INFER_SCHEMA") ||
-                m.contains("PATH_NOT_FOUND")) =>
+        case e: AnalysisException
+            if Set("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")(e.getCondition) =>
           // watched directory is empty — or not created yet (a stream
           // often starts before its producer's first file lands; the
           // pre-adaptive revision declared a static schema and never
