@@ -1,16 +1,15 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The FLAT-artifact manifest sidecar — [[PostingsManifest]]'s shape
-  * applied to un-partitioned directory artifacts (the exact-hash and
-  * winnow indexes today; any single-directory parquet artifact a
-  * family adopts next): one tiny driver-written text file
-  * (`<artifact>/_manifest`, invisible to readers — Spark skips
-  * `_`-prefixed paths) recording the artifact's family tag, its
-  * embedded parameters as key→value strings, and every data file with
-  * exact bytes + footer row counts.
+/** The FLAT-artifact manifest sidecar — the [[ManifestLog]] codec for
+  * directory artifacts that are not cell-partitioned (the exact-hash,
+  * minhash-band and winnow indexes and the packed postings snapshot):
+  * a driver-written base + delta log (`<artifact>/_manifest`, invisible
+  * to readers — Spark skips `_`-prefixed paths) recording the
+  * artifact's family tag, its embedded parameters as key→value
+  * strings, and every data file with exact bytes + footer row counts.
   *
   * What it buys, same as the postings family: serve-time planning with
   * ZERO filesystem listings ([[readFlat]] plans the scan from a
@@ -35,19 +34,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of directory walks (init-user-db.sh:119-120), the same move Delta
   * Lake/Iceberg make with their transaction logs.
   */
-object ArtifactManifest {
+object ArtifactManifest extends ManifestLog {
 
-  /** One data file at the artifact root: exact physical `bytes` (the
-    * parquet reader seeks its footer at length − 8) and footer `rows`. */
+  /** One data file, `file` relative to the artifact root: exact
+    * physical `bytes` (the parquet reader seeks its footer at
+    * length − 8) and footer `rows`. */
   case class FileEntry(file: String, bytes: Long, rows: Long)
 
-  /** `logSeq`/`logDeltas` are READ-SIDE bookkeeping of the incremental
-    * log (the highest delta sequence replayed and how many were) — never
-    * persisted: [[commit]] uses them to name the next delta file and to
-    * decide when to auto-fold, exactly as the postings family's
-    * [[PostingsManifest.State]] does. */
   case class State(family: String, params: Map[String, String],
-      files: Seq[FileEntry], logSeq: Long = 0L, logDeltas: Int = 0) {
+      files: Seq[FileEntry], logSeq: Long = 0L, logDeltas: Int = 0)
+      extends ManifestLog.Logged[FileEntry] {
     def totalFiles: Int = files.size
     def totalRows: Long = files.map(_.rows).sum
     def totalBytes: Long = files.map(_.bytes).sum
@@ -55,316 +51,73 @@ object ArtifactManifest {
       copy(files = files ++ entries)
   }
 
-  private val FormatHeader = "graft-artifact-manifest\t1"
+  type Entry = FileEntry
 
-  def manifestPath(path: String): Path =
-    new Path(path.stripSuffix("/"), "_manifest")
+  protected val baseHeader = "graft-artifact-manifest\t1"
+  protected val deltaHeader = "graft-artifact-delta\t1"
+  protected val entryArity = 3
+  protected val keyArity = 1
 
-  /** The incremental log: `_manifest_log/delta.<seq>` line-files, one
-    * per append, folded into the base `_manifest` when [[commit]]'s
-    * threshold trips or any full [[write]] runs — the
-    * [[PostingsManifest.logDir]] machinery applied to the FLAT
-    * families. What it buys: an append's manifest write is ∝ the
-    * batch's own file count, never ∝ total files (the single-file
-    * rewrite was O(artifact files) per append — at a daily-ingest
-    * cadence between monthly compactions the exact-hash manifest
-    * rewrite grew linearly, the r17 VERDICT seam). */
-  def logDir(path: String): Path =
-    new Path(path.stripSuffix("/"), "_manifest_log")
+  protected def encode(e: FileEntry): Seq[Any] = Seq(e.file, e.bytes, e.rows)
 
-  private def deltaName(seq: Long): String = f"delta.$seq%012d"
+  protected def decode(f: Array[String]): FileEntry =
+    FileEntry(f(1), f(2).toLong, f(3).toLong)
 
-  private val DeltaHeader = "graft-artifact-delta\t1"
+  protected def headLines(s: State): Seq[String] =
+    ManifestLog.line("family", Seq(s.family)) +:
+      s.params.toSeq.sortBy(_._1).map { case (k, v) =>
+        ManifestLog.line("param", Seq(k, v)) }
 
-  /** The fold threshold: read cost is bounded by base + this many
-    * delta files; any full write folds regardless. */
-  val FoldThreshold = 32
+  protected def withLog(s: State, files: Seq[FileEntry], logSeq: Long,
+      logDeltas: Int): State =
+    s.copy(files = files, logSeq = logSeq, logDeltas = logDeltas)
 
-  def fsOf(spark: SparkSession, path: String): FileSystem =
-    MaintenanceProtocol.fsOf(spark, path)
+  /** The delta format carries file actions only: flat params are fixed
+    * at build, and only compaction — a full write anyway — restores
+    * them, so a params change always folds. */
+  override protected def mustFold(prev: State, next: State): Boolean =
+    prev.params != next.params
 
-  def exists(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(manifestPath(path))
-
-  def isDirty(spark: SparkSession, path: String): Boolean =
-    MaintenanceProtocol.isDirty(spark, path)
-
-  def markDirty(spark: SparkSession, path: String): Unit =
-    MaintenanceProtocol.markDirty(spark, path)
-
-  def clearDirty(spark: SparkSession, path: String): Unit =
-    MaintenanceProtocol.clearDirty(spark, path)
-
-  def withLease[A](spark: SparkSession, path: String, op: String)(
-      body: => A): A =
-    MaintenanceProtocol.withLease(spark, path, op)(body)
-
-  /** The manifest iff trustworthy: present AND not dirty, with the
-    * same malformed-shape policy as the postings sidecar — truncated
-    * (fewer than header+family) or zero file lines degrade to None
-    * (the consumer's listing fallback serves truth; planning zero
-    * files would serve EMPTY results), a garbled line throws
-    * (tmp+rename makes partial writes impossible — a bad line is a
-    * bug, not a crash window). An artifact whose family tag differs
-    * from `family` returns None too: a consumer must never plan one
-    * family's scan from another's sidecar (a copied/moved directory). */
+  /** The manifest iff trustworthy ([[ManifestLog.readWith]]). A foreign
+    * header (a postings manifest, a future format) or zero file lines
+    * degrade to None, and so does an artifact whose family tag differs
+    * from `family`: a consumer must never plan one family's scan from
+    * another's sidecar (a copied/moved directory). A garbled line
+    * throws. */
   def readClean(spark: SparkSession, path: String,
       family: String): Option[State] =
-    readCleanAttempt(spark, path, family) match {
-      case Right(res) => res
-      case Left(()) =>
-        // a delta file vanished mid-replay — a concurrent fold's
-        // write() just cleared the log. The folded base embeds the
-        // deltas, so ONE fresh attempt sees a consistent state; a
-        // second miss means active churn — degrade to the listing
-        // fallback rather than spin (flat artifact: listing is truth).
-        readCleanAttempt(spark, path, family).fold(_ => None, identity)
-    }
-
-  /** One read attempt: Right(state-or-degrade) on a consistent read,
-    * Left(()) when a log delta vanished underneath the replay (fold in
-    * progress — the caller retries once). After a successful parse the
-    * dirty flag is RE-CHECKED: a writer that marked dirty between our
-    * leading isDirty check and the reads above may have already swapped
-    * the base or emptied the log, and trusting that torn state could
-    * plan files a concurrent compaction just deleted. */
-  private def readCleanAttempt(spark: SparkSession, path: String,
-      family: String): Either[Unit, Option[State]] = {
-    val fs = fsOf(spark, path)
-    val dest = manifestPath(path)
-    if (MaintenanceProtocol.isDirty(spark, path) || !fs.exists(dest))
-      Right(None)
-    else if (fs.getFileStatus(dest).isDirectory) Right(None)
-    else {
-      val linesOpt =
-        try {
-          val in = fs.open(dest)
-          Some(
-            try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().toVector
-            finally in.close())
-        } catch {
-          // the base vanished between exists() and open(): a concurrent
-          // write's delete→rename window — same retry-once treatment as
-          // a vanished log delta
-          case _: java.io.FileNotFoundException => None
-        }
-      linesOpt match {
-        case None => Left(())
-        case Some(lines) =>
-          if (lines.length < 3) Right(None) // header + family + ≥1 file
-          else if (lines.head != FormatHeader) {
-            // a POSTINGS manifest (or a future v2) under a flat reader:
-            // degrade, same policy as PostingsManifest's v1 handling
-            Right(None)
-          } else {
-            val fam = lines(1).split('\t')
-            require(fam.length == 2 && fam(0) == "family",
-              s"malformed manifest family line at $dest: '${lines(1)}'")
-            if (fam(1) != family) Right(None)
-            else {
-              val (paramLines, fileLines) =
-                lines.drop(2).partition(_.startsWith("param\t"))
-              if (fileLines.isEmpty) Right(None)
-              else {
-                val params = paramLines.map { l =>
-                  val p = l.split('\t')
-                  require(p.length == 3,
-                    s"malformed manifest param line at $dest: '$l'")
-                  p(1) -> p(2)
-                }.toMap
-                val files = fileLines.map { l =>
-                  val f = l.split('\t')
-                  require(f.length == 4 && f(0) == "file",
-                    s"malformed manifest file line at $dest: '$l'")
-                  FileEntry(f(1), f(2).toLong, f(3).toLong)
-                }
-                replayLog(spark, path, State(family, params, files)) match {
-                  case None => Left(())
-                  case Some(st) =>
-                    if (MaintenanceProtocol.isDirty(spark, path)) Right(None)
-                    else Right(Some(st))
-                }
-              }
-            }
-          }
+    readWith(spark, path) { (lines, at) =>
+      if (lines.head != baseHeader) None
+      else {
+        val fam = lines(1).split('\t')
+        require(fam.length == 2 && fam(0) == "family",
+          s"malformed manifest family line at $at: '${lines(1)}'")
+        val (paramLines, fileLines) =
+          lines.drop(2).partition(_.startsWith("param\t"))
+        if (fam(1) != family || fileLines.isEmpty) None
+        else Some(State(family, paramLines.map { l =>
+          val p = l.split('\t')
+          require(p.length == 3,
+            s"malformed manifest param line at $at: '$l'")
+          p(1) -> p(2)
+        }.toMap, entries(fileLines, at)))
       }
     }
-  }
 
-  /** Fold the incremental log over a freshly parsed base — the
-    * [[PostingsManifest]] replay applied to flat entries: one listing
-    * of `_manifest_log` (∝ outstanding deltas, bounded by the fold
-    * threshold), `del`/`set` actions keyed by file name, idempotent by
-    * construction (`set` is an absolute upsert, `del` of an absent key
-    * a no-op) so an already-folded delta re-applies harmlessly. None =
-    * a delta vanished mid-replay (concurrent fold) — caller retries. */
-  private def replayLog(spark: SparkSession, path: String,
-      base: State): Option[State] = {
-    val fs = fsOf(spark, path)
-    val ld = logDir(path)
-    if (!fs.exists(ld)) return Some(base)
-    val deltas = fs.listStatus(ld)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("delta."))
-      .sortBy(_.getPath.getName)
-    if (deltas.isEmpty) return Some(base)
-    val order = scala.collection.mutable.LinkedHashMap
-      .empty[String, FileEntry]
-    base.files.foreach(e => order(e.file) = e)
-    deltas.foreach { d =>
-      val lines =
-        try {
-          val in = fs.open(d.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toVector
-          finally in.close()
-        } catch {
-          case _: java.io.FileNotFoundException => return None
-        }
-      require(lines.nonEmpty && lines.head == DeltaHeader,
-        s"unrecognized manifest delta at ${d.getPath}: " +
-          s"'${lines.headOption.getOrElse("<empty>")}'")
-      lines.drop(1).foreach { l =>
-        val f = l.split('\t')
-        f(0) match {
-          case "del" =>
-            require(f.length == 2, s"malformed delta del line: '$l'")
-            order.remove(f(1))
-          case "set" =>
-            require(f.length == 4, s"malformed delta set line: '$l'")
-            order(f(1)) = FileEntry(f(1), f(2).toLong, f(3).toLong)
-          case other =>
-            throw new IllegalArgumentException(
-              s"unrecognized delta action '$other' at ${d.getPath}")
-        }
-      }
-    }
-    Some(base.copy(files = order.values.toVector,
-      logSeq = deltas.last.getPath.getName.stripPrefix("delta.").toLong,
-      logDeltas = deltas.length))
-  }
-
-  /** Roll the manifest forward INCREMENTALLY: persist only the
-    * structural diff `prev` → `next` as one `_manifest_log` delta file
-    * (tmp+rename, driver-side) — I/O ∝ the op's touched set, never ∝
-    * total files. Trips a FOLD (full [[write]] + log clear) instead
-    * when the outstanding log reaches [[FoldThreshold]]. `prev` MUST
-    * be the [[readClean]] state the op rolled forward from (inside its
-    * lease); caller owns the dirty-flag bracket. Params changes always
-    * fold (the delta format carries file actions only — flat params
-    * are fixed at build and only compaction, a full write anyway,
-    * restores them). */
-  def commit(spark: SparkSession, path: String, prev: State,
-      next: State): State = {
-    if (prev.logDeltas + 1 >= FoldThreshold || prev.params != next.params) {
-      write(spark, path, next)
-      return next.copy(logSeq = 0L, logDeltas = 0)
-    }
-    val prevByKey = prev.files.map(e => e.file -> e).toMap
-    val nextKeys = next.files.map(_.file).toSet
-    val dels = prev.files.filterNot(e => nextKeys(e.file))
-    val sets = next.files.filter(e =>
-      prevByKey.get(e.file) match {
-        case Some(p) => p != e
-        case None => true
-      })
-    val fs = fsOf(spark, path)
-    val ld = logDir(path)
-    fs.mkdirs(ld)
-    val seq = prev.logSeq + 1
-    val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID()}")
-    try {
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(out, "UTF-8"))
-        w.write(DeltaHeader); w.newLine()
-        dels.foreach { e =>
-          w.write(Seq("del", e.file).mkString("\t")); w.newLine()
-        }
-        sets.foreach { e =>
-          require(!e.file.contains('\t') && !e.file.contains('\n'),
-            s"unencodable file name in manifest delta: '${e.file}'")
-          w.write(Seq("set", e.file, e.bytes, e.rows).mkString("\t"))
-          w.newLine()
-        }
-        w.flush()
-      } finally out.close()
-      val dest = new Path(ld, deltaName(seq))
-      require(fs.rename(tmp, dest), s"delta swap failed: $tmp -> $dest")
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-    next.copy(logSeq = seq, logDeltas = prev.logDeltas + 1)
-  }
-
-  /** Persist with the tmp+rename swap (readers between delete and
-    * rename degrade to their listing fallback, never to a wrong
-    * manifest); driver-side FS write, no Spark job. Caller owns the
-    * dirty-flag ordering. */
-  def write(spark: SparkSession, path: String, state: State): Unit = {
-    val fs = fsOf(spark, path)
-    val tmp = new Path(path.stripSuffix("/"),
-      "_manifest.tmp-" + java.util.UUID.randomUUID().toString)
-    try {
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(out, "UTF-8"))
-        def enc(s: String): String = {
-          require(!s.contains('\t') && !s.contains('\n'),
-            s"unencodable manifest token: '$s'")
-          s
-        }
-        w.write(FormatHeader); w.newLine()
-        w.write(s"family\t${enc(state.family)}"); w.newLine()
-        state.params.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          w.write(s"param\t${enc(k)}\t${enc(v)}"); w.newLine()
-        }
-        state.files.foreach { f =>
-          w.write(Seq("file", enc(f.file), f.bytes, f.rows)
-            .mkString("\t")); w.newLine()
-        }
-        w.flush()
-      } finally out.close()
-      val dest = manifestPath(path)
-      fs.delete(dest, true)
-      require(fs.rename(tmp, dest), s"manifest swap failed: $tmp -> $dest")
-      // a full write IS a fold: the base now embeds every outstanding
-      // delta, so the log clears. Base first — a crash between swap and
-      // clear leaves already-folded deltas whose replay is idempotent.
-      fs.delete(logDir(path), true)
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-  }
-
-  /** Directory truth for a FLAT artifact — one root listing plus one
-    * footer-bounded row-count job (no data pages); `family`/`params`
+  /** Directory truth for a FLAT artifact — one root listing plus the
+    * data files' footer row counts (no data pages); `family`/`params`
     * come from the caller (the rebuild must not trust the manifest it
-    * replaces). Sweeps manifest tmp files stranded by a crash, like
-    * the postings rebuild. */
+    * replaces). */
   def rebuild(spark: SparkSession, path: String, family: String,
       params: Map[String, String]): State = {
-    val fs = fsOf(spark, path)
-    val root = new Path(path.stripSuffix("/"))
-    val listing = fs.listStatus(root)
-    listing
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_manifest.tmp-"))
-      .foreach(s => fs.delete(s.getPath, false))
-    val parts = listing
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    val parts =
+      ManifestLog.listTruth(MaintenanceProtocol.fsOf(spark, path), path)
     require(parts.nonEmpty,
       s"no data files under $path — build the artifact first")
-    val rowsByPath = org.apache.spark.sql.GraftColumnBridge
-      .parquetFooterRowCounts(spark, parts.map(_.getPath.toString).toSeq)
-    State(family, params,
-      parts.toSeq.map(f => FileEntry(f.getPath.getName, f.getLen,
-        rowsByPath.getOrElse(f.getPath.toString, 0L))))
+    val rows = ManifestLog.footerRows(spark, parts.map(_._2.getPath))
+    State(family, params, parts.zip(rows).map { case ((dir, f), n) =>
+      FileEntry(ManifestLog.relPath(dir, f.getPath.getName), f.getLen, n)
+    })
   }
 
   /** Reserved param recording the file count at the last full rebuild
@@ -373,20 +126,13 @@ object ArtifactManifest {
     * filtered from family param reads by being read nowhere else. */
   val BaseFilesParam = "_base_files"
 
+  /** [[rebuild]] stamped with [[BaseFilesParam]], persisted, dirty flag
+    * cleared ([[ManifestLog.writeRebuilt]]). */
   def rebuildAndWrite(spark: SparkSession, path: String, family: String,
       params: Map[String, String]): State = {
-    val s0 = rebuild(spark, path, family, params)
-    val s = s0.copy(params =
-      s0.params + (BaseFilesParam -> s0.totalFiles.toString))
-    // delete any outstanding log FIRST: the rebuilt base supersedes it
-    // (directory truth embeds whatever the deltas recorded), and
-    // clearing before the base swap closes the window where a crash
-    // leaves a fresh base next to stale deltas it does not embed —
-    // same ordering argument as [[PostingsManifest.rebuildAndWrite]]
-    fsOf(spark, path).delete(logDir(path), true)
-    write(spark, path, s)
-    clearDirty(spark, path)
-    s
+    val s = rebuild(spark, path, family, params)
+    writeRebuilt(spark, path,
+      s.copy(params = s.params + (BaseFilesParam -> s.totalFiles.toString)))
   }
 
   /** Best-effort family tag of whatever manifest sits at `path` —
@@ -396,7 +142,7 @@ object ArtifactManifest {
     * authoritative whenever it parses. None = no parseable flat
     * manifest (absent, legacy layout, foreign format). */
   def familyOf(spark: SparkSession, path: String): Option[String] = {
-    val fs = fsOf(spark, path)
+    val fs = MaintenanceProtocol.fsOf(spark, path)
     val dest = manifestPath(path)
     try {
       if (!fs.exists(dest) || fs.getFileStatus(dest).isDirectory) None
@@ -406,7 +152,7 @@ object ArtifactManifest {
           try scala.io.Source.fromInputStream(in, "UTF-8")
             .getLines().take(2).toVector
           finally in.close()
-        if (lines.length == 2 && lines(0) == FormatHeader &&
+        if (lines.length == 2 && lines(0) == baseHeader &&
             lines(1).startsWith("family\t"))
           Some(lines(1).split('\t')(1))
         else None
@@ -470,80 +216,34 @@ object ArtifactManifest {
     * build the delta writer from it (`mkWrite` receives the state so
     * params cost no second manifest read), then either plain-append
     * for a legacy manifest-less artifact or run the dirty-bracketed
-    * stage-and-rename roll-forward. Ends with a catalog refresh:
-    * [[stageIntoRoot]]'s raw FS renames bypass Spark's
+    * [[ManifestLog.stageAndRename]] roll-forward. Ends with a catalog
+    * refresh: the staging's raw FS renames bypass Spark's
     * FileStatusCache invalidation (the old `mode("append")` writes
     * invalidated it), and a DISCOVERING reader — or a later
     * compaction's `spark.read.parquet` — planning from a stale cached
     * listing would silently miss the appended files. */
-  /** Env-gated stage timing, the [[graft.operators.Similarity]]
-    * maintStage twin for the flat families. */
-  private def flatStage[A](name: String)(body: => A): A = {
-    if (!sys.env.contains("GRAFT_MAINT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        f"[maint]   flat_$name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-  }
-
   def appendStaged(spark: SparkSession, path: String, family: String)(
       mkWrite: Option[State] => String => Unit): Unit =
-    withLease(spark, path, "delta_append") {
-      val state0 = flatStage("read_state")(readClean(spark, path, family))
+    MaintenanceProtocol.withLease(spark, path, "delta_append") {
+      import MaintenanceProtocol.timed
+      val state0 = timed("  flat_read_state")(readClean(spark, path, family))
       if (state0.isEmpty) requireFamilyOrUnknown(spark, path, family)
       val writeDelta = mkWrite(state0)
       state0 match {
         case None => writeDelta(path)
         case Some(st) =>
-          markDirty(spark, path)
-          val entries = flatStage("stage_write")(
-            stageIntoRoot(spark, path)(writeDelta))
+          MaintenanceProtocol.markDirty(spark, path)
+          val entries = timed("  flat_stage_write")(
+            ManifestLog.stageAndRename(spark, path)(writeDelta))
+            .map(s => FileEntry(s.file, s.bytes, s.rows))
           // incremental roll-forward: one _manifest_log delta ∝ the
           // batch's own files (auto-folds at the threshold) — the base
           // _manifest is NOT rewritten per append
-          flatStage("commit")(commit(spark, path, st, st.adding(entries)))
-          clearDirty(spark, path)
+          timed("  flat_commit")(commit(spark, path, st, st.adding(entries)))
+          MaintenanceProtocol.clearDirty(spark, path)
       }
       spark.catalog.refreshByPath(path)
     }
-
-  /** Land `writeTmp`'s output files INSIDE the flat artifact without
-    * listing it: the caller writes the delta to the supplied fresh
-    * sibling staging dir (nothing to list there), then each part-file
-    * is renamed into the artifact root — FS metadata ops ∝ the batch's
-    * own file count, nothing ∝ the artifact. Part-file names carry the
-    * write job's UUID, so renames cannot collide. Returns the landed
-    * entries (bytes from the staging listing, rows from one
-    * footer-bounded job over just the staged files). */
-  def stageIntoRoot(spark: SparkSession, path: String)(
-      writeTmp: String => Unit): Seq[FileEntry] = {
-    val tmp = path.stripSuffix("/") +
-      "__delta_" + java.util.UUID.randomUUID().toString
-    val hTmp = new Path(tmp)
-    val fs = fsOf(spark, path)
-    try {
-      writeTmp(tmp)
-      val staged = fs.listStatus(hTmp)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      val rowsByPath = org.apache.spark.sql.GraftColumnBridge
-        .parquetFooterRowCounts(spark, staged.map(_.getPath.toString).toSeq)
-      val root = new Path(path.stripSuffix("/"))
-      staged.toSeq.map { f =>
-        val name = f.getPath.getName
-        require(fs.rename(f.getPath, new Path(root, name)),
-          s"staging rename failed: ${f.getPath} -> $root")
-        // fail fast: a missing footer for a just-written part-file is
-        // always a bug — a silent 0 would corrupt the manifest's row
-        // accounting (r19 ADVICE, the stageIntoCells twin)
-        FileEntry(name, f.getLen,
-          rowsByPath.getOrElse(f.getPath.toString, sys.error(
-            s"no parquet footer row count for just-staged file ${f.getPath}")))
-      }
-    } finally fs.delete(hTmp, true)
-  }
 
   /** Maintenance observability for a FLAT artifact from ONE manifest
     * read — [[graft.operators.Similarity.postingsFragmentationReport]]'s
@@ -561,7 +261,7 @@ object ArtifactManifest {
     val stateOpt = readClean(spark, path, family)
     val status =
       if (stateOpt.nonEmpty) "clean"
-      else if (isDirty(spark, path)) "dirty"
+      else if (MaintenanceProtocol.isDirty(spark, path)) "dirty"
       else "absent"
     val st = stateOpt.getOrElse(rebuild(spark, path, family, Map.empty))
     val baseFiles = st.params.get(BaseFilesParam).map(_.toLong)
@@ -572,24 +272,4 @@ object ArtifactManifest {
       .toDF("files", "appended_files", "base_files", "rows", "bytes",
         "log_deltas", "manifest")
   }
-
-  /** Delete orphaned staging siblings (`<artifact>__delta_*`) stranded
-    * by a driver crash mid-append — swept at compaction, the artifact's
-    * exclusive-maintenance window. Shared by the flat families AND the
-    * postings family (one implementation of the sweep, per this
-    * object's no-re-deriving stance). */
-  def sweepStaleDeltas(fs: FileSystem, artifactRoot: Path): Int = {
-    val parent = artifactRoot.getParent
-    if (parent == null) 0
-    else {
-      val prefix = artifactRoot.getName + "__delta_"
-      val stale = fs.listStatus(parent)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith(prefix))
-      stale.foreach(d => fs.delete(d.getPath, true))
-      stale.length
-    }
-  }
-
-  def sweepStaleDeltas(spark: SparkSession, path: String): Int =
-    sweepStaleDeltas(fsOf(spark, path), new Path(path.stripSuffix("/")))
 }

@@ -380,7 +380,7 @@ object Dedup {
     * lease makes a rebuild of a live artifact fail fast against a
     * concurrent maintainer. */
   def saveExactIndex(index: DataFrame, path: String, files: Int = 8): Unit =
-    ArtifactManifest.withLease(index.sparkSession, path, "build") {
+    MaintenanceProtocol.withLease(index.sparkSession, path, "build") {
       index
         .repartitionByRange(files,
           org.apache.spark.sql.functions.col("text_hash"))
@@ -444,17 +444,17 @@ object Dedup {
     * input bytes). */
   def compactExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): (Int, Int, Long) =
-    ArtifactManifest.withLease(spark, path, "compact") {
-      ArtifactManifest.sweepStaleDeltas(spark, path)
+    MaintenanceProtocol.withLease(spark, path, "compact") {
+      ManifestLog.sweepStaleDeltas(spark, path)
       // the rename-staged appends bypass Spark's FileStatusCache
       // invalidation — compacting from a stale cached listing would
       // silently DROP the appended rows and certify the truncated
       // artifact as clean (the siblings refresh too)
       spark.catalog.refreshByPath(path)
-      ArtifactManifest.markDirty(spark, path)
+      MaintenanceProtocol.markDirty(spark, path)
       val r = graft.sources.WarehouseWriter.compactParquet(spark, path,
         targetFileBytes, sortCol = Some("text_hash"), dedup = true)
-      if (r._1 == 0) ArtifactManifest.clearDirty(spark, path) // empty dir
+      if (r._1 == 0) MaintenanceProtocol.clearDirty(spark, path) // empty dir
       else ArtifactManifest.rebuildAndWrite(spark, path, ExactIndexFamily,
         Map.empty)
       r
@@ -985,7 +985,7 @@ object Dedup {
       files: Int = 8): Unit = {
     val spark = index.sparkSession
     val (k, numHashes, bands, hashed) = minhashIndexParams(index)
-    ArtifactManifest.withLease(spark, path, "build") {
+    MaintenanceProtocol.withLease(spark, path, "build") {
       index.repartition(files).write.mode("overwrite").parquet(path)
       ArtifactManifest.rebuildAndWrite(spark, path, MinhashIndexFamily,
         Map("k" -> k.toString, "hashes" -> numHashes.toString,
@@ -1043,15 +1043,15 @@ object Dedup {
     * (files before, files after). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, files: Int = 8): (Int, Int) =
-    ArtifactManifest.withLease(spark, path, "compact") {
+    MaintenanceProtocol.withLease(spark, path, "compact") {
       // heal a previous compaction that crashed inside its swap window
       // BEFORE reading — the artifact directory may be entirely absent
       graft.sources.WarehouseWriter.recoverSwap(spark, path)
-      ArtifactManifest.sweepStaleDeltas(spark, path)
+      ManifestLog.sweepStaleDeltas(spark, path)
       val (k, numHashes, bands, hashed) = minhashArtifactParams(spark, path)
       spark.catalog.refreshByPath(path)
       val before = spark.read.parquet(path).inputFiles.length
-      ArtifactManifest.markDirty(spark, path)
+      MaintenanceProtocol.markDirty(spark, path)
       val folded = spark.read.parquet(path).distinct().repartition(files)
       graft.sources.WarehouseWriter.overwriteParquetAtomic(folded, path)
       val st = ArtifactManifest.rebuildAndWrite(spark, path,
@@ -1697,7 +1697,7 @@ object Dedup {
   def saveWinnowIndex(index: DataFrame, path: String, files: Int = 8): Unit = {
     val spark = index.sparkSession
     val (k, w, algo) = winnowIndexParams(index)
-    ArtifactManifest.withLease(spark, path, "build") {
+    MaintenanceProtocol.withLease(spark, path, "build") {
       index
         .repartitionByRange(files, org.apache.spark.sql.functions.col("fingerprint"))
         .sortWithinPartitions("fingerprint")
@@ -1777,17 +1777,17 @@ object Dedup {
     * (files before, files after). */
   def compactWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, files: Int = 8): (Int, Int) =
-    ArtifactManifest.withLease(spark, path, "compact") {
+    MaintenanceProtocol.withLease(spark, path, "compact") {
       import spark.implicits._
       // heal a previous compaction that crashed inside its swap window
       // BEFORE reading — the artifact directory may be entirely absent
       graft.sources.WarehouseWriter.recoverSwap(spark, path)
-      ArtifactManifest.sweepStaleDeltas(spark, path)
+      ManifestLog.sweepStaleDeltas(spark, path)
       val (k, w, algo) = winnowArtifactParams(spark, path)
       spark.catalog.refreshByPath(path)
       val before = spark.read.parquet(path)
         .inputFiles.length
-      ArtifactManifest.markDirty(spark, path)
+      MaintenanceProtocol.markDirty(spark, path)
       val folded = withDf(spark.read.parquet(path)
         .select($"doc_id", $"fingerprint").distinct())
         .withColumn("wf_k", lit(k))

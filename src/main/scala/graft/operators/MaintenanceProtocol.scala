@@ -3,11 +3,12 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The artifact-AGNOSTIC half of the maintenance protocol — the
-  * write-side twin of [[graft.plans.ManifestFileIndex]]: any
-  * directory-shaped artifact family (postings today; the winnow / band
-  * / bloom / exact-hash indexes as they adopt sidecars) gets the same
-  * two primitives without re-deriving them:
+/** The format-agnostic half of the maintenance protocol — the
+  * write-side twin of [[graft.plans.ManifestFileIndex]]. Every artifact
+  * family that keeps a manifest sidecar (postings, packed and PQ
+  * postings through [[PostingsManifest]]; the exact-hash, minhash-band
+  * and winnow indexes through [[ArtifactManifest]]) brackets its
+  * maintenance ops with the same two primitives:
   *
   *  - the WRITER LEASE (`<artifact>__maint_lease`, an exclusive-create
   *    sibling file): single-writer maintenance enforced as a fail-fast
@@ -18,10 +19,9 @@ import org.apache.spark.sql.SparkSession
   *    absent, so a crashed half-finished op degrades readers to their
   *    listing fallbacks, never to a stale manifest.
   *
-  * Neither primitive knows the sidecar's FORMAT — that stays with the
-  * family ([[PostingsManifest]]'s tab-separated v3 file, which
-  * delegates here for both primitives; its scaladoc carries the full
-  * protocol contract, epoch semantics, and atomicity boundary).
+  * Neither primitive knows the sidecar's FORMAT — that is
+  * [[ManifestLog]]'s (the base + delta log, replay, commit and swap)
+  * plus each family's codec. [[timed]] is the maintenance stage timer.
   */
 object MaintenanceProtocol {
 
@@ -66,11 +66,12 @@ object MaintenanceProtocol {
     * exclusive-create primitive — the same move Delta Lake's log
     * commit makes. Exactly one concurrent caller wins the create;
     * every other gets a [[ConcurrentMaintenanceException]] naming the
-    * holder, BEFORE its first artifact mutation. See
-    * [[PostingsManifest]]'s scaladoc for the atomicity boundary per
-    * store (local POSIX O_EXCL here; HDFS/ABFS/GCS server-side; plain
-    * S3A is NOT a CAS) and the crash-recovery contract
-    * ([[breakLease]] + a directory-truth rebuild).
+    * holder, BEFORE its first artifact mutation. The atomicity
+    * boundary per store: POSIX O_EXCL locally, server-side on
+    * HDFS/ABFS/GCS, NOT a CAS on plain S3A (the lease is advisory
+    * there). A writer that died holding the lease is recovered with
+    * [[breakLease]] + a directory-truth rebuild; reference analogue:
+    * the DB catalog serializing DDL, init-user-db.sh:119-120.
     *
     * Returns the OWNERSHIP TOKEN written into the lease file; pass it
     * to [[releaseLease]] so the release deletes only a lease this
@@ -100,8 +101,8 @@ object MaintenanceProtocol {
       // create — a TOCTOU window two same-box writers can both slip
       // through. POSIX O_CREAT|O_EXCL (java.io createNewFile) is the
       // real atomic primitive there. Remote filesystems take the
-      // Hadoop call — see PostingsManifest's scaladoc for which stores
-      // make it a true server-side CAS and which (plain S3A) do not.
+      // Hadoop call — HDFS/ABFS/GCS make it a true server-side CAS,
+      // plain S3A does not (warned above).
       case _: org.apache.hadoop.fs.LocalFileSystem |
            _: org.apache.hadoop.fs.RawLocalFileSystem =>
         val f = new java.io.File(lp.toUri.getPath)
@@ -208,21 +209,28 @@ object MaintenanceProtocol {
   /** Acquire the writer lease, run one maintenance op, release. The
     * release sits in `finally`: an op that THROWS has already recorded
     * its incompleteness in the dirty flag (readers degrade to listing
-    * truth), so holding the lease past it would only block recovery. */
+    * truth), so holding the lease past it would only block recovery.
+    * The op-total timing shows how much of an op is driver-side
+    * planning/commit BETWEEN its stages. */
   def withLease[A](spark: SparkSession, path: String, op: String)(
-      body: => A): A = {
-    val t0 = System.nanoTime()
-    val token = acquireLease(spark, path, op)
-    try body finally {
-      releaseLease(spark, path, token)
-      // env-gated op-total timing (same switch as the per-stage lines):
-      // the stages alone cannot show how much of an op is driver-side
-      // planning/commit BETWEEN them
-      if (sys.env.contains("GRAFT_MAINT_TIMING"))
-        System.err.println(
-          f"[maint] OP $op ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      body: => A): A =
+    timed(s"OP $op") {
+      val token = acquireLease(spark, path, op)
+      try body finally releaseLease(spark, path, token)
     }
-  }
+
+  /** Env-gated stage timing for the maintenance routes: with
+    * GRAFT_MAINT_TIMING set, one `[maint] <label> <seconds> s` line on
+    * stderr per stage (nesting shown by the label's indent) — the
+    * observability that attributed the fragment-append wall to its
+    * stages instead of guessing. */
+  def timed[A](label: String)(body: => A): A =
+    if (!sys.env.contains("GRAFT_MAINT_TIMING")) body
+    else {
+      val t0 = System.nanoTime()
+      try body finally System.err.println(
+        f"[maint] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    }
 
   // ----------------------------------------------------- bulk delete
 

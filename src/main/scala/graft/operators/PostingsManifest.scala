@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions.col
   * text file inside the artifact (`<artifact>/_manifest`, invisible to
   * readers: Spark's partition discovery skips `_`-prefixed paths)
   * recording every data file: `(cell, file, bytes, rows)` plus the
-  * embedded artifact parameters. Storage is one tab-separated file
+  * embedded artifact parameters. Storage is [[ManifestLog]]'s
+  * tab-separated base + delta log (this object is its postings codec),
   * written and parsed DRIVER-SIDE through the Hadoop FS API — the
-  * Delta-log shape (JSON text actions, no Spark job): a manifest
+  * Delta-log shape (text actions, no Spark job): a manifest
   * roll-forward must not cost a cluster job, because it rides EVERY
   * maintenance op and its payload is file-level metadata the driver
   * already holds. (The first cut stored it as a one-task parquet
@@ -42,7 +43,7 @@ import org.apache.spark.sql.functions.col
   * driver-trivial single-digit-MB read, which is exactly why file-level
   * state can live driver-side while row-level state never does.
   */
-object PostingsManifest {
+object PostingsManifest extends ManifestLog {
 
   /** One data file of the artifact: `file` is the part-file name inside
     * `cell=<cell>/`; `rows` its physical row count (replay duplicates
@@ -78,7 +79,8 @@ object PostingsManifest {
     * are never persisted: [[commit]] uses them to name the next delta
     * file and to decide when to auto-fold. */
   case class State(params: Params, files: Seq[FileEntry],
-      epoch: Long = 0L, logSeq: Long = 0L, logDeltas: Int = 0) {
+      epoch: Long = 0L, logSeq: Long = 0L, logDeltas: Int = 0)
+      extends ManifestLog.Logged[FileEntry] {
     /** The serving artifact: every consumer (reads, population stats,
       * fragmented detection) reasons over LIVE entries; retired files
       * exist only for snapshot readers that planned before the
@@ -121,464 +123,123 @@ object PostingsManifest {
     }
   }
 
-  def manifestDir(path: String): Path =
-    new Path(path.stripSuffix("/"), "_manifest")
+  type Entry = FileEntry
 
-  /** The incremental log: `_manifest_log/delta.<seq>` line-files, one
-    * per maintenance op, folded into the base `_manifest` at
-    * compaction (or when [[commit]]'s auto-fold threshold trips) — the
-    * Delta-Lake log/checkpoint shape, driver-side, no Spark job. What
-    * it buys: a maintenance op's manifest WRITE is ∝ the op's own
-    * touched set, never ∝ total files — the single-file rewrite was
-    * O(artifact files) per append, a multi-second driver write at 10⁶
-    * files (the r16 VERDICT scale seam). Listing the log dir costs ∝
-    * outstanding deltas (bounded by the fold threshold), not data
-    * files. */
-  def logDir(path: String): Path =
-    new Path(path.stripSuffix("/"), "_manifest_log")
+  protected val baseHeader = "graft-postings-manifest\t3"
+  protected val deltaHeader = "graft-postings-delta\t1"
+  protected val entryArity = 5
+  protected val keyArity = 2
 
-  private def deltaName(seq: Long): String = f"delta.$seq%012d"
+  protected def encode(e: FileEntry): Seq[Any] =
+    Seq(e.cell, e.file, e.bytes, e.rows, if (e.retired) e.retiredAt else "-")
 
-  def fsOf(spark: SparkSession, path: String): FileSystem =
-    MaintenanceProtocol.fsOf(spark, path)
+  protected def decode(f: Array[String]): FileEntry =
+    FileEntry(f(1).toInt, f(2), f(3).toLong, f(4).toLong,
+      if (f(5) == "-") -1L else f(5).toLong)
 
-  def exists(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(manifestDir(path))
+  protected def headLines(s: State): Seq[String] =
+    Seq(ManifestLog.line("params", Seq(s.params.cells, s.params.cap,
+      s.params.ck, s.params.gp.getOrElse("-"), s.epoch)))
 
-  // The dirty-flag and writer-lease primitives are artifact-AGNOSTIC
-  // and live in [[MaintenanceProtocol]] (the write-side twin of
-  // [[graft.plans.ManifestFileIndex]]'s read seam) so other artifact
-  // families adopt them without re-deriving; these delegations keep
-  // the postings family's established call sites and specs stable.
-  def isDirty(spark: SparkSession, path: String): Boolean =
-    MaintenanceProtocol.isDirty(spark, path)
+  protected def withLog(s: State, files: Seq[FileEntry], logSeq: Long,
+      logDeltas: Int): State =
+    s.copy(files = files, logSeq = logSeq, logDeltas = logDeltas)
 
-  /** Write-ahead intent: call BEFORE the first artifact mutation of a
-    * maintenance op. One create on the artifact's filesystem. */
-  def markDirty(spark: SparkSession, path: String): Unit =
-    MaintenanceProtocol.markDirty(spark, path)
+  /** Every delta carries the op's epoch as an absolute value, applied
+    * through max() so replay stays idempotent. */
+  override protected def deltaHeadLines(s: State): Seq[String] =
+    Seq(s"epoch\t${s.epoch}")
 
-  def clearDirty(spark: SparkSession, path: String): Unit =
-    MaintenanceProtocol.clearDirty(spark, path)
-
-  private val FormatHeaderV3 = "graft-postings-manifest\t3"
-  private val FormatHeaderV2 = "graft-postings-manifest\t2"
-
-  /** The manifest iff it is trustworthy: present AND not dirty. Every
-    * consumer goes through here — a stranded dirty flag silently
-    * degrades consumers to their listing fallbacks instead of serving
-    * them a manifest that may omit files a half-finished append already
-    * renamed in. A v1 (parquet-directory) manifest from an older build
-    * also returns None — its artifact re-adopts through the same
-    * rebuild path a manifest-less one does. A v2 text manifest (no
-    * epochs; retired as a 0/1 flag) reads compatibly: epoch 0,
-    * retirements stamped at 0 — the next roll-forward writes v3. A
-    * MALFORMED file returns None for the shapes a consumer can sanely
-    * degrade from (truncated to fewer than header+params, or zero file
-    * lines — a postings artifact always has files, so an empty list
-    * means the writer never finished reasoning, and planning zero
-    * files would silently serve EMPTY results where the listing
-    * fallback serves truth) and throws for the rest: tmp+rename makes
-    * partial writes impossible, so a garbled line means a bug, not a
-    * crash window. */
-  def readClean(spark: SparkSession, path: String): Option[State] =
-    readCleanAttempt(spark, path) match {
-      case Right(res) => res
-      case Left(()) =>
-        // a file vanished mid-read — a concurrent fold's write() just
-        // swapped the base and cleared the log. The folded base embeds
-        // the deltas, so ONE fresh attempt sees a consistent state; a
-        // second miss means active churn — degrade to the listing
-        // fallback rather than spin.
-        readCleanAttempt(spark, path).fold(_ => None, identity)
-    }
-
-  /** One read attempt: Right(state-or-degrade) on a consistent read,
-    * Left(()) when the base or a log delta vanished underneath it
-    * (fold in progress — the caller retries once). After a successful
-    * parse the dirty flag is RE-CHECKED: a writer that marked dirty
-    * between our leading isDirty check and the reads above may already
-    * have swapped the base or emptied the log, and trusting that torn
-    * state could plan files a concurrent vacuum just deleted. */
-  private def readCleanAttempt(spark: SparkSession,
-      path: String): Either[Unit, Option[State]] = {
-    val fs = fsOf(spark, path)
-    val dest = manifestDir(path)
-    if (MaintenanceProtocol.isDirty(spark, path) || !fs.exists(dest))
-      Right(None)
-    else if (fs.getFileStatus(dest).isDirectory) Right(None) // legacy v1
+  override protected def replayLine(s: State,
+      f: Array[String]): Option[State] =
+    if (f(0) != "epoch") None
     else {
-      val lines =
-        try {
-          val in = fs.open(dest)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toVector
-          finally in.close()
-        } catch {
-          case _: java.io.FileNotFoundException => return Left(())
-        }
-      if (lines.length < 3) Right(None) // header + params + ≥1 file
-      else {
-        val v3 = lines.head match {
-          case FormatHeaderV3 => true
-          case FormatHeaderV2 => false
-          case other => throw new IllegalArgumentException(
-            s"unrecognized manifest header at $dest: '$other'")
-        }
-        val p = lines(1).split('\t')
-        require(p.length == (if (v3) 6 else 5) && p(0) == "params",
-          s"malformed manifest params line at $dest: '${lines(1)}'")
-        val gp = if (p(4) == "-") None else Some(p(4).toInt)
-        val epoch = if (v3) p(5).toLong else 0L
-        val files = lines.drop(2).map { l =>
-          val f = l.split('\t')
-          require(f.length == 6 && f(0) == "file",
-            s"malformed manifest file line at $dest: '$l'")
-          val retiredAt =
-            if (v3) { if (f(5) == "-") -1L else f(5).toLong }
-            else { if (f(5) == "1") 0L else -1L }
-          FileEntry(f(1).toInt, f(2), f(3).toLong, f(4).toLong, retiredAt)
-        }
-        replayLog(spark, path,
-          State(Params(p(1).toInt, p(2).toInt, p(3).toLong, gp),
-            files, epoch)) match {
-          case None => Left(())
-          case Some(st) =>
-            if (MaintenanceProtocol.isDirty(spark, path)) Right(None)
-            else Right(Some(st))
-        }
-      }
+      require(f.length == 2,
+        s"malformed delta epoch line: '${f.mkString("\t")}'")
+      Some(s.copy(epoch = math.max(s.epoch, f(1).toLong)))
     }
-  }
 
-  private val DeltaHeader = "graft-postings-delta\t1"
+  def manifestDir(path: String): Path = manifestPath(path)
 
-  /** Fold the incremental log over a freshly parsed base manifest:
-    * one listing of `_manifest_log` (∝ outstanding deltas, bounded by
-    * the fold threshold — never ∝ data files), then each delta's
-    * `del`/`set` actions apply keyed by (cell, file). Replay is
-    * IDEMPOTENT by construction — `set` is an absolute upsert, `del`
-    * of an absent key is a no-op, and the epoch is carried as an
-    * absolute value applied through max() — so a fold that crashed
-    * between swapping the new base and deleting the already-folded
-    * delta files re-applies them harmlessly. (A fold that must NOT
-    * see stale deltas — the directory-truth rebuild, whose base no
-    * longer embeds them — runs under the dirty bracket, and [[write]]
-    * clears the whole log after its swap.)
-    *
-    * Returns None when a listed delta vanished before it could be read
-    * — a concurrent fold deleting the log between this listing and the
-    * open. The pre-log single-file swap degraded such readers to the
-    * listing fallback; throwing here would turn that benign race into
-    * a serve-time failure, so the caller retries once then degrades. */
-  private def replayLog(spark: SparkSession, path: String,
-      base: State): Option[State] = {
-    val fs = fsOf(spark, path)
-    val ld = logDir(path)
-    if (!fs.exists(ld)) return Some(base)
-    val deltas = fs.listStatus(ld)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("delta."))
-      .sortBy(_.getPath.getName)
-    if (deltas.isEmpty) return Some(base)
-    // keyed upsert map preserving first-seen order (base order, then
-    // delta arrival order) — deterministic plans across read paths
-    val order = scala.collection.mutable.LinkedHashMap
-      .empty[(Int, String), FileEntry]
-    base.files.foreach(e => order((e.cell, e.file)) = e)
-    var epoch = base.epoch
-    deltas.foreach { d =>
-      val lines =
-        try {
-          val in = fs.open(d.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toVector
-          finally in.close()
-        } catch {
-          case _: java.io.FileNotFoundException => return None
-        }
-      require(lines.nonEmpty && lines.head == DeltaHeader,
-        s"unrecognized manifest delta at ${d.getPath}: " +
-          s"'${lines.headOption.getOrElse("<empty>")}'")
-      lines.drop(1).foreach { l =>
-        val f = l.split('\t')
-        f(0) match {
-          case "epoch" =>
-            require(f.length == 2, s"malformed delta epoch line: '$l'")
-            epoch = math.max(epoch, f(1).toLong)
-          case "del" =>
-            require(f.length == 3, s"malformed delta del line: '$l'")
-            order.remove((f(1).toInt, f(2)))
-          case "set" =>
-            require(f.length == 6, s"malformed delta set line: '$l'")
-            val retiredAt = if (f(5) == "-") -1L else f(5).toLong
-            order((f(1).toInt, f(2))) =
-              FileEntry(f(1).toInt, f(2), f(3).toLong, f(4).toLong,
-                retiredAt)
-          case other =>
-            throw new IllegalArgumentException(
-              s"unrecognized delta action '$other' at ${d.getPath}")
-        }
-      }
+  /** The manifest iff it is trustworthy ([[ManifestLog.readWith]]). A
+    * v1 (parquet-directory) manifest from an older build returns None —
+    * its artifact re-adopts through the same rebuild path a
+    * manifest-less one does. A base with fewer than header + params + 1
+    * file line returns None too: a postings artifact always has files,
+    * so an empty list means the writer never finished. An unrecognized
+    * header or a garbled line throws. */
+  def readClean(spark: SparkSession, path: String): Option[State] =
+    readWith(spark, path) { (lines, at) =>
+      if (lines.head != baseHeader) throw new IllegalArgumentException(
+        s"unrecognized manifest header at $at: '${lines.head}'")
+      val p = lines(1).split('\t')
+      require(p.length == 6 && p(0) == "params",
+        s"malformed manifest params line at $at: '${lines(1)}'")
+      val gp = if (p(4) == "-") None else Some(p(4).toInt)
+      Some(State(Params(p(1).toInt, p(2).toInt, p(3).toLong, gp),
+        entries(lines.drop(2), at), p(5).toLong))
     }
-    Some(base.copy(files = order.values.toVector, epoch = epoch,
-      logSeq = deltas.last.getPath.getName.stripPrefix("delta.").toLong,
-      logDeltas = deltas.length))
-  }
-
-  /** The fold threshold: read cost is bounded by base + this many
-    * delta files; compaction folds regardless. 32 ops of slack keeps a
-    * trickle-append artifact's read cheap without folding (an
-    * O(total-files) base rewrite) on every append. */
-  val FoldThreshold = 32
-
-  /** Roll the manifest forward INCREMENTALLY: persist only the
-    * structural diff `prev` → `next` as one `_manifest_log` delta file
-    * (tmp+rename, driver-side) — I/O ∝ the op's touched set, never ∝
-    * total files. Trips a FOLD (full [[write]] + log clear) instead
-    * when the outstanding log reaches [[FoldThreshold]], bounding read
-    * replay cost. `prev` MUST be the [[readClean]] state the op rolled
-    * forward from (inside its lease); caller owns the dirty-flag
-    * bracket, same as [[write]]. Returns the state as a subsequent
-    * reader would see it. */
-  def commit(spark: SparkSession, path: String, prev: State,
-      next: State): State = {
-    if (prev.logDeltas + 1 >= FoldThreshold) {
-      write(spark, path, next)
-      return next.copy(logSeq = 0L, logDeltas = 0)
-    }
-    val prevByKey = prev.files.map(e => (e.cell, e.file) -> e).toMap
-    val nextKeys = next.files.map(e => (e.cell, e.file)).toSet
-    val dels = prev.files.filterNot(e => nextKeys((e.cell, e.file)))
-    val sets = next.files.filter(e =>
-      prevByKey.get((e.cell, e.file)) match {
-        case Some(p) => p != e
-        case None => true
-      })
-    val fs = fsOf(spark, path)
-    val ld = logDir(path)
-    fs.mkdirs(ld)
-    val seq = prev.logSeq + 1
-    val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID()}")
-    try {
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(out, "UTF-8"))
-        w.write(DeltaHeader); w.newLine()
-        w.write(s"epoch\t${next.epoch}"); w.newLine()
-        dels.foreach { e =>
-          w.write(Seq("del", e.cell, e.file).mkString("\t")); w.newLine()
-        }
-        sets.foreach { e =>
-          require(!e.file.contains('\t') && !e.file.contains('\n'),
-            s"unencodable file name in manifest delta: '${e.file}'")
-          w.write(Seq("set", e.cell, e.file, e.bytes, e.rows,
-            if (e.retired) e.retiredAt.toString else "-").mkString("\t"))
-          w.newLine()
-        }
-        w.flush()
-      } finally out.close()
-      val dest = new Path(ld, deltaName(seq))
-      require(fs.rename(tmp, dest), s"delta swap failed: $tmp -> $dest")
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-    next.copy(logSeq = seq, logDeltas = prev.logDeltas + 1)
-  }
-
-  /** Persist `state` with a tmp-file + rename swap (the brief
-    * no-manifest window between delete and rename degrades readers to
-    * their listing fallback, never to a wrong manifest). Driver-side
-    * FS write — no Spark job rides the maintenance path. Does NOT
-    * touch the dirty flag — the caller owns the protocol ordering. A
-    * failed write deletes its own tmp file; one stranded by a process
-    * CRASH is swept by the next [[rebuild]] (which lists the root
-    * anyway — no listing is added to the fast paths for garbage that
-    * only a crash can create). */
-  def write(spark: SparkSession, path: String, state: State): Unit = {
-    val fs = fsOf(spark, path)
-    val tmp = new Path(path.stripSuffix("/"),
-      "_manifest.tmp-" + java.util.UUID.randomUUID().toString)
-    try {
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(out, "UTF-8"))
-        w.write(FormatHeaderV3); w.newLine()
-        w.write(Seq("params", state.params.cells, state.params.cap,
-          state.params.ck, state.params.gp.map(_.toString).getOrElse("-"),
-          state.epoch).mkString("\t")); w.newLine()
-        state.files.foreach { f =>
-          require(!f.file.contains('\t') && !f.file.contains('\n'),
-            s"unencodable file name in manifest: '${f.file}'")
-          w.write(Seq("file", f.cell, f.file, f.bytes, f.rows,
-            if (f.retired) f.retiredAt.toString else "-")
-            .mkString("\t")); w.newLine()
-        }
-        w.flush()
-      } finally out.close()
-      val dest = manifestDir(path)
-      fs.delete(dest, true) // recursive: also clears a legacy v1 directory
-      require(fs.rename(tmp, dest), s"manifest swap failed: $tmp -> $dest")
-      // a full write IS a fold: the base now embeds every outstanding
-      // delta (or, for a directory-truth rebuild, supersedes them), so
-      // the log clears. Ordering: base first — a crash between swap and
-      // clear leaves already-folded deltas whose replay is idempotent
-      // (and every rebuild-path write runs under the dirty bracket).
-      fs.delete(logDir(path), true)
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-  }
-
-  // ------------------------------------------------------------ lease
-
-  /** A second maintenance writer was detected — the postings-facing
-    * name for [[MaintenanceProtocol.ConcurrentMaintenanceException]]
-    * (same class; `intercept`/`catch` either). */
-  type ConcurrentMaintenanceException =
-    MaintenanceProtocol.ConcurrentMaintenanceException
-
-  /** The lease primitives are artifact-agnostic and live in
-    * [[MaintenanceProtocol]] (which carries the full contract: the
-    * sibling-file placement that survives overwrite builds, the
-    * per-store atomicity boundary — POSIX O_EXCL locally, server-side
-    * on HDFS/ABFS/GCS, NOT plain S3A — release-in-finally, and the
-    * explicit breakLease crash recovery; reference analogue: the DB
-    * catalog serializing DDL, init-user-db.sh:119-120). These
-    * delegations keep the postings family's call sites and specs
-    * stable. */
-  def leasePath(path: String): Path =
-    MaintenanceProtocol.leasePath(path)
-
-  /** Returns the ownership token — pass it to the token-checked
-    * [[releaseLease]] overload (see [[MaintenanceProtocol]]). */
-  def acquireLease(spark: SparkSession, path: String, op: String): String =
-    MaintenanceProtocol.acquireLease(spark, path, op)
-
-  def releaseLease(spark: SparkSession, path: String): Unit =
-    MaintenanceProtocol.releaseLease(spark, path)
-
-  def releaseLease(spark: SparkSession, path: String, token: String): Unit =
-    MaintenanceProtocol.releaseLease(spark, path, token)
-
-  /** Operator-explicit recovery from a writer that died holding the
-    * lease. Returns whether a lease file existed. */
-  def breakLease(spark: SparkSession, path: String): Boolean =
-    MaintenanceProtocol.breakLease(spark, path)
-
-  /** Acquire the writer lease, run one maintenance op, release. */
-  def withLease[A](spark: SparkSession, path: String, op: String)(
-      body: => A): A =
-    MaintenanceProtocol.withLease(spark, path, op)(body)
 
   /** Directory truth, the O(files) fallback the manifest exists to make
-    * rare: one recursive listing for names/bytes plus one zero-data-
-    * parallelized footer job for per-file row counts (no data pages,
-    * no per-file reader initialization). Params
-    * come from one part-file footer, NOT from the manifest (this is
-    * what REBUILDS the manifest, so it must not trust it). */
-  private def stage[A](name: String)(body: => A): A = {
-    if (!sys.env.contains("GRAFT_MAINT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        f"[maint]   $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-  }
-
+    * rare: one recursive listing for names/bytes plus the part-files'
+    * footers for per-file row counts (no data pages, no per-file reader
+    * initialization — a DataFrame groupBy(input_file_name).count() paid
+    * ~10 ms of full reader initialization per file, 23.6 s of a 74 s
+    * build over 15.5 k files, §6.1 r15). Params come from one part-file
+    * footer, NOT from the manifest (this is what REBUILDS the manifest,
+    * so it must not trust it). */
   def rebuild(spark: SparkSession, path: String): State = {
-    import spark.implicits._
-    val fs = fsOf(spark, path)
-    val root = new Path(path)
-    val rootListing = fs.listStatus(root)
-    // sweep manifest tmp files stranded by a process crash mid-write
-    // (a FAILED write deletes its own tmp) — here, not on the fast
-    // paths: the rebuild pays this listing anyway
-    rootListing
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_manifest.tmp-"))
-      .foreach(s => fs.delete(s.getPath, false))
-    val listed = stage("rebuild_list")(rootListing
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-      .flatMap { d =>
-        val cell = d.getPath.getName.stripPrefix("cell=").toInt
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-          .map(f => (cell, f.getPath.getName, f.getLen))
-      })
+    import MaintenanceProtocol.timed
+    val listed = timed("  rebuild_list")(
+      ManifestLog.listTruth(MaintenanceProtocol.fsOf(spark, path), path))
     require(listed.nonEmpty,
       s"no postings data under $path — build with saveIvfPostings first")
-    // Per-file row counts come from parquet FOOTERS via one
-    // parallelized job ([[org.apache.spark.sql.GraftColumnBridge
-    // .parquetFooterRowCounts]]) — a DataFrame
-    // groupBy(input_file_name).count() paid ~10 ms of full reader
-    // initialization per file (23.6 s of a 74 s build over 15.5 k
-    // files, §6.1 r15); the footer job does the identical accounting
-    // in ~1 s. No data pages are read either way.
-    val byPath = stage("rebuild_counts") {
-      org.apache.spark.sql.GraftColumnBridge.parquetFooterRowCounts(
-        spark,
-        listed.map { case (c, name, _) =>
-          new Path(new Path(root, s"cell=$c"), name).toString
-        }.toSeq)
-    }
-    val perFileRows = listed.map { case (c, name, _) =>
-      (c, name) ->
-        byPath(new Path(new Path(root, s"cell=$c"), name).toString)
-    }.toMap
-    val one = new Path(new Path(root, s"cell=${listed.head._1}"),
-      listed.head._2)
-    val head = stage("rebuild_params")(spark.read.parquet(one.toString))
+    val rows = timed("  rebuild_counts")(
+      ManifestLog.footerRows(spark, listed.map(_._2.getPath)))
+    State(
+      timed("  rebuild_params")(paramsOfFile(spark, listed.head._2.getPath)),
+      listed.zip(rows).map { case ((dir, f), n) =>
+        FileEntry(dir.stripPrefix("cell=").toInt, f.getPath.getName,
+          f.getLen, n)
+      })
+  }
+
+  /** The params one postings part-file's rows carry as iv_ columns —
+    * identical in every row of every file by construction, so one head
+    * row of one file is the artifact's. */
+  def paramsOfFile(spark: SparkSession, file: Path): Params = {
+    val head = spark.read.parquet(file.toString)
     val hr = head.select(col("iv_cells"), col("iv_cap"), col("iv_ck")).take(1)
-    require(hr.nonEmpty, s"unreadable postings part-file: $one")
+    require(hr.nonEmpty,
+      s"empty IVF postings file $file — build with saveIvfPostings")
     val gp =
       if (head.columns.contains("iv_gp"))
         Some(head.select(col("iv_gp")).take(1)(0).getInt(0))
       else None
-    State(
-      Params(hr(0).getInt(0), hr(0).getInt(1), hr(0).getLong(2), gp),
-      listed.toSeq.map { case (c, name, bytes) =>
-        FileEntry(c, name, bytes, perFileRows.getOrElse((c, name), 0L))
-      })
+    Params(hr(0).getInt(0), hr(0).getInt(1), hr(0).getLong(2), gp)
   }
 
-  /** Rebuild from truth, persist, clear any stranded dirty flag — the
-    * recovery step (and the adoption step for a manifest-less
-    * artifact). Any outstanding incremental log is deleted FIRST: the
-    * rebuilt base supersedes it (directory truth embeds whatever the
-    * deltas recorded), and clearing before the base swap closes the
-    * one window where a crash could leave a fresh base next to stale
-    * deltas that the base does not embed (every caller of this path
-    * is in recovery/adoption — there is no clean committed log to
-    * lose). */
-  def rebuildAndWrite(spark: SparkSession, path: String): State = {
-    val s = rebuild(spark, path)
-    fsOf(spark, path).delete(logDir(path), true)
-    write(spark, path, s)
-    clearDirty(spark, path)
-    s
-  }
+  /** Rebuild from truth, persist, clear any stranded dirty flag
+    * ([[ManifestLog.writeRebuilt]]). */
+  def rebuildAndWrite(spark: SparkSession, path: String): State =
+    writeRebuilt(spark, path, rebuild(spark, path))
 
   /** List `cells`' directories (∝ touched, never ∝ artifact) into
     * per-file entries with the given per-cell row counts — the
     * post-overwrite bookkeeping for maintenance that just rewrote those
-    * cells to one file each. */
+    * cells to one file each. A cell directory with files but no count
+    * is a bug and fails fast instead of recording 0 rows. */
   def entriesFromDirs(spark: SparkSession, path: String, cells: Set[Int],
       rowsPerCell: Map[Int, Long]): Seq[FileEntry] = {
-    val fs = fsOf(spark, path)
+    val fs = MaintenanceProtocol.fsOf(spark, path)
     cells.toSeq.flatMap { c =>
       val d = new Path(path.stripSuffix("/"), s"cell=$c")
       if (!fs.exists(d)) Seq.empty
       else fs.listStatus(d)
         .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
         .map(f => FileEntry(c, f.getPath.getName, f.getLen,
-          rowsPerCell.getOrElse(c, 0L)))
+          rowsPerCell.getOrElse(c, sys.error(
+            s"no row count for rewritten cell $c of $path"))))
     }
   }
 }

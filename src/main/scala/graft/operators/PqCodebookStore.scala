@@ -38,49 +38,20 @@ object PqCodebookStore {
   def exists(spark: SparkSession, path: String): Boolean =
     MaintenanceProtocol.fsOf(spark, path).exists(sidecarPath(path))
 
-  /** Persist `cs` (+ its encoding law) with a tmp+rename swap. The
-    * caller owns ordering vs the data files (the build routes write
+  /** Persist `cs` (+ its encoding law) with [[ManifestLog.swapText]].
+    * The caller owns ordering vs the data files (the build routes write
     * the sidecar under their lease, before the manifest roll). */
   def save(spark: SparkSession, path: String, cs: PqCodebookSet,
-      residual: Boolean): Unit = {
-    val fs = MaintenanceProtocol.fsOf(spark, path)
-    val tmp = new Path(path.stripSuffix("/"),
-      "_pq_codebooks.tmp-" + java.util.UUID.randomUUID().toString)
-    try {
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(out, "UTF-8"))
-        w.write(Header); w.newLine()
-        w.write(Seq("params", cs.m, cs.dsub, cs.k, cs.checksum,
-          if (residual) "1" else "0").mkString("\t")); w.newLine()
-        var r = 0
-        while (r < cs.codes.length) {
-          val row = cs.codes(r)
-          val cells = new Array[String](row.length + 2)
-          cells(0) = "cw"
-          cells(1) = r.toString
-          var j = 0
-          while (j < row.length) {
-            cells(j + 2) = java.lang.Long.toHexString(
-              java.lang.Double.doubleToRawLongBits(row(j)))
-            j += 1
-          }
-          w.write(cells.mkString("\t")); w.newLine()
-          r += 1
-        }
-        w.flush()
-      } finally out.close()
-      val dest = sidecarPath(path)
-      fs.delete(dest, false)
-      require(fs.rename(tmp, dest),
-        s"pq codebook sidecar swap failed: $tmp -> $dest")
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-  }
+      residual: Boolean): Unit =
+    ManifestLog.swapText(MaintenanceProtocol.fsOf(spark, path),
+      sidecarPath(path), Iterator(Header,
+        Seq("params", cs.m, cs.dsub, cs.k, cs.checksum,
+          if (residual) "1" else "0").mkString("\t")) ++
+        cs.codes.iterator.zipWithIndex.map { case (row, r) =>
+          (Iterator("cw", r.toString) ++ row.iterator.map(v =>
+            java.lang.Long.toHexString(
+              java.lang.Double.doubleToRawLongBits(v)))).mkString("\t")
+        })
 
   /** Load and VERIFY: the recomputed checksum of the reconstructed set
     * must equal the stored one — a corrupted or hand-edited sidecar

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorOps._
+import graft.operators.MaintenanceProtocol.timed
 
 /** Similarity search over an `embeddings(vec_id, embedding array<float>,
   * label)` relation.
@@ -856,7 +857,7 @@ object Similarity {
     }
 
   private def paramsFromFooter(spark: SparkSession, path: String)
-      : (Int, Int, Long, Option[Int]) = maintStage("params_at_path") {
+      : (Int, Int, Long, Option[Int]) = timed("params_at_path") {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDir = fs.listStatus(hPath)
@@ -867,15 +868,8 @@ object Similarity {
       .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
     require(part.nonEmpty,
       s"postings cell directory holds no part-files: ${cellDir.get.getPath}")
-    val one = spark.read.parquet(part.get.getPath.toString)
-    val head = one.select("iv_cells", "iv_cap", "iv_ck").take(1)
-    require(head.nonEmpty,
-      "empty IVF postings — build them with saveIvfPostings over the corpus")
-    val gp =
-      if (one.columns.contains("iv_gp"))
-        Some(one.select("iv_gp").take(1)(0).getInt(0))
-      else None
-    (head(0).getInt(0), head(0).getInt(1), head(0).getLong(2), gp)
+    val p = PostingsManifest.paramsOfFile(spark, part.get.getPath)
+    (p.cells, p.cap, p.ck, p.gp)
   }
 
   /** Roll a postings artifact forward for newly arrived vectors —
@@ -1045,7 +1039,7 @@ object Similarity {
         // A manifest-ABSENT artifact skips this: it never ran a
         // retained op (those require a manifest), so its listing is
         // truth and the extra shuffle would be pure cost.
-        if (!PostingsManifest.isDirty(spark, path)) raw
+        if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
           import org.apache.spark.sql.expressions.Window
           val head = raw.select(col("iv_cap")).take(1)
@@ -1117,40 +1111,21 @@ object Similarity {
         Some(postings.select(col("iv_gp")).take(1)(0).getInt(0))
       else None
     val packs = (cells + cellsPerPack - 1) / cellsPerPack
-    ArtifactManifest.withLease(spark, path, "build_packed") {
+    MaintenanceProtocol.withLease(spark, path, "build_packed") {
       postings
         .withColumn("pack", (col("cell") / cellsPerPack).cast("int"))
         .repartition(packs, col("pack"))
         .sortWithinPartitions("pack", "cell", "d2", "cand_id")
         .write.mode("overwrite").partitionBy("pack").parquet(path)
-      // one listing + one footer job at build time (the one moment an
+      // one listing + one footer read at build time (the one moment an
       // O(artifact) pass is already paid — and the artifact is only
       // ~packs files here)
-      val fs = ArtifactManifest.fsOf(spark, path)
-      val root = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-      val listed = fs.listStatus(root)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("pack="))
-        .flatMap { d =>
-          fs.listStatus(d.getPath)
-            .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-            .map(f => (d.getPath.getName, f.getPath.getName, f.getLen))
-        }
-      require(listed.nonEmpty, s"packed build landed no files under $path")
-      val rowsByPath = org.apache.spark.sql.GraftColumnBridge
-        .parquetFooterRowCounts(spark, listed.map { case (d, n, _) =>
-          new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(root, d), n).toString }.toSeq)
-      val entries = listed.toSeq.map { case (d, n, bytes) =>
-        ArtifactManifest.FileEntry(s"$d/$n", bytes, rowsByPath.getOrElse(
-          new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(root, d), n).toString, 0L))
-      }
       val params = Map(
         "cells" -> cells.toString, "cap" -> cap.toString,
         "ck" -> ck.toString, "cpp" -> cellsPerPack.toString) ++
         gp.map(g => "gp" -> g.toString)
-      ArtifactManifest.write(spark, path,
-        ArtifactManifest.State(PackedPostingsFamily, params, entries))
+      ArtifactManifest.write(spark, path, ArtifactManifest.rebuild(spark,
+        path, PackedPostingsFamily, params))
     }
   }
 
@@ -1283,7 +1258,7 @@ object Similarity {
     // The lease is a SIBLING file, so it survives the full overwrite
     // below — a rebuild of a live artifact fails fast against a
     // concurrent maintainer instead of wiping the files under it.
-    PostingsManifest.withLease(postings.sparkSession, path, "build") {
+    MaintenanceProtocol.withLease(postings.sparkSession, path, "build") {
       byCellPinned(postings,
         ivCellsFromPlan(postings).getOrElse(Int.MaxValue))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
@@ -1293,7 +1268,7 @@ object Similarity {
       // zero-listing path. Build is the one moment an O(artifact)
       // metadata pass is already being paid — the write itself created
       // exactly these files.
-      maintStage("save_manifest")(
+      timed("save_manifest")(
         PostingsManifest.rebuildAndWrite(postings.sparkSession, path))
     }
 
@@ -1345,12 +1320,12 @@ object Similarity {
     * DataFrame append route ≡ a from-scratch rebuild). */
   private def recapTouchedDirsAndOverwrite(spark: SparkSession,
       path: String, delta0: DataFrame, cap: Int): Unit =
-    PostingsManifest.withLease(spark, path, "recap") {
+    MaintenanceProtocol.withLease(spark, path, "recap") {
     import spark.implicits._
     val state0 = PostingsManifest.readClean(spark, path)
-    val delta = maintStage("recap_delta_ckpt")(delta0.localCheckpoint(true))
+    val delta = timed("recap_delta_ckpt")(delta0.localCheckpoint(true))
     try {
-      val touched = maintStage("recap_touched")(
+      val touched = timed("recap_touched")(
         delta.select($"cell").distinct().as[Int].collect())
       // which touched cells already exist: from the manifest when clean
       // (zero listings), else one root listing
@@ -1379,17 +1354,17 @@ object Similarity {
         .withColumn("cellRank", row_number().over(byCell))
         .filter($"cellRank" <= cap)
         .drop("cellRank")
-      if (state0.nonEmpty) PostingsManifest.markDirty(spark, path)
-      val counts = maintStage("recap_overwrite")(
+      if (state0.nonEmpty) MaintenanceProtocol.markDirty(spark, path)
+      val counts = timed("recap_overwrite")(
         overwriteTouchedCells(spark, path, recapped,
           wantCounts = state0.nonEmpty, cells = touched.length))
       state0.foreach { st =>
-        maintStage("recap_manifest_roll") {
+        timed("recap_manifest_roll") {
           val entries = PostingsManifest.entriesFromDirs(
             spark, path, counts.keySet, counts)
           PostingsManifest.commit(spark, path, st,
             st.replacingCells(counts.keySet, entries))
-          PostingsManifest.clearDirty(spark, path)
+          MaintenanceProtocol.clearDirty(spark, path)
         }
       }
     } finally org.apache.spark.sql.GraftColumnBridge
@@ -1606,25 +1581,25 @@ object Similarity {
     * exists to close. */
   private def recapRetained(spark: SparkSession, path: String,
       delta0: DataFrame, cap: Int): Unit =
-    PostingsManifest.withLease(spark, path, "recap_retained") {
+    MaintenanceProtocol.withLease(spark, path, "recap_retained") {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleDeltas(fs, hPath)
+    ManifestLog.sweepStaleDeltas(spark, path)
     val st0 = PostingsManifest.readClean(spark, path).getOrElse(
       throw new IllegalStateException(
         s"manifest at $path became untrusted between the route probe " +
           "and the lease (a concurrent writer crashed mid-op?) — " +
           "run compactIvfPostings to recover, then retry"))
-    PostingsManifest.markDirty(spark, path)
+    MaintenanceProtocol.markDirty(spark, path)
     val aged = st0.files.filter(f => f.retired && f.retiredAt < st0.epoch)
     MaintenanceProtocol.bulkDeleteFiles(fs, hPath, aged.map(e =>
       new org.apache.hadoop.fs.Path(
         path.stripSuffix("/") + s"/cell=${e.cell}/${e.file}")))
     val st = st0.copy(files = st0.files.filterNot(aged.toSet))
-    val delta = maintStage("recapr_delta_ckpt")(delta0.localCheckpoint(true))
+    val delta = timed("recapr_delta_ckpt")(delta0.localCheckpoint(true))
     try {
-      val touched = maintStage("recapr_touched")(
+      val touched = timed("recapr_touched")(
         delta.select($"cell").distinct().as[Int].collect()).toSet
       val touchedExisting = touched.intersect(st.perCellFiles.keySet)
       val old =
@@ -1647,17 +1622,14 @@ object Similarity {
         .withColumn("cellRank", row_number().over(byCell))
         .filter($"cellRank" <= cap)
         .drop("cellRank")
-      val staged = maintStage("recapr_fold")(
+      val entries = timed("recapr_fold")(
         stageIntoCells(spark, path, recapped, touched.size))
-      val entries = staged.map { case (c, name, bytes, rows) =>
-        PostingsManifest.FileEntry(c, name, bytes, rows)
-      }
-      maintStage("recapr_manifest_roll") {
+      timed("recapr_manifest_roll") {
         // prev = st0, the state as READ (aged entries included), so
         // the delta's dels carry the entry-vacuumed files too
         val next = st.retiringCells(touched, entries)
         PostingsManifest.commit(spark, path, st0, next)
-        PostingsManifest.clearDirty(spark, path)
+        MaintenanceProtocol.clearDirty(spark, path)
         logRetiredDebt(path, next)
       }
     } finally org.apache.spark.sql.GraftColumnBridge
@@ -1699,24 +1671,6 @@ object Similarity {
         .withColumn("iv_cap", lit(cap))) // artifact's cap, not the delta's
   }
 
-  /** The fragment WRITE: land the delta's one-file-per-touched-cell
-    * layout in the artifact without `mode("append")` — a partitioned
-    * path append RESOLVES THE EXISTING RELATION first, i.e. lists the
-    * accumulated artifact inside the write (measured: 3 k-row fragment
-    * appends at 21.5 s mean and CLIMBING as files accrued 14.6 k→68 k,
-    * vs 10.3 s for the recap route that rewrites 40× the rows). The
-    * delta is instead written partitioned into a FRESH temp directory
-    * (nothing to list) and its per-cell files are FS-renamed into the
-    * artifact's cell directories — metadata operations ∝ touched
-    * cells, nothing ∝ the artifact. Part-file names carry the write
-    * job's UUID, so renames cannot collide with prior fragments. A
-    * crash mid-rename leaves a PARTIAL fragment append — the same
-    * at-least-once posture the mode already documents: the batch
-    * replays, and compaction dedups on (cell, cand_id). */
-  /** Env-gated stage timing for the maintenance routes
-    * (GRAFT_MAINT_TIMING=1 → one stderr line per stage) — the
-    * observability that attributed the fragment-append wall to its
-    * stages instead of guessing. */
   private lazy val maintLog =
     org.slf4j.LoggerFactory.getLogger("graft.operators.Similarity")
 
@@ -1736,86 +1690,41 @@ object Similarity {
         "explicitly by vacuumPostings")
   }
 
-  private def maintStage[A](name: String)(body: => A): A = {
-    if (!sys.env.contains("GRAFT_MAINT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        f"[maint] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-  }
-
   /** Land `df`'s one-file-per-touched-cell layout INSIDE the artifact
-    * without listing it: partitioned write into a fresh sibling staging
-    * dir (nothing to list there), then per-file FS renames into the
-    * cell directories — metadata operations ∝ touched cells, nothing ∝
-    * the artifact. Part-file names carry the write job's UUID, so
-    * renames cannot collide with prior files. Returns the landed
-    * (cell, name, bytes, rows) — name/bytes captured from the staging
-    * listing the rename pass walks anyway, rows from ONE
-    * footer-metadata job over the landed files (the
-    * [[PostingsManifest.rebuild]] accounting trick). Carrying rows here
-    * lets every caller feed the manifest WITHOUT a pre-write
-    * groupBy(cell).count() pass — which also means the staged frame is
-    * consumed exactly ONCE, so the callers' localCheckpoint
+    * without listing it: a partitioned write into a fresh staging dir,
+    * then [[ManifestLog.stageAndRename]]'s per-file renames into the
+    * cell directories. Returns the landed entries with rows from the
+    * landed footers — which lets every caller feed the manifest
+    * WITHOUT a pre-write groupBy(cell).count() pass, so the staged
+    * frame is consumed exactly ONCE and the callers' localCheckpoint
     * materializations (one extra job + block storage per maintenance
     * op, ∝ the delta) are gone too. Guide §1.2: fewer passes first. */
   private def stageIntoCells(spark: SparkSession, path: String,
       df: DataFrame,
-      cells: Int = Int.MaxValue): Seq[(Int, String, Long, Long)] = {
-    val tmp = path.stripSuffix("/") +
-      "__delta_" + java.util.UUID.randomUUID().toString
-    maintStage("stage_write_tmp") {
+      cells: Int = Int.MaxValue): Seq[PostingsManifest.FileEntry] =
+    ManifestLog.stageAndRename(spark, path)(tmp =>
       byCellPinned(df, cells)
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hTmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, Long)]
-    try maintStage("stage_rename") {
-      fs.listStatus(hTmp)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-        .foreach { d =>
-          val cell = d.getPath.getName.stripPrefix("cell=").toInt
-          val dest = new org.apache.hadoop.fs.Path(path, d.getPath.getName)
-          fs.mkdirs(dest) // no-op when the cell directory already exists
-          fs.listStatus(d.getPath)
-            .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-            .foreach { f =>
-              require(fs.rename(f.getPath,
-                new org.apache.hadoop.fs.Path(dest, f.getPath.getName)),
-                s"staging rename failed: ${f.getPath} -> $dest")
-              staged += ((cell, f.getPath.getName, f.getLen))
-            }
-        }
-    } finally maintStage("stage_cleanup")(fs.delete(hTmp, true))
-    // per-file rows from the footers of the just-landed files: one
-    // metadata-bounded job (no data pages), replacing the callers'
-    // pre-write count pass + its localCheckpoint
-    val rows = maintStage("stage_footer_rows")(
-      org.apache.spark.sql.GraftColumnBridge.parquetFooterRowCounts(spark,
-        staged.map { case (c, name, _) =>
-          new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(path, s"cell=$c"), name).toString
-        }.toSeq))
-    staged.toSeq.map { case (c, name, bytes) =>
-      val landed = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(path, s"cell=$c"), name).toString
-      // fail fast: a missing footer for a just-renamed file is always a
-      // bug — defaulting to 0 would silently corrupt the manifest's row
-      // accounting downstream (r19 ADVICE)
-      val n = rows.getOrElse(landed, sys.error(
-        s"no parquet footer row count for just-staged file $landed"))
-      (c, name, bytes, n)
-    }
-  }
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp))
+      .map(f => PostingsManifest.FileEntry(f.dir.stripPrefix("cell=").toInt,
+        f.name, f.bytes, f.rows))
 
+  /** The fragment WRITE: land the delta's one-file-per-touched-cell
+    * layout in the artifact without `mode("append")` — a partitioned
+    * path append RESOLVES THE EXISTING RELATION first, i.e. lists the
+    * accumulated artifact inside the write (measured: 3 k-row fragment
+    * appends at 21.5 s mean and CLIMBING as files accrued 14.6 k→68 k,
+    * vs 10.3 s for the recap route that rewrites 40× the rows). The
+    * delta is instead written partitioned into a FRESH temp directory
+    * (nothing to list) and its per-cell files are FS-renamed into the
+    * artifact's cell directories — metadata operations ∝ touched
+    * cells, nothing ∝ the artifact. Part-file names carry the write
+    * job's UUID, so renames cannot collide with prior fragments. A
+    * crash mid-rename leaves a PARTIAL fragment append — the same
+    * at-least-once posture the mode already documents: the batch
+    * replays, and compaction dedups on (cell, cand_id). */
   private def appendFragmentFiles(spark: SparkSession, path: String,
       delta0: DataFrame): Unit =
-    PostingsManifest.withLease(spark, path, "fragment_append") {
+    MaintenanceProtocol.withLease(spark, path, "fragment_append") {
     import spark.implicits._
     // The manifest is re-read INSIDE the lease (the callers' pre-lease
     // read only derived params and routing): rolling forward from a
@@ -1829,16 +1738,13 @@ object Similarity {
     // localCheckpoint + groupBy(cell).count() pair of jobs is gone.
     // write-ahead intent: from the first rename on, the manifest no
     // longer matches the directory until rolled forward below
-    if (state0.nonEmpty) PostingsManifest.markDirty(spark, path)
-    val staged = stageIntoCells(spark, path, delta0,
+    if (state0.nonEmpty) MaintenanceProtocol.markDirty(spark, path)
+    val entries = stageIntoCells(spark, path, delta0,
       state0.map(_.params.cells).getOrElse(Int.MaxValue))
     state0.foreach { st =>
-      maintStage("frag_manifest_roll") {
-        val entries = staged.map { case (c, name, bytes, rows) =>
-          PostingsManifest.FileEntry(c, name, bytes, rows)
-        }
+      timed("frag_manifest_roll") {
         PostingsManifest.commit(spark, path, st, st.adding(entries))
-        PostingsManifest.clearDirty(spark, path)
+        MaintenanceProtocol.clearDirty(spark, path)
       }
     }
   }
@@ -2004,7 +1910,7 @@ object Similarity {
       delta: DataFrame, cap: Int, state0: Option[PostingsManifest.State],
       fragmentThreshold: Double, retained: Boolean = false): AppendRoute = {
     import spark.implicits._
-    val perCellBatch = maintStage("route_probe")(
+    val perCellBatch = timed("route_probe")(
       delta.groupBy(col("cell").cast("int").as("cell")).count()
         .as[(Int, Long)].collect())
     val batchRows = perCellBatch.map(_._2).sum
@@ -2029,23 +1935,8 @@ object Similarity {
     }
   }
 
-  /** Delete orphaned fragment-staging siblings (`<artifact>__delta_*`):
-    * [[appendFragmentFiles]] removes its temp dir in a finally, so one
-    * survives only a DRIVER crash mid-append — but those accumulate
-    * next to the artifact forever, invisible to readers (they are
-    * outside the artifact directory) yet billable storage. Compaction
-    * is the artifact's exclusive-maintenance window (same concurrency
-    * contract as the overwrites: no concurrent appends), so every
-    * surviving staging dir here is by definition stale — swept
-    * unconditionally. The crashed batch itself is the documented
-    * at-least-once story: it replays, and this same compaction dedups
-    * the rows that did land. */
-  private def sweepStaleDeltas(fs: org.apache.hadoop.fs.FileSystem,
-      hPath: org.apache.hadoop.fs.Path): Int =
-    ArtifactManifest.sweepStaleDeltas(fs, hPath)
-
   def compactIvfPostings(spark: SparkSession, path: String): (Int, Int, Int) =
-    PostingsManifest.withLease(spark, path, "compact")(
+    MaintenanceProtocol.withLease(spark, path, "compact")(
       compactIvfPostingsLocked(spark, path))
 
   /** [[compactIvfPostings]]'s body with the writer lease ALREADY HELD —
@@ -2061,7 +1952,7 @@ object Similarity {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleDeltas(fs, hPath)
+    ManifestLog.sweepStaleDeltas(spark, path)
     PostingsManifest.readClean(spark, path) match {
       // ---- manifest route: fragmented-set detection from ONE small
       // read — no artifact listing, no per-cell listStatus, no
@@ -2097,14 +1988,14 @@ object Similarity {
           .withColumn("cellRank", row_number().over(byCell))
           .filter($"cellRank" <= cap)
           .drop("cellRank")
-        PostingsManifest.markDirty(spark, path)
+        MaintenanceProtocol.markDirty(spark, path)
         val counts = overwriteTouchedCells(spark, path, folded,
           wantCounts = true, cells = fragmented.size)
         val entries = PostingsManifest.entriesFromDirs(
           spark, path, fragmented, counts)
         PostingsManifest.write(spark, path,
           st.replacingCells(fragmented, entries))
-        PostingsManifest.clearDirty(spark, path)
+        MaintenanceProtocol.clearDirty(spark, path)
         (fragmented.size, filesBefore,
           filesBefore - fragmented.toSeq.map(pcFiles).sum + fragmented.size)
 
@@ -2192,12 +2083,12 @@ object Similarity {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PostingsManifest.withLease(spark, path, "compact_retained") {
-      sweepStaleDeltas(fs, hPath)
+    MaintenanceProtocol.withLease(spark, path, "compact_retained") {
+      ManifestLog.sweepStaleDeltas(spark, path)
       PostingsManifest.readClean(spark, path) match {
         case None => compactIvfPostingsLocked(spark, path)
         case Some(st0) =>
-          PostingsManifest.markDirty(spark, path)
+          MaintenanceProtocol.markDirty(spark, path)
           // vacuum tombstones at least one maintenance epoch old — the
           // same window law as vacuumPostings(1): the latest op's own
           // tombstones (age 0) survive this op too, so a snapshot
@@ -2217,7 +2108,7 @@ object Similarity {
              else st.perCellRows.filter(_._2 > cap).keySet)
           if (fragmented.isEmpty) {
             PostingsManifest.write(spark, path, st)
-            PostingsManifest.clearDirty(spark, path)
+            MaintenanceProtocol.clearDirty(spark, path)
             (0, filesBefore, filesBefore)
           } else {
             val frag = org.apache.spark.sql.GraftColumnBridge
@@ -2234,14 +2125,11 @@ object Similarity {
               .withColumn("cellRank", row_number().over(byCell))
               .filter($"cellRank" <= cap)
               .drop("cellRank")
-            val staged = stageIntoCells(spark, path, folded,
+            val entries = stageIntoCells(spark, path, folded,
               fragmented.size)
-            val entries = staged.map { case (c, name, bytes, rows) =>
-              PostingsManifest.FileEntry(c, name, bytes, rows)
-            }
             val next = st.retiringCells(fragmented, entries)
             PostingsManifest.write(spark, path, next)
-            PostingsManifest.clearDirty(spark, path)
+            MaintenanceProtocol.clearDirty(spark, path)
             logRetiredDebt(path, next)
             (fragmented.size, filesBefore,
               filesBefore - fragmented.toSeq.map(pcFiles).sum +
@@ -2290,10 +2178,10 @@ object Similarity {
   def vacuumPostings(spark: SparkSession, path: String,
       retentionEpochs: Long = 1L): (Int, Long) = {
     require(retentionEpochs >= 0, s"retentionEpochs=$retentionEpochs")
-    PostingsManifest.withLease(spark, path, "vacuum") {
+    MaintenanceProtocol.withLease(spark, path, "vacuum") {
       val st = PostingsManifest.readClean(spark, path).getOrElse {
         val why =
-          if (PostingsManifest.isDirty(spark, path)) "is dirty"
+          if (MaintenanceProtocol.isDirty(spark, path)) "is dirty"
           else "has no manifest"
         throw new IllegalStateException(
           s"vacuum refused: $path $why — the retired set is manifest " +
@@ -2302,14 +2190,14 @@ object Similarity {
       val (kept, drop) = st.vacuumed(retentionEpochs)
       if (drop.isEmpty) (0, 0L)
       else {
-        val fs = PostingsManifest.fsOf(spark, path)
-        PostingsManifest.markDirty(spark, path)
+        val fs = MaintenanceProtocol.fsOf(spark, path)
+        MaintenanceProtocol.markDirty(spark, path)
         MaintenanceProtocol.bulkDeleteFiles(fs,
           new org.apache.hadoop.fs.Path(path.stripSuffix("/")),
           drop.map(e => new org.apache.hadoop.fs.Path(
             path.stripSuffix("/") + s"/cell=${e.cell}/${e.file}")))
         PostingsManifest.commit(spark, path, st, kept)
-        PostingsManifest.clearDirty(spark, path)
+        MaintenanceProtocol.clearDirty(spark, path)
         (drop.size, drop.map(_.bytes).sum)
       }
     }
@@ -2339,7 +2227,7 @@ object Similarity {
     val stateOpt = PostingsManifest.readClean(spark, path)
     val status =
       if (stateOpt.nonEmpty) "clean"
-      else if (PostingsManifest.isDirty(spark, path)) "dirty"
+      else if (MaintenanceProtocol.isDirty(spark, path)) "dirty"
       else "absent"
     val st = stateOpt.getOrElse(PostingsManifest.rebuild(spark, path))
     val pcFiles = st.perCellFiles
@@ -3157,7 +3045,7 @@ object Similarity {
       residual: Boolean = true): Unit = {
     val spark = postings.sparkSession
     import spark.implicits._
-    PostingsManifest.withLease(spark, path, "build_pq") {
+    MaintenanceProtocol.withLease(spark, path, "build_pq") {
       val foreign = postings.select($"pq_ck").distinct()
         .as[Long].collect().filterNot(_ == cs.checksum)
       require(foreign.isEmpty,
@@ -3168,7 +3056,7 @@ object Similarity {
         ivCellsFromPlan(postings).getOrElse(Int.MaxValue))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
       PqCodebookStore.save(spark, path, cs, residual)
-      maintStage("save_manifest")(
+      timed("save_manifest")(
         PostingsManifest.rebuildAndWrite(spark, path))
     }
   }
@@ -3208,7 +3096,7 @@ object Similarity {
       case None =>
         spark.catalog.refreshByPath(path)
         val raw = spark.read.parquet(path)
-        if (!PostingsManifest.isDirty(spark, path)) raw
+        if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
           val head = raw.select(col("iv_cap")).take(1)
           if (head.isEmpty) raw
@@ -3257,7 +3145,7 @@ object Similarity {
     * surviving rows), restore the layout, fold the manifest log. */
   def compactIvfPqPostings(spark: SparkSession,
       path: String): (Int, Int, Int) =
-    PostingsManifest.withLease(spark, path, "compact_pq")(
+    MaintenanceProtocol.withLease(spark, path, "compact_pq")(
       compactIvfPostingsLocked(spark, path, _ => pqPostingsDataSchema))
 
   /** STEADY-STATE IVF+PQ serve from the persisted artifact — the

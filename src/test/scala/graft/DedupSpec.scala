@@ -456,7 +456,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     // a stranded dirty flag degrades to the discovering read (truth for
     // a flat add-only artifact), and compaction re-adopts the sidecar
-    graft.operators.ArtifactManifest.markDirty(spark, path)
+    graft.operators.MaintenanceProtocol.markDirty(spark, path)
     val fallback = Dedup.readExactIndex(spark, path)
     assert(!fallback.queryExecution.executedPlan.toString
       .contains("ManifestFileIndex"),
@@ -607,12 +607,12 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     // a dirty sidecar IS the signal; numbers fall back to a rebuild
     // (which carries no base marker — appended reports unknown = -1)
-    ArtifactManifest.markDirty(spark, path)
+    graft.operators.MaintenanceProtocol.markDirty(spark, path)
     val rd = report
     assert(rd.getAs[String]("manifest") == "dirty" &&
       rd.getAs[Long]("files") == 4 &&
       rd.getAs[Long]("appended_files") == -1, s"dirty: $rd")
-    ArtifactManifest.clearDirty(spark, path)
+    graft.operators.MaintenanceProtocol.clearDirty(spark, path)
 
     // compaction resets the baseline
     Dedup.compactExactIndex(spark, path)
@@ -1004,12 +1004,12 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       == expected)
 
     // dirty sidecar → discovering fallback, identical screen
-    graft.operators.ArtifactManifest.markDirty(spark, path)
+    graft.operators.MaintenanceProtocol.markDirty(spark, path)
     assert(!Dedup.readMinhashIndex(spark, path)
       .queryExecution.executedPlan.toString.contains("ManifestFileIndex"))
     assert(pairSet(Dedup.nearDupAgainstArtifact(spark, path, batch, 0.4))
       == expected)
-    graft.operators.ArtifactManifest.clearDirty(spark, path)
+    graft.operators.MaintenanceProtocol.clearDirty(spark, path)
   }
 
   test("incremental contamination screen via a persisted winnow index matches q47") {
@@ -1133,10 +1133,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       e.getMessage.contains("exact_hash_index"), e.getMessage)
     // and a DIRTY foreign manifest still names its family (the tag is
     // authoritative even when the file list is stale)
-    graft.operators.ArtifactManifest.markDirty(spark, path)
+    graft.operators.MaintenanceProtocol.markDirty(spark, path)
     intercept[IllegalStateException](
       Dedup.readMinhashIndex(spark, path).count())
-    graft.operators.ArtifactManifest.clearDirty(spark, path)
+    graft.operators.MaintenanceProtocol.clearDirty(spark, path)
   }
 
   test("winnow-index artifact: stale-df screens exact, compaction restores df") {
@@ -1207,12 +1207,12 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     // a stranded dirty flag degrades the read to discovery; the screen
     // still answers exactly (flat artifact: the listing is truth)
-    graft.operators.ArtifactManifest.markDirty(spark, path)
+    graft.operators.MaintenanceProtocol.markDirty(spark, path)
     assert(!Dedup.readWinnowIndex(spark, path)
       .queryExecution.executedPlan.toString.contains("ManifestFileIndex"))
     assert(setOf(Dedup.contaminationAgainstArtifact(spark, path, evalDocs))
       == expected)
-    graft.operators.ArtifactManifest.clearDirty(spark, path)
+    graft.operators.MaintenanceProtocol.clearDirty(spark, path)
   }
 
   test("exactIndexBloom restores the session bloom-filter confs it raises") {

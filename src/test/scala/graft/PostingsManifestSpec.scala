@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{PostingsManifest, Similarity}
+import graft.operators.{MaintenanceProtocol, PostingsManifest, Similarity}
 
 /** The postings manifest sidecar's one invariant, pinned through every
   * lifecycle op: **dirty-flag absent ⟹ manifest ≡ directory truth**
@@ -53,7 +53,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def assertManifestIsTruth(path: String, where: String): Unit = {
-    assert(!PostingsManifest.isDirty(spark, path),
+    assert(!MaintenanceProtocol.isDirty(spark, path),
       s"$where: dirty flag must be cleared")
     assert(manifestSet(path) == truth(path),
       s"$where: manifest diverged from directory truth")
@@ -132,7 +132,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     org.apache.hadoop.fs.FileUtil.copy(f, aFile.getPath, f,
       new Path(aCell, "part-crashed-" + aFile.getPath.getName.drop(5)),
       false, spark.sparkContext.hadoopConfiguration)
-    PostingsManifest.markDirty(spark, path)
+    MaintenanceProtocol.markDirty(spark, path)
     // consumers must refuse the (now stale) manifest
     assert(PostingsManifest.readClean(spark, path).isEmpty)
     // compaction falls back to directory truth: it must SEE the crashed
@@ -446,7 +446,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val b4 = emb.filter($"vec_id" % 4 === 3)
     Similarity.appendIvfPostingsFragment(spark, path, cents, b4)
     Similarity.compactIvfPostingsRetained(spark, path) // opens a window
-    PostingsManifest.markDirty(spark, path) // simulate a crash
+    MaintenanceProtocol.markDirty(spark, path) // simulate a crash
     PostingsManifest.rebuildAndWrite(spark, path) // resurrects tombstones
     Similarity.compactIvfPostings(spark, path)
     spark.catalog.refreshByPath(path)
@@ -568,49 +568,49 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val b1 = emb.filter($"vec_id" % 4 === 1)
     // a writer (us, here) holds the lease — EVERY maintenance family
     // must fail fast BEFORE mutating anything, naming the holder
-    PostingsManifest.acquireLease(spark, path, "spec-writer")
+    MaintenanceProtocol.acquireLease(spark, path, "spec-writer")
     val truthBefore = truth(path)
     val exs = Seq(
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.appendIvfPostingsFragment(spark, path, cents, b1)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.appendIvfPostingsInPlace(spark, path, model, b1)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.appendIvfPostingsRetained(spark, path, cents, b1)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.compactIvfPostings(spark, path)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.compactIvfPostingsRetained(spark, path)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.vacuumPostings(spark, path)),
-      intercept[PostingsManifest.ConcurrentMaintenanceException](
+      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.saveIvfPostings(
           Similarity.ivfPostings(b1, model), path)))
     assert(exs.forall(_.getMessage.contains("spec-writer")),
       "the refusal must name the live holder")
     assert(truth(path) == truthBefore,
       "a refused op must not have touched the artifact")
-    assert(!PostingsManifest.isDirty(spark, path),
+    assert(!MaintenanceProtocol.isDirty(spark, path),
       "a refused op must not have marked dirty")
     // the holder's own op path stays open: release → ops proceed
-    PostingsManifest.releaseLease(spark, path)
+    MaintenanceProtocol.releaseLease(spark, path)
     Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
     assertManifestIsTruth(path, "after the lease was released")
     // crash recovery: a lease stranded by a dead writer blocks until
     // the OPERATOR breaks it (no TTL guessing), then compaction's
     // directory-truth path absorbs whatever the dead writer left
-    PostingsManifest.acquireLease(spark, path, "dead-writer")
-    PostingsManifest.markDirty(spark, path) // died mid-op
-    intercept[PostingsManifest.ConcurrentMaintenanceException](
+    MaintenanceProtocol.acquireLease(spark, path, "dead-writer")
+    MaintenanceProtocol.markDirty(spark, path) // died mid-op
+    intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
       Similarity.compactIvfPostings(spark, path))
-    assert(PostingsManifest.breakLease(spark, path))
+    assert(MaintenanceProtocol.breakLease(spark, path))
     Similarity.compactIvfPostings(spark, path)
     assertManifestIsTruth(path, "after break-lease recovery")
     // ...and an op that merely FAILS releases its lease itself: the
     // next writer is not blocked (the dirty flag, not the lease, is
     // what records the incomplete mutation)
     val boom = intercept[RuntimeException](
-      PostingsManifest.withLease(spark, path, "failing-op") {
+      MaintenanceProtocol.withLease(spark, path, "failing-op") {
         throw new RuntimeException("op body failed")
       })
     assert(boom.getMessage == "op body failed")
@@ -641,10 +641,10 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
           def run(): Unit = {
             ready.countDown(); go.await(10, TimeUnit.SECONDS)
             try {
-              PostingsManifest.acquireLease(spark, path, s"racer-$i")
+              MaintenanceProtocol.acquireLease(spark, path, s"racer-$i")
               wins.incrementAndGet(); outcomes.add(s"win-$i")
             } catch {
-              case _: PostingsManifest.ConcurrentMaintenanceException =>
+              case _: MaintenanceProtocol.ConcurrentMaintenanceException =>
                 outcomes.add(s"lose-$i")
               case e: Throwable => outcomes.add(s"error-$i-${e.getClass}")
             }
@@ -662,12 +662,12 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // the winner's lease is intact and names it
     val fs = new Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(PostingsManifest.leasePath(path))
+    val in = fs.open(MaintenanceProtocol.leasePath(path))
     val holder =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     assert(holder.startsWith("racer-"), s"lease token corrupted: '$holder'")
-    PostingsManifest.breakLease(spark, path)
+    MaintenanceProtocol.breakLease(spark, path)
   }
 
   test("standalone vacuum honors the retention window exactly") {
@@ -688,11 +688,11 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assert(ex0.getMessage.contains("no manifest"))
     Similarity.compactIvfPostings(spark, path) // re-adopt
     // ...and a dirty one
-    PostingsManifest.markDirty(spark, path)
+    MaintenanceProtocol.markDirty(spark, path)
     val ex1 = intercept[IllegalStateException](
       Similarity.vacuumPostings(spark, path))
     assert(ex1.getMessage.contains("dirty"))
-    PostingsManifest.clearDirty(spark, path)
+    MaintenanceProtocol.clearDirty(spark, path)
 
     // open a retention window: fragment + retained compact retires the
     // fragments at the CURRENT epoch
@@ -897,10 +897,10 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // double-counts, which is exactly what the fallback must not serve
     spark.catalog.refreshByPath(path)
     assert(spark.read.parquet(path).count() > clean.size)
-    PostingsManifest.markDirty(spark, path) // simulate a crashed writer
+    MaintenanceProtocol.markDirty(spark, path) // simulate a crashed writer
     assert(rows(Similarity.readPostings(spark, path)) == clean,
       "the dirty fallback must serve the canonical (deduped, capped) rows")
-    PostingsManifest.clearDirty(spark, path)
+    MaintenanceProtocol.clearDirty(spark, path)
     // a manifest-ABSENT artifact (never retained) skips the fold — the
     // raw listing is truth there; count equality pins no behavior drift
     Similarity.vacuumPostings(spark, path, retentionEpochs = 0L)
@@ -969,7 +969,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       s"pack-pruned read touched foreign packs: ${probeFiles.toSeq}")
 
     // dirty manifest → discovering fallback, identical rows
-    graft.operators.ArtifactManifest.markDirty(spark, packed)
+    graft.operators.MaintenanceProtocol.markDirty(spark, packed)
     val fb = Similarity.readPackedPostings(spark, packed)
     assert(!fb.queryExecution.executedPlan.toString
       .contains("ManifestFileIndex"))
@@ -977,7 +977,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assert(served(Similarity.ivfTopKFromPostingsPackedPruned(
       queries, cents, packed, probes = 2, k = 3)) == expect,
       "the fallback serve (cell filter only) must answer exactly")
-    graft.operators.ArtifactManifest.clearDirty(spark, packed)
+    graft.operators.MaintenanceProtocol.clearDirty(spark, packed)
 
     // the deployment cycle: maintain the CLASSIC artifact (retained
     // append opens a retention window — tombstones on disk), then
@@ -1017,25 +1017,25 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
   test("release is token-checked: a broken-and-reacquired lease survives") {
     val path = java.nio.file.Files
       .createTempDirectory("graft_lease_token").resolve("artifact").toString
-    val t1 = PostingsManifest.acquireLease(spark, path, "slow-writer")
+    val t1 = MaintenanceProtocol.acquireLease(spark, path, "slow-writer")
     // an operator decides slow-writer is dead and breaks the lease; a
     // second writer acquires
-    assert(PostingsManifest.breakLease(spark, path))
-    PostingsManifest.acquireLease(spark, path, "writer-2")
+    assert(MaintenanceProtocol.breakLease(spark, path))
+    MaintenanceProtocol.acquireLease(spark, path, "writer-2")
     // slow-writer's finally fires — it must NOT delete writer-2's lease
-    PostingsManifest.releaseLease(spark, path, t1)
+    MaintenanceProtocol.releaseLease(spark, path, t1)
     val f = fs(path)
-    assert(f.exists(PostingsManifest.leasePath(path)),
+    assert(f.exists(MaintenanceProtocol.leasePath(path)),
       "a token-mismatched release must not delete the new holder's lease")
-    val in = f.open(PostingsManifest.leasePath(path))
+    val in = f.open(MaintenanceProtocol.leasePath(path))
     val holder =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     assert(holder.startsWith("writer-2"))
     // ...and a third writer still fails fast against writer-2
-    intercept[PostingsManifest.ConcurrentMaintenanceException](
-      PostingsManifest.acquireLease(spark, path, "writer-3"))
-    PostingsManifest.breakLease(spark, path)
+    intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
+      MaintenanceProtocol.acquireLease(spark, path, "writer-3"))
+    MaintenanceProtocol.breakLease(spark, path)
   }
 
   test("parquetFooterRowCounts matches actual per-file counts on both " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorOps._
-import graft.operators.{PostingsManifest, PqCodebookStore, Similarity}
+import graft.operators.{MaintenanceProtocol, PostingsManifest, PqCodebookStore, Similarity}
 
 /** The persisted PQ index artifact: codebook sidecar round-trip +
   * checksum fail-fasts, the fragment/replay/compact lifecycle ≡ the
@@ -178,11 +178,11 @@ class PqArtifactSpec extends AnyFunSuite with SparkSpec {
       e.filter($"vec_id" % 10 === 0)) // replay, uncompacted
     // a stranded dirty flag degrades the read to the converging
     // fallback — dedup + re-cap on the stored d2 must land the rebuild
-    PostingsManifest.markDirty(spark, path)
+    MaintenanceProtocol.markDirty(spark, path)
     try {
       val got = artifactRows(Similarity.readPqPostings(spark, path))
       val want = artifactRows(Similarity.ivfPqPostings(e, cents, cs, 4))
       assert(got == want, "dirty-state read did not converge")
-    } finally PostingsManifest.clearDirty(spark, path)
+    } finally MaintenanceProtocol.clearDirty(spark, path)
   }
 }
