@@ -25,7 +25,9 @@ object Tables {
     if (name == "events") loadEvents(spark, dir)
     else read(spark, s"$dir/$name.parquet")
 
-  private def read(spark: SparkSession, path: String): DataFrame =
+  /** `spark.read.parquet(path)` with the schema from [[footerSchema]]:
+    * the same frame, with no schema-inference job. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(footerSchema(spark, path)).parquet(path)
 
   /** The schema `spark.read.parquet(path)` infers, read on the driver

@@ -51,11 +51,14 @@ object Dedup {
     * without touching the corpus itself. One column keeps the index
     * tiny (16 bytes/doc — a 10¹⁰-doc corpus indexes in ~160 GB, vs
     * re-scanning 100 TB of text per ingest). */
-  def exactHashIndex(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(md5($"text").as("text_hash")).distinct()
-  }
+  def exactHashIndex(docs: DataFrame): DataFrame =
+    textHashes(docs).distinct()
+
+  /** One `text_hash` row per document, duplicates kept — the index's
+    * rows before the fold, for writers that dedup on their own layout
+    * exchange ([[appendExactIndexDeltaFrame]]). */
+  private[graft] def textHashes(docs: DataFrame): DataFrame =
+    docs.select(md5(col("text")).as("text_hash"))
 
   /** Incremental exact dedup of an ingest batch against a standing
     * [[exactHashIndex]]: returns the batch rows whose content is new —
@@ -409,7 +412,7 @@ object Dedup {
     * artifact appends the same files without sidecar bookkeeping. */
   def appendExactIndexDelta(spark: org.apache.spark.sql.SparkSession,
       path: String, keptDocs: DataFrame, files: Int = 1): Unit =
-    appendExactIndexDeltaFrame(spark, path, exactIndexDelta(keptDocs), files)
+    appendExactIndexDeltaFrame(spark, path, textHashes(keptDocs), files)
 
   /** [[appendExactIndexDelta]] for an ALREADY-COMPUTED hash delta —
     * the streaming sink's entry point ([[graft.streaming.CorpusIngest
@@ -418,14 +421,19 @@ object Dedup {
     * a [[saveExactIndex]]-built artifact keeps the manifest true
     * instead of silently staling it with a raw `mode("append")` (which
     * would make a later [[readExactIndex]] miss the appended hashes —
-    * duplicates passing the screen with no dirty flag). */
+    * duplicates passing the screen with no dirty flag).
+    *
+    * The delta is shuffled ONCE: the layout's range exchange on
+    * `text_hash` goes first and the distinct runs on it (equal hashes
+    * share a range partition), so a delta with repeated hashes lands
+    * folded without a hash exchange of its own. */
   def appendExactIndexDeltaFrame(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, files: Int = 1): Unit =
     ArtifactManifest.appendStaged(spark, path, ExactIndexFamily) { _ =>
       dest =>
         delta
-          .repartitionByRange(files,
-            org.apache.spark.sql.functions.col("text_hash"))
+          .repartitionByRange(files, col("text_hash"))
+          .distinct()
           .sortWithinPartitions("text_hash")
           .write.mode(if (dest == path) "append" else "overwrite")
           .parquet(dest)
@@ -434,7 +442,9 @@ object Dedup {
   /** Fold a delta-appended [[saveExactIndex]] directory back to the
     * pristine layout: distinct (replayed deltas fold away) + global
     * range-sort, so file-level AND row-group zone pruning both hold
-    * again. Same swap discipline and concurrency stance as
+    * again — on ONE range exchange on `text_hash`, which the distinct
+    * rides (no schema-inference job either). Same swap discipline and
+    * concurrency stance as
     * [[graft.sources.WarehouseWriter.compactParquet]] (which does the
     * work — this names the dedup+sort recipe for the exact-index
     * artifact), then the manifest is rebuilt from the fresh directory
@@ -865,10 +875,17 @@ object Dedup {
     * arrays of BOTH sides — index rows supply the corpus side, so
     * verification is also corpus-scan-free and candidate-proportional. */
   def nearDupAgainstIndex(newDocs: DataFrame, index: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame =
+    nearDupWithParams(newDocs, index, minhashIndexParams(index), threshold)
+
+  /** [[nearDupAgainstIndex]] under signature params the caller already
+    * holds — the artifact route passes the manifest's, so no data-head
+    * job reads them again. */
+  private def nearDupWithParams(newDocs: DataFrame, index: DataFrame,
+      params: (Int, Int, Int, Boolean), threshold: Double): DataFrame = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val (k, numHashes, bands, hashed) = minhashIndexParams(index)
+    val (k, numHashes, bands, hashed) = params
     // both the candidate joins and the verify joins consume each side
     val idx = CacheScope.persist(index.select($"doc_id", $"sh", $"bk"))
     val batch = CacheScope.persist(
@@ -1039,7 +1056,11 @@ object Dedup {
 
   /** Fold a delta-appended [[saveMinhashIndex]] directory: whole-row
     * distinct (replayed deltas are exact duplicates) under the durable
-    * swap, manifest rebuilt over the fresh directory. Returns
+    * swap, manifest rebuilt over the fresh directory. The fold shuffles
+    * its rows ONCE — hash on `doc_id` into `files` partitions, which
+    * the distinct rides (identical rows share a doc_id) — so the
+    * compacted files are laid out by doc_id hash. The directory is read
+    * once, with its schema from one footer (no inference job). Returns
     * (files before, files after). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, files: Int = 8): (Int, Int) =
@@ -1050,9 +1071,10 @@ object Dedup {
       ManifestLog.sweepStaleDeltas(spark, path)
       val (k, numHashes, bands, hashed) = minhashArtifactParams(spark, path)
       spark.catalog.refreshByPath(path)
-      val before = spark.read.parquet(path).inputFiles.length
+      val stored = graft.Tables.read(spark, path)
+      val before = stored.inputFiles.length
       MaintenanceProtocol.markDirty(spark, path)
-      val folded = spark.read.parquet(path).distinct().repartition(files)
+      val folded = stored.repartition(files, col("doc_id")).distinct()
       graft.sources.WarehouseWriter.overwriteParquetAtomic(folded, path)
       val st = ArtifactManifest.rebuildAndWrite(spark, path,
         MinhashIndexFamily,
@@ -1074,12 +1096,16 @@ object Dedup {
     * delta's identical rows can fan the candidate and verify joins
     * into identical duplicate pair rows (same doc_a/doc_b/jaccard:
     * jaccard is computed per pair row from the stored arrays, so
-    * duplicates agree), and the fold is ∝ reported pairs. Everything
-    * else is the in-memory screen verbatim. */
+    * duplicates agree), and the fold is ∝ reported pairs. The
+    * signature params come from the same manifest read that plans the
+    * scan (a manifest-less artifact reads them from the data head).
+    * Everything else is the in-memory screen verbatim. */
   def nearDupAgainstArtifact(spark: org.apache.spark.sql.SparkSession,
-      path: String, newDocs: DataFrame, threshold: Double): DataFrame =
-    nearDupAgainstIndex(newDocs, readMinhashIndex(spark, path), threshold)
+      path: String, newDocs: DataFrame, threshold: Double): DataFrame = {
+    val (index, params) = minhashIndexWithParams(spark, path)
+    nearDupWithParams(newDocs, index, params(), threshold)
       .dropDuplicates(Seq("doc_a", "doc_b"))
+  }
 
   /** Per-document SimHash fingerprints (`bits` wide, default 64) — the
     * fused native expressions ([[graft.expressions.ShingleHashes]] +
@@ -1770,7 +1796,11 @@ object Dedup {
     * fold away — RECOMPUTE the exact global df (the one O(index)
     * shuffle, paid here on the rare side of the build-once/screen-often
     * asymmetry instead of per append), and re-sort globally on
-    * fingerprint so file-level zone pruning holds again. Durable-swap
+    * fingerprint so file-level zone pruning holds again. That one
+    * shuffle is the layout's range exchange on fingerprint: the dedup
+    * and the df window both run on its partitioning, the
+    * [[appendWinnowIndexDelta]] shape. The directory is read once,
+    * with its schema from one footer (no inference job). Durable-swap
     * discipline via [[graft.sources.WarehouseWriter
     * .overwriteParquetAtomic]]; the manifest is rebuilt over the fresh
     * directory (compaction is the family's adoption point). Returns
@@ -1785,17 +1815,16 @@ object Dedup {
       ManifestLog.sweepStaleDeltas(spark, path)
       val (k, w, algo) = winnowArtifactParams(spark, path)
       spark.catalog.refreshByPath(path)
-      val before = spark.read.parquet(path)
-        .inputFiles.length
+      val stored = graft.Tables.read(spark, path)
+      val before = stored.inputFiles.length
       MaintenanceProtocol.markDirty(spark, path)
-      val folded = withDf(spark.read.parquet(path)
-        .select($"doc_id", $"fingerprint").distinct())
+      val folded = withDf(stored.select($"doc_id", $"fingerprint")
+        .repartitionByRange(files, $"fingerprint")
+        .distinct()
+        .sortWithinPartitions("fingerprint"))
         .withColumn("wf_k", lit(k))
         .withColumn("wf_w", lit(w))
         .withColumn("wf_algo", lit(algo))
-        .repartitionByRange(files,
-          org.apache.spark.sql.functions.col("fingerprint"))
-        .sortWithinPartitions("fingerprint")
       graft.sources.WarehouseWriter.overwriteParquetAtomic(folded, path)
       val st = ArtifactManifest.rebuildAndWrite(spark, path,
         WinnowIndexFamily,

@@ -35,9 +35,6 @@ object PqCodebookStore {
   def sidecarPath(path: String): Path =
     new Path(path.stripSuffix("/"), "_pq_codebooks")
 
-  def exists(spark: SparkSession, path: String): Boolean =
-    MaintenanceProtocol.fsOf(spark, path).exists(sidecarPath(path))
-
   /** Persist `cs` (+ its encoding law) with [[ManifestLog.swapText]].
     * The caller owns ordering vs the data files (the build routes write
     * the sidecar under their lease, before the manifest roll). */

@@ -934,14 +934,9 @@ object Similarity {
     val spark = postings.sparkSession
     import spark.implicits._
     val touched = delta.select($"cell").distinct()
-    val byCell = Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
-    val recapped = postings
+    val recapped = capFold(postings
       .join(broadcast(touched), Seq("cell"), "left_semi")
-      .unionByName(delta.select(postings.columns.map(col): _*))
-      .dropDuplicates(Seq("cell", "cand_id"))
-      .withColumn("cellRank", row_number().over(byCell))
-      .filter($"cellRank" <= cap)
-      .drop("cellRank")
+      .unionByName(delta.select(postings.columns.map(col): _*)), cap)
     (recapped, touched)
   }
 
@@ -976,6 +971,29 @@ object Similarity {
     df.repartition(
       math.min(df.sparkSession.sessionState.conf.numShufflePartitions,
         math.max(1, cells)), col("cell"))
+
+  /** The postings fold every recap, compaction and dirty read applies:
+    * dedup (cell, cand_id) — a replayed batch, a tombstone beside its
+    * live copy and a half-staged recap beside the rows it supersedes
+    * are all the same row twice (d2 is deterministic) — then keep each
+    * cell's `cap` nearest by (d2, cand_id), the order a from-scratch
+    * build caps by. The rows shuffle ONCE: [[byCellPinned]] goes first
+    * and the dedup and the rank window both run on its cell
+    * partitioning, which is also the one-file-per-cell layout the
+    * cell-partitioned writes need, so [[stageIntoCells]] and
+    * [[overwriteTouchedCells]] write the fold as it stands. An uncapped
+    * artifact skips the window. */
+  private def capFold(df: DataFrame, cap: Int,
+      cells: Int = Int.MaxValue): DataFrame = {
+    val deduped = byCellPinned(df, cells)
+      .dropDuplicates(Seq("cell", "cand_id"))
+    if (cap == Int.MaxValue) deduped
+    else deduped
+      .withColumn("cellRank", row_number().over(Window
+        .partitionBy(col("cell")).orderBy(col("d2").asc, col("cand_id").asc)))
+      .filter(col("cellRank") <= cap)
+      .drop("cellRank")
+  }
 
   /** The postings data files' schema (partition column excluded) — what
     * [[ivfPostingsKernelBuilt]]/[[ivfPostingsTwoLevel]] write; the
@@ -1041,20 +1059,8 @@ object Similarity {
         // truth and the extra shuffle would be pure cost.
         if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
-          import org.apache.spark.sql.expressions.Window
           val head = raw.select(col("iv_cap")).take(1)
-          if (head.isEmpty) raw
-          else {
-            val cap = head(0).getInt(0)
-            val deduped = raw.dropDuplicates(Seq("cell", "cand_id"))
-            if (cap == Int.MaxValue) deduped
-            else deduped
-              .withColumn("gr_rank", row_number().over(Window
-                .partitionBy(col("cell"))
-                .orderBy(col("d2").asc, col("cand_id").asc)))
-              .filter(col("gr_rank") <= cap)
-              .drop("gr_rank")
-          }
+          if (head.isEmpty) raw else capFold(raw, head(0).getInt(0))
         }
     }
 
@@ -1346,18 +1352,13 @@ object Similarity {
           spark.createDataFrame(spark.sparkContext.emptyRDD[
             org.apache.spark.sql.Row], delta.schema)
         else spark.read.option("basePath", path).parquet(dirs.toSeq: _*)
-      val byCell =
-        Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
-      val recapped = old.select(delta.columns.map(col): _*)
-        .unionByName(delta)
-        .dropDuplicates(Seq("cell", "cand_id"))
-        .withColumn("cellRank", row_number().over(byCell))
-        .filter($"cellRank" <= cap)
-        .drop("cellRank")
+      val recapped = capFold(
+        old.select(delta.columns.map(col): _*).unionByName(delta),
+        cap, touched.length)
       if (state0.nonEmpty) MaintenanceProtocol.markDirty(spark, path)
       val counts = timed("recap_overwrite")(
         overwriteTouchedCells(spark, path, recapped,
-          wantCounts = state0.nonEmpty, cells = touched.length))
+          wantCounts = state0.nonEmpty))
       state0.foreach { st =>
         timed("recap_manifest_roll") {
           val entries = PostingsManifest.entriesFromDirs(
@@ -1373,15 +1374,16 @@ object Similarity {
 
   /** Dynamic-partition-overwrite of the touched cells' directories —
     * the write half shared by the in-place append routes. The frame is
-    * materialized first (a plain-parquet overwrite may not read its own
-    * input) and repartitioned BY CELL so each rewritten cell directory
-    * holds ONE file — the in-place routes PRESERVE the
+    * a [[capFold]], already partitioned BY CELL, and is materialized
+    * first (a plain-parquet overwrite may not read its own input); the
+    * checkpoint keeps the fold's partitions, so each rewritten cell
+    * directory holds ONE file with no second exchange — the in-place
+    * routes PRESERVE the
     * [[saveIvfPostings]] 1-file-per-cell layout, append after append
     * (spec-pinned; [[compactIvfPostings]] exists for the fragment
     * route, not for these). */
   private def overwriteTouchedCells(spark: SparkSession, path: String,
-      recapped: DataFrame, wantCounts: Boolean = false,
-      cells: Int = Int.MaxValue): Map[Int, Long] = {
+      recapped: DataFrame, wantCounts: Boolean = false): Map[Int, Long] = {
     import spark.implicits._
     val materialized = recapped.localCheckpoint(true)
     try {
@@ -1395,7 +1397,7 @@ object Similarity {
       val saved = spark.conf.getOption(
         "spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try byCellPinned(materialized, cells)
+      try materialized
         .write.mode("overwrite").partitionBy("cell").parquet(path)
       finally saved match {
         case Some(v) => spark.conf.set(
@@ -1611,19 +1613,14 @@ object Similarity {
             new graft.plans.PostingsFileIndex(path,
               st.copy(files = st.files.filter(f => touchedExisting(f.cell)))),
             postingsDataSchema(st.params.gp.nonEmpty))
-      val byCell =
-        Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
       // single-pass fold (guide §1.2): consumed once by the staged
       // write; per-cell rows ride the landed footers (stageIntoCells),
       // so the old localCheckpoint + count pair of jobs is gone
-      val recapped = old.select(delta.columns.map(col): _*)
-        .unionByName(delta)
-        .dropDuplicates(Seq("cell", "cand_id"))
-        .withColumn("cellRank", row_number().over(byCell))
-        .filter($"cellRank" <= cap)
-        .drop("cellRank")
+      val recapped = capFold(
+        old.select(delta.columns.map(col): _*).unionByName(delta),
+        cap, touched.size)
       val entries = timed("recapr_fold")(
-        stageIntoCells(spark, path, recapped, touched.size))
+        stageIntoCells(spark, path, recapped))
       timed("recapr_manifest_roll") {
         // prev = st0, the state as READ (aged entries included), so
         // the delta's dels carry the entry-vacuumed files too
@@ -1691,7 +1688,9 @@ object Similarity {
   }
 
   /** Land `df`'s one-file-per-touched-cell layout INSIDE the artifact
-    * without listing it: a partitioned write into a fresh staging dir,
+    * without listing it — `df` comes partitioned by cell ([[capFold]],
+    * or [[byCellPinned]] for a raw delta), so the write adds no
+    * exchange: a partitioned write into a fresh staging dir,
     * then [[ManifestLog.stageAndRename]]'s per-file renames into the
     * cell directories. Returns the landed entries with rows from the
     * landed footers — which lets every caller feed the manifest
@@ -1700,11 +1699,9 @@ object Similarity {
     * materializations (one extra job + block storage per maintenance
     * op, ∝ the delta) are gone too. Guide §1.2: fewer passes first. */
   private def stageIntoCells(spark: SparkSession, path: String,
-      df: DataFrame,
-      cells: Int = Int.MaxValue): Seq[PostingsManifest.FileEntry] =
+      df: DataFrame): Seq[PostingsManifest.FileEntry] =
     ManifestLog.stageAndRename(spark, path)(tmp =>
-      byCellPinned(df, cells)
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp))
+      df.write.mode("overwrite").partitionBy("cell").parquet(tmp))
       .map(f => PostingsManifest.FileEntry(f.dir.stripPrefix("cell=").toInt,
         f.name, f.bytes, f.rows))
 
@@ -1739,8 +1736,8 @@ object Similarity {
     // write-ahead intent: from the first rename on, the manifest no
     // longer matches the directory until rolled forward below
     if (state0.nonEmpty) MaintenanceProtocol.markDirty(spark, path)
-    val entries = stageIntoCells(spark, path, delta0,
-      state0.map(_.params.cells).getOrElse(Int.MaxValue))
+    val entries = stageIntoCells(spark, path, byCellPinned(delta0,
+      state0.map(_.params.cells).getOrElse(Int.MaxValue)))
     state0.foreach { st =>
       timed("frag_manifest_roll") {
         PostingsManifest.commit(spark, path, st, st.adding(entries))
@@ -1981,16 +1978,10 @@ object Similarity {
             new graft.plans.PostingsFileIndex(path,
               st.copy(files = st.files.filter(f => fragmented(f.cell)))),
             dataSchema(st))
-        val byCell =
-          Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
-        val folded = frag
-          .dropDuplicates(Seq("cell", "cand_id"))
-          .withColumn("cellRank", row_number().over(byCell))
-          .filter($"cellRank" <= cap)
-          .drop("cellRank")
+        val folded = capFold(frag, cap, fragmented.size)
         MaintenanceProtocol.markDirty(spark, path)
         val counts = overwriteTouchedCells(spark, path, folded,
-          wantCounts = true, cells = fragmented.size)
+          wantCounts = true)
         val entries = PostingsManifest.entriesFromDirs(
           spark, path, fragmented, counts)
         PostingsManifest.write(spark, path,
@@ -2025,16 +2016,9 @@ object Similarity {
         val result =
           if (fragmented.isEmpty) (0, filesBefore, filesBefore)
           else {
-            val byCell = Window.partitionBy($"cell")
-              .orderBy($"d2".asc, $"cand_id".asc)
-            val folded = postings
-              .filter($"cell".isin(fragmented.toSeq: _*))
-              .dropDuplicates(Seq("cell", "cand_id"))
-              .withColumn("cellRank", row_number().over(byCell))
-              .filter($"cellRank" <= cap)
-              .drop("cellRank")
-            overwriteTouchedCells(spark, path, folded,
-              cells = fragmented.size)
+            overwriteTouchedCells(spark, path, capFold(
+              postings.filter($"cell".isin(fragmented.toSeq: _*)),
+              cap, fragmented.size))
             (fragmented.size, filesBefore,
               filesBefore - perCellFiles.view.filterKeys(fragmented)
                 .values.sum + fragmented.size)
@@ -2116,17 +2100,10 @@ object Similarity {
                 new graft.plans.PostingsFileIndex(path,
                   st.copy(files = st.files.filter(f => fragmented(f.cell)))),
                 postingsDataSchema(st.params.gp.nonEmpty))
-            val byCell =
-              Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
             // single-pass fold: consumed once by the staged write;
             // per-cell rows ride the landed footers (stageIntoCells)
-            val folded = frag
-              .dropDuplicates(Seq("cell", "cand_id"))
-              .withColumn("cellRank", row_number().over(byCell))
-              .filter($"cellRank" <= cap)
-              .drop("cellRank")
-            val entries = stageIntoCells(spark, path, folded,
-              fragmented.size)
+            val entries = stageIntoCells(spark, path,
+              capFold(frag, cap, fragmented.size))
             val next = st.retiringCells(fragmented, entries)
             PostingsManifest.write(spark, path, next)
             MaintenanceProtocol.clearDirty(spark, path)
@@ -3099,18 +3076,7 @@ object Similarity {
         if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
           val head = raw.select(col("iv_cap")).take(1)
-          if (head.isEmpty) raw
-          else {
-            val cap = head(0).getInt(0)
-            val deduped = raw.dropDuplicates(Seq("cell", "cand_id"))
-            if (cap == Int.MaxValue) deduped
-            else deduped
-              .withColumn("gr_rank", row_number().over(Window
-                .partitionBy(col("cell"))
-                .orderBy(col("d2").asc, col("cand_id").asc)))
-              .filter(col("gr_rank") <= cap)
-              .drop("gr_rank")
-          }
+          if (head.isEmpty) raw else capFold(raw, head(0).getInt(0))
         }
     }
 

@@ -118,7 +118,9 @@ object WarehouseWriter {
     * layout (range-partitioned, sorted within files) — what the
     * bloom-screen's point-lookup pushdown
     * ([[graft.operators.Dedup.dedupAgainstIndexScreened]]) wants the
-    * index directory to look like after many deltas blurred it.
+    * index directory to look like after many deltas blurred it. With
+    * `dedup` too, the rewrite shuffles its rows ONCE: the range
+    * exchange on `sortCol`, which the whole-row distinct runs on.
     *
     * Output file count = ceil(input bytes / targetFileBytes), computed
     * from the actual file listing — compression can make real output
@@ -147,12 +149,16 @@ object WarehouseWriter {
     // the exact-index artifact's compaction
     // ([[graft.operators.Dedup.compactExactIndex]]); nOut stays sized
     // from INPUT bytes (upper bound — dedup only shrinks files below
-    // target, never above)
-    val df0 = spark.read.parquet(path)
-    val df = if (dedup) df0.distinct() else df0
+    // target, never above). The schema comes from one footer read on
+    // the driver: no inference job.
+    val df = graft.Tables.read(spark, path)
     val out = sortCol match {
-      case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
-      case None    => df.repartition(nOut)
+      // equal rows share their sortCol value, so every copy of a row
+      // lands in one range partition: the distinct needs no exchange
+      case Some(c) =>
+        val ranged = df.repartitionByRange(nOut, col(c))
+        (if (dedup) ranged.distinct() else ranged).sortWithinPartitions(c)
+      case None => (if (dedup) df.distinct() else df).repartition(nOut)
     }
     val tmp = new org.apache.hadoop.fs.Path(hPath.getParent,
       s".${hPath.getName}.compact-tmp")

@@ -88,7 +88,9 @@ object CorpusIngest {
         val bloom = bloomProvider()
         val kept = Dedup.dedupAgainstIndexScreened(batch, index, bloom)
           .localCheckpoint(true)
-        try sink(kept, Dedup.exactHashIndex(kept),
+        // the screen keeps one row per hash, so the kept rows' hashes
+        // are distinct as they stand: no distinct (and no shuffle) here
+        try sink(kept, Dedup.textHashes(kept),
           Dedup.appendToExactBloom(bloom, kept), id)
         finally GraftColumnBridge.unpersistLocalCheckpoint(kept)
       } finally batch.unpersist()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions (SURVEY §4): the plans we'd want at
@@ -305,6 +306,147 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
         assert(scans <= maxScans,
           s"$name expected <= $maxScans parquet scans, found $scans:\n$p")
     }
+  }
+
+  /** Final plans of the data writes (`InsertIntoHadoopFsRelationCommand`)
+    * that `body` runs, rendered after they ran — so each adaptive
+    * subtree prints its final plan first. Listener events arrive on the
+    * bus asynchronously: a marker query's event, posted after every
+    * write's, bounds the wait. */
+  private def writePlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var markerSeen = false
+    val marker = s"write_plans_marker_${System.nanoTime()}"
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains("Execute InsertIntoHadoopFsRelationCommand")) writes.add(p)
+        else if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "the listener bus never delivered the marker query")
+      writes.toArray(Array.empty[String]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** A maintenance op that lays out its own artifact writes its rows
+    * through exactly ONE keyed exchange — the layout's — with every
+    * dedup, window and cap rank riding that partitioning (a second
+    * exchange is a second full shuffle of the rewritten rows). */
+  private def assertOneLayoutExchange(op: String, plans: Seq[String],
+      layout: String): Unit = {
+    assert(plans.size == 1,
+      s"$op expected one data write, saw ${plans.size}:\n${plans.mkString("\n\n")}")
+    val p = plans.head.split("== Initial Plan ==")(0)
+    val keyed = keyedExchanges(p)
+    assert(keyed == 1 && spreadExchanges(p) == 0,
+      s"$op expected 1 keyed exchange, found $keyed:\n$p")
+    assert(p.contains(s"Exchange $layout"),
+      s"$op's one exchange is not its layout's ($layout):\n$p")
+  }
+
+  /** sf0.001 documents split in two: the artifact's seed half and the
+    * half each maintenance op rolls in. */
+  private def halves = {
+    import spark.implicits._
+    val docs = Tables.load(spark, sf0001, "documents")
+    (docs, docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1))
+  }
+
+  private def artifactPath(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve("index").toString
+
+  test("exact index delta append shuffles once, on the range layout") {
+    import graft.operators.Dedup
+    val (_, seed, batch) = halves
+    val path = artifactPath("graft_exact_append_shape")
+    Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
+    // the batch repeats its own texts: the append's distinct has work to do
+    assertOneLayoutExchange("appendExactIndexDelta",
+      writePlans(Dedup.appendExactIndexDelta(spark, path,
+        batch.unionByName(batch), files = 2)),
+      "rangepartitioning(text_hash#")
+    assert(Dedup.readExactIndex(spark, path).count() ==
+      Dedup.exactHashIndex(seed).unionByName(Dedup.exactHashIndex(batch)).count())
+  }
+
+  test("exact index compaction shuffles once, on the range layout") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val (docs, seed, batch) = halves
+    val path = artifactPath("graft_exact_compact_shape")
+    Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
+    Dedup.appendExactIndexDelta(spark, path, batch)
+    Dedup.appendExactIndexDelta(spark, path, batch) // a replayed delta
+    // a small target: several output files, so the layout is a range
+    // exchange (one file plans as SinglePartition)
+    assertOneLayoutExchange("compactExactIndex",
+      writePlans(Dedup.compactExactIndex(spark, path,
+        targetFileBytes = 1L << 10)),
+      "rangepartitioning(text_hash#")
+    assert(Dedup.readExactIndex(spark, path).as[String].collect().sorted.toSeq ==
+      Dedup.exactHashIndex(docs).as[String].collect().sorted.toSeq)
+  }
+
+  test("minhash index compaction shuffles once, hashed on doc_id") {
+    import graft.operators.Dedup
+    val (docs, seed, batch) = halves
+    val path = artifactPath("graft_minhash_compact_shape")
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path, files = 2)
+    Dedup.appendMinhashIndexDelta(spark, path, batch)
+    Dedup.appendMinhashIndexDelta(spark, path, batch) // a replayed delta
+    assertOneLayoutExchange("compactMinhashIndex",
+      writePlans(Dedup.compactMinhashIndex(spark, path, files = 2)),
+      "hashpartitioning(doc_id#")
+    assert(Dedup.readMinhashIndex(spark, path).count() ==
+      Dedup.minhashBandIndex(docs, 5, 32, 8).count())
+  }
+
+  test("winnow index compaction shuffles once, on the range layout") {
+    import graft.operators.Dedup
+    val (docs, seed, batch) = halves
+    val path = artifactPath("graft_winnow_compact_shape")
+    Dedup.saveWinnowIndex(Dedup.winnowIndex(seed, 5, 4), path, files = 2)
+    Dedup.appendWinnowIndexDelta(spark, path, batch)
+    Dedup.appendWinnowIndexDelta(spark, path, batch) // a replayed delta
+    assertOneLayoutExchange("compactWinnowIndex",
+      writePlans(Dedup.compactWinnowIndex(spark, path, files = 2)),
+      "rangepartitioning(fingerprint#")
+    val cols = Seq("doc_id", "fingerprint", "df").map(col)
+    val (got, want) = (Dedup.readWinnowIndex(spark, path).select(cols: _*),
+      Dedup.winnowIndex(docs, 5, 4).select(cols: _*))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("IVF retained recap shuffles once, on the cell layout") {
+    import graft.operators.Similarity
+    import spark.implicits._
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val model = Similarity.fitIvfIndex(emb, numCells = 16, seed = 42L,
+      trainFraction = 0.5)
+    val cents = model.clusterCenters.map(_.toArray)
+    val (old, b1) = (emb.filter($"vec_id" % 2 === 0), emb.filter($"vec_id" % 2 === 1))
+    val path = artifactPath("graft_recap_shape")
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, 16), path)
+    assertOneLayoutExchange("appendIvfPostingsRetained",
+      writePlans(Similarity.appendIvfPostingsRetained(spark, path, cents, b1)),
+      "hashpartitioning(cell#")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"cell", $"cand_id", $"d2").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows(Similarity.readPostings(spark, path)) ==
+      rows(Similarity.ivfPostings(emb, model, 16)))
   }
 
   test("whole-stage codegen covers the relational hot paths") {

@@ -9,7 +9,9 @@ Usage (from any directory):
     python3 tools/perfbench_ab.py --from ab.jsonl     # re-print a table
 
 Each pair runs `perfbench/run.py` once in each checkout with the same
-seed (seed0 + pair index); the side that goes first alternates from
+seed (seed0 + pair index), and pairs are matched by that seed, so
+batches appended to one `--record` with different `--seed0` values
+combine in `--from`; the side that goes first alternates from
 pair to pair, so a box that drifts slower or faster during the session
 does not favour one side. Run nothing else on the box meanwhile. Every
 run's result line is appended to `--record` as it lands.
@@ -68,9 +70,12 @@ def iqr(xs):
 
 def table(records, spec, trace):
     declared = spec["per_layer"] if trace else spec["end_to_end"]
+    # a pair is the two sides' runs on one seed: keyed by seed, batches
+    # appended to one record (each starting its pair index at 0, with
+    # --seed0 moved on) keep all their pairs
     pairs = {}
     for r in records:
-        pairs.setdefault(r["pair"], {})[r["side"]] = r
+        pairs.setdefault(r["seed"], {})[r["side"]] = r
     done = [p for p in sorted(pairs) if len(pairs[p]) == 2]
     n = len(done)
     need = math.ceil(0.9 * n)
@@ -98,7 +103,7 @@ def table(records, spec, trace):
     out = ["| " + " | ".join(c.ljust(w) for c, w in zip(r, widths)) + " |"
            for r in rows]
     out.insert(1, "| " + " | ".join("-" * w for w in widths) + " |")
-    bad = [f"{r['side']} pair {r['pair']} (seed {r['seed']})"
+    bad = [f"{r['side']} seed {r['seed']}"
            for r in records if not r["correct"]]
     out.append(f"{n} pairs; runs not correct: {bad or 'none'}")
     return "\n".join(out)
