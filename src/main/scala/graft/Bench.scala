@@ -255,7 +255,7 @@ object Bench {
         // fetch=100 — the serving shape whose recall a deployment
         // actually tracks (raw ADC@k is within-region tie-break-bound).
         // k=256 = the standard one-byte-per-subspace codebook, the
-        // PqSweep knee at sf0.1 (16/64/256 -> recall .59/.80/.90,
+        // codebook-size knee at sf0.1 (16/64/256 -> recall .59/.80/.90,
         // SURVEY §6.2); fit is sub-second at any of the three.
         val pqCs = graft.operators.Similarity.fitPqCodebooks(
           embDf, m = 8, k = 256, iters = 10)

@@ -284,3 +284,80 @@ object ExecutorLossDrill {
     }
   }
 }
+
+/** Shared session shape for the process-boundary legs: every harness
+  * that runs a `local-cluster[n,cores,mem]` master routes through
+  * [[builder]] so the executor JVMs get the same JDK-17 module opens,
+  * classpath shipping, and serializer as the audited invariance sweep
+  * (SURVEY §6.1.7).
+  *
+  * What makes this leg different from twelve rounds of `local[n]`:
+  *  - the app classes reach executors via `spark.jars` — the driver's
+  *    file server actually serves the jar and each executor's
+  *    `MutableURLClassLoader` loads graft classes from the fetched
+  *    copy, the same path a real `--jars` submit takes (NOT
+  *    `extraClassPath`, which would quietly fall back to the shared
+  *    filesystem and test nothing);
+  *  - `KryoSerializer` carries the data/broadcast path, so the
+  *    `Broadcast[BloomFilter]` handle in
+  *    [[graft.expressions.BloomProbe]] is torrent-delivered and
+  *    deserialized in a JVM that never saw the driver-side object;
+  *  - shuffles cross real sockets between two 2-core / 2 GiB executor
+  *    processes, so a digest mismatch from map-iteration or
+  *    serialization nondeterminism has somewhere to come from.
+  */
+object ClusterHarness {
+
+  /** Mirrors build.sbt's jdk17AddOpens — a forked executor JVM is not
+    * launched by sbt, so it must carry its own module opens. */
+  val executorJavaOptions: String = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar",
+  ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+
+  val defaultJar = "target/scala-2.13/clinicalbispark_2.13-0.1.0.jar"
+
+  /** A builder for `master`, shipping `jar` to executors. Worker
+    * processes resolve their launch scripts through SPARK_HOME — fail
+    * fast with the remedy rather than let the worker die opaquely. */
+  def builder(master: String, jar: String = defaultJar): SparkSession.Builder = {
+    require(!master.startsWith("local-cluster") || sys.env.contains("SPARK_HOME"),
+      "local-cluster mode forks executor JVMs through the Spark distro: " +
+        "run with SPARK_HOME=/opt/spark")
+    val jarAbs = new java.io.File(jar).getAbsoluteFile
+    require(jarAbs.isFile,
+      s"$jarAbs missing — run `sbt package` first (executors fetch app " +
+        "classes from this jar via the driver's file server)")
+    GraftSession.defaults(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.ui.enabled", "false")
+      .config("spark.jars", jarAbs.toString)
+      .config("spark.executor.memory", "2g")
+      // the executor command builder resolves the distro layout through
+      // SPARK_SCALA_VERSION, normally exported by load-spark-env.sh —
+      // a raw-java launch never ran it, and Command.environment is the
+      // seam that reaches the in-process Worker's builder
+      .config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
+      .config("spark.executor.extraJavaOptions", executorJavaOptions)
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer"))
+  }
+
+  /** Run `body` in a fresh session and tear the context down fully —
+    * two legs with different masters cannot share a JVM-wide context. */
+  def withSession[A](b: SparkSession.Builder)(body: SparkSession => A): A = {
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try body(spark)
+    finally {
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+}

@@ -290,9 +290,9 @@ object IndexBench {
   // below ~2¹⁴ directories — a toy-scale "speedup" would measure the
   // probe-set collect job's fixed overhead and read ~0.8×, pure noise.
   // The mechanism is spec-pinned (PartitionFilters plan shape + output
-  // equality, SimilaritySpec) and the economics are measured at real
-  // directory counts by graft.PostingsSweep (SURVEY §6.2: 0.8 s vs
-  // 7.1 s at 20 queries / 16 384 cells).
+  // equality, SimilaritySpec) and the economics were measured at real
+  // directory counts (SURVEY §6.2: 0.8 s vs 7.1 s at 20 queries /
+  // 16 384 cells).
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(

@@ -140,11 +140,12 @@ object Tables {
     * [[expectedColumns]], and all drift is reported in ONE exception —
     * per-column, with scanned vs accepted types — before any query can
     * error at analysis with a symptom far from the cause. `tables`
-    * scopes the gate for harnesses whose input dir deliberately holds a
-    * subset (IvfSweep times embeddings only; SkewStress synthesizes an
-    * events-only corpus) — the default gates the full snapshot. The
-    * `SnapshotIngest.headerDrift` philosophy applied to the fixture
-    * seam: a snapshot writer changing an encoding (as the events table's
+    * scopes the gate to the tables a harness reads (IndexBench and
+    * IngestBench read documents/embeddings only) or to an input dir that
+    * deliberately holds a subset (a synthesized events-only corpus, as
+    * in SURVEY §6.1.1's skew stress) — the default gates the full
+    * snapshot. The `SnapshotIngest.headerDrift` philosophy applied to
+    * the fixture seam: a snapshot writer changing an encoding (as the events table's
     * ts has, twice) surfaces here as a named diff naming the table, the
     * column, and both types. Footer-only reads: one file listing and
     * one footer per table, read on the driver by [[footerSchema]] — no

@@ -2908,8 +2908,8 @@ object Similarity {
   /** Measured recall@k of the COMPOSED IVF+PQ route against exact L2
     * truth over a query sample (`queryPred`) — the number that sites
     * residual-vs-raw encoding and the `fetch` depth at a given coarse
-    * geometry (rides the PqSweep grid; PqSpec pins residual ≥ raw on
-    * the clustered fixture). */
+    * geometry (the SURVEY §6.2 codebook grid; PqSpec pins residual ≥
+    * raw on the clustered fixture). */
   def ivfPqRecallAtK(emb: DataFrame, queryPred: Column,
       centroids: DataFrame, cs: graft.expressions.PqCodebookSet,
       probes: Int, k: Int, fetch: Int, cellCap: Int = Int.MaxValue,

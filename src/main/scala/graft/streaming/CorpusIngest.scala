@@ -157,8 +157,8 @@ object CorpusIngest {
     * directory state (the property the in-place spec pins). Bootstrap
     * `postingsPath` with [[Similarity.saveIvfPostings]] over the seed
     * corpus (or an empty frame) using the model this stream will run;
-    * retrain + rebuild when drift erodes recall (the IvfSweep knee is
-    * the signal), exactly as a batch deployment would. */
+    * retrain + rebuild when drift erodes recall (the SURVEY §6.2 knee
+    * is the signal), exactly as a batch deployment would. */
   def embeddingIngest(embStream: DataFrame, model: KMeansModel,
       postingsPath: String): DataStreamWriter[Row] =
     embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
@@ -198,7 +198,7 @@ object CorpusIngest {
     * compact-before-serve, and the recap seam stays the default for
     * always-serveable artifacts. Run compaction between triggers or on
     * a maintenance cadence (cost ∝ fragmented cells, measured in
-    * CompactBench). */
+    * SURVEY §6.2's postings maintenance modes table). */
   def embeddingIngestFragment(embStream: DataFrame,
       cents: Array[Array[Double]],
       postingsPath: String): DataStreamWriter[Row] =

@@ -249,6 +249,70 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("events queries return the same rows with AQE skew splits on and off over a hot user") {
+    // every events shuffle keys on user_id, and production event
+    // streams carry hot users (bots, shared accounts). Plant one user
+    // holding ≈15% of the rows (SURVEY §6.1.1) and require
+    // q50/q51/q58/q59 to digest-equal whether AQE splits the skewed
+    // join partition or not. The test above pins that the split
+    // engages on a synthetic join; this pins the events results under
+    // it. Sort-merge is forced in both runs (at spec scale AQE would
+    // broadcast the small sides, and a broadcast has no partition to
+    // split); forceOptimizeSkewedJoin accepts the extra exchange the
+    // rollups' reuse of the join partitioning would otherwise refuse.
+    val skewConfs = Seq(
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k")
+    val switches = Seq("spark.sql.adaptive.skewJoin.enabled",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin")
+    val restore = (skewConfs.map(_._1) ++ switches)
+      .map(k => k -> spark.conf.getOption(k)).toMap
+    def setSkew(on: Boolean): Unit =
+      switches.foreach(k => spark.conf.set(k, on.toString))
+    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    try {
+      ScaleData.events(spark, 100000L, users = 10000L)
+        .withColumn("user_id",
+          when(pmod(xxhash64(lit("hot"), $"event_id"), lit(100)) < 15, 0L)
+            .otherwise($"user_id"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      Tables.validate(spark, dir, Seq("events"))
+      skewConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val engaged = Seq("q50_funnel", "q51_retention",
+        "q58_attributed_clicks", "q59_attributed_outer").map { name =>
+        val fn = SparkEntry.queries(name)
+        setSkew(on = true)
+        // AQE finalizes the plan of the QueryExecution that runs;
+        // toRdd drives this one, so its executedPlan is the final plan
+        val qe = fn(spark, dir).queryExecution
+        qe.toRdd.count()
+        val split = qe.executedPlan.toString.contains("skew=true")
+        val on = ScaleSweep.digest(fn(spark, dir))
+        spark.catalog.clearCache()
+        setSkew(on = false)
+        val off = ScaleSweep.digest(fn(spark, dir))
+        spark.catalog.clearCache()
+        assert(on.rows > 0, s"$name returned no rows")
+        assert(on === off, s"$name diverged under the skew split")
+        name -> split
+      }
+      assert(engaged.exists(_._2),
+        s"no events query split its hot partition: $engaged")
+    } finally {
+      restore.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      val hDir = new org.apache.hadoop.fs.Path(dir)
+      hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(hDir, true)
+    }
+  }
+
   test("saltedJoin spreads a planted hot key across shuffle partitions") {
     // 90% of fact rows share key 1 → unsalted, they join in ONE shuffle
     // partition; salted, the hot key's rows spread over up to `salt`

@@ -54,7 +54,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // fitted on a 25% sample (the 100-TB posture — the fit sees a few
     // million vectors, the index covers all), 32 cells, 12-probe
     // queries — the knee of the measured recall/latency curve (SURVEY
-    // §6.2; graft.IvfSweep reproduces it). Brute force is the exact
+    // §6.2 records the grid that sited it). Brute force is the exact
     // truth. Embeddings here are near-uniform random — the hardest ANN
     // regime; clustered real corpora do better at lower probe fractions.
     val sf01 = "/root/testdata/sf0.1"
