@@ -50,14 +50,7 @@ object IndexBench {
   private def withTempDir[T](prefix: String)(body: String => T): T = {
     val dir = Files.createTempDirectory(prefix)
     try body(dir.toString)
-    finally deleteRecursively(dir)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq
-        .reverse.foreach(Files.deleteIfExists(_))
+    finally ScratchDir.deleteTree(dir)
   }
 
   private def timeMedian(spark: SparkSession, iters: Int)
@@ -269,22 +262,22 @@ object IndexBench {
     val queries = emb.orderBy($"vec_id").limit(100)
     val model = graft.operators.Similarity.fitIvfIndex(emb, numCells = 32,
       seed = 42L, trainFraction = 0.25)
+    val q = graft.operators.CoarseQuantizer.Flat(model)
     graft.operators.Similarity.saveIvfPostings(
-      graft.operators.Similarity.ivfPostings(emb, model, cellCap = 4096),
-      path)
+      graft.operators.Similarity.ivfPostings(emb, q, cellCap = 4096), path)
     val postings = graft.operators.Similarity.readPostings(spark, path)
-    val screen = timeMedian(spark, iters)(
-      graft.operators.Similarity.ivfTopKFromPostings(queries, model,
-        postings, probes = 12, k = 10))
-    val full = timeMedian(spark, iters)(
-      graft.operators.Similarity.ivfTopKFromPostings(queries, model,
-        graft.operators.Similarity.ivfPostings(emb, model, cellCap = 4096),
-        probes = 12, k = 10))
+    def serve(postings: DataFrame) = graft.operators.Similarity
+      .ivfTopKFromPostings(queries, q,
+        graft.operators.Similarity.PostingsSource.Frame(postings),
+        probes = 12, k = 10)
+    val screen = timeMedian(spark, iters)(serve(postings))
+    val full = timeMedian(spark, iters)(serve(
+      graft.operators.Similarity.ivfPostings(emb, q, cellCap = 4096)))
     Comparison(screen, full)
   }
 
   // NOTE: partition-pruned bounded-query serving
-  // (Similarity.ivfTopKFromPostingsPruned) deliberately has NO
+  // (Similarity.ivfTopKFromPostings over a Classic source) deliberately has NO
   // fixture-scale wall-clock twin here: its win is file-OPEN cost
   // (directory count × cold I/O), which a warm local page cache hides
   // below ~2¹⁴ directories — a toy-scale "speedup" would measure the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.Dedup
+import graft.operators.{CoarseQuantizer, Dedup}
 import graft.streaming.CorpusIngest
 
 /** Streaming-ingest economics at scale: per-MICRO-BATCH wall time of
@@ -137,11 +137,13 @@ object IngestBench {
       numCells = cells,
       trainFraction = if (seedCount < 2000) 1.0 else 0.25)
     graft.operators.Similarity.saveIvfPostings(
-      graft.operators.Similarity.ivfPostings(embSlice(0), model), postingsPath)
+      graft.operators.Similarity.ivfPostings(embSlice(0),
+        CoarseQuantizer.Flat(model)), postingsPath)
     val iv = {
       val src = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(embStaging)
-      val q = CorpusIngest.embeddingIngest(src, model, postingsPath)
+      val q = CorpusIngest.embeddingIngest(src, CoarseQuantizer.Flat(model),
+        postingsPath, graft.operators.Similarity.MaintenanceMode.InPlace)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.recentProgress.toSeq.filter(_.numInputRows > 0).map(p =>
@@ -156,7 +158,8 @@ object IngestBench {
   }
 
   /** The GROUPED embedding seam's flatness at a large cell count —
-    * [[CorpusIngest.embeddingIngestGrouped]] at the 2¹⁴-cell posture
+    * [[CorpusIngest.embeddingIngest]] under a `TwoLevel` quantizer at
+    * the 2¹⁴-cell posture
     * (VERDICT r13 #5): hierarchical fit over the seed slice, two-level
     * postings artifact, per-batch appends whose assignment rides the
     * two-level kernel. Returns per-batch (rows, sec) + final postings
@@ -184,19 +187,17 @@ object IngestBench {
       cellsPerGroup, trainFraction = 0.25)
     val postingsPath =
       Files.createTempDirectory("graft_ingestbench_2lpost").toString
-    Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(embSlice(0), gcs, groupProbes),
+    val quantizer = CoarseQuantizer.TwoLevel(gcs, groupProbes)
+    Similarity.saveIvfPostings(Similarity.ivfPostings(embSlice(0), quantizer),
       postingsPath)
     val src = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(staging)
     // fragment = the high-frequency mode: O(batch) per trigger, the
     // fold deferred to one closing compaction (timed separately — the
     // two numbers TOGETHER are the mode's whole bill)
-    val writer =
-      if (fragment)
-        CorpusIngest.embeddingIngestFragmentGrouped(src, gcs, postingsPath)
-      else CorpusIngest.embeddingIngestGrouped(src, gcs, postingsPath,
-        groupProbes)
+    val writer = CorpusIngest.embeddingIngest(src, quantizer, postingsPath,
+      if (fragment) Similarity.MaintenanceMode.Fragment
+      else Similarity.MaintenanceMode.InPlace)
     val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0).map(p =>

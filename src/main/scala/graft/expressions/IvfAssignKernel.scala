@@ -62,7 +62,7 @@ object IvfAssignKernel {
     * a bounded insertion buffer (m ≤ probes, never the cell count), so
     * the caller's plan carries NO per-cell row expansion: the
     * N×cells intermediate the window-ranked assignment materializes
-    * (fatal at 2¹²⁺ cells — see `Similarity.ivfTopKLarge`) never
+    * (fatal at 2¹²⁺ cells — see `Similarity.ivfTopKQuantized`) never
     * exists.
     *
     * d2 per (v, cell) is `nrm² + cn2 − 2·⟨v,c⟩` with ⟨v,c⟩ summed in

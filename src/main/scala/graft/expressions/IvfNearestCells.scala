@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * [[BloomProbe]] stance): the task binary carries a reference,
   * executors torrent the megabytes once each and cache the
   * deserialized matrix in a codegen field. Constructed programmatically
-  * only (`Similarity.ivfTopKLarge`) — a broadcast handle cannot come
+  * only (through `CoarseQuantizer.Flat`) — a broadcast handle cannot come
   * from SQL text, so like [[BloomProbe]] it is not in the function
   * registry.
   *

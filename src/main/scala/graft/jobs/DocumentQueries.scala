@@ -709,7 +709,7 @@ object DocumentQueries {
     val seed = d.filter($"doc_id" % 3 === 0)
     val b1 = d.filter($"doc_id" % 3 === 1)
     val b2 = d.filter($"doc_id" % 3 === 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_q84")
+    val path = graft.ScratchDir("graft_q84")
       .resolve("index").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path)
     val k1 = Dedup.dedupAgainstIndex(b1, Dedup.readExactIndex(spark, path))
@@ -744,7 +744,7 @@ object DocumentQueries {
     val seed = d.filter($"doc_id" % 6 === 0)
     val b1 = d.filter($"doc_id" % 6 === 2)
     val b2 = d.filter($"doc_id" % 6 === 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_q85")
+    val path = graft.ScratchDir("graft_q85")
       .resolve("index").toString
     Dedup.saveWinnowIndex(
       Dedup.winnowIndex(seed, k = 3, w = 4, algo = "md5_60"), path)
@@ -775,7 +775,7 @@ object DocumentQueries {
     val b1 = d.filter($"doc_id" % 6 === 2)
     val b2 = d.filter($"doc_id" % 6 === 4)
     val eval = d.filter($"doc_id" % 2 =!= 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_q86")
+    val path = graft.ScratchDir("graft_q86")
       .resolve("index").toString
     Dedup.saveWinnowIndex(
       Dedup.winnowIndex(seed, k = 3, w = 4, algo = "md5_60"), path)
@@ -805,7 +805,7 @@ object DocumentQueries {
     val seed = d.filter($"doc_id" % 3 === 0)
     val b1 = d.filter($"doc_id" % 3 === 1)
     val batch = d.filter($"doc_id" % 3 === 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_q87")
+    val path = graft.ScratchDir("graft_q87")
       .resolve("index").toString
     Dedup.saveMinhashIndex(
       Dedup.minhashBandIndex(seed, k = 5, numHashes = 32, bands = 8), path)

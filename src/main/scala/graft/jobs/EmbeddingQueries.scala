@@ -5,7 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorOps._
+import graft.expressions.IvfAssignKernel
 import graft.operators.{Dedup, Similarity, Validate}
+import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
+import graft.operators.Similarity.MaintenanceMode.{Fragment, Retained}
+import graft.operators.Similarity.PostingsSource
 
 /** Similarity-search surface over the `embeddings` table (the
   * LLM-data-pipeline extension, SURVEY §7.2 slice 5).
@@ -109,7 +113,8 @@ object EmbeddingQueries {
 
   // ---------------------------------------------------------------- q77
   /** Two-level-quantized IVF ANN top-k — the oracle-checkable twin of
-    * [[Similarity.ivfTopKTwoLevel]] (§6.2's 2¹⁴⁺-cells assignment
+    * [[Similarity.ivfTopKQuantized]] under a `TwoLevel` quantizer
+    * (§6.2's 2¹⁴⁺-cells assignment
     * shape): fixed corpus-vector cells grouped into contiguous blocks
     * so BOTH quantizer levels — group ranking and pruned member-cell
     * ranking — are plain window SQL. The 32-row centroid matrix is a
@@ -122,9 +127,9 @@ object EmbeddingQueries {
       .select($"vec_id", asDouble($"embedding").as("v"))
       .orderBy($"vec_id")
       .collect().map(_.getSeq[Double](1).toArray)
-    Similarity.ivfTopKTwoLevelFixed(e, centroids, q77GroupSize,
-      probes = q77Probes, k = q77K, groupProbes = q77GroupProbes,
-      cellCap = q77CellCap)
+    Similarity.ivfTopKQuantized(e, TwoLevel(IvfAssignKernel
+      .fixedGroupedCentroidSet(centroids, q77GroupSize), q77GroupProbes),
+      probes = q77Probes, k = q77K, cellCap = q77CellCap)
   }
 
   /** q78 geometry: q34's fixed corpus-vector cells, and a hot-cell cap
@@ -136,7 +141,7 @@ object EmbeddingQueries {
   // ---------------------------------------------------------------- q78
   /** Incremental IVF postings roll-forward, oracle-checked: build the
     * cell-partitioned postings over the already-indexed corpus
-    * (`vec_id % 10 != 0`), then [[Similarity.appendToIvfPostingsWithCentroids]]
+    * (`vec_id % 10 != 0`), then [[Similarity.appendToIvfPostings]]
     * the newly-arrived batch (`vec_id % 10 == 0`) against the FROZEN
     * fixed centroids — a closer newcomer must EVICT a capped-out old
     * member exactly as a from-scratch build would (the stored d2 breaks
@@ -154,9 +159,9 @@ object EmbeddingQueries {
       .collect().map(_.getSeq[Double](1).toArray)
     val indexed = e.filter($"vec_id" % 10 =!= 0)
     val batch = e.filter($"vec_id" % 10 === 0)
-    Similarity.appendToIvfPostingsWithCentroids(
-        Similarity.ivfPostingsWithCentroids(indexed, cents, q78CellCap),
-        cents, batch)
+    Similarity.appendToIvfPostings(
+        Similarity.ivfPostings(indexed, Flat(cents), q78CellCap),
+        Flat(cents), batch)
       .select($"cell", $"cand_id", round($"d2", 4).as("d2"))
   }
 
@@ -184,13 +189,14 @@ object EmbeddingQueries {
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_q79")
+    val path = graft.ScratchDir("graft_q79")
       .resolve("postings").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsWithCentroids(seed, cents, q78CellCap), path)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // redelivery
+      Similarity.ivfPostings(seed, Flat(cents), q78CellCap), path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // redelivery
     Similarity.compactIvfPostings(spark, path)
     // read back through the manifest-backed FileIndex (zero listings)
     Similarity.readPostings(spark, path)
@@ -204,7 +210,8 @@ object EmbeddingQueries {
     * assignment (q77's fixed 32-cell / 4-per-group geometry, a REAL
     * group prune at [[q77GroupProbes]]), fragment-append the two
     * remaining 10% batches via
-    * [[Similarity.appendIvfPostingsFragmentGrouped]] — O(batch) writes
+    * [[Similarity.appendIvfPostings]] in `Fragment` mode under the
+    * `TwoLevel` quantizer — O(batch) writes
     * AND O(groups + probed members) per-row assignment, riding the
     * artifact's own embedded `iv_gp` — re-append the first batch (an
     * at-least-once redelivery), then compact. The oracle is the
@@ -220,19 +227,19 @@ object EmbeddingQueries {
       .select($"vec_id", asDouble($"embedding").as("v"))
       .orderBy($"vec_id")
       .collect().map(_.getSeq[Double](1).toArray)
-    val gcs = graft.expressions.IvfAssignKernel
+    val gcs = IvfAssignKernel
       .fixedGroupedCentroidSet(cents, q77GroupSize)
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_q80")
+    val path = graft.ScratchDir("graft_q80")
       .resolve("postings").toString
-    Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(seed, gcs, q77GroupProbes,
-        q78CellCap), path)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b1)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b2)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b1) // redelivery
+    val q = TwoLevel(gcs, q77GroupProbes)
+    Similarity.saveIvfPostings(Similarity.ivfPostings(seed, q, q78CellCap),
+      path)
+    Similarity.appendIvfPostings(spark, path, q, b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, q, b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, q, b1, Fragment) // redelivery
     Similarity.compactIvfPostings(spark, path)
     // read back through the manifest-backed FileIndex (zero listings)
     Similarity.readPostings(spark, path)
@@ -245,8 +252,8 @@ object EmbeddingQueries {
     * reader that planned before any of them keeps serving its own
     * consistent state (spec-pinned in PostingsManifestSpec; an oracle
     * can only see the final state, which is what this declares). Seed
-    * 80%, [[Similarity.appendIvfPostingsRetained]] the first 10% batch
-    * TWICE (an at-least-once redelivery folded by the recap's
+    * 80%, `Retained`-append ([[Similarity.appendIvfPostings]]) the
+    * first 10% batch TWICE (an at-least-once redelivery folded by the recap's
     * (cell, cand_id) dedup — new files each epoch, old ones retired
     * under the one-full-epoch window law), fragment-append the second
     * batch into the
@@ -266,13 +273,14 @@ object EmbeddingQueries {
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_q82")
+    val path = graft.ScratchDir("graft_q82")
       .resolve("postings").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsWithCentroids(seed, cents, q78CellCap), path)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1) // redelivery
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
+      Similarity.ivfPostings(seed, Flat(cents), q78CellCap), path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Retained) // redelivery
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
     Similarity.compactIvfPostingsRetained(spark, path)
     Similarity.readPostings(spark, path)
       .select($"cell", $"cand_id", round($"d2", 4).as("d2"))
@@ -306,15 +314,15 @@ object EmbeddingQueries {
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_q83")
+    val path = graft.ScratchDir("graft_q83")
       .resolve("postings").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsWithCentroids(seed, cents, q78CellCap), path)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+      Similarity.ivfPostings(seed, Flat(cents), q78CellCap), path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     // window just opened (tombstones at the current epoch): retention 1
     // keeps them — in-flight snapshots stay serveable
     Similarity.vacuumPostings(spark, path) // no-op by the window law
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
     Similarity.vacuumPostings(spark, path) // drops the aged tombstones
     Similarity.compactIvfPostingsRetained(spark, path) // folds b2's fragments
     Similarity.vacuumPostings(spark, path, retentionEpochs = 0L) // full close
@@ -332,15 +340,15 @@ object EmbeddingQueries {
     * cell-group snapshot (2 packs over the 8 cells here — at 2¹⁴ cells
     * the same call folds ~14.6 k files to ~128, §6.1.9) and SERVE
     * top-3 for the first 20 vectors through
-    * [[Similarity.ivfTopKFromPostingsPackedPruned]] — the doubly-pruned
-    * route (pack-IN partition filter off the manifest FileIndex +
-    * cell-IN row-group prune inside each pack). The oracle computes the
-    * same capped index and 2-probe top-k in SQL, so the hash match
-    * certifies the whole maintained-classic → repack → pruned-serve
-    * chain against an independent engine — previously the packed layout
-    * was spec+bench only. Reference analogue: the monthly-dump rebuild
-    * cadence (docker/aact/Dockerfile:20-22) is exactly when re-packing
-    * runs. */
+    * [[Similarity.ivfTopKFromPostings]] over a `Packed` source — the
+    * doubly-pruned route (pack-IN partition filter off the manifest
+    * FileIndex + cell-IN row-group prune inside each pack). The oracle
+    * computes the same capped index and 2-probe top-k in SQL, so the
+    * hash match certifies the whole maintained-classic → repack →
+    * pruned-serve chain against an independent engine — previously the
+    * packed layout was spec+bench only. Reference analogue: the
+    * monthly-dump rebuild cadence (docker/aact/Dockerfile:20-22) is
+    * exactly when re-packing runs. */
   def q88PostingsPacked(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
@@ -351,18 +359,19 @@ object EmbeddingQueries {
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val base = java.nio.file.Files.createTempDirectory("graft_q88")
+    val base = graft.ScratchDir("graft_q88")
     val classic = base.resolve("classic").toString
     val packed = base.resolve("packed").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsWithCentroids(seed, cents, q78CellCap), classic)
-    Similarity.appendIvfPostingsFragment(spark, classic, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, classic, cents, b2)
-    Similarity.appendIvfPostingsFragment(spark, classic, cents, b1) // redelivery
+      Similarity.ivfPostings(seed, Flat(cents), q78CellCap), classic)
+    Similarity.appendIvfPostings(spark, classic, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, classic, Flat(cents), b2, Fragment)
+    Similarity.appendIvfPostings(spark, classic, Flat(cents), b1,
+      Fragment) // redelivery
     Similarity.compactIvfPostings(spark, classic)
     Similarity.repackPostings(spark, classic, packed, cellsPerPack = 4)
-    Similarity.ivfTopKFromPostingsPackedPruned(
-      e.filter($"vec_id" < 20), cents, packed, probes = q34Probes, k = q34K)
+    Similarity.ivfTopKFromPostings(e.filter($"vec_id" < 20), Flat(cents),
+      PostingsSource.Packed(packed), probes = q34Probes, k = q34K)
   }
 
   /** q89 PQ geometry: 8 subspaces × 8 dims over the 64-dim embeddings,
@@ -474,7 +483,7 @@ object EmbeddingQueries {
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_q91")
+    val path = graft.ScratchDir("graft_q91")
       .resolve("pq_postings").toString
     Similarity.saveIvfPqPostings(
       Similarity.ivfPqPostings(seed, cents, cs, q78CellCap), path, cs)

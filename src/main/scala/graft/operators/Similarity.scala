@@ -214,13 +214,13 @@ object Similarity {
     * converges long before the full corpus is seen, so at 100 TB the
     * k-means iterations run on a few million sampled vectors while
     * index + probe still cover every vector. Convenience form of
-    * [[fitIvfIndex]] + [[ivfTopKWithModel]]; production persists the
+    * [[fitIvfIndex]] + [[ivfTopKWithCentroids]]; production persists the
     * fit via [[saveIvfIndex]]/[[loadIvfIndex]] instead of refitting. */
   def ivfTopK(emb: DataFrame, numCells: Int, probes: Int, k: Int,
       cellCap: Int = Int.MaxValue, seed: Long = 42L,
       trainFraction: Double = 1.0): DataFrame =
-    ivfTopKWithModel(emb, fitIvfIndex(emb, numCells, seed, trainFraction),
-      probes, k, cellCap)
+    ivfTopKWithCentroids(emb, centroidTable(emb.sparkSession,
+      fitIvfIndex(emb, numCells, seed, trainFraction)), probes, k, cellCap)
 
   /** Fit the IVF coarse quantizer (seeded k-means, optionally on a
     * corpus sample). The returned model IS the index artifact: fit
@@ -263,94 +263,41 @@ object Similarity {
       .toDF("cell", "centroid")
   }
 
-  /** Serve top-k from a fitted (possibly [[loadIvfIndex]]-restored)
-    * index — the steady-state query path once the artifact exists. */
-  def ivfTopKWithModel(emb: DataFrame, model: KMeansModel, probes: Int,
-      k: Int, cellCap: Int = Int.MaxValue): DataFrame =
-    ivfTopKWithCentroids(emb,
-      centroidTable(emb.sparkSession, model), probes, k, cellCap)
-
-  /** IVF top-k for LARGE cell counts — identical results to
-    * [[ivfTopKWithModel]] (SimilaritySpec pins the equality), different
-    * physical shape. The window-ranked assignment inside
-    * [[ivfTopKWithCentroids]] materializes N×cells rows — each carrying
-    * the full vector — through the `row_number` exchange: transparent
-    * to the oracle and fine at the ≤64-cell grid it serves, but at the
-    * 2¹⁰–2¹⁴ cells production runs (SURVEY §6.2) that is 10⁸⁺
-    * vector-bearing rows through one shuffle for what is per-row
-    * arithmetic. Here assignment is one codegen'd
-    * [[graft.expressions.IvfNearestCells]] scan per vector against the
-    * cluster-broadcast centroid matrix: O(cells × dim) per row, no row
-    * expansion, and — when `cellCap` is unbounded — NO shuffle on the
-    * index side at all (the only exchanges left are the candidate join
-    * and the final top-k window, both ∝ candidates, not ∝ N×cells).
+  /** IVF top-k through a [[CoarseQuantizer]] — the kernel-assigned
+    * route for any cell count. Under `Flat` it returns exactly what
+    * [[ivfTopKWithCentroids]] returns (SimilaritySpec pins the
+    * equality, capped and not), in a different physical shape: the
+    * window-ranked assignment there materializes N×cells rows — each
+    * carrying the full vector — through the `row_number` exchange:
+    * transparent to the oracle and fine at the ≤64-cell grid it serves,
+    * but at the 2¹⁰–2¹⁴ cells production runs (SURVEY §6.2) that is
+    * 10⁸⁺ vector-bearing rows through one shuffle for what is per-row
+    * arithmetic. Here assignment is one codegen kernel scan per vector
+    * against the cluster-broadcast centroids: O(cells × dim) per row
+    * (O(groups + probed members) under `TwoLevel`), no row expansion,
+    * and — when `cellCap` is unbounded — NO shuffle on the index side
+    * at all (the only exchanges left are the candidate join and the
+    * final top-k, both ∝ candidates, not ∝ N×cells).
     *
     * The probed-cell list is computed ONCE per vector and serves both
     * sides: element 0 is the home cell (index side), the full list is
-    * the probe set (query side). */
-  def ivfTopKLarge(emb: DataFrame, model: KMeansModel, probes: Int,
-      k: Int, cellCap: Int = Int.MaxValue): DataFrame =
-    ivfTopKLargeWithCentroids(emb, model.clusterCenters.map(_.toArray),
-      probes, k, cellCap)
-
-  /** [[ivfTopKLarge]] over a raw centroid matrix (cell id = row index,
-    * the [[centroidTable]] contract) — the form callers with
-    * deterministic fixed centroids (or a matrix restored from an
-    * artifact) use directly. */
-  def ivfTopKLargeWithCentroids(emb: DataFrame,
-      centroids: Array[Array[Double]], probes: Int,
+    * the probe set (query side). The two-level recall trade: a
+    * candidate cell is lost only when its entire GROUP outranks the
+    * probed set; `groupProbes >= numGroups` degenerates to exactly the
+    * flat scan (spec-pinned bit-equal). q77 serves the SQL-expressible
+    * fixed grouping
+    * ([[graft.expressions.IvfAssignKernel.fixedGroupedCentroidSet]]),
+    * so the group-pruned route itself is DuckDB-oracle-checkable. */
+  def ivfTopKQuantized(emb: DataFrame, q: CoarseQuantizer, probes: Int,
       k: Int, cellCap: Int = Int.MaxValue): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val cs = graft.expressions.IvfAssignKernel.centroidSet(centroids)
-    require(probes <= cs.numCells,
-      s"probes=$probes exceeds the model's ${cs.numCells} cells")
-    val bc = spark.sparkContext.broadcast(cs)
-    val assigned = prepared(emb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes)))
-    serveFromAssigned(assigned, k, cellCap)
+    require(probes <= q.numCells,
+      s"probes=$probes exceeds the model's ${q.numCells} cells")
+    serveFromAssigned(prepared(emb).withColumn("nc",
+      q.nearest(emb.sparkSession, col("v"), col("nrm"), probes)), k, cellCap)
   }
 
-  /** Two-level-quantized [[ivfTopKLarge]] — the 2¹⁴⁺-cells shape:
-    * cells are grouped driver-side
-    * ([[graft.expressions.IvfAssignKernel.groupedCentroidSet]], a
-    * deterministic Lloyd's over the CELL CENTROIDS — milliseconds,
-    * no Spark job), and per-vector assignment scans the `numGroups`
-    * group centroids plus only the `groupProbes` nearest groups'
-    * member cells. At 2¹⁴ cells with 2⁷ groups and a few probes this
-    * is ~50× less assignment arithmetic per row than the flat kernel —
-    * the term §6.2 measured as serve-dominating at 4096 cells. The
-    * recall trade: a candidate cell is lost only when its entire GROUP
-    * outranks the probed set; `groupProbes >= numGroups` degenerates
-    * to exactly the flat scan (spec-pinned bit-equal). */
-  def ivfTopKTwoLevel(emb: DataFrame, model: KMeansModel, probes: Int,
-      k: Int, numGroups: Int, groupProbes: Int,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    ivfTopKTwoLevelGrouped(emb,
-      graft.expressions.IvfAssignKernel.groupedCentroidSet(
-        model.clusterCenters.map(_.toArray), numGroups),
-      probes, k, groupProbes, cellCap)
-
-  /** [[ivfTopKTwoLevel]] with the SQL-expressible FIXED grouping
-    * (contiguous `groupSize`-cell blocks, member-mean group centroids —
-    * [[graft.expressions.IvfAssignKernel.fixedGroupedCentroidSet]]) over
-    * a raw centroid matrix. The form the declared q77 serves: every
-    * step — block mean, level-1 group ranking, level-2 member-cell
-    * ranking — is plain window SQL, so the group-pruned route itself is
-    * DuckDB-oracle-checkable, not just its degenerate all-groups case. */
-  def ivfTopKTwoLevelFixed(emb: DataFrame, centroids: Array[Array[Double]],
-      groupSize: Int, probes: Int, k: Int, groupProbes: Int,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    ivfTopKTwoLevelGrouped(emb,
-      graft.expressions.IvfAssignKernel.fixedGroupedCentroidSet(
-        centroids, groupSize),
-      probes, k, groupProbes, cellCap)
-
   /** HIERARCHICAL two-level fit — the index-BUILD counterpart of
-    * [[ivfTopKTwoLevel]]'s serving shape. A flat k-means at 2¹⁴ cells
+    * the `TwoLevel` quantizer's serving shape. A flat k-means at 2¹⁴ cells
     * pays O(sample × cells × dim) per iteration (§6.2 measured ~600 s
     * at 16 384 cells where 4 096 took ~72 s); here the same cell count
     * is fitted as `numGroups` coarse centers (one SMALL seeded Spark ML
@@ -376,13 +323,12 @@ object Similarity {
     * Groups whose sample slice is empty keep their coarse center and
     * contribute zero cells; a slice smaller than `cellsPerGroup` yields
     * that many cells (lloyd clamps k ≤ points). Cell ids are assigned
-    * contiguously in group order. Serve via [[ivfTopKWithGrouped]]. */
+    * contiguously in group order. Serve it as `TwoLevel(gcs, groupProbes)`. */
   def fitIvfHierarchical(emb: DataFrame, numGroups: Int, cellsPerGroup: Int,
       seed: Long = 42L, trainFraction: Double = 1.0,
       subIters: Int = 10): graft.expressions.IvfGroupedCentroidSet = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
     require(numGroups >= 1, s"numGroups=$numGroups")
     require(cellsPerGroup >= 1, s"cellsPerGroup=$cellsPerGroup")
     val sampled =
@@ -396,12 +342,9 @@ object Similarity {
     val gCents = coarse.clusterCenters.map(_.toArray)
     // level 2: kernel-assign the sample to its nearest group, then fit
     // cellsPerGroup cells per group inside one task each
-    val bc = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(gCents))
-    val assigned = sampled.withColumn("g",
-      element_at(GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), 1)), 1).getField("cell"))
+    val assigned = sampled.withColumn("g", element_at(
+        CoarseQuantizer.Flat(gCents).nearest(spark, $"v", $"nrm", 1), 1)
+        .getField("cell"))
       .select($"g", $"vec_id", $"v")
       .as[(Int, Long, Seq[Double])]
     val perGroup: Map[Int, Array[Array[Double]]] = assigned
@@ -517,27 +460,14 @@ object Similarity {
       trainFraction: Double = 1.0): Double = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val bc = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
     val sample =
       if (trainFraction >= 1.0) prepared(emb)
       else prepared(emb).sample(withReplacement = false, trainFraction, seed)
-    sample.select(element_at(GraftColumnBridge.column(
-        graft.expressions.IvfNearestCells(bc,
-          GraftColumnBridge.expression($"v"),
-          GraftColumnBridge.expression($"nrm"), 1)), 1)
+    sample.select(element_at(
+        CoarseQuantizer.Flat(cents).nearest(spark, $"v", $"nrm", 1), 1)
         .getField("d2").as("d2"))
       .agg(avg($"d2")).as[Double].head()
   }
-
-  /** Serve top-k through an explicit grouped centroid set — the
-    * steady-state path for a [[fitIvfHierarchical]] (or
-    * [[loadIvfGrouped]]-restored) index. */
-  def ivfTopKWithGrouped(emb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet, probes: Int, k: Int,
-      groupProbes: Int, cellCap: Int = Int.MaxValue): DataFrame =
-    ivfTopKTwoLevelGrouped(emb, gcs, probes, k, groupProbes, cellCap)
 
   /** Persist / restore a grouped (two-level) index as a plain parquet
     * artifact: one row per group (`kind='group'`, its centroid and
@@ -582,22 +512,6 @@ object Similarity {
       members)
   }
 
-  private def ivfTopKTwoLevelGrouped(emb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet, probes: Int, k: Int,
-      groupProbes: Int, cellCap: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    require(probes <= gcs.flat.numCells,
-      s"probes=$probes exceeds the model's ${gcs.flat.numCells} cells")
-    val bc = spark.sparkContext.broadcast(gcs)
-    val assigned = prepared(emb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCellsTwoLevel(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes, groupProbes)))
-    serveFromAssigned(assigned, k, cellCap)
-  }
-
   /** Candidate join + top-k window shared by the kernel-assigned
     * routes: element 0 of `nc` is the home cell (index side), the full
     * list the probe set (query side). No index-side exchange when the
@@ -629,168 +543,47 @@ object Similarity {
       "vec_id", "cand_id", k)
   }
 
-  /** Order-insensitive checksum of a model's centroids — embedded in
-    * the postings artifact so an append or serve with the WRONG model
-    * fails fast instead of silently assigning against different cells
-    * (the one corruption the cells-count check cannot see). */
-  def centroidChecksum(model: KMeansModel): Long =
-    centroidChecksumOf(model.clusterCenters.map(_.toArray))
-
-  /** [[centroidChecksum]] over a raw centroid matrix — the identity a
-    * grouped (two-level / [[fitIvfHierarchical]]) index's flat cells
-    * carry, so a postings artifact validates against WHICHEVER fit
-    * route produced the cells. */
-  def centroidChecksumOf(cents: Array[Array[Double]]): Long =
-    cents.map(c => java.util.Arrays.hashCode(c).toLong).sum
-
   /** Persistable IVF POSTINGS — the corpus side of the index as an
     * artifact: every vector under its home cell (hot cells capped at
     * `cellCap`, closest-to-centroid win), with the assignment distance
     * stored so the cap can be re-applied EXACTLY on later appends, and
-    * the model's cell count + cap + centroid checksum embedded
-    * ([[graft.operators.Dedup.minhashBandIndex]]'s params-in-artifact
-    * stance). Save as parquet next to [[saveIvfIndex]]'s model dir;
+    * the quantizer's params embedded ([[CoarseQuantizer.params]]: cell
+    * count, cap, centroid checksum, and a two-level build's `iv_gp` —
+    * [[graft.operators.Dedup.minhashBandIndex]]'s params-in-artifact
+    * stance). Save as parquet with [[saveIvfPostings]];
     * [[ivfTopKFromPostings]] then serves queries WITHOUT re-assigning
     * the corpus — the missing piece that makes IVF serving cost
-    * ∝ queries instead of ∝ corpus per call. */
-  def ivfPostings(emb: DataFrame, model: KMeansModel,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    ivfPostingsWithCentroids(emb, model.clusterCenters.map(_.toArray),
-      cellCap)
-
-  /** [[ivfPostings]] over a raw centroid matrix — the form fixed
-    * (SQL-reproducible, q78) or artifact-restored centroids use; the
-    * embedded checksum is the same [[centroidChecksumOf]] identity, so
-    * the artifact serves and appends through either centroid source. */
-  def ivfPostingsWithCentroids(emb: DataFrame,
-      cents: Array[Array[Double]], cellCap: Int = Int.MaxValue): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    assignedHome(prepared(emb), cents, cellCap)
-      .withColumn("iv_cells", lit(cents.length))
-      .withColumn("iv_cap", lit(cellCap))
-      .withColumn("iv_ck", lit(centroidChecksumOf(cents)))
-  }
-
-  /** [[ivfPostings]] for LARGE cell counts — the SAME artifact
-    * (spec-pinned row-equal including the stored d2: the kernel sums
-    * ⟨v,c⟩ in index order, so values and cap tie-breaks match the
-    * window-ranked build exactly), built without the corpus×cells row
-    * expansion: home assignment is one codegen
-    * [[graft.expressions.IvfNearestCells]] scan per vector, and when
-    * `cellCap` is unbounded there is NO index-side exchange at all —
-    * the build is a single scan-project. At 2¹⁴ cells the expanded
-    * build pushes N×16384 vector-bearing rows through the home-cell
-    * window; this one pushes N. */
-  def ivfPostingsLarge(emb: DataFrame, model: KMeansModel,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    ivfPostingsKernelBuilt(emb, model.clusterCenters.map(_.toArray), cellCap)
-
-  /** Postings for a grouped / hierarchical index
-    * ([[fitIvfHierarchical]] or a [[loadIvfGrouped]] restore): built
-    * against its FLAT cells with the exact kernel scan — the build is
-    * one-time and must assign every vector to its TRUE home cell, so
-    * only serving ([[ivfTopKFromPostingsGrouped]]) two-level-prunes.
-    * The embedded checksum is over the flat cells, matching what the
-    * grouped serving route verifies. */
-  def ivfPostingsFromGrouped(emb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    ivfPostingsKernelBuilt(emb, gcs.flat.cents, cellCap)
-
-  private def ivfPostingsKernelBuilt(emb: DataFrame,
-      cents: Array[Array[Double]], cellCap: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val cs = graft.expressions.IvfAssignKernel.centroidSet(cents)
-    val bc = spark.sparkContext.broadcast(cs)
-    val home = prepared(emb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), 1)))
-      .select(element_at($"nc", 1).getField("cell").as("cell"),
-        $"vec_id".as("cand_id"), $"v".as("cv"), $"nrm".as("cn"),
-        element_at($"nc", 1).getField("d2").as("d2"))
-      // kernel assignment yields null for non-assignable vectors (dim
-      // mismatch / null element); drop them here so the ARTIFACT never
-      // carries a null-cell posting row (the window-ranked build drops
-      // them at ranking time — the two builds must stay row-equal)
-      .filter($"cell".isNotNull)
-    cappedByCell(home, cs.numCells, cellCap)
-      .withColumn("iv_cells", lit(cs.numCells))
-      .withColumn("iv_cap", lit(cellCap))
-      .withColumn("iv_ck", lit(centroidChecksumOf(cents)))
-  }
-
-  /** Home-cell assignment + deterministic hot-cell cap, shared by the
-    * build and append paths (equality between them depends on this
-    * being ONE definition).
+    * ∝ queries instead of ∝ corpus per call.
     *
-    * r19: assignment is the codegen KERNEL scan
-    * ([[graft.expressions.IvfNearestCells]]) — one pass over the
-    * corpus, no corpus×cells row expansion and no per-vector window
-    * (the old window-ranked form shuffled numCells vector-bearing rows
-    * per vector through a `row_number` exchange; guide §2.3/§2.4).
-    * Row-equal INCLUDING the stored d2 — the kernel sums ⟨v,c⟩ in
-    * index order, so values and cap tie-breaks match the window form
-    * bit-for-bit (SimilaritySpec pins kernel ≡ window-ranked against
-    * an inline reference, capped and not; the lifecycle oracles pin it
-    * against DuckDB end-to-end). Null law unchanged: non-assignable
-    * vectors (dim mismatch / null element) drop. */
-  /** One broadcast per (live context, centroid-set identity):
-    * [[assignedHome]] runs on every build, append and recap, and a
-    * fresh `broadcast()` per call accumulates driver/executor blocks
-    * until the GC-driven ContextCleaner happens to reclaim them (r19
-    * ADVICE). Keyed by the same order-insensitive checksum the
-    * postings artifact embeds as its model identity, plus cells×dim as
-    * a collision guard; weak context keys let a stopped session's
-    * entries vanish with it. */
-  private val centroidBcCache =
-    new java.util.WeakHashMap[org.apache.spark.SparkContext,
-      scala.collection.mutable.Map[(Long, Int, Int),
-        org.apache.spark.broadcast.Broadcast[
-          graft.expressions.IvfCentroidSet]]]()
+    * Home assignment is the quantizer's codegen KERNEL scan — one pass
+    * over the corpus, no corpus×cells row expansion and no per-vector
+    * window (the old window-ranked form shuffled numCells
+    * vector-bearing rows per vector through a `row_number` exchange;
+    * guide §2.3/§2.4). Row-equal INCLUDING the stored d2 — the kernel
+    * sums ⟨v,c⟩ in index order, so values and cap tie-breaks match the
+    * window form bit-for-bit (SimilaritySpec pins kernel ≡
+    * window-ranked against an inline reference, capped and not; the
+    * lifecycle oracles pin it against DuckDB end-to-end). When
+    * `cellCap` is unbounded the build is a single scan-project.
+    * Non-assignable vectors (dim mismatch / null element) drop.
+    *
+    * A `TwoLevel` build is the 2¹⁴⁺-cells posture, where even the
+    * one-time build's flat O(cells) per-row scan dominates: its
+    * `groupProbes` is embedded as `iv_gp`, and every later append must
+    * use the SAME law ([[CoarseQuantizer.requireAppendLaw]]), or
+    * append≡rebuild breaks. With `groupProbes >= numGroups` it is
+    * row-equal to the flat build (modulo the iv_gp column). */
+  def ivfPostings(emb: DataFrame, q: CoarseQuantizer,
+      cellCap: Int = Int.MaxValue): DataFrame =
+    CoarseQuantizer.stamp(
+      cappedByCell(q.home(prepared(emb)), q.numCells, cellCap),
+      q.params(cellCap))
 
-  private def broadcastCentroids(spark: SparkSession,
-      cents: Array[Array[Double]]): org.apache.spark.broadcast.Broadcast[
-        graft.expressions.IvfCentroidSet] = {
-    val sc = spark.sparkContext
-    val key = (centroidChecksumOf(cents), cents.length,
-      if (cents.isEmpty) 0 else cents(0).length)
-    centroidBcCache.synchronized {
-      val perCtx = {
-        val m = centroidBcCache.get(sc)
-        if (m != null) m
-        else {
-          val m2 = scala.collection.mutable.Map.empty[(Long, Int, Int),
-            org.apache.spark.broadcast.Broadcast[
-              graft.expressions.IvfCentroidSet]]
-          centroidBcCache.put(sc, m2)
-          m2
-        }
-      }
-      perCtx.getOrElseUpdate(key,
-        sc.broadcast(graft.expressions.IvfAssignKernel.centroidSet(cents)))
-    }
-  }
-
-  private def assignedHome(corpus: DataFrame, cents: Array[Array[Double]],
-      cellCap: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val bc = broadcastCentroids(spark, cents)
-    val home = corpus.withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), 1)))
-      .select(element_at($"nc", 1).getField("cell").as("cell"),
-        $"vec_id".as("cand_id"), $"v".as("cv"), $"nrm".as("cn"),
-        element_at($"nc", 1).getField("d2").as("d2"))
-      .filter($"cell".isNotNull)
-    cappedByCell(home, cents.length, cellCap)
-  }
+  /** [[ivfPostings]] under `Flat(cents)`, for callers holding a raw
+    * centroid matrix. */
+  def ivfPostingsWithCentroids(emb: DataFrame,
+      cents: Array[Array[Double]], cellCap: Int = Int.MaxValue): DataFrame =
+    ivfPostings(emb, CoarseQuantizer.Flat(cents), cellCap)
 
   /** Hot-cell cap window over a home-assigned frame, with its exchange
     * PINNED to the cell count (r20): the window's own AQE-eligible
@@ -819,45 +612,42 @@ object Similarity {
     }
   }
 
-  /** The parameters embedded in a postings artifact (fail-fast seam). */
-  private def postingsParams(postings: DataFrame): (Int, Int, Long) = {
-    val head = postings.select("iv_cells", "iv_cap", "iv_ck").take(1)
+  /** The parameters embedded in a postings FRAME (fail-fast seam): one
+    * head row, with `iv_gp` when the frame carries it. */
+  private def postingsParams(postings: DataFrame): CoarseQuantizer.Params = {
+    val hasGp = postings.columns.contains("iv_gp")
+    val head = postings.select((Seq("iv_cells", "iv_cap", "iv_ck") ++
+      (if (hasGp) Seq("iv_gp") else Nil)).map(col): _*).take(1)
     require(head.nonEmpty,
       "empty IVF postings — build them with ivfPostings over the corpus")
-    (head(0).getInt(0), head(0).getInt(1), head(0).getLong(2))
+    val r = head(0)
+    CoarseQuantizer.Params(r.getInt(0), r.getInt(1), r.getLong(2),
+      if (hasGp) Some(r.getInt(3)) else None)
   }
 
-  /** The embedded parameters of a postings DIRECTORY, read from ONE
-    * part-file: `spark.read.parquet(dir)` on a partitioned artifact
-    * lists EVERY file before the first row can be taken, so a fragment
-    * append — whose only read is these four constants — was paying an
-    * O(total-files) metadata scan in front of its O(batch) write. At
-    * 16 384 cells the A/B measured exactly that: after 8 fragment
-    * appends (42 k files) the listing dominated the append, flipping
-    * the mode's economics (first/last appends 2–3× the steady ones,
-    * and a cache-eviction storm in SharedInMemoryCache). The constants
-    * are identical in every row of every file by construction, so one
-    * FS-level root listing (∝ cells), one cell-directory listing, one
-    * footer read replace the full enumeration. Returns
-    * (cells, cap, checksum, embedded groupProbes if two-level-built).
-    *
-    * With a clean [[PostingsManifest]] even those listings vanish: the
-    * params ride the manifest (one small-file read, zero artifact
-    * listings) — [[postingsParamsAtPath]] prefers it and falls back
-    * here. */
-  private def paramsOf(st: PostingsManifest.State)
-      : (Int, Int, Long, Option[Int]) =
-    (st.params.cells, st.params.cap, st.params.ck, st.params.gp)
+  /** The embedded parameters of a postings DIRECTORY. With a clean
+    * [[PostingsManifest]] they ride the manifest (one small-file read,
+    * zero artifact listings); otherwise [[paramsFromFooter]]. */
+  private def postingsParamsAtPath(spark: SparkSession,
+      path: String): CoarseQuantizer.Params =
+    PostingsManifest.readClean(spark, path).map(_.params)
+      .getOrElse(paramsFromFooter(spark, path))
 
-  private def postingsParamsAtPath(spark: SparkSession, path: String)
-      : (Int, Int, Long, Option[Int]) =
-    PostingsManifest.readClean(spark, path) match {
-      case Some(st) => paramsOf(st)
-      case None => paramsFromFooter(spark, path)
-    }
-
-  private def paramsFromFooter(spark: SparkSession, path: String)
-      : (Int, Int, Long, Option[Int]) = timed("params_at_path") {
+  /** The embedded parameters of a manifest-less postings directory,
+    * read from ONE part-file: `spark.read.parquet(dir)` on a
+    * partitioned artifact lists EVERY file before the first row can be
+    * taken, so a fragment append — whose only read is these constants —
+    * was paying an O(total-files) metadata scan in front of its
+    * O(batch) write. At 16 384 cells the A/B measured exactly that:
+    * after 8 fragment appends (42 k files) the listing dominated the
+    * append, flipping the mode's economics (first/last appends 2–3× the
+    * steady ones, and a cache-eviction storm in SharedInMemoryCache).
+    * The constants are identical in every row of every file by
+    * construction, so one FS-level root listing (∝ cells), one
+    * cell-directory listing, one footer read replace the full
+    * enumeration. */
+  private def paramsFromFooter(spark: SparkSession,
+      path: String): CoarseQuantizer.Params = timed("params_at_path") {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDir = fs.listStatus(hPath)
@@ -868,76 +658,34 @@ object Similarity {
       .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
     require(part.nonEmpty,
       s"postings cell directory holds no part-files: ${cellDir.get.getPath}")
-    val p = PostingsManifest.paramsOfFile(spark, part.get.getPath)
-    (p.cells, p.cap, p.ck, p.gp)
+    PostingsManifest.paramsOfFile(spark, part.get.getPath)
   }
 
-  /** Roll a postings artifact forward for newly arrived vectors —
-    * assignment against the FROZEN centroids (the model must be the
-    * artifact's own: checksum-verified), then the hot-cell cap
-    * re-applied over old ∪ new WITHIN TOUCHED CELLS ONLY, so a closer
-    * newcomer evicts exactly as a from-scratch build would. Cost:
-    * delta assignment (∝ batch, centroids broadcast) + a window over
-    * the touched cells' populations — never a full-postings pass; at
-    * most `numCells` cells exist, and a batch touches at most
+  /** Roll a postings FRAME forward for newly arrived vectors —
+    * assignment against the FROZEN centroids (the quantizer must be the
+    * artifact's own: [[CoarseQuantizer.requireAppendLaw]]), then the
+    * hot-cell cap re-applied over old ∪ new WITHIN TOUCHED CELLS ONLY,
+    * so a closer newcomer evicts exactly as a from-scratch build would.
+    * Cost: delta assignment (∝ batch, centroids broadcast) + a fold
+    * over the touched cells' populations — never a full-postings pass;
+    * at most `numCells` cells exist, and a batch touches at most
     * batch-many. Spec-pinned EXACTLY equal to rebuilding postings over
-    * the union (d2 is stored, so cap ties resolve identically). */
-  def appendToIvfPostings(postings: DataFrame, model: KMeansModel,
-      newEmb: DataFrame): DataFrame =
-    appendToIvfPostingsWithCentroids(postings,
-      model.clusterCenters.map(_.toArray), newEmb)
-
-  /** [[appendToIvfPostings]] over a raw centroid matrix — same
-    * checksum-verified frozen-centroid contract, for artifacts built
-    * from fixed or restored centroids (q78 declares this path). */
-  def appendToIvfPostingsWithCentroids(postings: DataFrame,
-      cents: Array[Array[Double]], newEmb: DataFrame): DataFrame = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val (recapped, touched) = recapTouched(postings, cents, newEmb)
-    postings
-      .join(broadcast(touched), Seq("cell"), "left_anti")
-      .unionByName(recapped)
-  }
-
-  /** The touched-cell recap shared by [[appendToIvfPostings]] and the
-    * in-place directory form: (recapped rows of every touched cell,
-    * the touched-cell list). Re-appending an already-indexed vector is
-    * ABSORBED (dedup on (cell, cand_id) — identical rows by
-    * determinism of d2), which is what makes a crash-replayed in-place
-    * append converge instead of double-counting candidates. */
-  private def recapTouched(postings: DataFrame,
-      cents: Array[Array[Double]],
-      newEmb: DataFrame): (DataFrame, DataFrame) = {
-    val spark = postings.sparkSession
-    val (cells, cap, ck) = postingsParams(postings)
-    require(cents.length == cells,
-      s"model has ${cents.length} cells, artifact $cells")
-    require(centroidChecksumOf(cents) == ck,
-      "model centroids differ from the artifact's — append with the " +
-        "index's own saved model (loadIvfIndex), or rebuild ivfPostings")
-    val delta = assignedHome(prepared(newEmb), cents, cap)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap))
-      .withColumn("iv_ck", lit(ck))
-    recapFromDelta(postings, delta, cap)
-  }
-
-  /** The recap core shared by the exact and two-level append routes:
-    * `delta` is the batch already home-assigned (and carrying the
-    * artifact's iv_ columns); every touched cell's old ∪ new rows are
-    * deduped on (cell, cand_id) and re-capped, so a closer newcomer
-    * evicts exactly as a from-scratch build would and a crash-replayed
-    * batch converges. */
-  private def recapFromDelta(postings: DataFrame, delta: DataFrame,
-      cap: Int): (DataFrame, DataFrame) = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val touched = delta.select($"cell").distinct()
+    * the union (d2 is stored, so cap ties resolve identically), and
+    * oracle-checked by q78. Re-appending an already-indexed vector is
+    * ABSORBED ([[capFold]]'s (cell, cand_id) dedup — identical rows by
+    * determinism of d2). */
+  def appendToIvfPostings(postings: DataFrame, q: CoarseQuantizer,
+      newEmb: DataFrame): DataFrame = {
+    val p = postingsParams(postings)
+    q.requireAppendLaw(p)
+    val delta = CoarseQuantizer.stamp(q.home(prepared(newEmb)), p)
+    val touched = broadcast(delta.select(col("cell")).distinct())
     val recapped = capFold(postings
-      .join(broadcast(touched), Seq("cell"), "left_semi")
-      .unionByName(delta.select(postings.columns.map(col): _*)), cap)
-    (recapped, touched)
+      .join(touched, Seq("cell"), "left_semi")
+      .unionByName(delta.select(postings.columns.map(col): _*)), p.cap)
+    postings
+      .join(touched, Seq("cell"), "left_anti")
+      .unionByName(recapped)
   }
 
   /** Persist postings PARTITIONED BY CELL — the directory layout that
@@ -996,9 +744,9 @@ object Similarity {
   }
 
   /** The postings data files' schema (partition column excluded) — what
-    * [[ivfPostingsKernelBuilt]]/[[ivfPostingsTwoLevel]] write; the
-    * two-level builds add `iv_gp`. Manifest-served reads derive it from
-    * the manifest params instead of opening a footer. */
+    * [[ivfPostings]] writes; a two-level build adds `iv_gp`.
+    * Manifest-served reads derive it from the manifest params instead
+    * of opening a footer. */
   private def postingsDataSchema(hasGp: Boolean):
       org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -1021,42 +769,49 @@ object Similarity {
     * lists every file before the first task — the §6.2-measured
     * serving term at 10⁴⁺ cells), exact byte sizes for the optimizer,
     * and partition pruning against the manifest's cell values — so
-    * [[ivfTopKFromPostingsPruned]] over this frame touches only probed
-    * cells' FILES, no directory ever opened. Falls back to the
+    * [[ivfTopKFromPostings]] over a `Classic` source touches only
+    * probed cells' FILES, no directory ever opened. Falls back to the
     * discovering read for manifest-less or dirty artifacts.
     *
     * The frame is a SNAPSHOT: maintenance committed after this call is
     * invisible until the caller re-opens. Whether the snapshot SURVIVES
     * overlapped maintenance depends on the maintenance mode: the
-    * overwrite-style ops ([[appendIvfPostingsInPlace]],
+    * overwrite-style ops (the `InPlace` append,
     * [[compactIvfPostings]]) DELETE the files they replace at commit,
-    * so they keep the between-serving-epochs contract;
-    * [[compactIvfPostingsRetained]] retires superseded files instead of
-    * deleting them, which is the compact-WHILE-serve mode — a snapshot
-    * opened before it keeps serving correctly through it
+    * so they keep the between-serving-epochs contract; the `Retained`
+    * append and [[compactIvfPostingsRetained]] retire superseded files
+    * instead of deleting them, which is the compact-WHILE-serve mode —
+    * a snapshot opened before them keeps serving correctly through them
     * (StreamingSpec-pinned). */
   def readPostings(spark: SparkSession, path: String): DataFrame =
+    readPostingsAs(spark, path,
+      st => postingsDataSchema(st.params.gp.nonEmpty))
+
+  /** The one postings reader, over a family's data schema (float or
+    * PQ-coded). A DIRTY artifact's directory is not serving truth by
+    * itself: with retained maintenance the directory legitimately holds
+    * tombstoned files (and, after a crash mid-op, possibly half-staged
+    * recap files next to the rows they supersede), so a raw read
+    * double-counts (cell, cand_id) and over-fills capped cells. It
+    * converges with the SAME idempotent law the compaction fold
+    * applies ([[capFold]]), which maps tombstone+live and
+    * half-staged+old states alike onto the canonical artifact
+    * (cap-over-union is idempotent; spec-pinned equal to the clean
+    * manifest read) — codes ride the surviving rows unchanged, being a
+    * pure function of (vector, home cell). A manifest-ABSENT artifact
+    * skips the fold: it never ran a retained op (those require a
+    * manifest), so its listing is truth and the extra shuffle would be
+    * pure cost. */
+  private def readPostingsAs(spark: SparkSession, path: String,
+      dataSchema: PostingsManifest.State =>
+        org.apache.spark.sql.types.StructType): DataFrame =
     PostingsManifest.readClean(spark, path) match {
       case Some(st) =>
         org.apache.spark.sql.GraftColumnBridge.parquetOverFileIndex(spark,
-          new graft.plans.PostingsFileIndex(path, st),
-          postingsDataSchema(st.params.gp.nonEmpty))
+          new graft.plans.PostingsFileIndex(path, st), dataSchema(st))
       case None =>
         spark.catalog.refreshByPath(path)
         val raw = spark.read.parquet(path)
-        // A DIRTY artifact's directory is not serving truth by itself:
-        // with retained maintenance the directory legitimately holds
-        // tombstoned files (and, after a crash mid-op, possibly
-        // half-staged recap files next to the rows they supersede), so
-        // a raw read double-counts (cell, cand_id) and over-fills
-        // capped cells. Converge with the SAME idempotent law the
-        // compaction fold applies — dedup (cell, cand_id), re-rank,
-        // re-cap — which maps tombstone+live and half-staged+old states
-        // alike onto the canonical artifact (cap-over-union is
-        // idempotent; spec-pinned equal to the clean manifest read).
-        // A manifest-ABSENT artifact skips this: it never ran a
-        // retained op (those require a manifest), so its listing is
-        // truth and the extra shuffle would be pure cost.
         if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
           val head = raw.select(col("iv_cap")).take(1)
@@ -1111,11 +866,7 @@ object Similarity {
       cellsPerPack: Int = 128): Unit = {
     val spark = postings.sparkSession
     require(cellsPerPack > 0, s"cellsPerPack=$cellsPerPack")
-    val (cells, cap, ck) = postingsParams(postings)
-    val gp =
-      if (postings.columns.contains("iv_gp"))
-        Some(postings.select(col("iv_gp")).take(1)(0).getInt(0))
-      else None
+    val CoarseQuantizer.Params(cells, cap, ck, gp) = postingsParams(postings)
     val packs = (cells + cellsPerPack - 1) / cellsPerPack
     MaintenanceProtocol.withLease(spark, path, "build_packed") {
       postings
@@ -1149,11 +900,6 @@ object Similarity {
     saveIvfPostingsPacked(readPostings(spark, classicPath), packedPath,
       cellsPerPack)
 
-  /** The packed artifact's embedded params, as its manifest carries
-    * them — serving never opens a data page for them. */
-  private case class PackedParams(cells: Int, cap: Int, ck: Long,
-      cpp: Int, gp: Option[Int])
-
   /** Open a packed artifact: with a clean manifest the scan plans from
     * a [[graft.plans.ManifestFileIndex]] keyed by `pack` — zero
     * listings, pack-level partition pruning — with `cell` served from
@@ -1161,9 +907,10 @@ object Similarity {
     * manifest (no footer/head job rides the serve path). The
     * discovering fallback still answers exactly (pack is a discovered
     * partition column); it plans from a listing and its caller derives
-    * params from the data. */
+    * params from the data. The params come back with the cells-per-pack
+    * count, as the manifest carries them. */
   private def readPackedPostingsWithCpp(spark: SparkSession,
-      path: String): (DataFrame, Option[PackedParams]) =
+      path: String): (DataFrame, Option[(CoarseQuantizer.Params, Int)]) =
     ArtifactManifest.readClean(spark, path, PackedPostingsFamily) match {
       case Some(st) =>
         val root = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
@@ -1186,9 +933,9 @@ object Similarity {
           groups)
         (org.apache.spark.sql.GraftColumnBridge.parquetOverFileIndex(
           spark, idx, packedDataSchema(st.params.contains("gp"))),
-          Some(PackedParams(st.params("cells").toInt,
+          Some((CoarseQuantizer.Params(st.params("cells").toInt,
             st.params("cap").toInt, st.params("ck").toLong,
-            st.params("cpp").toInt, st.params.get("gp").map(_.toInt))))
+            st.params.get("gp").map(_.toInt)), st.params("cpp").toInt)))
       case None =>
         ArtifactManifest.requireFamilyOrUnknown(spark, path,
           PackedPostingsFamily)
@@ -1198,52 +945,6 @@ object Similarity {
 
   def readPackedPostings(spark: SparkSession, path: String): DataFrame =
     readPackedPostingsWithCpp(spark, path)._1
-
-  /** [[ivfTopKFromPostingsPruned]] over a PACKED artifact: identical
-    * results (spec-pinned — pruning can never change what joins a
-    * probe), with the probed-cell set pushed twice — as a pack-IN
-    * partition filter (manifest FileIndex prune, reads only probed
-    * packs' FILES) and as the cell-IN data filter (sorted row-group
-    * prune inside each pack). Serving I/O is ∝ probed packs — the
-    * packed trade: ≤ `cellsPerPack` read amplification per probed
-    * cell against a ~cells/cellsPerPack smaller file count
-    * everywhere else. Same deterministic-query contract as the
-    * classic pruned route. */
-  def ivfTopKFromPostingsPackedPruned(queryEmb: DataFrame,
-      cents: Array[Array[Double]], path: String, probes: Int,
-      k: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val (postings0, paramsOpt) = readPackedPostingsWithCpp(spark, path)
-    // manifest-clean: params ride the sidecar, zero data-page jobs on
-    // the serve path; fallback derives them from the data head
-    val (cells, ck) = paramsOpt match {
-      case Some(p) => (p.cells, p.ck)
-      case None =>
-        val (c, _, k) = postingsParams(postings0)
-        (c, k)
-    }
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the packed artifact's")
-    val bc = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
-    val queries = prepared(queryEmb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes)))
-      .select($"vec_id", $"v", $"nrm", explode($"nc.cell").as("cell"))
-    val probed = queries.select($"cell").distinct().as[Int].collect().toSeq
-    val pruned = paramsOpt match {
-      case Some(p) =>
-        val packs = probed.map(_ / p.cpp).distinct
-        postings0.filter($"pack".isin(packs: _*) &&
-          $"cell".isin(probed: _*))
-      case None => postings0.filter($"cell".isin(probed: _*))
-    }
-    serveQueriesOverPostings(queries,
-      pruned.select($"cell", $"cand_id", $"cv", $"cn"), k)
-  }
 
   /** The `iv_cells` literal embedded in a postings frame's plan (every
     * builder stamps `withColumn("iv_cells", lit(n))`) — lets the
@@ -1278,40 +979,6 @@ object Similarity {
         PostingsManifest.rebuildAndWrite(postings.sparkSession, path))
     }
 
-  /** Roll a cell-partitioned postings DIRECTORY forward in place:
-    * dynamic partition overwrite rewrites ONLY the touched cells'
-    * directories — at 10⁴ cells and a batch touching dozens, the
-    * artifact rewrite is ~touched/total of the naive full overwrite —
-    * and the read side is pruned the same way (params from one
-    * part-file, old rows from the touched cells' directories only), so
-    * the whole trigger is ∝ touched cells end to end.
-    * The recapped frame is materialized before the write (a plain-
-    * parquet overwrite may not read its own input), and the
-    * (cell, cand_id) dedup in the recap makes a crash-replayed batch
-    * converge to the same directory state. Concurrent readers see
-    * per-partition swaps, not one atomic commit — run between serving
-    * epochs, or move the artifact to a transactional format for live
-    * multi-reader maintenance (same stance as
-    * [[graft.sources.WarehouseWriter.compactParquet]]). */
-  def appendIvfPostingsInPlace(spark: SparkSession, path: String,
-      model: KMeansModel, newEmb: DataFrame): Unit = {
-    val cents = model.clusterCenters.map(_.toArray)
-    val (cells, cap, ck, gpOpt) = postingsParamsAtPath(spark, path)
-    require(gpOpt.isEmpty,
-      "artifact is two-level-built (iv_gp): the exact recap would mix " +
-        "assignment laws — use appendIvfPostingsInPlaceGrouped")
-    require(cents.length == cells,
-      s"model has ${cents.length} cells, artifact $cells")
-    require(centroidChecksumOf(cents) == ck,
-      "model centroids differ from the artifact's — append with the " +
-        "index's own saved model (loadIvfIndex), or rebuild ivfPostings")
-    val delta = assignedHome(prepared(newEmb), cents, cap)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap))
-      .withColumn("iv_ck", lit(ck))
-    recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-  }
-
   /** The touched-cells-only recap for the DIRECTORY routes: the delta
     * (already home-assigned, batch-sized) is materialized once, its
     * touched-cell set collected (bounded by numCells), and the old rows
@@ -1322,7 +989,7 @@ object Similarity {
     * on local disk, the dominant term at 10⁴⁺ cells on an object store
     * — the same O(artifact-metadata) class the fragment route's param
     * read was measured paying. Union–dedup–recap semantics are byte-
-    * identical to [[recapFromDelta]] (spec-pinned: in-place ≡ the
+    * identical to [[appendToIvfPostings]]'s (spec-pinned: in-place ≡ the
     * DataFrame append route ≡ a from-scratch rebuild). */
   private def recapTouchedDirsAndOverwrite(spark: SparkSession,
       path: String, delta0: DataFrame, cap: Int): Unit =
@@ -1410,160 +1077,6 @@ object Similarity {
       .unpersistLocalCheckpoint(materialized)
   }
 
-  /** Home-cell frame (cell, cand_id, cv, cn, d2) via the TWO-LEVEL
-    * kernel — O(groups + probed members) assignment arithmetic per row
-    * instead of O(cells): the per-batch cost VERDICT r13 measured as
-    * the append bottleneck at 2¹⁴ cells. `groupProbes >= numGroups`
-    * degenerates to exactly the flat scan (spec-pinned bit-equal home
-    * cells); shallower probes may assign a group-boundary vector to a
-    * nearby-but-not-nearest cell — the same recall law the serving
-    * routes trade under, applied at index time. */
-  private def homeTwoLevel(emb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      groupProbes: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val bc = spark.sparkContext.broadcast(gcs)
-    prepared(emb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCellsTwoLevel(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), 1, groupProbes)))
-      .select(element_at($"nc", 1).getField("cell").as("cell"),
-        $"vec_id".as("cand_id"), $"v".as("cv"), $"nrm".as("cn"),
-        element_at($"nc", 1).getField("d2").as("d2"))
-      .filter($"cell".isNotNull) // non-assignable vectors drop, as everywhere
-  }
-
-  /** Postings BUILT with two-level home assignment — the 2¹⁴⁺-cells
-    * index-build/maintenance posture: at that scale even the one-time
-    * build's flat O(cells) per-row scan is the dominant term, and a
-    * deployment choosing it for the build wants the SAME assignment
-    * law for every later append ([[appendIvfPostingsInPlaceGrouped]]),
-    * or append≡rebuild breaks. The chosen `groupProbes` is therefore
-    * embedded in the artifact (`iv_gp`) alongside the cap and
-    * checksum, and the grouped append validates it — two parameters
-    * ([[centroidChecksumOf]] identity + gp) pin the full assignment
-    * law. With `groupProbes >= numGroups` this is row-equal to
-    * [[ivfPostingsFromGrouped]] (modulo the extra iv_gp column). */
-  def ivfPostingsTwoLevel(emb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet, groupProbes: Int,
-      cellCap: Int = Int.MaxValue): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val home = homeTwoLevel(emb, gcs, groupProbes)
-    cappedByCell(home, gcs.flat.numCells, cellCap)
-      .withColumn("iv_cells", lit(gcs.flat.numCells))
-      .withColumn("iv_cap", lit(cellCap))
-      .withColumn("iv_ck", lit(centroidChecksumOf(gcs.flat.cents)))
-      .withColumn("iv_gp", lit(groupProbes))
-  }
-
-  /** In-place roll-forward with TWO-LEVEL delta assignment — the
-    * grouped twin of [[appendIvfPostingsInPlace]] for
-    * [[ivfPostingsTwoLevel]]-built artifacts: per-batch assignment
-    * arithmetic is O(groups + probed members) per row, the recap and
-    * touched-cell overwrite are byte-shared with the exact route, and
-    * append ≡ rebuild holds AT THE ARTIFACT'S OWN groupProbes
-    * (validated against the embedded `iv_gp`; spec-pinned equal to
-    * [[ivfPostingsTwoLevel]] over the union). An artifact without
-    * `iv_gp` (exact-built) accepts the grouped append only in its
-    * degenerate `groupProbes >= numGroups` form, where the two-level
-    * kernel is bit-equal to the flat scan. */
-  def appendIvfPostingsInPlaceGrouped(spark: SparkSession, path: String,
-      gcs: graft.expressions.IvfGroupedCentroidSet, newEmb: DataFrame,
-      groupProbes: Int): Unit = {
-    val (cells, cap, ck, gpOpt) = postingsParamsAtPath(spark, path)
-    require(gcs.flat.numCells == cells &&
-      centroidChecksumOf(gcs.flat.cents) == ck,
-      "grouped index cells differ from the postings artifact's")
-    gpOpt match {
-      case Some(gp) => require(gp == groupProbes,
-        s"artifact was built with groupProbes=$gp, append asked " +
-          s"$groupProbes — one assignment law per artifact life")
-      case None => require(groupProbes >= gcs.numGroups,
-        s"exact-built artifact: grouped append needs groupProbes >= " +
-          s"numGroups (${gcs.numGroups}) to preserve append≡rebuild")
-    }
-    val delta0 = homeTwoLevel(newEmb, gcs, groupProbes)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap))
-      .withColumn("iv_ck", lit(ck))
-    val delta =
-      if (gpOpt.nonEmpty) delta0.withColumn("iv_gp", lit(groupProbes))
-      else delta0
-    recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-  }
-
-  /** RETAINED recap append — [[appendIvfPostingsInPlace]]'s semantics
-    * under [[compactIvfPostingsRetained]]'s serving contract: the
-    * touched cells' recapped state lands as NEW uniquely-named files
-    * and the superseded ones are RETIRED in the manifest instead of
-    * overwritten, so a [[readPostings]] snapshot opened before the
-    * append keeps serving its own consistent state THROUGH it (the
-    * in-place route's dynamic partition overwrite deletes files under
-    * such a reader). With this, EVERY maintenance mode is
-    * snapshot-safe for manifest-resolved readers: fragment appends are
-    * append-only, compaction has its retained variant, and the recap —
-    * the always-serveable default — gets one here. Same costs and
-    * protocol as retained compaction: tombstones survive at least one
-    * FULL maintenance epoch (the next retained op vacuums only those
-    * older than the current epoch — the same window law as
-    * [[vacuumPostings]]'s default; a quiesced artifact's last window
-    * closes via that standalone vacuum), old+new bytes in the touched
-    * directories meanwhile, plain discovering reads double-count
-    * during the window, clean manifest REQUIRED (falls back to the
-    * classic in-place overwrite otherwise — correct, just not
-    * snapshot-isolated), dirty-flag bracket with directory-truth
-    * recovery (a rebuild resurrects tombstones as live rows; the next
-    * compaction's cap-over-union fold converges them back —
-    * spec-pinned for the compaction twin, same law here). */
-  def appendIvfPostingsRetained(spark: SparkSession, path: String,
-      cents: Array[Array[Double]], newEmb: DataFrame): Unit = {
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gpOpt) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    require(gpOpt.isEmpty,
-      "artifact is two-level-built (iv_gp): the exact recap would mix " +
-        "assignment laws — use appendIvfPostingsRetainedGrouped")
-    val delta = assignedHome(prepared(newEmb), cents, cap)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap))
-      .withColumn("iv_ck", lit(ck))
-    state0 match {
-      case Some(_) => recapRetained(spark, path, delta, cap)
-      case None => recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-    }
-  }
-
-  /** [[appendIvfPostingsRetained]] for two-level-built artifacts; the
-    * assignment law rides the artifact's own embedded `iv_gp`
-    * (one law per artifact life, as everywhere). */
-  def appendIvfPostingsRetainedGrouped(spark: SparkSession, path: String,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      newEmb: DataFrame): Unit = {
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gpOpt) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(gcs.flat.numCells == cells &&
-      centroidChecksumOf(gcs.flat.cents) == ck,
-      "grouped index cells differ from the postings artifact's")
-    require(gpOpt.nonEmpty,
-      "artifact is exact-built (no iv_gp): use appendIvfPostingsRetained")
-    val gp = gpOpt.get
-    val delta = homeTwoLevel(newEmb, gcs, gp)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap))
-      .withColumn("iv_ck", lit(ck))
-      .withColumn("iv_gp", lit(gp))
-    state0 match {
-      case Some(_) => recapRetained(spark, path, delta, cap)
-      case None => recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-    }
-  }
-
   /** The retained recap's write half: vacuum tombstones at least one
     * full maintenance epoch old (the SAME window law as
     * [[vacuumPostings]] at its default — the previous op's own
@@ -1631,41 +1144,6 @@ object Similarity {
       }
     } finally org.apache.spark.sql.GraftColumnBridge
       .unpersistLocalCheckpoint(delta)
-  }
-
-  /** FRAGMENT append — the O(batch)-per-trigger maintenance mode: the
-    * batch is home-assigned (exact kernel scan, no row expansion) and
-    * APPENDED into the touched cells' directories, with no recap and
-    * no rewrite of existing rows. Per-call cost is ∝ batch alone —
-    * where [[appendIvfPostingsInPlace]] pays ∝ the touched cells' full
-    * populations per call — at the price of deferred maintenance,
-    * settled by [[compactIvfPostings]]:
-    *  - each call adds one file to every touched cell (the LSM trade:
-    *    serving reads degrade with fragment count until compaction);
-    *  - a cellCap artifact serves a SUPERSET between compactions (the
-    *    cap is re-applied over old ∪ new at compaction, not here) —
-    *    recall never drops, hot-cell candidate fan temporarily exceeds
-    *    the cap;
-    *  - a crash-REPLAYED batch double-appends; the duplicate
-    *    (cell, cand_id) rows consume top-k ranks until compaction
-    *    dedups them — under at-least-once delivery, compact before
-    *    serving, or use the recap route (streaming's default).
-    * High-frequency ingest wants this + periodic compaction; the recap
-    * route is the always-serveable shape. */
-  def appendIvfPostingsFragment(spark: SparkSession, path: String,
-      cents: Array[Array[Double]], newEmb: DataFrame): Unit = {
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gp) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    require(gp.isEmpty,
-      "artifact is two-level-built (iv_gp): fragment appends assign " +
-        "exactly and would mix assignment laws — use " +
-        "appendIvfPostingsFragmentGrouped")
-    appendFragmentFiles(spark, path,
-      ivfPostingsKernelBuilt(newEmb, cents, Int.MaxValue)
-        .withColumn("iv_cap", lit(cap))) // artifact's cap, not the delta's
   }
 
   private lazy val maintLog =
@@ -1746,37 +1224,145 @@ object Similarity {
     }
   }
 
-  /** FRAGMENT append for TWO-LEVEL-built artifacts — the O(batch)
-    * maintenance mode at the 2¹⁴⁺-cells posture, where per-row
-    * assignment must be O(groups + probed members) too (a flat-scan
-    * fragment append would make assignment, not the write, the
-    * per-trigger bottleneck). Assignment rides the artifact's OWN
-    * embedded `iv_gp` — one assignment law per artifact life, same
-    * contract as [[appendIvfPostingsInPlaceGrouped]], which is what
-    * keeps fragment-appends + [[compactIvfPostings]] landing exactly
-    * the [[ivfPostingsTwoLevel]] from-scratch rows (spec-pinned). All
-    * the flat fragment route's debts apply unchanged: one file per
-    * touched cell per call, superset serving between compactions,
-    * replay dups deduped at compaction. */
-  def appendIvfPostingsFragmentGrouped(spark: SparkSession, path: String,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      newEmb: DataFrame): Unit = {
+  /** What [[appendIvfPostings]] did and why — returned for
+    * observability (Auto's flip is an economics call an operator will
+    * want in logs). Only `Auto` probes the batch; the fixed modes
+    * report their route with `batchRows`/`touchedRows` at -1 and
+    * `ratio` NaN. */
+  case class AppendRoute(route: String, batchRows: Long,
+      touchedRows: Long, ratio: Double)
+
+  /** How [[appendIvfPostings]] rolls a postings directory forward. */
+  sealed trait MaintenanceMode
+
+  object MaintenanceMode {
+    /** Recap the touched cells and overwrite only their directories
+      * (dynamic partition overwrite): the artifact keeps its
+      * 1-file-per-cell layout append after append. Concurrent readers
+      * see per-partition swaps, not one atomic commit — run between
+      * serving epochs (the
+      * [[graft.sources.WarehouseWriter.compactParquet]] stance). */
+    case object InPlace extends MaintenanceMode
+
+    /** The same recap, landed as NEW uniquely-named files with the
+      * superseded ones RETIRED in the manifest, so a [[readPostings]]
+      * snapshot opened before the append keeps serving its own state
+      * THROUGH it. Tombstones survive at least one full maintenance
+      * epoch (the next retained op vacuums only older ones — the
+      * [[vacuumPostings]] window law); plain discovering reads
+      * double-count during the window. Needs a clean manifest: without
+      * one it runs as `InPlace` (correct, not snapshot-isolated). */
+    case object Retained extends MaintenanceMode
+
+    /** APPEND the batch into the touched cells' directories, no recap
+      * and no rewrite of existing rows: per-call cost ∝ batch alone, at
+      * the price of deferred maintenance settled by
+      * [[compactIvfPostings]] — one more file per touched cell per call,
+      * a SUPERSET served between compactions (the cap is re-applied
+      * over old ∪ new at compaction; recall never drops), and a
+      * crash-REPLAYED batch double-appends until compaction dedups it,
+      * so under at-least-once delivery compact before serving. */
+    case object Fragment extends MaintenanceMode
+
+    /** The recap↔fragment REGIME LAW as API (the q76 auto-router pattern
+      * applied to maintenance). The r14 A/B (SURVEY §6.1) pinned it:
+      * recap cost is ∝ the TOUCHED CELLS' FULL POPULATIONS, fragment
+      * cost ∝ the BATCH, so the observable that decides is
+      *
+      *   ratio = Σ touched cells' current rows / batch rows
+      *
+      * Measured: ratio ≈ 3 → recap wins (fixture/sf1 postures, 0.85×);
+      * ratio ≈ 7–8 → fragment wins 1.35–1.87× (sf10 postures).
+      * `fragmentThreshold` defaults into the measured gap (4). The
+      * probe costs ONE extra O(batch) pass (a groupBy-count of the
+      * delta's home cells); the manifest's per-cell rows make the
+      * touched populations free. The recap leg is `Retained` — the r15
+      * A/B measured the retained recap 1.9× FASTER than the overwrite
+      * recap (SURVEY §6.1), so `manifest present ⟹ retained`; a
+      * manifest-less or dirty artifact routes to the `InPlace` recap
+      * (the ratio is unobservable, and recap is the conservative
+      * always-serveable default). Both legs land the same logical
+      * artifact (spec-pinned: either path + compaction ≡ rebuild). */
+    final case class Auto(fragmentThreshold: Double = 4.0)
+        extends MaintenanceMode
+  }
+
+  /** Roll a cell-partitioned postings DIRECTORY ([[saveIvfPostings]])
+    * forward for newly arrived vectors: the batch is home-assigned
+    * against the FROZEN centroids — the quantizer must be the
+    * artifact's own, cells and assignment law
+    * ([[CoarseQuantizer.requireAppendLaw]]) — stamped with the
+    * artifact's params (its cap, not the batch's), and landed by
+    * `mode`. Every recap re-applies the hot-cell cap over old ∪ new
+    * WITHIN TOUCHED CELLS ONLY, so a closer newcomer evicts exactly as
+    * a from-scratch build would, and dedups on (cell, cand_id), so a
+    * crash-replayed batch converges. Read side and write side are both
+    * ∝ touched cells (params from the manifest or one part-file, old
+    * rows from the touched cells only). Spec-pinned: every mode (+
+    * compaction for `Fragment`) ≡ the [[ivfPostings]] rebuild over the
+    * union, under either quantizer. */
+  def appendIvfPostings(spark: SparkSession, path: String,
+      q: CoarseQuantizer, newEmb: DataFrame,
+      mode: MaintenanceMode): AppendRoute = {
     val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gpOpt) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(gcs.flat.numCells == cells &&
-      centroidChecksumOf(gcs.flat.cents) == ck,
-      "grouped index cells differ from the postings artifact's")
-    require(gpOpt.nonEmpty,
-      "artifact is exact-built (no iv_gp): fragment appends to it " +
-        "assign with the flat scan — use appendIvfPostingsFragment")
-    val gp = gpOpt.get
-    appendFragmentFiles(spark, path,
-      homeTwoLevel(newEmb, gcs, gp)
-        .withColumn("iv_cells", lit(cells))
-        .withColumn("iv_cap", lit(cap)) // artifact's cap, not the delta's
-        .withColumn("iv_ck", lit(ck))
-        .withColumn("iv_gp", lit(gp)))
+    val p = state0.map(_.params).getOrElse(paramsFromFooter(spark, path))
+    q.requireAppendLaw(p)
+    val delta = CoarseQuantizer.stamp(q.home(prepared(newEmb)), p)
+    def fixed(route: String) = AppendRoute(route, -1L, -1L, Double.NaN)
+    mode match {
+      case MaintenanceMode.Fragment =>
+        appendFragmentFiles(spark, path, delta)
+        fixed("fragment")
+      case MaintenanceMode.Retained if state0.nonEmpty =>
+        recapRetained(spark, path, delta, p.cap)
+        fixed("recap_retained")
+      case MaintenanceMode.InPlace | MaintenanceMode.Retained =>
+        recapTouchedDirsAndOverwrite(spark, path, delta, p.cap)
+        fixed("recap")
+      case MaintenanceMode.Auto(threshold) =>
+        routeAppend(spark, path, delta, p.cap, state0, threshold)
+    }
+  }
+
+  /** [[appendIvfPostings]] under `Flat(cents)` in `Auto` mode, for
+    * callers holding a raw centroid matrix. */
+  def appendIvfPostingsAuto(spark: SparkSession, path: String,
+      cents: Array[Array[Double]], newEmb: DataFrame,
+      fragmentThreshold: Double = 4.0): AppendRoute =
+    appendIvfPostings(spark, path, CoarseQuantizer.Flat(cents), newEmb,
+      MaintenanceMode.Auto(fragmentThreshold))
+
+  /** `Auto`'s probe-and-dispatch: one O(batch) pass over the
+    * home-assigned delta yields (touched cells, batch rows); touched
+    * populations come free from the manifest. The chosen route re-runs
+    * the delta's assignment plan — deterministic, O(batch) arithmetic,
+    * the same cost class the routes pay anyway. */
+  private def routeAppend(spark: SparkSession, path: String,
+      delta: DataFrame, cap: Int, state0: Option[PostingsManifest.State],
+      fragmentThreshold: Double): AppendRoute = {
+    import spark.implicits._
+    val perCellBatch = timed("route_probe")(
+      delta.groupBy(col("cell").cast("int").as("cell")).count()
+        .as[(Int, Long)].collect())
+    val batchRows = perCellBatch.map(_._2).sum
+    val touchedRows = state0 match {
+      case Some(st) =>
+        val pop = st.perCellRows
+        perCellBatch.map { case (c, _) => pop.getOrElse(c, 0L) }.sum
+      case None => 0L
+    }
+    val ratio =
+      if (batchRows == 0) 0.0 else touchedRows.toDouble / batchRows
+    if (state0.nonEmpty && ratio >= fragmentThreshold) {
+      appendFragmentFiles(spark, path, delta)
+      AppendRoute("fragment", batchRows, touchedRows, ratio)
+    } else if (state0.nonEmpty) {
+      recapRetained(spark, path, delta, cap)
+      AppendRoute("recap_retained", batchRows, touchedRows, ratio)
+    } else {
+      recapTouchedDirsAndOverwrite(spark, path, delta, cap)
+      AppendRoute("recap", batchRows, touchedRows, ratio)
+    }
   }
 
   /** Cell-partition-aware compaction of a [[saveIvfPostings]]
@@ -1803,135 +1389,6 @@ object Similarity {
     * artifact, or a stranded dirty flag after a crash) it falls back to
     * directory truth and then writes a fresh manifest, so one slow
     * compaction ADOPTS the artifact into the fast path. */
-  /** What [[appendIvfPostingsAuto]] decided and why — returned for
-    * observability (the flip is an economics call an operator will
-    * want in logs). */
-  case class AppendRoute(route: String, batchRows: Long,
-      touchedRows: Long, ratio: Double)
-
-  /** The recap↔fragment REGIME LAW as API (the q76 auto-router pattern
-    * applied to maintenance): route each append by the measured
-    * economics instead of making every caller learn them. The r14 A/B
-    * (SURVEY §6.1) pinned the law — recap cost is ∝ the TOUCHED CELLS'
-    * FULL POPULATIONS (it re-ranks and rewrites them), fragment cost is
-    * ∝ the BATCH alone — so the observable that decides is their ratio:
-    *
-    *   ratio = Σ touched cells' current rows / batch rows
-    *
-    * Measured: ratio ≈ 3 → recap wins (fixture/sf1 postures, 0.85×);
-    * ratio ≈ 7–8 → fragment wins 1.35–1.87× (sf10 postures); at a
-    * mature index (10⁹-row artifact, 10⁵-row batches, ratio 10³⁺) the
-    * recap term is the whole bill. `fragmentThreshold` defaults into
-    * the measured gap (4). Costs of the probe itself: ONE extra
-    * O(batch) assignment pass (a groupBy-count of the delta's home
-    * cells) plus the manifest read the routes already do — the
-    * manifest's per-cell rows make touched populations free, which is
-    * what makes this router practical.
-    *
-    * Both routes land the same logical artifact (spec-pinned: either
-    * path + compaction ≡ rebuild); they differ in WHEN maintenance is
-    * paid — recap now (always-serveable), fragment at the next
-    * compaction (O(batch) trigger, superset serving until then). A
-    * manifest-less or dirty artifact routes to RECAP: without per-cell
-    * rows the ratio is unobservable, and recap is the conservative
-    * always-serveable default.
-    *
-    * `retained` (DEFAULT) makes the chosen route SNAPSHOT-SAFE for
-    * manifest-resolved readers: the recap leg runs as
-    * [[appendIvfPostingsRetained]]'s tombstone roll-forward
-    * (route reported as `recap_retained`), and the fragment leg is
-    * append-only — snapshot-safe by construction — so a live-serving
-    * deployment gets routing AND isolation from the one call. The
-    * default is retained because the r15 A/B measured the retained
-    * recap 1.9× FASTER than the classic overwrite recap (SURVEY §6.1:
-    * manifest-planned reads + staging renames beat per-dir listings +
-    * overwrite commit machinery) — the safety feature is also the
-    * fast path, so `manifest present ⟹ retained` is the explicit
-    * routing condition. `retained = false` is the escape hatch for
-    * deployments whose readers bypass [[readPostings]] and
-    * `spark.read.parquet` the directory raw: a retention window
-    * double-counts for such readers, the classic overwrite never
-    * does. Manifest-less artifacts ignore the flag either way (no
-    * manifest, no snapshot contract to keep — always the classic
-    * recap). */
-  def appendIvfPostingsAuto(spark: SparkSession, path: String,
-      cents: Array[Array[Double]], newEmb: DataFrame,
-      fragmentThreshold: Double = 4.0,
-      retained: Boolean = true): AppendRoute = {
-    import spark.implicits._
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gp) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    require(gp.isEmpty,
-      "artifact is two-level-built (iv_gp): use appendIvfPostingsAutoGrouped")
-    val delta = ivfPostingsKernelBuilt(newEmb, cents, Int.MaxValue)
-      .withColumn("iv_cap", lit(cap)) // artifact's cap, not the delta's
-    routeAppend(spark, path, delta, cap, state0, fragmentThreshold,
-      retained)
-  }
-
-  /** [[appendIvfPostingsAuto]] for TWO-LEVEL-built artifacts:
-    * assignment rides the artifact's own embedded `iv_gp` (one law per
-    * artifact life), the routing economics are identical. */
-  def appendIvfPostingsAutoGrouped(spark: SparkSession, path: String,
-      gcs: graft.expressions.IvfGroupedCentroidSet, newEmb: DataFrame,
-      fragmentThreshold: Double = 4.0,
-      retained: Boolean = true): AppendRoute = {
-    import spark.implicits._
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, gpOpt) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(gcs.flat.numCells == cells &&
-      centroidChecksumOf(gcs.flat.cents) == ck,
-      "grouped index cells differ from the postings artifact's")
-    require(gpOpt.nonEmpty,
-      "artifact is exact-built (no iv_gp): use appendIvfPostingsAuto")
-    val gp = gpOpt.get
-    val delta = homeTwoLevel(newEmb, gcs, gp)
-      .withColumn("iv_cells", lit(cells))
-      .withColumn("iv_cap", lit(cap)) // artifact's cap, not the delta's
-      .withColumn("iv_ck", lit(ck))
-      .withColumn("iv_gp", lit(gp))
-    routeAppend(spark, path, delta, cap, state0, fragmentThreshold,
-      retained)
-  }
-
-  /** The shared probe-and-dispatch: one O(batch) pass over the
-    * home-assigned delta yields (touched cells, batch rows); touched
-    * populations come free from the manifest. The chosen route re-runs
-    * the delta's assignment plan — deterministic, O(batch) arithmetic,
-    * the same cost class the routes pay anyway. */
-  private def routeAppend(spark: SparkSession, path: String,
-      delta: DataFrame, cap: Int, state0: Option[PostingsManifest.State],
-      fragmentThreshold: Double, retained: Boolean = false): AppendRoute = {
-    import spark.implicits._
-    val perCellBatch = timed("route_probe")(
-      delta.groupBy(col("cell").cast("int").as("cell")).count()
-        .as[(Int, Long)].collect())
-    val batchRows = perCellBatch.map(_._2).sum
-    val touchedRows = state0 match {
-      case Some(st) =>
-        val pop = st.perCellRows
-        perCellBatch.map { case (c, _) => pop.getOrElse(c, 0L) }.sum
-      case None => 0L
-    }
-    val ratio =
-      if (batchRows == 0) 0.0 else touchedRows.toDouble / batchRows
-    if (state0.nonEmpty && ratio >= fragmentThreshold) {
-      // append-only: snapshot-safe by construction, retained or not
-      appendFragmentFiles(spark, path, delta)
-      AppendRoute("fragment", batchRows, touchedRows, ratio)
-    } else if (retained && state0.nonEmpty) {
-      recapRetained(spark, path, delta, cap)
-      AppendRoute("recap_retained", batchRows, touchedRows, ratio)
-    } else {
-      recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-      AppendRoute("recap", batchRows, touchedRows, ratio)
-    }
-  }
-
   def compactIvfPostings(spark: SparkSession, path: String): (Int, Int, Int) =
     MaintenanceProtocol.withLease(spark, path, "compact")(
       compactIvfPostingsLocked(spark, path))
@@ -1997,7 +1454,7 @@ object Similarity {
       case None =>
         spark.catalog.refreshByPath(path)
         val postings = spark.read.parquet(path)
-        val (_, cap, _) = postingsParams(postings)
+        val cap = postingsParams(postings).cap
         val perCellFiles = fs.listStatus(hPath)
           .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
           .map(d => d.getPath.getName.stripPrefix("cell=").toInt ->
@@ -2237,48 +1694,96 @@ object Similarity {
         "manifest", "retired_files", "retired_bytes", "dup_rows")
   }
 
-  /** Serve top-k for a QUERY set from the persisted postings: queries
-    * assign to their `probes` nearest cells (broadcast centroids —
-    * query-side work only), candidates come from the artifact. The
-    * corpus is never re-assigned, never re-normed: steady-state serving
-    * cost is ∝ queries × probed-cell populations. Queries matching a
-    * posting's cand_id are self-excluded (same contract as the other
-    * top-k paths). */
-  def ivfTopKFromPostings(queryEmb: DataFrame, model: KMeansModel,
-      postings: DataFrame, probes: Int, k: Int): DataFrame =
-    ivfTopKFromPostingsWithCentroids(queryEmb,
-      model.clusterCenters.map(_.toArray), postings, probes, k)
+  /** Where [[ivfTopKFromPostings]] reads its candidates from — and so
+    * whether it prunes the artifact scan to the probed cells. */
+  sealed trait PostingsSource
 
-  /** [[ivfTopKFromPostings]] over a raw centroid matrix — the
-    * expanded (queries×cells window) route for fixed or restored
-    * centroids; at large cell counts prefer the kernel routes. */
-  def ivfTopKFromPostingsWithCentroids(queryEmb: DataFrame,
-      cents: Array[Array[Double]], postings: DataFrame, probes: Int,
-      k: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    val (cells, _, ck) = postingsParams(postings)
-    require(cents.length == cells &&
-      centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    val c2 = centroidTableOf(spark, cents)
-      .withColumn("cn2", dot($"centroid", $"centroid"))
-    val byDist = Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cell".asc)
-    val queries = prepared(queryEmb)
-      .join(broadcast(c2))
-      .withColumn("d2",
-        $"nrm" * $"nrm" + $"cn2" - lit(2.0) * dot($"v", $"centroid"))
-      // non-assignable queries are dropped, same as the kernel routes
-      .filter($"d2".isNotNull)
-      .withColumn("cr", row_number().over(byDist))
-      .filter($"cr" <= probes)
-      .select($"cell", $"vec_id", $"v", $"nrm")
-    serveQueriesOverPostings(queries, postings, k)
+  object PostingsSource {
+    /** A postings frame (built in memory, or any read of an artifact),
+      * scanned whole; params come from its head row. */
+    final case class Frame(postings: DataFrame) extends PostingsSource
+
+    /** A [[saveIvfPostings]] directory: opened through [[readPostings]]
+      * (manifest-planned when clean) and pruned to the probed cells. */
+    final case class Classic(path: String) extends PostingsSource
+
+    /** A [[saveIvfPostingsPacked]] directory: pruned twice — as a
+      * pack-IN partition filter (manifest FileIndex prune, reads only
+      * probed packs' FILES) and as the cell-IN data filter (sorted
+      * row-group prune inside each pack). The packed trade: ≤
+      * `cellsPerPack` read amplification per probed cell against a
+      * ~cells/cellsPerPack smaller file count everywhere else. */
+    final case class Packed(path: String) extends PostingsSource
   }
 
-  /** The candidate join + top-k window every postings-served route
-    * shares: `queries` is (cell, vec_id, v, nrm) — one row per probed
-    * cell per query — candidates come from the artifact. */
+  /** Serve top-k for a QUERY set from persisted postings: queries
+    * assign to their `probes` nearest cells through the quantizer's
+    * kernel (broadcast centroids — query-side work only: one codegen
+    * scan per query, no queries×cells expansion), candidates come from
+    * the artifact. The corpus is never re-assigned, never re-normed:
+    * steady-state serving cost is ∝ queries × probed-cell populations.
+    * Queries matching a posting's cand_id are self-excluded (same
+    * contract as the other top-k paths). The quantizer must carry the
+    * artifact's own cells ([[CoarseQuantizer.requireServes]]); a
+    * `TwoLevel` probe of an artifact built by either law is a
+    * query-time recall knob — with `groupProbes >= numGroups` it is
+    * identical to the `Flat` probe (spec-pinned).
+    *
+    * A path source ([[PostingsSource.Classic]]/[[PostingsSource.Packed]])
+    * is the bounded-query, low-latency path: the probed-cell set is
+    * computed driver-side (one collect of ≤ queries×probes ints) and
+    * pushed as an IN filter on the artifact's partition column, so the
+    * scan reads ONLY probed cells' files — serving I/O ∝ queries, not
+    * ∝ corpus (§6.2's serving sweep measured the full scan dominating
+    * the wall at 4096–16 384 cells). Output is exactly the unpruned
+    * route's (spec-pinned): unprobed cells can never join a query row.
+    * `queryEmb` must then be DETERMINISTIC under re-evaluation: its
+    * plan runs twice (probe-set collect, then the lazy serve plan), and
+    * a sampled/`rand`/unordered-`limit`-derived query frame can assign
+    * to cells OUTSIDE the collected probe set on the second pass and
+    * silently lose results — materialize such a frame first. (A shared
+    * localCheckpoint would pin executor storage for the life of the
+    * returned lazy plan with no safe unpersist point.) */
+  def ivfTopKFromPostings(queryEmb: DataFrame, q: CoarseQuantizer,
+      source: PostingsSource, probes: Int, k: Int): DataFrame = {
+    val spark = queryEmb.sparkSession
+    import spark.implicits._
+    val (postings, params, packCpp) = source match {
+      case PostingsSource.Frame(df) => (df, postingsParams(df), None)
+      case PostingsSource.Classic(path) =>
+        (readPostings(spark, path), postingsParamsAtPath(spark, path), None)
+      case PostingsSource.Packed(path) =>
+        // manifest-clean: params ride the sidecar, zero data-page jobs
+        // on the serve path; the fallback derives them from the data
+        readPackedPostingsWithCpp(spark, path) match {
+          case (df, Some((p, cpp))) => (df, p, Some(cpp))
+          case (df, None) => (df, postingsParams(df), None)
+        }
+    }
+    q.requireServes(params)
+    val queries = q.probe(prepared(queryEmb), probes)
+    val candidates = source match {
+      case PostingsSource.Frame(_) => postings
+      case _ =>
+        val probed = queries.select($"cell").distinct().as[Int].collect().toSeq
+        val byCell = postings.filter($"cell".isin(probed: _*))
+        packCpp.fold(byCell)(cpp =>
+          byCell.filter($"pack".isin(probed.map(_ / cpp).distinct: _*)))
+    }
+    serveQueriesOverPostings(queries, candidates, k)
+  }
+
+  /** [[ivfTopKFromPostings]] under `Flat(cents)` over a postings frame,
+    * for callers holding a raw centroid matrix. */
+  def ivfTopKFromPostingsWithCentroids(queryEmb: DataFrame,
+      cents: Array[Array[Double]], postings: DataFrame, probes: Int,
+      k: Int): DataFrame =
+    ivfTopKFromPostings(queryEmb, CoarseQuantizer.Flat(cents),
+      PostingsSource.Frame(postings), probes, k)
+
+  /** The candidate join + top-k every postings-served route shares:
+    * `queries` is (cell, vec_id, v, nrm) — one row per probed cell per
+    * query — candidates come from the artifact. */
   private def serveQueriesOverPostings(queries: DataFrame,
       postings: DataFrame, k: Int): DataFrame = {
     val spark = queries.sparkSession
@@ -2290,129 +1795,6 @@ object Similarity {
         .withColumn("sim", simR(cosine($"v", $"cv", $"nrm", $"cn")))
         .select($"vec_id", $"cand_id", $"sim"),
       "vec_id", "cand_id", k)
-  }
-
-  /** [[ivfTopKFromPostings]] for LARGE cell counts — same results
-    * (spec-pinned: the kernel's d2 is bit-identical to the DataFrame
-    * formula, so probe sets and tie-breaks agree exactly), different
-    * query-side shape: assignment is one codegen
-    * [[graft.expressions.IvfNearestCells]] scan per query against the
-    * broadcast centroid matrix instead of the queries×cells join +
-    * `row_number` expansion — at 2¹²⁺ cells the expanded form pushes
-    * 10⁴ rows per query through one exchange for what is per-row
-    * arithmetic. Candidate join and top-k window are byte-shared with
-    * the expanded route. */
-  def ivfTopKFromPostingsLarge(queryEmb: DataFrame, model: KMeansModel,
-      postings: DataFrame, probes: Int, k: Int): DataFrame =
-    ivfTopKFromPostingsLargeWithCentroids(queryEmb,
-      model.clusterCenters.map(_.toArray), postings, probes, k)
-
-  /** [[ivfTopKFromPostingsLarge]] over a raw centroid matrix. */
-  def ivfTopKFromPostingsLargeWithCentroids(queryEmb: DataFrame,
-      cents: Array[Array[Double]], postings: DataFrame, probes: Int,
-      k: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val (cells, _, ck) = postingsParams(postings)
-    require(cents.length == cells &&
-      centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    val bc = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
-    val queries = prepared(queryEmb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes)))
-      .select($"vec_id", $"v", $"nrm", explode($"nc.cell").as("cell"))
-    serveQueriesOverPostings(queries, postings, k)
-  }
-
-  /** Two-level query assignment against the postings artifact — the
-    * 2¹⁴⁺-cells STEADY STATE: the corpus side is the persisted
-    * artifact (never re-assigned), and each query's assignment costs
-    * O(groups + probed members) arithmetic via
-    * [[graft.expressions.IvfNearestCellsTwoLevel]] instead of O(cells).
-    * With `groupProbes >= numGroups` the probe set degenerates to the
-    * exact flat scan (spec-pinned identical to serving the same
-    * artifact through the corpus-side routes); shallow `groupProbes`
-    * trades recall by the same group-prune law §6.2 measured. The
-    * grouped set must be the artifact's own cells —
-    * checksum-verified against the FLAT level, so a
-    * [[fitIvfHierarchical]] index and a [[groupedCentroidSet]]-wrapped
-    * flat fit both validate. */
-  /** Bounded-query serving with PARTITION-PRUNED artifact reads — the
-    * low-latency path. The kernel routes above still SCAN the whole
-    * artifact: with a bounded query set most cells host no probe, and
-    * §6.2's serving sweep measured that full scan dominating the wall
-    * (the route spread was ~10 s of assignment arithmetic on top of a
-    * ~35–50 s artifact read at 4096–16 384 cells). Here the probed-cell
-    * set is computed driver-side (one collect of ≤ queries×probes ints
-    * — this path is for query sets that fit a driver round-trip) and
-    * pushed as an IN filter on the artifact's partition column, so a
-    * [[saveIvfPostings]] directory reads ONLY probed cells' directories
-    * — serving I/O finally ∝ queries, not ∝ corpus. Output is exactly
-    * the unpruned route's (spec-pinned): unprobed cells can never join
-    * a query row. Pass `postings` as the PARTITIONED read
-    * (`spark.read.parquet(dir)` of a [[saveIvfPostings]] dir); a
-    * non-partitioned frame still answers correctly but prunes nothing.
-    *
-    * `queryEmb` must be DETERMINISTIC under re-evaluation: its plan
-    * runs twice (probe-set collect, then the lazy serve plan), and a
-    * sampled/`rand`/unordered-`limit`-derived query frame can assign
-    * to cells OUTSIDE the collected probe set on the second pass and
-    * silently lose results. Callers with a nondeterministic query set
-    * must materialize it first (`localCheckpoint` with their own
-    * unpersist seam — this route deliberately does not pin executor
-    * storage for the life of a lazy plan it returns). */
-  def ivfTopKFromPostingsPruned(queryEmb: DataFrame,
-      cents: Array[Array[Double]], postings: DataFrame, probes: Int,
-      k: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val (cells, _, ck) = postingsParams(postings)
-    require(cents.length == cells &&
-      centroidChecksumOf(cents) == ck,
-      "model centroids differ from the postings artifact's")
-    val bc = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
-    val queries = prepared(queryEmb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes)))
-      .select($"vec_id", $"v", $"nrm", explode($"nc.cell").as("cell"))
-    // Assignment arithmetic runs twice (probe-set collect here, then
-    // lazily when the caller consumes the serve plan) — both passes
-    // agree ONLY for deterministic query frames (contract in the
-    // scaladoc above), and the cost is ∝ queries × cells: pennies next
-    // to the artifact read this route exists to prune. The alternative — a
-    // localCheckpoint shared by both passes — pins executor storage for
-    // the life of the returned (lazy) plan with no safe unpersist
-    // point, which accumulates across calls in a serving session.
-    val probed = queries.select($"cell").distinct()
-      .as[Int].collect().toSeq
-    serveQueriesOverPostings(queries,
-      postings.filter($"cell".isin(probed: _*)), k)
-  }
-
-  def ivfTopKFromPostingsGrouped(queryEmb: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet, postings: DataFrame,
-      probes: Int, k: Int, groupProbes: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val (cells, _, ck) = postingsParams(postings)
-    require(gcs.flat.numCells == cells &&
-      centroidChecksumOf(gcs.flat.cents) == ck,
-      "grouped index cells differ from the postings artifact's")
-    val bc = spark.sparkContext.broadcast(gcs)
-    val queries = prepared(queryEmb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCellsTwoLevel(bc,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes, groupProbes)))
-      .select($"vec_id", $"v", $"nrm", explode($"nc.cell").as("cell"))
-    serveQueriesOverPostings(queries, postings, k)
   }
 
   /** Measured recall@k of the trained-IVF path against brute-force
@@ -2543,7 +1925,7 @@ object Similarity {
 
   /** The per-row home-cell frame `(…, cell, centroid, d2)` used by the
     * residual fits/codebooks: assignment by the same window formula as
-    * [[assignedHome]] (d2 bit-identical to the kernel and the SQL
+    * [[CoarseQuantizer.home]] (d2 bit-identical to the kernel and the SQL
     * oracle), centroid KEPT so the residual can be computed. */
   private def homeWithCentroid(emb: DataFrame,
       cents: Array[Array[Double]]): DataFrame = {
@@ -2974,39 +2356,19 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.GraftColumnBridge
-    val bcCells = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
+    val q = CoarseQuantizer.Flat(cents)
     val bcCs = spark.sparkContext.broadcast(cs)
-    val home = prepared(emb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bcCells,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), 1)))
-      .select(element_at($"nc", 1).getField("cell").as("cell"),
-        $"vec_id".as("cand_id"), $"v",
-        element_at($"nc", 1).getField("d2").as("d2"))
-      // non-assignable vectors (dim mismatch / null element) drop here,
-      // same as every build route
-      .filter($"cell".isNotNull)
+    val home = q.home(prepared(emb))
+    def encode(v: Column): Column = GraftColumnBridge.column(
+      graft.expressions.PqEncode(bcCs, GraftColumnBridge.expression(v)))
     val encoded =
       (if (residual)
         home.join(broadcast(centroidTableOf(spark, cents)), Seq("cell"))
-          .withColumn("codes", GraftColumnBridge.column(
-            graft.expressions.PqEncode(bcCs, GraftColumnBridge.expression(
-              residualOf($"v", $"centroid")))))
-      else
-        home.withColumn("codes", GraftColumnBridge.column(
-          graft.expressions.PqEncode(bcCs,
-            GraftColumnBridge.expression($"v")))))
+          .withColumn("codes", encode(residualOf($"cv", $"centroid")))
+      else home.withColumn("codes", encode($"cv")))
         .select($"cell", $"cand_id", $"d2", $"codes")
-    val byCell = Window.partitionBy($"cell").orderBy($"d2".asc, $"cand_id".asc)
-    val capped =
-      if (cellCap == Int.MaxValue) encoded
-      else encoded.withColumn("cellRank", row_number().over(byCell))
-        .filter($"cellRank" <= cellCap).drop("cellRank")
-    capped
-      .withColumn("iv_cells", lit(cents.length))
-      .withColumn("iv_cap", lit(cellCap))
-      .withColumn("iv_ck", lit(centroidChecksumOf(cents)))
+    CoarseQuantizer.stamp(cappedByCell(encoded, q.numCells, cellCap),
+      q.params(cellCap))
       .withColumn("pq_ck", lit(cs.checksum))
   }
 
@@ -3058,30 +2420,13 @@ object Similarity {
       path: String): (graft.expressions.PqCodebookSet, Boolean) =
     PqCodebookStore.load(spark, path)
 
-  /** Open a PQ postings DIRECTORY for serving — the coded twin of
-    * [[readPostings]]: manifest-planned zero-listing scan when clean,
-    * discovering read otherwise, with the same dirty-state convergence
-    * law (dedup (cell, cand_id), re-cap on the stored d2) — codes ride
-    * the surviving rows unchanged since they are a pure function of
-    * (vector, home cell). */
+  /** Open a PQ postings DIRECTORY for serving — [[readPostings]] over
+    * the coded schema. */
   def readPqPostings(spark: SparkSession, path: String): DataFrame =
-    PostingsManifest.readClean(spark, path) match {
-      case Some(st) =>
-        org.apache.spark.sql.GraftColumnBridge.parquetOverFileIndex(spark,
-          new graft.plans.PostingsFileIndex(path, st),
-          pqPostingsDataSchema)
-      case None =>
-        spark.catalog.refreshByPath(path)
-        val raw = spark.read.parquet(path)
-        if (!MaintenanceProtocol.isDirty(spark, path)) raw
-        else {
-          val head = raw.select(col("iv_cap")).take(1)
-          if (head.isEmpty) raw else capFold(raw, head(0).getInt(0))
-        }
-    }
+    readPostingsAs(spark, path, _ => pqPostingsDataSchema)
 
   /** FRAGMENT append for the PQ artifact — O(batch) maintenance, the
-    * [[appendIvfPostingsFragment]] economics verbatim: the batch is
+    * `Fragment` append's economics verbatim: the batch is
     * assigned + encoded under the ARTIFACT's own centroids, codebooks,
     * and encoding law (all read from the artifact — one manifest read
     * + one sidecar read, no data head), staged in by rename, manifest
@@ -3093,15 +2438,12 @@ object Similarity {
     * build. */
   def appendIvfPqPostingsFragment(spark: SparkSession, path: String,
       cents: Array[Array[Double]], newEmb: DataFrame): Unit = {
-    val state0 = PostingsManifest.readClean(spark, path)
-    val (cells, cap, ck, _) =
-      state0.map(paramsOf).getOrElse(paramsFromFooter(spark, path))
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the PQ postings artifact's")
+    val p = postingsParamsAtPath(spark, path)
+    CoarseQuantizer.Flat(cents).requireAppendLaw(p)
     val (cs, residual) = PqCodebookStore.load(spark, path)
     appendFragmentFiles(spark, path,
       ivfPqPostings(newEmb, cents, cs, Int.MaxValue, residual)
-        .withColumn("iv_cap", lit(cap))) // artifact's cap, not the delta's
+        .withColumn("iv_cap", lit(p.cap))) // artifact's cap, not the delta's
   }
 
   /** Fold a fragment-appended PQ artifact back to 1-file-per-cell —
@@ -3120,7 +2462,7 @@ object Similarity {
     * live in the artifact), queries alone pay assignment (one codegen
     * kernel scan) + one ADC lookup table per probed cell, the
     * artifact scan is manifest-planned AND partition-pruned to the
-    * probed cells (the [[ivfTopKFromPostingsPruned]] stance — serving
+    * probed cells (the [[PostingsSource.Classic]] stance — serving
     * I/O ∝ queries, not ∝ corpus), ADC ranks candidates to `fetch`
     * depth, and only those ~queries×fetch pairs touch float vectors in
     * the exact re-rank. Codebooks, encoding law, and coarse params all
@@ -3138,30 +2480,20 @@ object Similarity {
     import spark.implicits._
     import org.apache.spark.sql.GraftColumnBridge
     require(fetch >= k, s"fetch=$fetch must be >= k=$k")
-    val (cells, _, ck, _) = postingsParamsAtPath(spark, path)
-    require(cents.length == cells && centroidChecksumOf(cents) == ck,
-      "model centroids differ from the PQ postings artifact's")
+    val q = CoarseQuantizer.Flat(cents)
+    q.requireServes(postingsParamsAtPath(spark, path))
     val (cs, residual) = PqCodebookStore.load(spark, path)
     val codes = readPqPostings(spark, path)
-    val bcCells = spark.sparkContext.broadcast(
-      graft.expressions.IvfAssignKernel.centroidSet(cents))
     val bcCs = spark.sparkContext.broadcast(cs)
-    val probedQ = prepared(queryEmb).withColumn("nc",
-      GraftColumnBridge.column(graft.expressions.IvfNearestCells(bcCells,
-        GraftColumnBridge.expression($"v"),
-        GraftColumnBridge.expression($"nrm"), probes)))
-      .select($"vec_id", $"v", explode($"nc.cell").as("cell"))
+    val probedQ = q.probe(prepared(queryEmb), probes)
+    def lut(v: Column): Column = GraftColumnBridge.column(
+      graft.expressions.PqLut(bcCs, GraftColumnBridge.expression(v)))
     val queries =
       if (residual)
         probedQ.join(broadcast(centroidTableOf(spark, cents)), Seq("cell"))
           .select($"cell", $"vec_id",
-            GraftColumnBridge.column(graft.expressions.PqLut(bcCs,
-              GraftColumnBridge.expression(
-                residualOf($"v", $"centroid")))).as("lut"))
-      else
-        probedQ.select($"cell", $"vec_id",
-          GraftColumnBridge.column(graft.expressions.PqLut(bcCs,
-            GraftColumnBridge.expression($"v"))).as("lut"))
+            lut(residualOf($"v", $"centroid")).as("lut"))
+      else probedQ.select($"cell", $"vec_id", lut($"v").as("lut"))
     // probed-cell partition prune: driver-side collect of
     // ≤ queries×probes ints pushed as an IN filter on the partition
     // column — the artifact scan reads only probed cells' files

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{CoarseQuantizer, Dedup, Similarity}
 
 /** Streaming corpus ingest with incremental near-dup dedup — the
   * [[Dedup.nearDupIngestRound]] pipeline lifted onto Structured
@@ -150,67 +149,50 @@ object CorpusIngest {
   /** Streaming EMBEDDING ingest — the third artifact family on the
     * same seam: each micro-batch of `(vec_id, embedding, label)` rows
     * rolls the cell-partitioned IVF postings directory forward via
-    * [[Similarity.appendIvfPostingsInPlace]] (frozen centroids,
-    * touched-cell partition overwrite, cost ∝ batch + touched cells).
-    * Crash re-deliveries CONVERGE — the recap dedups on
-    * (cell, cand_id), so replaying a micro-batch reproduces the same
-    * directory state (the property the in-place spec pins). Bootstrap
-    * `postingsPath` with [[Similarity.saveIvfPostings]] over the seed
-    * corpus (or an empty frame) using the model this stream will run;
-    * retrain + rebuild when drift erodes recall (the SURVEY §6.2 knee
-    * is the signal), exactly as a batch deployment would. */
-  def embeddingIngest(embStream: DataFrame, model: KMeansModel,
-      postingsPath: String): DataStreamWriter[Row] =
+    * [[Similarity.appendIvfPostings]] under the FROZEN quantizer `q`
+    * (the artifact's own cells and assignment law, validated per
+    * batch) and the maintenance `mode`:
+    *  - `InPlace` (the always-serveable default posture): touched-cell
+    *    partition overwrite, cost ∝ batch + touched cells. Crash
+    *    re-deliveries CONVERGE — the recap dedups on (cell, cand_id),
+    *    so replaying a micro-batch reproduces the same directory state.
+    *  - `Retained` (SERVE-WHILE-INGEST): the recap lands as new files
+    *    with the superseded ones retired in the manifest, so a query
+    *    path holding a [[Similarity.readPostings]] snapshot keeps
+    *    serving its own consistent state through every trigger.
+    *    Retention is one epoch: each trigger vacuums the previous
+    *    trigger's tombstones, so a reader should re-open at least once
+    *    per trigger interval — the contract Delta readers have under
+    *    VACUUM. Needs the manifest clean (else the `InPlace` recap).
+    *  - `Fragment` (the high-frequency trigger posture): one file per
+    *    touched cell, no recap, per-trigger cost ∝ batch alone. A
+    *    checkpoint-recovery REPLAY double-appends, folded only at the
+    *    next [[Similarity.compactIvfPostings]] — so under at-least-once
+    *    delivery this seam's contract is compact-before-serve (cost
+    *    ∝ fragmented cells, SURVEY §6.2's maintenance modes table).
+    *  - `Auto(t)`: the regime law picks per micro-batch.
+    * Under `TwoLevel(gcs, gp)` the per-batch assignment is
+    * O(groups + probed members) per row — the term that dominates a
+    * 16 384-cell append — against a two-level-built artifact whose
+    * embedded `iv_gp` must equal `gp`. Bootstrap `postingsPath` with
+    * [[Similarity.saveIvfPostings]] over the seed corpus (or an empty
+    * frame) under the quantizer this stream will run; retrain +
+    * rebuild when drift erodes recall (the SURVEY §6.2 knee is the
+    * signal), exactly as a batch deployment would. */
+  def embeddingIngest(embStream: DataFrame, q: CoarseQuantizer,
+      postingsPath: String,
+      mode: Similarity.MaintenanceMode): DataStreamWriter[Row] =
     embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
       val batch = batch0.persist() // same re-read pin as the dedup seams
-      try Similarity.appendIvfPostingsInPlace(batch.sparkSession,
-        postingsPath, model, batch)
-      finally batch.unpersist()
-    }
-
-  /** [[embeddingIngest]] at the 2¹⁴⁺-cells posture: the per-batch home
-    * assignment rides the two-level kernel (O(groups + probed members)
-    * per row instead of O(cells) — the term that dominates a 16 384-cell
-    * append), against a [[Similarity.ivfPostingsTwoLevel]]-built
-    * artifact whose embedded `groupProbes` this stream must match
-    * (checksum + gp validated per batch). Same convergence contract as
-    * the exact seam — the recap dedups on (cell, cand_id), so a
-    * replayed micro-batch reproduces the same directory state. */
-  def embeddingIngestGrouped(embStream: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet, postingsPath: String,
-      groupProbes: Int): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPostingsInPlaceGrouped(batch.sparkSession,
-        postingsPath, gcs, batch, groupProbes)
-      finally batch.unpersist()
-    }
-
-  /** [[embeddingIngest]] in FRAGMENT mode — the high-frequency
-    * trigger posture: each micro-batch is home-assigned and APPENDED
-    * (one file per touched cell, no recap), so per-trigger cost is
-    * ∝ batch alone where the recap seam pays ∝ the touched cells' full
-    * populations. The LSM debts transfer from the batch route intact
-    * and one is SHARPER here: a checkpoint-recovery REPLAY of a
-    * micro-batch double-appends (the recap seams absorb it), and the
-    * duplicates only fold at the next [[Similarity.compactIvfPostings]]
-    * — so under at-least-once delivery this seam's serving contract is
-    * compact-before-serve, and the recap seam stays the default for
-    * always-serveable artifacts. Run compaction between triggers or on
-    * a maintenance cadence (cost ∝ fragmented cells, measured in
-    * SURVEY §6.2's postings maintenance modes table). */
-  def embeddingIngestFragment(embStream: DataFrame,
-      cents: Array[Array[Double]],
-      postingsPath: String): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPostingsFragment(batch.sparkSession,
-        postingsPath, cents, batch)
-      finally batch.unpersist()
+      try {
+        Similarity.appendIvfPostings(batch.sparkSession, postingsPath, q,
+          batch, mode)
+        ()
+      } finally batch.unpersist()
     }
 
   /** Fragment-mode ingest for the PERSISTED PQ (coded) postings
-    * artifact — [[embeddingIngestFragment]]'s economics over
+    * artifact — [[embeddingIngest]]'s `Fragment` economics over
     * [[Similarity.appendIvfPqPostingsFragment]]: each micro-batch is
     * assigned AND residual-encoded under the artifact's own frozen
     * centroids + codebook sidecar (one manifest read + one sidecar
@@ -227,59 +209,6 @@ object CorpusIngest {
       val batch = batch0.persist()
       try Similarity.appendIvfPqPostingsFragment(batch.sparkSession,
         postingsPath, cents, batch)
-      finally batch.unpersist()
-    }
-
-  /** Fragment-mode ingest for TWO-LEVEL-built artifacts — O(batch)
-    * writes AND O(groups + probed members) per-row assignment, riding
-    * the artifact's own embedded `iv_gp` (one assignment law per
-    * artifact life, validated per batch). Same compact-before-serve
-    * contract as [[embeddingIngestFragment]]. */
-  def embeddingIngestFragmentGrouped(embStream: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      postingsPath: String): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPostingsFragmentGrouped(batch.sparkSession,
-        postingsPath, gcs, batch)
-      finally batch.unpersist()
-    }
-
-  /** SERVE-WHILE-INGEST — [[embeddingIngest]] under the tombstone
-    * contract ([[Similarity.appendIvfPostingsRetained]]): each
-    * micro-batch's recap lands as new files with the superseded ones
-    * retired in the manifest, so a query path holding a
-    * [[Similarity.readPostings]] snapshot keeps serving its own
-    * consistent state through every trigger — the live-index shape,
-    * where the recap seam swaps files under an in-flight reader and
-    * the fragment seam serves replay duplicates until compaction.
-    * Requires the artifact's manifest clean (per-batch fallback is the
-    * classic in-place recap — convergence identical, isolation not
-    * claimed); replayed micro-batches converge by the recap's
-    * (cell, cand_id) dedup exactly as the in-place seam's do. Retention
-    * is one epoch: each trigger vacuums the previous trigger's
-    * tombstones, so a reader should re-resolve (re-open) at least once
-    * per trigger interval or it may outlive its files — the same
-    * contract Delta readers have under VACUUM. */
-  def embeddingIngestRetained(embStream: DataFrame,
-      cents: Array[Array[Double]],
-      postingsPath: String): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPostingsRetained(batch.sparkSession,
-        postingsPath, cents, batch)
-      finally batch.unpersist()
-    }
-
-  /** [[embeddingIngestRetained]] for two-level-built artifacts (the
-    * assignment law rides the embedded `iv_gp`). */
-  def embeddingIngestRetainedGrouped(embStream: DataFrame,
-      gcs: graft.expressions.IvfGroupedCentroidSet,
-      postingsPath: String): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPostingsRetainedGrouped(batch.sparkSession,
-        postingsPath, gcs, batch)
       finally batch.unpersist()
     }
 

@@ -264,7 +264,7 @@ object EventsStream {
     * temp directory so the file stream source can consume it. */
   def stageEventsDir(sfDir: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft_events_stream")
+    val tmp = graft.ScratchDir("graft_events_stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       tmp.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     tmp.toString

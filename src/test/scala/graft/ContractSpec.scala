@@ -222,7 +222,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     val before = spark.conf.getOption(key)
     // stage the legacy TIMESTAMP(NANOS) fixture (src/test/resources,
     // pre-regeneration snapshot format) as an events snapshot dir
-    val nanosDir = Files.createTempDirectory("graft_nanos_events")
+    val nanosDir = tempDir("graft_nanos_events")
     val res = getClass.getResourceAsStream("/events_nanos.parquet")
     Files.copy(res, nanosDir.resolve("events.parquet"))
     res.close()
@@ -287,7 +287,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     // naive rendering must be the instant's UTC wall time whatever the
     // session TZ (the loader's unix_micros path never consults it).
     def stage(resource: String): Path = {
-      val d = Files.createTempDirectory("graft_utc_events")
+      val d = tempDir("graft_utc_events")
       val res = getClass.getResourceAsStream(resource)
       Files.copy(res, d.resolve("events.parquet"))
       res.close()
@@ -330,7 +330,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     // guard the nanos branch would divide actual-micros by 1000 (every
     // timestamp lands in 1970, nothing errors; the sf1 oracle sweep
     // caught exactly this in the repack tool)
-    val dir = Files.createTempDirectory("graft_stale_meta_events")
+    val dir = tempDir("graft_stale_meta_events")
     val res = getClass.getResourceAsStream("/events_micros_stale_meta.parquet")
     Files.copy(res, dir.resolve("events.parquet"))
     res.close()
@@ -370,7 +370,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     // EVERY file's footer, so whichever file the listing yields first,
     // the contradiction is named (a first-file-only sample would bless
     // the directory whenever the clean file sorts first).
-    val dir = Files.createTempDirectory("graft_mixed_events")
+    val dir = tempDir("graft_mixed_events")
     val table = dir.resolve("events.parquet")
     Files.createDirectory(table)
     def put(resource: String, name: String): Unit = {
@@ -399,7 +399,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     // "unreadable (Illegal Parquet type...)" line burying the fix
     val key = GraftSession.NanosKey
     val before = spark.conf.getOption(key)
-    val dir = Files.createTempDirectory("graft_nanos_gate")
+    val dir = tempDir("graft_nanos_gate")
     val res = getClass.getResourceAsStream("/events_nanos.parquet")
     Files.copy(res, dir.resolve("events.parquet")); res.close()
     try {
@@ -419,7 +419,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
   test("Tables.validate passes the driver snapshot and names every drifted column") {
     import java.nio.file.{Files, Path, Paths}
     Tables.validate(spark, sf0001) // the real snapshot must gate green
-    val dir = Files.createTempDirectory("graft_drift_snapshot")
+    val dir = tempDir("graft_drift_snapshot")
     try {
       Tables.all.foreach { t =>
         Files.createSymbolicLink(dir.resolve(s"$t.parquet"),

@@ -309,7 +309,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // same graph, reliable=true routes every checkpoint through the
     // configured checkpoint dir instead of executor block storage —
     // results must be identical (the mode only changes fault tolerance)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val chain = (0L until 20L).map(i => (i, i + 1))
     val pairs = (chain ++ Seq((100L, 101L))).toDF("doc_a", "doc_b")
@@ -329,7 +329,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       (3L, "the standing corpus document one")  // in-corpus dup
     ).toDF("doc_id", "text")
     // index round-trips through parquet — it is the persisted artifact
-    val idxPath = Files.createTempDirectory("graft_dedup_idx").toString
+    val idxPath = tempDir("graft_dedup_idx").toString
     Dedup.exactHashIndex(corpus).write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
     assert(index.count() == 2)
@@ -359,7 +359,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val seed = all.filter($"doc_id" % 3 === 0)
     val b1 = all.filter($"doc_id" % 3 === 1)
     val b2 = all.filter($"doc_id" % 3 === 2)
-    val path = Files.createTempDirectory("graft_exact_art")
+    val path = tempDir("graft_exact_art")
       .resolve("index").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
 
@@ -475,7 +475,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val seed = all.filter($"doc_id" % 3 === 0)
     val b1 = all.filter($"doc_id" % 3 === 1)
     val b2 = all.filter($"doc_id" % 3 === 2)
-    val path = Files.createTempDirectory("graft_flat_log")
+    val path = tempDir("graft_flat_log")
       .resolve("index").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
     val f = new org.apache.hadoop.fs.Path(path)
@@ -581,7 +581,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.ArtifactManifest
     val all = docs.select($"doc_id", $"text")
     val seed = all.filter($"doc_id" % 3 === 0)
-    val path = Files.createTempDirectory("graft_flat_frag")
+    val path = tempDir("graft_flat_frag")
       .resolve("index").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
     def report = ArtifactManifest
@@ -631,7 +631,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // minhash: simulate a crash inside overwriteParquetAtomic's
     // delete→install window — target dir absent, fully-committed
     // sibling tmp present — then read: must heal, not PATH_NOT_FOUND
-    val mh = Files.createTempDirectory("graft_mh_swap")
+    val mh = tempDir("graft_mh_swap")
       .resolve("index").toString
     Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), mh,
       files = 2)
@@ -659,7 +659,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       "compaction must re-adopt a manifest over the healed artifact")
 
     // winnow: same window, healed by the compaction entry point itself
-    val wn = Files.createTempDirectory("graft_wn_swap")
+    val wn = tempDir("graft_wn_swap")
       .resolve("index").toString
     Dedup.saveWinnowIndex(Dedup.winnowIndex(seed, 5, 4), wn, files = 2)
     val wnRows = Dedup.readWinnowIndex(spark, wn).count()
@@ -709,7 +709,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val batch = docs.filter($"doc_id" % 2 === 1).select($"doc_id", $"text")
     val index = Dedup.exactHashIndex(corpus)
     // bloom round-trips through parquet — it is the sidecar artifact
-    val bloomPath = Files.createTempDirectory("graft_bloom").toString
+    val bloomPath = tempDir("graft_bloom").toString
     Dedup.exactIndexBloom(index, expectedItems = 10000)
       .write.mode("overwrite").parquet(bloomPath)
     val bloom = spark.read.parquet(bloomPath)
@@ -740,7 +740,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         .localCheckpoint(true)
       // the index round-trips parquet — the pushdown this test pins
       // lives in the parquet scan of the PERSISTED artifact
-      val idxPath = Files.createTempDirectory("graft_bloom_plan").toString
+      val idxPath = tempDir("graft_bloom_plan").toString
       Dedup.exactHashIndex(corpus).write.mode("overwrite").parquet(idxPath)
       val index = spark.read.parquet(idxPath)
       val bloom = Dedup.exactIndexBloom(index, expectedItems = 10000)
@@ -850,7 +850,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val corpus = docs.filter($"doc_id" % 3 =!= 0)
     val batch = docs.filter($"doc_id" % 3 === 0)
     // the index round-trips through parquet — it is the persisted artifact
-    val idxPath = Files.createTempDirectory("graft_mh_idx").toString
+    val idxPath = tempDir("graft_mh_idx").toString
     Dedup.minhashBandIndex(corpus, k = 5, numHashes = 32, bands = 8)
       .write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
@@ -966,7 +966,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val seed = docs.filter($"doc_id" % 3 === 0)
     val b1 = docs.filter($"doc_id" % 3 === 1)
     val batch = docs.filter($"doc_id" % 3 === 2)
-    val path = Files.createTempDirectory("graft_mh_art")
+    val path = tempDir("graft_mh_art")
       .resolve("index").toString
     Dedup.saveMinhashIndex(
       Dedup.minhashBandIndex(seed, 5, 32, 8), path, files = 2)
@@ -1019,7 +1019,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // must be exactly the declared (oracle-green) q47 relation
     val train = docs.filter($"doc_id" % 2 === 0)
     val test = docs.filter($"doc_id" % 2 =!= 0)
-    val idxPath = Files.createTempDirectory("graft_wf_idx").toString
+    val idxPath = tempDir("graft_wf_idx").toString
     Dedup.winnowIndex(train, k = 3, w = 4, algo = "md5_60")
       .write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
@@ -1042,13 +1042,13 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val month1 = docs.filter($"doc_id" % 3 === 0)
     val month2 = docs.filter($"doc_id" % 3 === 1)
     val probes = docs.filter($"doc_id" % 3 === 2)
-    val idxPath = Files.createTempDirectory("graft_wf_grow").toString
+    val idxPath = tempDir("graft_wf_grow").toString
     Dedup.winnowIndex(month1, k = 3, w = 4, algo = "md5_60")
       .write.mode("overwrite").parquet(idxPath)
     val grown = Dedup.appendToWinnowIndex(
       spark.read.parquet(idxPath), month2)
     // artifact round-trip of the grown index, as production would
-    val grownPath = Files.createTempDirectory("graft_wf_grown").toString
+    val grownPath = tempDir("graft_wf_grown").toString
     grown.write.mode("overwrite").parquet(grownPath)
     val scratch = Dedup.winnowIndex(month1.unionByName(month2),
       k = 3, w = 4, algo = "md5_60")
@@ -1102,7 +1102,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // the truncated artifact as clean
     val seed = docs.filter($"doc_id" % 2 === 0)
     val b1 = docs.filter($"doc_id" % 2 =!= 0)
-    val path = Files.createTempDirectory("graft_exact_cache")
+    val path = tempDir("graft_exact_cache")
       .resolve("index").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), path, files = 2)
     // populate the shared FileStatusCache with the pre-append listing
@@ -1123,7 +1123,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // a winnow artifact pointed at the exact-index reader must throw,
     // not serve all-null text_hash (which would declare every screened
     // doc novel — silent duplicate contamination)
-    val path = Files.createTempDirectory("graft_family")
+    val path = tempDir("graft_family")
       .resolve("index").toString
     Dedup.saveWinnowIndex(
       Dedup.winnowIndex(docs.limit(20), k = 3, w = 4, algo = "md5_60"), path)
@@ -1149,7 +1149,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val b2 = docs.filter($"doc_id" % 6 === 4)
     val train = docs.filter($"doc_id" % 2 === 0)
     val evalDocs = docs.filter($"doc_id" % 2 =!= 0)
-    val path = Files.createTempDirectory("graft_wf_art")
+    val path = tempDir("graft_wf_art")
       .resolve("index").toString
     Dedup.saveWinnowIndex(
       Dedup.winnowIndex(seed, k = 3, w = 4, algo = "md5_60"), path,

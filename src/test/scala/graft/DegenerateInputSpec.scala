@@ -21,7 +21,7 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
 
   /** Stage a documents fixture dir (same shape as the testdata). */
   private def stageDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_degen").toString
+    val dir = tempDir("graft_degen").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length($"text"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -115,7 +115,7 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compactParquet no-ops on a directory with no data files") {
-    val dir = Files.createTempDirectory("graft_degen_compact").toString
+    val dir = tempDir("graft_degen_compact").toString
     assert(graft.sources.WarehouseWriter.compactParquet(spark, dir)
       == ((0, 0, 0L)))
   }
@@ -125,7 +125,7 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
     assert(DocumentQueries.queries("q61_sequence_packing")(spark, emptyDir)
       .count() == 0L)
     // events table with no view/click rows → outer attribution is empty
-    val dir = Files.createTempDirectory("graft_degen_ev").toString
+    val dir = tempDir("graft_degen_ev").toString
     Seq.empty[(Long, Long, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

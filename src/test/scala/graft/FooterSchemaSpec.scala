@@ -20,8 +20,8 @@ import graft.jobs.RelationalQueries
 class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def tempDir(prefix: String)(body: Path => Unit): Unit = {
-    val dir = Files.createTempDirectory(prefix)
+  private def withTempDir(prefix: String)(body: Path => Unit): Unit = {
+    val dir = tempDir(prefix)
     try body(dir)
     finally Files.walk(dir).iterator().asScala.toSeq.reverse
       .foreach((p: Path) => Files.delete(p))
@@ -72,7 +72,7 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("footer schema equals Spark's inference for every events ts encoding") {
-    tempDir("graft_footer_events") { dir =>
+    withTempDir("graft_footer_events") { dir =>
       Seq("/events_nanos.parquet", "/events_utc_instants.parquet",
           "/events_micros_stale_meta.parquet").foreach { res =>
         val p = dir.resolve(res.stripPrefix("/"))
@@ -84,7 +84,7 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("footer schema equals Spark's inference for a multi-file Spark directory") {
-    tempDir("graft_footer_multi") { dir =>
+    withTempDir("graft_footer_multi") { dir =>
       val p = dir.resolve("t.parquet").toString
       // `id` is non-nullable in the writer's row metadata; the footer
       // keeps that, and the read makes every column nullable either way
@@ -103,7 +103,7 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a summary footer wins over the data files, as in Spark's inference") {
-    tempDir("graft_footer_summary") { dir =>
+    withTempDir("graft_footer_summary") { dir =>
       val p = dir.resolve("t.parquet")
       spark.range(0, 10, 1, 2).toDF("id").write.parquet(p.toString)
       // a summary is a footer-only parquet file; any parquet file's footer
@@ -124,7 +124,7 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an empty or missing path fails with inference's error condition") {
-    tempDir("graft_footer_empty") { dir =>
+    withTempDir("graft_footer_empty") { dir =>
       val empty = intercept[org.apache.spark.sql.AnalysisException] {
         Tables.footerSchema(spark, dir.toString)
       }
@@ -137,7 +137,7 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("q26 declares +0.0 for a correlation that rounds to zero from below") {
-    tempDir("graft_q26_zero") { dir =>
+    withTempDir("graft_q26_zero") { dir =>
       // x centered, y = x² − 1e-5·x: corr(x, y) ≈ −5.8e-6, which rounds
       // to zero at 4 decimals — −0.0 in DuckDB unless declared +0.0
       val xs = (-3 to 3).map(_.toDouble)

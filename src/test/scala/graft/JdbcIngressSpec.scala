@@ -90,7 +90,7 @@ class JdbcIngressSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("config-driven connection: IniConfig url + passthrough properties") {
-    val f = Files.createTempFile("graft", ".properties")
+    val f = tempDir("graft_jdbc_conf").resolve("aact.properties")
     Files.writeString(f,
       s"""# aact.properties twin — url leg (embedded target)
          |[aact.database]
@@ -126,7 +126,7 @@ class JdbcIngressSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("snapshot hop: jdbc extract lays down the Tables.load layout") {
-    val out = Files.createTempDirectory("graft-jdbc-snap").toString
+    val out = tempDir("graft-jdbc-snap").toString
     JdbcIngress.snapshotFromJdbc(spark, url, Seq("NATION", "REGION"), out,
       striped = Map("NATION" -> (("n_nationkey", 0L, 24L, 4))))
     val nation = spark.read.parquet(s"$out/NATION.parquet")

@@ -35,8 +35,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("flat artifact: empty partition schema serves the discovering read's rows") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mfi_flat").toString
+    val dir = tempDir("graft_mfi_flat").toString
     val df = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"source")
     df.repartition(3).write.mode("overwrite").parquet(dir)
@@ -63,8 +62,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-column partition schema: by-name binds prune on either column") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mfi_2col").toString
+    val dir = tempDir("graft_mfi_2col").toString
     val df = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text",
         ($"doc_id" % 2).cast("int").as("shard"),

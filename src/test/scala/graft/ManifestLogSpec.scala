@@ -32,7 +32,7 @@ class ManifestLogSpec extends AnyFunSuite with SparkSpec {
     Seq(ArtifactManifest.FileEntry("part-a", 10L, 5L)))
 
   test("tmp names match no reader's listing filter") {
-    val root = new Path(Files.createTempDirectory("graft_mlog").toString)
+    val root = new Path(tempDir("graft_mlog").toString)
     val dests = Seq(new Path(root, "_manifest"),
       new Path(root, "_manifest_log/delta.000000000007"),
       new Path(root, "_pq_codebooks"))
@@ -45,7 +45,7 @@ class ManifestLogSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a stranded delta tmp is never replayed") {
-    val path = Files.createTempDirectory("graft_mlog").toString
+    val path = tempDir("graft_mlog").toString
     ArtifactManifest.write(spark, path, flat)
     val st = ArtifactManifest.readClean(spark, path, "fam_a").get
     ArtifactManifest.commit(spark, path, st,
@@ -60,7 +60,7 @@ class ManifestLogSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a stranded base tmp is swept by the rebuild, never read as data") {
-    val path = Files.createTempDirectory("graft_mlog").toString
+    val path = tempDir("graft_mlog").toString
     spark.range(3).toDF("text_hash").selectExpr("cast(text_hash as string)")
       .write.mode("overwrite").parquet(path)
     val stray = ManifestLog.tmpFor(ArtifactManifest.manifestPath(path))
@@ -73,7 +73,7 @@ class ManifestLogSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a failed write keeps the old file and leaves no tmp") {
-    val path = Files.createTempDirectory("graft_mlog").toString
+    val path = tempDir("graft_mlog").toString
     PostingsManifest.write(spark, path, PostingsManifest.State(
       PostingsManifest.Params(4, 16, 123L, None),
       Seq(PostingsManifest.FileEntry(0, "part-a", 10L, 5L))))

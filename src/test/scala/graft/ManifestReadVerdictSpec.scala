@@ -29,7 +29,7 @@ class ManifestReadVerdictSpec extends AnyFunSuite with SparkSpec {
   private def lines(ls: String*): String = ls.mkString("", "\n", "\n")
 
   private def artifact(s: Shape): String = {
-    val dir = Files.createTempDirectory("graft_verdict").resolve("a")
+    val dir = tempDir("graft_verdict").resolve("a")
     Files.createDirectories(dir)
     Files.write(dir.resolve("_manifest"), s.base.getBytes("UTF-8"))
     if (s.log.nonEmpty) {
@@ -162,7 +162,7 @@ class ManifestReadVerdictSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("writers: base and delta bytes of both families") {
-    val pp = Files.createTempDirectory("graft_verdict_w").toString
+    val pp = tempDir("graft_verdict_w").toString
     val p0 = PostingsManifest.State(PostingsManifest.Params(4, 16, 123L,
       Some(2)), Seq(PostingsManifest.FileEntry(0, "part-a", 10L, 5L),
       PostingsManifest.FileEntry(1, "part-b", 20L, 7L, 1L)), epoch = 2L)
@@ -176,7 +176,7 @@ class ManifestReadVerdictSpec extends AnyFunSuite with SparkSpec {
       lines(pDelta, "epoch\t3", "set\t0\tpart-a\t10\t5\t3",
         "set\t0\tpart-c\t30\t9\t-"))
 
-    val fp = Files.createTempDirectory("graft_verdict_w").toString
+    val fp = tempDir("graft_verdict_w").toString
     val f0 = ArtifactManifest.State("fam_a", Map("z" -> "1", "a" -> "2"),
       Seq(ArtifactManifest.FileEntry("part-a", 10L, 5L),
         ArtifactManifest.FileEntry("part-b", 20L, 7L)))

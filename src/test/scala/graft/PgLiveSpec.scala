@@ -63,7 +63,7 @@ class PgLiveSpec extends AnyFunSuite with SparkSpec {
       haveBin("initdb") && haveBin("pg_ctl") && haveBin("psql"),
       "no local PostgreSQL toolchain + postgres user — live leg skipped")
 
-    val base = java.nio.file.Files.createTempDirectory("graft_pglive")
+    val base = tempDir("graft_pglive")
       .toFile.getAbsolutePath
     val data = s"$base/data"
     val sock = s"$base/sock"

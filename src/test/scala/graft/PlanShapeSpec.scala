@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.CoarseQuantizer.Flat
+import graft.operators.Similarity.MaintenanceMode.Retained
+
 /** Physical-plan shape assertions (SURVEY §4): the plans we'd want at
   * 100× stay locked in CI — a regression to a cartesian product, a
   * lost broadcast, or a dropped scan pushdown fails the build rather
@@ -365,7 +368,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def artifactPath(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("index").toString
+    tempDir(prefix).resolve("index").toString
 
   test("exact index delta append shuffles once, on the range layout") {
     import graft.operators.Dedup
@@ -438,15 +441,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val cents = model.clusterCenters.map(_.toArray)
     val (old, b1) = (emb.filter($"vec_id" % 2 === 0), emb.filter($"vec_id" % 2 === 1))
     val path = artifactPath("graft_recap_shape")
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, 16), path)
-    assertOneLayoutExchange("appendIvfPostingsRetained",
-      writePlans(Similarity.appendIvfPostingsRetained(spark, path, cents, b1)),
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), 16),
+      path)
+    assertOneLayoutExchange("appendIvfPostings(Retained)",
+      writePlans(Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Retained)),
       "hashpartitioning(cell#")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows(Similarity.readPostings(spark, path)) ==
-      rows(Similarity.ivfPostings(emb, model, 16)))
+      rows(Similarity.ivfPostings(emb, Flat(model), 16)))
   }
 
   test("whole-stage codegen covers the relational hot paths") {

@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MaintenanceProtocol, PostingsManifest, Similarity}
+import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
+import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace,
+  Retained}
+import graft.operators.Similarity.PostingsSource
 
 /** The postings manifest sidecar's one invariant, pinned through every
   * lifecycle op: **dirty-flag absent ⟹ manifest ≡ directory truth**
@@ -64,10 +68,9 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 16, seed = 42L,
       trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_manifest").toString
+    val path = tempDir("graft_manifest").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostings(emb.filter($"vec_id" % 4 === 0), model, cap),
+      Similarity.ivfPostings(emb.filter($"vec_id" % 4 === 0), Flat(model), cap),
       path)
     (path, model, model.clusterCenters.map(_.toArray))
   }
@@ -77,7 +80,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assertManifestIsTruth(path, "after build")
     val st = PostingsManifest.readClean(spark, path).get
     assert(st.params.cells == 16 && st.params.cap == 16 &&
-      st.params.ck == Similarity.centroidChecksum(model) &&
+      st.params.ck == Flat(model).checksum &&
       st.params.gp.isEmpty)
     // the sidecar must not leak into the artifact's data read: schema
     // is the postings schema, row count is the manifest's own total
@@ -92,10 +95,11 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val b1 = emb.filter($"vec_id" % 4 === 1)
     val b2 = emb.filter($"vec_id" % 4 === 2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
     assertManifestIsTruth(path, "after fragment append 1")
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // replay
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // replay
     // truth counts PHYSICAL rows — the replay's duplicates included
     assertManifestIsTruth(path, "after replayed fragment append")
     // and compaction folds it all back to 1-file-per-cell truth
@@ -110,8 +114,8 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val (path, model, _) = freshArtifact()
     val emb = Tables.load(spark, sf0001, "embeddings")
     (1 to 3).foreach { i =>
-      Similarity.appendIvfPostingsInPlace(spark, path, model,
-        emb.filter($"vec_id" % 4 === i))
+      Similarity.appendIvfPostings(spark, path, Flat(model),
+        emb.filter($"vec_id" % 4 === i), InPlace)
       assertManifestIsTruth(path, s"after recap append $i")
     }
   }
@@ -119,8 +123,8 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
   test("a stranded dirty flag demotes consumers and compaction recovers") {
     val (path, _, cents) = freshArtifact()
     val emb = Tables.load(spark, sf0001, "embeddings")
-    Similarity.appendIvfPostingsFragment(spark, path, cents,
-      emb.filter($"vec_id" % 4 === 1))
+    Similarity.appendIvfPostings(spark, path, Flat(cents),
+      emb.filter($"vec_id" % 4 === 1), Fragment)
     // simulate a crash mid-append: a fragment landed that the manifest
     // never heard about, and the write-ahead flag is still up
     val f = fs(path)
@@ -150,26 +154,26 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     assert(PostingsManifest.readClean(spark, path).isEmpty)
     // footer-path params still drive both append families
-    Similarity.appendIvfPostingsFragment(spark, path, cents,
-      emb.filter($"vec_id" % 4 === 1))
-    Similarity.appendIvfPostingsInPlace(spark, path, model,
-      emb.filter($"vec_id" % 4 === 2))
+    Similarity.appendIvfPostings(spark, path, Flat(cents),
+      emb.filter($"vec_id" % 4 === 1), Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(model),
+      emb.filter($"vec_id" % 4 === 2), InPlace)
     assert(PostingsManifest.readClean(spark, path).isEmpty,
       "appends must not invent a manifest for a legacy artifact")
     // first compaction adopts: directory-truth fold + fresh manifest
     Similarity.compactIvfPostings(spark, path)
     assertManifestIsTruth(path, "after adopting compaction")
     // from here on, appends maintain it
-    Similarity.appendIvfPostingsFragment(spark, path, cents,
-      emb.filter($"vec_id" % 4 === 3))
+    Similarity.appendIvfPostings(spark, path, Flat(cents),
+      emb.filter($"vec_id" % 4 === 3), Fragment)
     assertManifestIsTruth(path, "after post-adoption append")
   }
 
   test("readPostings serves from the manifest FileIndex: equal rows, pruned files") {
     val (path, model, cents) = freshArtifact()
     val emb = Tables.load(spark, sf0001, "embeddings")
-    Similarity.appendIvfPostingsFragment(spark, path, cents,
-      emb.filter($"vec_id" % 4 === 1))
+    Similarity.appendIvfPostings(spark, path, Flat(cents),
+      emb.filter($"vec_id" % 4 === 1), Fragment)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -194,18 +198,18 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // serving through the index equals serving through the plain read
     val k = 3
     val queries = emb.filter($"vec_id" < 10)
-    def serve(p: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfTopKFromPostingsPruned(queries, cents, p,
+    def serve(src: Similarity.PostingsSource) =
+      Similarity.ivfTopKFromPostings(queries, Flat(cents), src,
         probes = 2, k = k).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(serve(viaIndex) == serve(spark.read.parquet(path)))
+    assert(serve(PostingsSource.Classic(path)) ==
+      serve(PostingsSource.Frame(spark.read.parquet(path))))
     // the two-level artifact carries iv_gp — schema derivation branch
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 4, trainFraction = 0.5)
-    val path2 = java.nio.file.Files
-      .createTempDirectory("graft_manifest_2l").toString
+    val path2 = tempDir("graft_manifest_2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(emb, gcs, groupProbes = 2), path2)
+      Similarity.ivfPostings(emb, TwoLevel(gcs, 2)), path2)
     val via2 = Similarity.readPostings(spark, path2)
     assert(via2.columns.contains("iv_gp"))
     assert(rows(via2) == rows(spark.read.parquet(path2)))
@@ -230,38 +234,23 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // same size) → ratio ≈ 1–3 → RECAP — and the DEFAULT recap is the
     // RETAINED one (manifest present ⟹ retained: measured faster AND
     // snapshot-safe), immediately rebuild-equal through readPostings
-    val p1 = java.nio.file.Files
-      .createTempDirectory("graft_auto_r").toString
+    val p1 = tempDir("graft_auto_r").toString
     val seed1 = emb.filter($"vec_id" % 2 === 0)
     val b1 = emb.filter($"vec_id" % 2 === 1)
-    Similarity.saveIvfPostings(Similarity.ivfPostings(seed1, model), p1)
+    Similarity.saveIvfPostings(Similarity.ivfPostings(seed1, Flat(model)), p1)
     val r1 = Similarity.appendIvfPostingsAuto(spark, p1, cents, b1)
     assert(r1.route == "recap_retained" && r1.ratio < 4.0,
       s"equal-size batch must recap (retained by default), got $r1")
     assertManifestIsTruth(p1, "after auto recap")
     assert(rows(Similarity.readPostings(spark, p1)) ==
-      rows(Similarity.ivfPostings(emb, model)))
-
-    // the plain-reader escape hatch: retained = false lands the classic
-    // overwrite recap — no retention window, raw directory reads clean
-    val p1c = java.nio.file.Files
-      .createTempDirectory("graft_auto_rc").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(seed1, model), p1c)
-    val r1c = Similarity.appendIvfPostingsAuto(spark, p1c, cents, b1,
-      retained = false)
-    assert(r1c.route == "recap", s"escape hatch must land classic, got $r1c")
-    assertManifestIsTruth(p1c, "after classic auto recap")
-    spark.catalog.refreshByPath(p1c)
-    assert(rows(spark.read.parquet(p1c)) ==
-      rows(Similarity.ivfPostings(emb, model)))
+      rows(Similarity.ivfPostings(emb, Flat(model))))
 
     // posture 2: populations ≫ batch (a trickle into a mature index)
     // → FRAGMENT; compaction lands the rebuild
-    val p2 = java.nio.file.Files
-      .createTempDirectory("graft_auto_f").toString
+    val p2 = tempDir("graft_auto_f").toString
     val seed2 = emb.filter($"vec_id" >= 20)
     val b2 = emb.filter($"vec_id" < 20)
-    Similarity.saveIvfPostings(Similarity.ivfPostings(seed2, model), p2)
+    Similarity.saveIvfPostings(Similarity.ivfPostings(seed2, Flat(model)), p2)
     val r2 = Similarity.appendIvfPostingsAuto(spark, p2, cents, b2)
     assert(r2.route == "fragment" && r2.ratio >= 4.0,
       s"trickle into a mature index must fragment, got $r2")
@@ -269,52 +258,49 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     Similarity.compactIvfPostings(spark, p2)
     spark.catalog.refreshByPath(p2)
     assert(rows(spark.read.parquet(p2)) ==
-      rows(Similarity.ivfPostings(emb, model)))
+      rows(Similarity.ivfPostings(emb, Flat(model))))
 
     // no manifest → the ratio is unobservable → conservative recap
-    val p3 = java.nio.file.Files
-      .createTempDirectory("graft_auto_n").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(seed2, model), p3)
+    val p3 = tempDir("graft_auto_n").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(seed2, Flat(model)), p3)
     fs(p3).delete(PostingsManifest.manifestDir(p3), true)
     val r3 = Similarity.appendIvfPostingsAuto(spark, p3, cents, b2)
     assert(r3.route == "recap" && r3.touchedRows == 0L)
     spark.catalog.refreshByPath(p3)
     assert(rows(spark.read.parquet(p3)) ==
-      rows(Similarity.ivfPostings(emb, model)))
+      rows(Similarity.ivfPostings(emb, Flat(model))))
 
     // grouped twin on a two-level artifact: same law, artifact's own gp
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 4, trainFraction = 0.5)
-    val p4 = java.nio.file.Files
-      .createTempDirectory("graft_auto_g").toString
+    val p4 = tempDir("graft_auto_g").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(seed2, gcs, groupProbes = 2), p4)
-    val r4 = Similarity.appendIvfPostingsAutoGrouped(spark, p4, gcs, b2)
+      Similarity.ivfPostings(seed2, TwoLevel(gcs, 2)), p4)
+    val r4 = Similarity.appendIvfPostings(spark, p4, TwoLevel(gcs, 2), b2,
+      Auto())
     assert(r4.route == "fragment", s"got $r4")
     Similarity.compactIvfPostings(spark, p4)
     spark.catalog.refreshByPath(p4)
     assert(rows(spark.read.parquet(p4).drop("iv_gp")) ==
-      rows(Similarity.ivfPostingsTwoLevel(emb, gcs, groupProbes = 2)))
+      rows(Similarity.ivfPostings(emb, TwoLevel(gcs, 2))))
     // law guards: wrong variant for the artifact kind
     intercept[IllegalArgumentException](
-      Similarity.appendIvfPostingsAutoGrouped(spark, p2, gcs, b2))
+      Similarity.appendIvfPostings(spark, p2, TwoLevel(gcs, 2), b2, Auto()))
     intercept[IllegalArgumentException](
       Similarity.appendIvfPostingsAuto(spark, p4, gcs.flat.cents, b2))
 
-    // retained routing: the recap regime under retained=true runs the
-    // tombstone roll-forward — an open snapshot serves through it
-    val p5 = java.nio.file.Files
-      .createTempDirectory("graft_auto_rr").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(seed1, model), p5)
+    // retained routing: with a manifest present the recap regime runs
+    // the tombstone roll-forward — an open snapshot serves through it
+    val p5 = tempDir("graft_auto_rr").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(seed1, Flat(model)), p5)
     val snap = Similarity.readPostings(spark, p5)
     val want0 = rows(spark.read.parquet(p5))
-    val r5 = Similarity.appendIvfPostingsAuto(spark, p5, cents, b1,
-      retained = true)
+    val r5 = Similarity.appendIvfPostingsAuto(spark, p5, cents, b1)
     assert(r5.route == "recap_retained", s"got $r5")
     assert(rows(snap) == want0,
       "a snapshot must serve through a retained auto append")
     assert(rows(Similarity.readPostings(spark, p5)) ==
-      rows(Similarity.ivfPostings(emb, model)))
+      rows(Similarity.ivfPostings(emb, Flat(model))))
     assertManifestIsTruth(p5, "after retained auto recap")
   }
 
@@ -329,15 +315,16 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       r0.getAs[String]("manifest") == "clean" &&
       r0.getAs[Long]("files") == r0.getAs[Long]("cells"))
     val b1 = emb.filter($"vec_id" % 4 === 1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // replay
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // replay
     val r1 = report(dupScan = true)
     assert(r1.getAs[Long]("fragmented_cells") > 0L &&
       r1.getAs[Long]("excess_files") ==
         r1.getAs[Long]("files") - r1.getAs[Long]("cells"))
     // every replayed row is a duplicate — the dup scan must count it
     val b1Assigned = Similarity.ivfPostings(b1,
-      Similarity.fitIvfIndex(emb, 16, 42L, trainFraction = 0.5)).count()
+      Flat(Similarity.fitIvfIndex(emb, 16, 42L, trainFraction = 0.5))).count()
     assert(r1.getAs[Long]("dup_rows") == b1Assigned,
       s"dup_rows ${r1.getAs[Long]("dup_rows")} != replay size $b1Assigned")
     Similarity.compactIvfPostings(spark, path)
@@ -359,11 +346,12 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val cap = 16
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_retained").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // replay
+    val path = tempDir("graft_retained").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // replay
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -382,7 +370,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
     // a NEW snapshot sees exactly the compacted artifact (= rebuild),
     // while the directory still holds the retired fragments
-    val rebuilt = rows(Similarity.ivfPostings(old.union(b1), model, cap))
+    val rebuilt = rows(Similarity.ivfPostings(old.union(b1), Flat(model), cap))
     assert(rows(Similarity.readPostings(spark, path)) == rebuilt)
     assertManifestIsTruth(path, "during the retention window")
     val rep = Similarity.postingsFragmentationReport(spark, path).head()
@@ -397,10 +385,10 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // the artifact stays maintainable DURING the retention window:
     // fragment appends roll the manifest with tombstones present
     val b3 = emb.filter($"vec_id" % 4 === 2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b3)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b3, Fragment)
     assertManifestIsTruth(path, "fragment append inside a retention window")
     val rebuilt3 = rows(Similarity.ivfPostings(
-      old.union(b1).union(b3), model, cap))
+      old.union(b1).union(b3), Flat(model), cap))
 
     // a snapshot opened BEFORE the second retained compaction...
     val snapshot2 = Similarity.readPostings(spark, path)
@@ -444,14 +432,14 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // retention window resurrects retired rows as live; the next fold
     // converges back to the rebuild (cap-over-union is idempotent)
     val b4 = emb.filter($"vec_id" % 4 === 3)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b4)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b4, Fragment)
     Similarity.compactIvfPostingsRetained(spark, path) // opens a window
     MaintenanceProtocol.markDirty(spark, path) // simulate a crash
     PostingsManifest.rebuildAndWrite(spark, path) // resurrects tombstones
     Similarity.compactIvfPostings(spark, path)
     spark.catalog.refreshByPath(path)
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostings(emb, model, cap)),
+      rows(Similarity.ivfPostings(emb, Flat(model), cap)),
       "resurrected tombstones must fold back to the rebuild")
   }
 
@@ -464,9 +452,9 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
     val b2 = emb.filter($"vec_id" % 4 === 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_retained_recap").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
+    val path = tempDir("graft_retained_recap").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -475,11 +463,11 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val snapshot = Similarity.readPostings(spark, path)
     val expect0 = rows(spark.read.parquet(path))
 
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     assert(rows(snapshot) == expect0,
       "a pre-append snapshot must serve THROUGH a retained recap")
     // a new reader sees exactly the in-place/rebuild state
-    val rebuilt1 = rows(Similarity.ivfPostings(old.union(b1), model, cap))
+    val rebuilt1 = rows(Similarity.ivfPostings(old.union(b1), Flat(model), cap))
     assert(rows(Similarity.readPostings(spark, path)) == rebuilt1)
     assertManifestIsTruth(path, "retained recap retention window")
     assert(Similarity.postingsFragmentationReport(spark, path).head()
@@ -495,7 +483,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // STILL serves: the redelivery keeps the first append's age-0
     // tombstones (the uniform window law — a snapshot survives at
     // least one full maintenance epoch, not just one op)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     assert(rows(Similarity.readPostings(spark, path)) == rebuilt1)
     assert(rows(snapshot) == expect0,
       "the pre-append snapshot must survive the redelivery too")
@@ -505,11 +493,11 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // fragment append lands in the window (aging the earlier
     // tombstones out), the retained compaction folds it, and the
     // standalone vacuum closes the final window
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
     Similarity.compactIvfPostingsRetained(spark, path)
     Similarity.vacuumPostings(spark, path, retentionEpochs = 0L)
     assert(rows(Similarity.readPostings(spark, path)) ==
-      rows(Similarity.ivfPostings(old.union(b1).union(b2), model, cap)))
+      rows(Similarity.ivfPostings(old.union(b1).union(b2), Flat(model), cap)))
     assertManifestIsTruth(path, "after the closing vacuum")
     spark.catalog.refreshByPath(path)
     assert(rows(spark.read.parquet(path)) ==
@@ -520,10 +508,10 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // overwrite: correct rows, no snapshot isolation claimed
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     val b3 = emb.filter($"vec_id" % 4 === 3)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b3)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b3, Retained)
     spark.catalog.refreshByPath(path)
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostings(emb, model, cap)),
+      rows(Similarity.ivfPostings(emb, Flat(model), cap)),
       "manifest-less retained append must land the classic recap")
   }
 
@@ -540,24 +528,23 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val cap = 16
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 =!= 0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_retained_recap_2l").toString
+    val path = tempDir("graft_retained_recap_2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(old, gcs, gp, cap), path)
+      Similarity.ivfPostings(old, TwoLevel(gcs, gp), cap), path)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     val snapshot = Similarity.readPostings(spark, path)
     val expect0 = rows(spark.read.parquet(path))
-    Similarity.appendIvfPostingsRetainedGrouped(spark, path, gcs, b1)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp), b1, Retained)
     assert(rows(snapshot) == expect0)
     assert(rows(Similarity.readPostings(spark, path)) ==
-      rows(Similarity.ivfPostingsTwoLevel(old.union(b1), gcs, gp, cap)),
+      rows(Similarity.ivfPostings(old.union(b1), TwoLevel(gcs, gp), cap)),
       "grouped retained recap must equal the two-level rebuild")
     assertManifestIsTruth(path, "grouped retained recap window")
     // law guards: the exact retained route refuses an iv_gp artifact
     val ex = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+      Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     }
     assert(ex.getMessage.contains("two-level"))
   }
@@ -572,11 +559,11 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val truthBefore = truth(path)
     val exs = Seq(
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
-        Similarity.appendIvfPostingsFragment(spark, path, cents, b1)),
+        Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
-        Similarity.appendIvfPostingsInPlace(spark, path, model, b1)),
+        Similarity.appendIvfPostings(spark, path, Flat(model), b1, InPlace)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
-        Similarity.appendIvfPostingsRetained(spark, path, cents, b1)),
+        Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.compactIvfPostings(spark, path)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
@@ -585,7 +572,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
         Similarity.vacuumPostings(spark, path)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.saveIvfPostings(
-          Similarity.ivfPostings(b1, model), path)))
+          Similarity.ivfPostings(b1, Flat(model)), path)))
     assert(exs.forall(_.getMessage.contains("spec-writer")),
       "the refusal must name the live holder")
     assert(truth(path) == truthBefore,
@@ -594,7 +581,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       "a refused op must not have marked dirty")
     // the holder's own op path stays open: release → ops proceed
     MaintenanceProtocol.releaseLease(spark, path)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
     assertManifestIsTruth(path, "after the lease was released")
     // crash recovery: a lease stranded by a dead writer blocks until
     // the OPERATOR breaks it (no TTL guessing), then compaction's
@@ -614,7 +601,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
         throw new RuntimeException("op body failed")
       })
     assert(boom.getMessage == "op body failed")
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
     assertManifestIsTruth(path, "after a failed op released its lease")
   }
 
@@ -625,8 +612,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // through POSIX O_CREAT|O_EXCL there. 16 threads race the same
     // artifact; exactly one must win, every loser must see the
     // fail-fast (not a corrupted/second lease).
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lease_race").resolve("artifact").toString
+    val path = tempDir("graft_lease_race").resolve("artifact").toString
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     val n = 16
     val ready = new CountDownLatch(n)
@@ -678,9 +664,9 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val cap = 16
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_vacuum").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
+    val path = tempDir("graft_vacuum").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
     // vacuum refuses a manifest-less artifact...
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     val ex0 = intercept[IllegalStateException](
@@ -696,7 +682,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
     // open a retention window: fragment + retained compact retires the
     // fragments at the CURRENT epoch
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
     val snapshot = Similarity.readPostings(spark, path)
     val expectFragmented = snapshot.count()
     Similarity.compactIvfPostingsRetained(spark, path)
@@ -716,7 +702,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // one more maintenance epoch ages them out: now retention 1 drops
     // EXACTLY the retired set, live files untouched
     val b2 = emb.filter($"vec_id" % 4 === 2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
     val st2 = PostingsManifest.readClean(spark, path).get
     val aged = st2.files.filter(_.retired)
     val liveSet = st2.live.map(e => (e.cell, e.file)).toSet
@@ -734,7 +720,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
     // retention 0 = sweep everything immediately (the RETAIN-0 mode):
     // a fresh window closes in one standalone call
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     assert(PostingsManifest.readClean(spark, path).get
       .files.exists(_.retired), "precondition: a window is open")
     val (d2, _) = Similarity.vacuumPostings(spark, path,
@@ -758,11 +744,12 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val cap = 16
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_manifest_cmp").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // replay
+    val path = tempDir("graft_manifest_cmp").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // replay
     assert(PostingsManifest.readClean(spark, path).nonEmpty,
       "precondition: compaction below must take the manifest route")
     Similarity.compactIvfPostings(spark, path)
@@ -771,7 +758,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     spark.catalog.refreshByPath(path)
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostings(old.union(b1), model, cap)),
+      rows(Similarity.ivfPostings(old.union(b1), Flat(model), cap)),
       "manifest-route compaction must equal the from-scratch build")
   }
 
@@ -794,7 +781,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
     // a fragment append writes ONE delta file whose payload is exactly
     // its touched cells' new entries — the base manifest is untouched
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
     assertManifestIsTruth(path, "after logged fragment append")
     assert(f.getFileStatus(mp).getLen == baseLen &&
       f.getFileStatus(mp).getModificationTime == baseMod,
@@ -811,14 +798,15 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
     // a retained recap's delta carries retire-sets + adds for ITS
     // touched cells only; the base file still never rewritten
-    Similarity.appendIvfPostingsRetained(spark, path, cents,
-      emb.filter($"vec_id" % 4 === 2))
+    Similarity.appendIvfPostings(spark, path, Flat(cents),
+      emb.filter($"vec_id" % 4 === 2), Retained)
     assertManifestIsTruth(path, "after logged retained recap")
     assert(f.getFileStatus(mp).getModificationTime == baseMod)
     assert(deltaFiles.length == 2)
 
     // a vacuum's delta carries only the dropped tombstones' dels
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1) // age them
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Retained) // age them
     val retiredBefore = PostingsManifest.readClean(spark, path).get
       .files.count(_.retired)
     val (dropped, _) = Similarity.vacuumPostings(spark, path)
@@ -846,7 +834,8 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assertManifestIsTruth(path, "after the crash-window replay")
 
     // compaction FOLDS: base rewritten, log cleared
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // fragment it
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // fragment it
     assert(deltaFiles.nonEmpty)
     Similarity.compactIvfPostings(spark, path)
     assert(deltaFiles.isEmpty, "compaction must fold the log away")
@@ -885,10 +874,10 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val cap = 16
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_dirty_fallback").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
-    Similarity.appendIvfPostingsRetained(spark, path, cents, b1)
+    val path = tempDir("graft_dirty_fallback").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -915,11 +904,9 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       trainFraction = 0.5)
     val cents = model.clusterCenters.map(_.toArray)
     val cap = 16
-    val postings = Similarity.ivfPostings(emb, model, cap)
-    val classic = java.nio.file.Files
-      .createTempDirectory("graft_packed_c").resolve("p").toString
-    val packed = java.nio.file.Files
-      .createTempDirectory("graft_packed_p").resolve("p").toString
+    val postings = Similarity.ivfPostings(emb, Flat(model), cap)
+    val classic = tempDir("graft_packed_c").resolve("p").toString
+    val packed = tempDir("graft_packed_p").resolve("p").toString
     Similarity.saveIvfPostings(postings, classic)
     Similarity.saveIvfPostingsPacked(postings, packed, cellsPerPack = 4)
 
@@ -954,8 +941,9 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val expect = served(Similarity.ivfTopKFromPostingsWithCentroids(
       queries, cents, Similarity.readPostings(spark, classic),
       probes = 2, k = 3))
-    assert(served(Similarity.ivfTopKFromPostingsPackedPruned(
-      queries, cents, packed, probes = 2, k = 3)) == expect,
+    assert(served(Similarity.ivfTopKFromPostings(
+      queries, Flat(cents), PostingsSource.Packed(packed), probes = 2,
+      k = 3)) == expect,
       "packed pruned serving must equal the classic exact route")
 
     // the pack prune bites: a bounded probe set reads a strict subset
@@ -974,20 +962,20 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assert(!fb.queryExecution.executedPlan.toString
       .contains("ManifestFileIndex"))
     assert(rows(fb) == rows(viaPacked))
-    assert(served(Similarity.ivfTopKFromPostingsPackedPruned(
-      queries, cents, packed, probes = 2, k = 3)) == expect,
+    assert(served(Similarity.ivfTopKFromPostings(
+      queries, Flat(cents), PostingsSource.Packed(packed), probes = 2,
+      k = 3)) == expect,
       "the fallback serve (cell filter only) must answer exactly")
     graft.operators.MaintenanceProtocol.clearDirty(spark, packed)
 
     // the deployment cycle: maintain the CLASSIC artifact (retained
     // append opens a retention window — tombstones on disk), then
     // repack; the packed snapshot must hold exactly the LIVE state
-    Similarity.appendIvfPostingsRetained(spark, classic, cents,
-      emb.filter($"vec_id" % 4 === 1))
+    Similarity.appendIvfPostings(spark, classic, Flat(cents),
+      emb.filter($"vec_id" % 4 === 1), Retained)
     assert(graft.operators.PostingsManifest.readClean(spark, classic).get
       .files.exists(_.retired), "precondition: a window is open")
-    val repacked = java.nio.file.Files
-      .createTempDirectory("graft_packed_r").resolve("p").toString
+    val repacked = tempDir("graft_packed_r").resolve("p").toString
     Similarity.repackPostings(spark, classic, repacked, cellsPerPack = 4)
     assert(rows(Similarity.readPackedPostings(spark, repacked)) ==
       rows(Similarity.readPostings(spark, classic)),
@@ -996,7 +984,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
 
   test("bulkDeleteFiles pages through the store API, tolerates missing paths") {
     import graft.operators.MaintenanceProtocol
-    val dir = java.nio.file.Files.createTempDirectory("graft_bulkdel").toString
+    val dir = tempDir("graft_bulkdel").toString
     val base = new Path(dir)
     val f = fs(dir)
     val paths = (0 until 7).map { i =>
@@ -1015,8 +1003,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("release is token-checked: a broken-and-reacquired lease survives") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lease_token").resolve("artifact").toString
+    val path = tempDir("graft_lease_token").resolve("artifact").toString
     val t1 = MaintenanceProtocol.acquireLease(spark, path, "slow-writer")
     // an operator decides slow-writer is dead and breaks the lease; a
     // second writer acquires
@@ -1041,8 +1028,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
   test("parquetFooterRowCounts matches actual per-file counts on both " +
       "the driver-pool and executor-job paths") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_footer_counts").toString
+    val dir = tempDir("graft_footer_counts").toString
     // 40 files with distinct, known row counts: file k holds k+1 rows
     (0 until 40).foreach { k =>
       (0 to k).map(i => (k, i)).toDF("k", "i")

@@ -24,7 +24,7 @@ class PqArtifactSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.getSeq[Double](1).toArray)
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix)
+    tempDir(prefix)
       .resolve("pq_postings").toString
 
   private def artifactRows(df: DataFrame): Set[(Int, Long, Seq[Int], Double)] =

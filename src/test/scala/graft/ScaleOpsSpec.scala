@@ -273,7 +273,7 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
       .map(k => k -> spark.conf.getOption(k)).toMap
     def setSkew(on: Boolean): Unit =
       switches.foreach(k => spark.conf.set(k, on.toString))
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("graft_skew").toString
     try {
       ScaleData.events(spark, 100000L, users = 10000L)
         .withColumn("user_id",

@@ -3,7 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.expressions.IvfAssignKernel
+import graft.operators.{CoarseQuantizer, Similarity}
+import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
+import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace}
+import graft.operators.Similarity.PostingsSource
 
 class SimilaritySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -103,7 +107,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       "sampled training must not drop corpus coverage")
   }
 
-  test("ivfTopKLarge equals the window-ranked route exactly, capped and not") {
+  test("ivfTopKQuantized equals the window-ranked route exactly, capped and not") {
     // the large-cell-count route (kernel assignment against the
     // broadcast centroid matrix, no N×cells row expansion) must be a
     // pure physical rewrite: identical d2 arithmetic → identical home
@@ -117,9 +121,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
     for (cap <- Seq(Int.MaxValue, 40)) {
-      val exact = rows(Similarity.ivfTopKWithModel(emb, model, probes = 4,
+      val exact = rows(Similarity.ivfTopKWithCentroids(emb,
+        Similarity.centroidTable(spark, model), probes = 4,
         k = 5, cellCap = cap))
-      val large = rows(Similarity.ivfTopKLarge(emb, model, probes = 4,
+      val large = rows(Similarity.ivfTopKQuantized(emb, Flat(model), probes = 4,
         k = 5, cellCap = cap))
       assert(large == exact,
         s"cap=$cap: large route diverged (${large.size} vs ${exact.size} rows)")
@@ -144,7 +149,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       df.as[(Long, Long, Double, Int)].collect().toSet
     val windowed = rows(Similarity.ivfTopKWithCentroids(vecs,
       Similarity.centroidTableOf(spark, cents), probes = 2, k = 3))
-    val kernel = rows(Similarity.ivfTopKLargeWithCentroids(vecs, cents,
+    val kernel = rows(Similarity.ivfTopKQuantized(vecs, Flat(cents),
       probes = 2, k = 3))
     assert(windowed == kernel,
       s"routes diverged on a malformed vector: $windowed vs $kernel")
@@ -154,9 +159,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def postingRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     val pw = postingRows(Similarity.ivfPostingsWithCentroids(vecs, cents))
-    val pk = postingRows(graft.operators.Similarity
-      .ivfPostingsFromGrouped(vecs,
-        graft.expressions.IvfAssignKernel.groupedCentroidSet(cents, 1)))
+    val pk = postingRows(Similarity.ivfPostings(vecs,
+      Flat(IvfAssignKernel.groupedCentroidSet(cents, 1).flat.cents)))
     assert(pw == pk && !pw.exists(_._2 == 4L),
       s"postings builds diverged or kept the malformed vector: $pw vs $pk")
   }
@@ -171,9 +175,11 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val model = Similarity.fitIvfIndex(emb, numCells = 32, trainFraction = 0.5)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
-    val flat = rows(Similarity.ivfTopKLarge(emb, model, probes = 4, k = 5))
-    val two = rows(Similarity.ivfTopKTwoLevel(emb, model, probes = 4, k = 5,
-      numGroups = 8, groupProbes = 8))
+    val flat = rows(Similarity.ivfTopKQuantized(emb, Flat(model), probes = 4,
+      k = 5))
+    val two = rows(Similarity.ivfTopKQuantized(emb, TwoLevel(IvfAssignKernel
+      .groupedCentroidSet(model.clusterCenters.map(_.toArray), 8), 8),
+      probes = 4, k = 5))
     assert(two == flat, s"degenerate two-level diverged " +
       s"(${two.size} vs ${flat.size} rows)")
   }
@@ -194,9 +200,11 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       truth.join(approx, Seq("query_id", "neighbor_id")).count().toDouble /
         (5000.0 * k)
     }
-    val flat = recall(Similarity.ivfTopKLarge(emb, model, probes = 4, k = k))
-    val two = recall(Similarity.ivfTopKTwoLevel(emb, model, probes = 4, k = k,
-      numGroups = 8, groupProbes = 3))
+    val flat = recall(Similarity.ivfTopKQuantized(emb, Flat(model), probes = 4,
+      k = k))
+    val two = recall(Similarity.ivfTopKQuantized(emb, TwoLevel(IvfAssignKernel
+      .groupedCentroidSet(model.clusterCenters.map(_.toArray), 8), 3),
+      probes = 4, k = k))
     assert(flat >= 0.90, s"flat-route recall $flat below the §6.2 floor")
     assert(two >= 0.85 * flat,
       s"two-level recall $two lost more than 15% of flat $flat")
@@ -222,15 +230,17 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .orderBy($"vec_id").collect().map(_.getSeq[Double](1).toArray)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
-    val flat = rows(Similarity.ivfTopKLargeWithCentroids(emb, cents,
+    val flat = rows(Similarity.ivfTopKQuantized(emb, Flat(cents),
       probes = 2, k = 3, cellCap = 200))
-    val degenerate = rows(Similarity.ivfTopKTwoLevelFixed(emb, cents,
-      groupSize = 4, probes = 2, k = 3, groupProbes = 8, cellCap = 200))
+    val degenerate = rows(Similarity.ivfTopKQuantized(emb, TwoLevel(
+      IvfAssignKernel.fixedGroupedCentroidSet(cents, groupSize = 4), 8),
+      probes = 2, k = 3, cellCap = 200))
     assert(degenerate == flat, "all-groups fixed two-level diverged from flat")
     // the declared q77 prune (3 of 8 groups) must still return k rows
     // per query and stay a subset-quality result: same schema, nonempty
-    val pruned = Similarity.ivfTopKTwoLevelFixed(emb, cents,
-      groupSize = 4, probes = 2, k = 3, groupProbes = 3, cellCap = 200)
+    val pruned = Similarity.ivfTopKQuantized(emb, TwoLevel(
+      IvfAssignKernel.fixedGroupedCentroidSet(cents, groupSize = 4), 3),
+      probes = 2, k = 3, cellCap = 200)
     assert(pruned.count() > 0)
   }
 
@@ -273,12 +283,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     }
     val flatModel = Similarity.fitIvfIndex(emb, numCells = 64,
       trainFraction = 0.25)
-    val flat = recall(Similarity.ivfTopKLarge(emb, flatModel, probes = 4,
-      k = k))
+    val flat = recall(Similarity.ivfTopKQuantized(emb, Flat(flatModel),
+      probes = 4, k = k))
     val hier = Similarity.fitIvfHierarchical(emb, numGroups = 8,
       cellsPerGroup = 8, trainFraction = 0.25)
-    val two = recall(Similarity.ivfTopKWithGrouped(emb, hier, probes = 4,
-      k = k, groupProbes = 3))
+    val two = recall(Similarity.ivfTopKQuantized(emb, TwoLevel(hier, 3),
+      probes = 4, k = k))
     info(f"flat-fit recall@10 = $flat%.4f, hierarchical-fit (3/8 groups) " +
       f"= $two%.4f over ${hier.flat.numCells} cells")
     assert(two >= 0.85 * flat,
@@ -323,8 +333,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       spread = 0.35)
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 4, trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_grouped").resolve("index").toString
+    val path = tempDir("graft_ivf_grouped").resolve("index").toString
     Similarity.saveIvfGrouped(spark, gcs, path)
     val loaded = Similarity.loadIvfGrouped(spark, path)
     assert(loaded.flat.cents.map(_.toSeq).toSeq ==
@@ -336,10 +345,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       "recomputed self-dots drifted from the fitted ones")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
-    val served = rows(Similarity.ivfTopKWithGrouped(emb, loaded, probes = 2,
-      k = 3, groupProbes = 2))
-    assert(served == rows(Similarity.ivfTopKWithGrouped(emb, gcs, probes = 2,
-      k = 3, groupProbes = 2)),
+    val served = rows(Similarity.ivfTopKQuantized(emb, TwoLevel(loaded, 2),
+      probes = 2, k = 3))
+    assert(served == rows(Similarity.ivfTopKQuantized(emb, TwoLevel(gcs, 2),
+      probes = 2, k = 3)),
       "restored grouped index serves differently")
   }
 
@@ -347,12 +356,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
       trainFraction = 0.5)
-    val inMemory = Similarity.ivfTopKWithModel(emb, model, probes = 4, k = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_idx").resolve("index").toString
+    val inMemory = Similarity.ivfTopKWithCentroids(emb,
+      Similarity.centroidTable(spark, model), probes = 4, k = 3)
+    val path = tempDir("graft_ivf_idx").resolve("index").toString
     Similarity.saveIvfIndex(model, path)
-    val served = Similarity.ivfTopKWithModel(
-      emb, Similarity.loadIvfIndex(path), probes = 4, k = 3)
+    val served = Similarity.ivfTopKWithCentroids(
+      emb, Similarity.centroidTable(spark, Similarity.loadIvfIndex(path)),
+      probes = 4, k = 3)
     // the restored index must serve bit-identical results — centroids
     // round-trip exactly (parquet doubles), so assignment, probing, and
     // ranking can't drift between the fit session and a later serving job
@@ -365,14 +375,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
       trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_post").toString
-    Similarity.ivfPostings(emb, model, cellCap = 64)
+    val path = tempDir("graft_ivf_post").toString
+    Similarity.ivfPostings(emb, Flat(model), cellCap = 64)
       .write.mode("overwrite").parquet(path)
     val postings = spark.read.parquet(path)
-    val served = Similarity.ivfTopKFromPostings(emb, model, postings,
+    val served = Similarity.ivfTopKFromPostings(emb, Flat(model),
+      PostingsSource.Frame(postings),
       probes = 4, k = 3)
-    val direct = Similarity.ivfTopKWithModel(emb, model, probes = 4, k = 3,
+    val direct = Similarity.ivfTopKWithCentroids(emb,
+      Similarity.centroidTable(spark, model), probes = 4, k = 3,
       cellCap = 64)
     assert(served.exceptAll(direct).count() == 0 &&
       direct.exceptAll(served).count() == 0,
@@ -383,7 +394,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("kernel-built postings equal the window-ranked build exactly, capped and not") {
     // r19: every build/append route now assigns through the kernel, so
     // the window-ranked reference is constructed INLINE here (cross
-    // join + row_number windows — the pre-r19 assignedHome shape and
+    // join + row_number windows — the pre-r19 home-assignment shape and
     // the DuckDB oracles' form), keeping this pin independent of the
     // code under test.
     import org.apache.spark.sql.expressions.Window
@@ -426,14 +437,14 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         .toSet
     // uncapped AND a binding cap: the stored d2 must agree bit-for-bit
     // (kernel dot is index-order summed) or cap evictions would diverge
-    assert(kernelRows(Similarity.ivfPostingsLarge(emb, model)) ==
+    assert(kernelRows(Similarity.ivfPostings(emb, Flat(model))) ==
       refRows(windowRanked(Int.MaxValue)))
-    val capped = Similarity.ivfPostingsLarge(emb, model, cellCap = 16)
+    val capped = Similarity.ivfPostings(emb, Flat(model), cellCap = 16)
     assert(kernelRows(capped) == refRows(windowRanked(16)))
-    assert(kernelRows(Similarity.ivfPostings(emb, model, cellCap = 16)) ==
+    assert(kernelRows(Similarity.ivfPostings(emb, Flat(model), cellCap = 16)) ==
       refRows(windowRanked(16)),
-      "ivfPostings (shared assignedHome) must match the reference too")
-    assert(capped.count() < Similarity.ivfPostings(emb, model).count(),
+      "ivfPostings (the shared home assignment) must match the reference too")
+    assert(capped.count() < Similarity.ivfPostings(emb, Flat(model)).count(),
       "cap did not bind — the eviction side is untested")
   }
 
@@ -441,20 +452,24 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
       trainFraction = 0.5)
-    val postings = Similarity.ivfPostings(emb, model, cellCap = 64)
+    val postings = Similarity.ivfPostings(emb, Flat(model), cellCap = 64)
       .localCheckpoint(true)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
-    val expanded = rows(Similarity.ivfTopKFromPostings(emb, model, postings,
-      probes = 4, k = 3))
-    assert(rows(Similarity.ivfTopKFromPostingsLarge(emb, model, postings,
+    // the window-ranked in-memory route over the same cap is the
+    // expanded reference (queries×cells row_number assignment)
+    val expanded = rows(Similarity.ivfTopKWithCentroids(emb,
+      Similarity.centroidTable(spark, model), probes = 4, k = 3,
+      cellCap = 64))
+    assert(rows(Similarity.ivfTopKFromPostings(emb, Flat(model),
+      PostingsSource.Frame(postings),
       probes = 4, k = 3)) == expanded,
       "kernel query assignment diverged from the expanded route")
     // two-level with every group probed degenerates to the flat scan
     val gcs = graft.expressions.IvfAssignKernel.groupedCentroidSet(
       model.clusterCenters.map(_.toArray), numGroups = 4)
-    assert(rows(Similarity.ivfTopKFromPostingsGrouped(emb, gcs, postings,
-      probes = 4, k = 3, groupProbes = 4)) == expanded,
+    assert(rows(Similarity.ivfTopKFromPostings(emb, TwoLevel(gcs, 4),
+      PostingsSource.Frame(postings), probes = 4, k = 3)) == expanded,
       "all-groups two-level serving diverged from the flat scan")
   }
 
@@ -463,30 +478,29 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       spread = 0.35)
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 4, trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_post_grp").toString
+    val path = tempDir("graft_ivf_post_grp").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsFromGrouped(emb, gcs, cellCap = 400), path)
+      Similarity.ivfPostings(emb, Flat(gcs.flat.cents), cellCap = 400), path)
     val postings = spark.read.parquet(path)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
     // all groups probed: artifact serving equals the corpus-reassigning
     // grouped route (both exact at the degenerate point)
-    assert(rows(Similarity.ivfTopKFromPostingsGrouped(emb, gcs, postings,
-      probes = 2, k = 3, groupProbes = gcs.numGroups)) ==
-      rows(Similarity.ivfTopKWithGrouped(emb, gcs, probes = 2, k = 3,
-        groupProbes = gcs.numGroups)),
+    val all = TwoLevel(gcs, gcs.numGroups)
+    assert(rows(Similarity.ivfTopKFromPostings(emb, all,
+      PostingsSource.Frame(postings), probes = 2, k = 3)) ==
+      rows(Similarity.ivfTopKQuantized(emb, all, probes = 2, k = 3)),
       "postings-served grouped route diverged from direct serving")
     // shallow prune still answers every query at this clustered fixture
-    val pruned = Similarity.ivfTopKFromPostingsGrouped(emb, gcs, postings,
-      probes = 2, k = 3, groupProbes = 2)
+    val pruned = Similarity.ivfTopKFromPostings(emb, TwoLevel(gcs, 2),
+      PostingsSource.Frame(postings), probes = 2, k = 3)
     assert(pruned.select($"vec_id").distinct().count() == 2000)
     // a foreign grouped set (different cells) fails fast on the checksum
     val foreign = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 3, trainFraction = 0.5)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKFromPostingsGrouped(emb, foreign, postings,
-        probes = 2, k = 3, groupProbes = 2).collect()
+      Similarity.ivfTopKFromPostings(emb, TwoLevel(foreign, 2),
+        PostingsSource.Frame(postings), probes = 2, k = 3).collect()
     }
     assert(ex.getMessage.contains("differ from the postings artifact"))
   }
@@ -496,19 +510,18 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       spread = 0.35)
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 8,
       cellsPerGroup = 4, trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_post_prune").toString
+    val path = tempDir("graft_ivf_post_prune").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsFromGrouped(emb, gcs), path)
+      Similarity.ivfPostings(emb, Flat(gcs.flat.cents)), path)
     val postings = spark.read.parquet(path)
     val queries = emb.filter($"vec_id" < 3)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
-    val pruned = Similarity.ivfTopKFromPostingsPruned(queries,
-      gcs.flat.cents, postings, probes = 2, k = 3)
+    val pruned = Similarity.ivfTopKFromPostings(queries,
+      Flat(gcs.flat.cents), PostingsSource.Classic(path), probes = 2, k = 3)
     assert(rows(pruned) == rows(Similarity
-      .ivfTopKFromPostingsLargeWithCentroids(queries, gcs.flat.cents,
-        postings, probes = 2, k = 3)),
+      .ivfTopKFromPostings(queries, Flat(gcs.flat.cents),
+        PostingsSource.Frame(postings), probes = 2, k = 3)),
       "pruning changed the answer")
     // the probe set must land in the scan as a PARTITION filter (the
     // artifact is partitioned by cell, so this is directory pruning,
@@ -520,8 +533,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val prunedPlan = pruned.queryExecution.executedPlan.toString
     assert(inSet.findFirstIn(prunedPlan).isDefined,
       s"probe set did not reach the scan as a partition filter:\n$prunedPlan")
-    val full = Similarity.ivfTopKFromPostingsLargeWithCentroids(queries,
-      gcs.flat.cents, postings, probes = 2, k = 3)
+    val full = Similarity.ivfTopKFromPostings(queries,
+      Flat(gcs.flat.cents), PostingsSource.Frame(postings), probes = 2, k = 3)
     full.collect()
     assert(inSet.findFirstIn(
       full.queryExecution.executedPlan.toString).isEmpty,
@@ -538,14 +551,14 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // centroid must push capped-out old members, exactly as a rebuild
     val cap = 16
     val appended = Similarity.appendToIvfPostings(
-      Similarity.ivfPostings(old, model, cap), model, batch)
-    val rebuilt = Similarity.ivfPostings(emb, model, cap)
+      Similarity.ivfPostings(old, Flat(model), cap), Flat(model), batch)
+    val rebuilt = Similarity.ivfPostings(emb, Flat(model), cap)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows(appended) == rows(rebuilt))
     // eviction actually happened (cap binds at this fixture density)
-    assert(rebuilt.count() < Similarity.ivfPostings(emb, model).count())
+    assert(rebuilt.count() < Similarity.ivfPostings(emb, Flat(model)).count())
   }
 
   test("in-place postings append rewrites only touched cell directories") {
@@ -555,13 +568,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val old = emb.filter($"vec_id" % 10 =!= 0)
     val batch = emb.filter($"vec_id" % 10 === 0)
       .orderBy($"vec_id").limit(5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_inplace").toString
-    val oldPostings = Similarity.ivfPostings(old, model, cellCap = 16)
+    val path = tempDir("graft_ivf_inplace").toString
+    val oldPostings = Similarity.ivfPostings(old, Flat(model), cellCap = 16)
     Similarity.saveIvfPostings(oldPostings, path)
 
-    val touched = Similarity.appendToIvfPostings(oldPostings, model, batch)
-      .join(Similarity.ivfPostings(batch, model, 16).select($"cell"),
+    val touched = Similarity.appendToIvfPostings(oldPostings, Flat(model), batch)
+      .join(Similarity.ivfPostings(batch, Flat(model), 16).select($"cell"),
         Seq("cell"), "left_semi") // cells the batch lands in
       .select($"cell").distinct().as[Int].collect().toSet
     val untouchedCell = spark.read.parquet(path)
@@ -574,8 +586,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .map(f => (f.getPath.getName, f.getModificationTime)).toSet
     val before = listing()
 
-    Similarity.appendIvfPostingsInPlace(spark, path, model, batch)
-    val want = Similarity.appendToIvfPostings(oldPostings, model, batch)
+    Similarity.appendIvfPostings(spark, path, Flat(model), batch, InPlace)
+    val want = Similarity.appendToIvfPostings(oldPostings, Flat(model), batch)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -583,7 +595,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(listing() == before,
       "an untouched cell's directory must not be rewritten")
     // crash-replay convergence: the same batch again changes nothing
-    Similarity.appendIvfPostingsInPlace(spark, path, model, batch)
+    Similarity.appendIvfPostings(spark, path, Flat(model), batch, InPlace)
     assert(rows(spark.read.parquet(path)) == rows(want))
   }
 
@@ -595,13 +607,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 16, seed = 42L,
       trainFraction = 0.5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_onefile").toString
+    val path = tempDir("graft_ivf_onefile").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostings(emb.filter($"vec_id" % 4 === 0), model), path)
+      Similarity.ivfPostings(emb.filter($"vec_id" % 4 === 0), Flat(model)), path)
     (1 to 3).foreach { i =>
-      Similarity.appendIvfPostingsInPlace(spark, path, model,
-        emb.filter($"vec_id" % 4 === i))
+      Similarity.appendIvfPostings(spark, path, Flat(model),
+        emb.filter($"vec_id" % 4 === i), InPlace)
     }
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -623,9 +634,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
     val b2 = emb.filter($"vec_id" % 4 === 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_frag").toString
-    Similarity.saveIvfPostings(Similarity.ivfPostings(old, model, cap), path)
+    val path = tempDir("graft_ivf_frag").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(old, Flat(model), cap),
+      path)
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def cellFiles(cell: Int) = fs.listStatus(
@@ -633,9 +644,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
       .map(f => (f.getPath.getName, f.getModificationTime, f.getLen)).toSet
 
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b2)
-    Similarity.appendIvfPostingsFragment(spark, path, cents, b1) // replay
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
+      Fragment) // replay
     // between compactions the artifact is a SUPERSET (dups + over-cap)
     val before = spark.read.parquet(path)
     assert(before.count() >
@@ -643,7 +655,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       "fixture must exercise the replay-dup debt")
     // a clean cell = touched by NO fragment batch — byte-stable through
     // compaction
-    val touched = Similarity.ivfPostings(b1.union(b2), model)
+    val touched = Similarity.ivfPostings(b1.union(b2), Flat(model))
       .select($"cell").distinct().as[Int].collect().toSet
     val cleanCell = spark.read.parquet(path).select($"cell").distinct()
       .as[Int].collect().filterNot(touched).headOption
@@ -663,7 +675,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
-    val rebuilt = Similarity.ivfPostings(old.union(b1).union(b2), model, cap)
+    val rebuilt = Similarity.ivfPostings(old.union(b1).union(b2), Flat(model),
+      cap)
     assert(rows(spark.read.parquet(path)) == rows(rebuilt),
       "compacted fragment appends must equal the from-scratch build")
     cleanCell.foreach { c =>
@@ -684,49 +697,47 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     // gp >= numGroups: the two-level kernel degenerates to the flat
     // scan — row-equal to the exact grouped build (modulo iv_gp)
-    assert(rows(Similarity.ivfPostingsTwoLevel(emb, gcs,
-        groupProbes = gcs.numGroups)) ==
-      rows(Similarity.ivfPostingsFromGrouped(emb, gcs)))
+    assert(rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gcs.numGroups))) ==
+      rows(Similarity.ivfPostings(emb, Flat(gcs.flat.cents))))
 
     // shallow gp: append ≡ rebuild AT THE ARTIFACT'S OWN gp
     val gp = 2
     val old = emb.filter($"vec_id" % 5 =!= 0)
     val batch = emb.filter($"vec_id" % 5 === 0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_2lappend").toString
+    val path = tempDir("graft_ivf_2lappend").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(old, gcs, gp, cellCap = 16), path)
-    Similarity.appendIvfPostingsInPlaceGrouped(spark, path, gcs,
-      batch, groupProbes = gp)
+      Similarity.ivfPostings(old, TwoLevel(gcs, gp), cellCap = 16), path)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp),
+      batch, InPlace)
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostingsTwoLevel(emb, gcs, gp, cellCap = 16)),
+      rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gp), cellCap = 16)),
       "grouped append diverged from the two-level rebuild")
     // replay converges (recap dedups on (cell, cand_id))
-    Similarity.appendIvfPostingsInPlaceGrouped(spark, path, gcs,
-      batch, groupProbes = gp)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp),
+      batch, InPlace)
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostingsTwoLevel(emb, gcs, gp, cellCap = 16)))
+      rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gp), cellCap = 16)))
 
     // one assignment law per artifact life: gp mismatch rejected
     val eGp = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPostingsInPlaceGrouped(spark, path, gcs,
-        batch, groupProbes = gp + 1)
+      Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp + 1),
+        batch, InPlace)
     }
     assert(eGp.getMessage.contains("one assignment law"), eGp.getMessage)
     // exact-built artifacts accept grouped appends only degenerately,
     // and never fragment appends on a two-level artifact
-    val exactPath = java.nio.file.Files
-      .createTempDirectory("graft_ivf_exact4grp").toString
+    val exactPath = tempDir("graft_ivf_exact4grp").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsFromGrouped(old, gcs), exactPath)
+      Similarity.ivfPostings(old, Flat(gcs.flat.cents)), exactPath)
     val eShallow = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPostingsInPlaceGrouped(spark, exactPath, gcs,
-        batch, groupProbes = gp)
+      Similarity.appendIvfPostings(spark, exactPath, TwoLevel(gcs, gp),
+        batch, InPlace)
     }
     assert(eShallow.getMessage.contains("groupProbes >= numGroups"),
       eShallow.getMessage)
     val eFrag = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPostingsFragment(spark, path, gcs.flat.cents, batch)
+      Similarity.appendIvfPostings(spark, path, Flat(gcs.flat.cents), batch,
+        Fragment)
     }
     assert(eFrag.getMessage.contains("two-level-built"), eFrag.getMessage)
   }
@@ -741,13 +752,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val old = emb.filter($"vec_id" % 4 === 0)
     val b1 = emb.filter($"vec_id" % 4 === 1)
     val b2 = emb.filter($"vec_id" % 4 === 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_frag2l").toString
+    val path = tempDir("graft_ivf_frag2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(old, gcs, gp, cellCap = cap), path)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b1)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b2)
-    Similarity.appendIvfPostingsFragmentGrouped(spark, path, gcs, b1) // replay
+      Similarity.ivfPostings(old, TwoLevel(gcs, gp), cellCap = cap), path)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp), b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp), b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp), b1,
+      Fragment) // replay
     // between compactions: superset (replay dups + over-cap), same debt
     // contract as the flat fragment route
     val before = spark.read.parquet(path)
@@ -760,8 +771,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows(spark.read.parquet(path)) ==
-      rows(Similarity.ivfPostingsTwoLevel(
-        old.union(b1).union(b2), gcs, gp, cellCap = cap)),
+      rows(Similarity.ivfPostings(
+        old.union(b1).union(b2), TwoLevel(gcs, gp), cellCap = cap)),
       "compacted grouped fragment appends must equal the two-level rebuild")
     // the iv_gp law survives the lifecycle (compaction preserves it)
     assert(spark.read.parquet(path).select("iv_gp").take(1)(0).getInt(0) == gp)
@@ -769,12 +780,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(Similarity.compactIvfPostings(spark, path)._1 == 0)
     // exact-built artifacts reject the grouped fragment route (their
     // law is the flat scan; mixing would break compact≡rebuild)
-    val exactPath = java.nio.file.Files
-      .createTempDirectory("graft_ivf_frag2l_exact").toString
+    val exactPath = tempDir("graft_ivf_frag2l_exact").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsFromGrouped(old, gcs), exactPath)
+      Similarity.ivfPostings(old, Flat(gcs.flat.cents)), exactPath)
     val eExact = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPostingsFragmentGrouped(spark, exactPath, gcs, b1)
+      Similarity.appendIvfPostings(spark, exactPath, TwoLevel(gcs, gp), b1,
+        Fragment)
     }
     assert(eExact.getMessage.contains("exact-built"), eExact.getMessage)
   }
@@ -783,13 +794,14 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L)
     val other = Similarity.fitIvfIndex(emb, numCells = 8, seed = 7L)
-    val postings = Similarity.ivfPostings(emb, model)
+    val postings = Similarity.ivfPostings(emb, Flat(model))
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfPostings(postings, other, emb.limit(5))
+      Similarity.appendToIvfPostings(postings, Flat(other), emb.limit(5))
     }
     assert(e.getMessage.contains("centroids differ"), e.getMessage)
     intercept[IllegalArgumentException] {
-      Similarity.ivfTopKFromPostings(emb, other, postings, 4, 3)
+      Similarity.ivfTopKFromPostings(emb, Flat(other),
+        PostingsSource.Frame(postings), 4, 3)
     }
   }
 
@@ -835,5 +847,68 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .exists { case (a, b) => labels(a) != labels(b) }
     assert(!cross, "neighbor crossed a label block")
     assert(res.count() > 0)
+  }
+
+  test("appends in one session reuse one centroid broadcast per quantizer") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    import graft.expressions.{IvfGroupedCentroidSet, IvfNearestCells,
+      IvfNearestCellsTwoLevel}
+    // the kernel broadcast ids in every plan `body` runs; listener events
+    // arrive asynchronously, so a marker query's event bounds the wait
+    def kernelBroadcastIds(body: => Unit): Set[Long] = {
+      val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      @volatile var markerSeen = false
+      val marker = s"bc_ids_marker_${System.nanoTime()}"
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+          else qe.analyzed.foreach(_.expressions.foreach(_.foreach {
+            case e: IvfNearestCells => ids.add(e.bc.id)
+            case e: IvfNearestCellsTwoLevel => ids.add(e.bc.id)
+            case _ => ()
+          }))
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        body
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(markerSeen, "the listener bus never delivered the marker query")
+        ids.asScala.toSet
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val cents = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
+      trainFraction = 0.5).clusterCenters.map(_.toArray)
+    val gcs = IvfAssignKernel.groupedCentroidSet(cents, numGroups = 2)
+    // each append gets a FRESH quantizer over copied arrays: the
+    // broadcast follows the payload's identity, not the instance
+    val quantizers: Seq[(String, () => CoarseQuantizer)] = Seq(
+      "graft_bc_flat" -> (() => Flat(cents.map(_.clone))),
+      "graft_bc_2l" -> (() => TwoLevel(IvfGroupedCentroidSet(
+        IvfAssignKernel.centroidSet(cents.map(_.clone)),
+        gcs.gCents.map(_.clone), gcs.gn2.clone, gcs.members.map(_.clone)), 1)))
+    val used = quantizers.map { case (prefix, fresh) =>
+      val path = tempDir(prefix).toString
+      Similarity.saveIvfPostings(
+        Similarity.ivfPostings(emb.filter($"vec_id" % 3 === 0), fresh()), path)
+      val ids = kernelBroadcastIds {
+        Similarity.appendIvfPostings(spark, path, fresh(),
+          emb.filter($"vec_id" % 3 === 1), Auto())
+        Similarity.appendIvfPostings(spark, path, fresh(),
+          emb.filter($"vec_id" % 3 === 2), Auto())
+      }
+      assert(ids == Set(fresh().broadcast(spark).id),
+        s"$prefix: two appends used broadcasts $ids, not one shared id")
+      ids.head
+    }
+    assert(used.distinct.size == 2,
+      "flat and two-level payloads must not share a broadcast")
   }
 }

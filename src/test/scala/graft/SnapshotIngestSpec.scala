@@ -17,8 +17,8 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
     // an ingest), run the S8 ingest, and require the restored snapshot
     // to serve IDENTICAL relations through Tables.load — the same
     // loader every declared query reads from
-    val dumpDir = Files.createTempDirectory("graft_dump").toString
-    val outDir = Files.createTempDirectory("graft_snapshot").toString
+    val dumpDir = tempDir("graft_dump").toString
+    val outDir = tempDir("graft_snapshot").toString
     val nation = Tables.load(spark, sf0001, "nation")
     val orders = Tables.load(spark, sf0001, "orders") // date/double/int types
     Seq("nation" -> nation, "orders" -> orders).foreach { case (n, df) =>
@@ -41,10 +41,10 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("declared schema: empty fields load as NULL, types are pinned") {
-    val dumpDir = Files.createTempDirectory("graft_dump_nulls")
+    val dumpDir = tempDir("graft_dump_nulls")
     Files.write(dumpDir.resolve("t.csv"),
       "id|name|score\n1|alpha|1.5\n2||\n".getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft_snap_nulls").toString
+    val outDir = tempDir("graft_snap_nulls").toString
     val schema = StructType(Seq(StructField("id", IntegerType),
       StructField("name", StringType), StructField("score", DoubleType)))
     val n = SnapshotIngest.ingestTable(spark, dumpDir.toString, outDir,
@@ -70,10 +70,10 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    val dumpDir = Files.createTempDirectory("graft_dump_obs")
+    val dumpDir = tempDir("graft_dump_obs")
     Files.write(dumpDir.resolve("t.csv"),
       "id|name|score\n1|alpha|1.5\n2|beta|2.5\n3|gamma|3.5\n".getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft_snap_obs").toString
+    val outDir = tempDir("graft_snap_obs").toString
     val schema = StructType(Seq(StructField("id", IntegerType),
       StructField("name", StringType), StructField("score", DoubleType)))
     spark.listenerManager.register(listener)
@@ -94,10 +94,10 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
 
   test("FAILFAST: a corrupt row fails the load instead of silently dropping") {
     // pg_restore -e semantics: half a snapshot is worse than none
-    val dumpDir = Files.createTempDirectory("graft_dump_bad")
+    val dumpDir = tempDir("graft_dump_bad")
     Files.write(dumpDir.resolve("t.csv"),
       "id|name|score\n1|alpha|1.5\n2|beta|notanumber\n".getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft_snap_bad").toString
+    val outDir = tempDir("graft_snap_bad").toString
     val schema = StructType(Seq(StructField("id", IntegerType),
       StructField("name", StringType), StructField("score", DoubleType)))
     intercept[Exception] {
@@ -113,10 +113,10 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
     // the upstream gained a column mid-table: POSITIONAL schema
     // application would load 'extra' cells as name and names as score
     // (every cell still parses — FAILFAST cannot see it)
-    val dumpDir = Files.createTempDirectory("graft_dump_drift")
+    val dumpDir = tempDir("graft_dump_drift")
     Files.write(dumpDir.resolve("t.csv"),
       "id|extra|name|score\n1|x|alpha|1.5\n2|y|beta|2.5\n".getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft_snap_drift").toString
+    val outDir = tempDir("graft_snap_drift").toString
     val drift = SnapshotIngest.headerDrift(spark, dumpDir.toString,
       TableSpec("t", driftSchema, file = Some("t.csv")))
     assert(drift.added == Seq("extra") && drift.missing.isEmpty)
@@ -131,10 +131,10 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
   test("byName ingest aligns added + reordered + dropped columns") {
     // header says extra|name|id (score dropped, order scrambled): each
     // declared column must land under its NAME, score as typed NULLs
-    val dumpDir = Files.createTempDirectory("graft_dump_byname")
+    val dumpDir = tempDir("graft_dump_byname")
     Files.write(dumpDir.resolve("t.csv"),
       "extra|name|id\nx|alpha|1\ny|beta|2\n".getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft_snap_byname").toString
+    val outDir = tempDir("graft_snap_byname").toString
     val n = SnapshotIngest.ingestTable(spark, dumpDir.toString, outDir,
       TableSpec("t", driftSchema, file = Some("t.csv")), byName = true)
     assert(n == 2)
@@ -193,13 +193,13 @@ class SnapshotIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("reordered-only drift is flagged, and byName restores the clean relation") {
-    val dumpDir = Files.createTempDirectory("graft_dump_reorder")
+    val dumpDir = tempDir("graft_dump_reorder")
     Files.write(dumpDir.resolve("t.csv"),
       "name|id|score\nalpha|1|1.5\nbeta|2|2.5\n".getBytes("UTF-8"))
     val drift = SnapshotIngest.headerDrift(spark, dumpDir.toString,
       TableSpec("t", driftSchema, file = Some("t.csv")))
     assert(drift.reordered && drift.added.isEmpty && drift.missing.isEmpty)
-    val outDir = Files.createTempDirectory("graft_snap_reorder").toString
+    val outDir = tempDir("graft_snap_reorder").toString
     intercept[IllegalArgumentException] {
       SnapshotIngest.ingestTable(spark, dumpDir.toString, outDir,
         TableSpec("t", driftSchema, file = Some("t.csv")))

@@ -6,6 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.jobs.EventQueries
 import graft.operators.Dedup
 import graft.streaming.{CorpusIngest, EventsStream}
+import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
+import graft.operators.Similarity.MaintenanceMode.{Fragment, InPlace, Retained}
+import graft.operators.Similarity.PostingsSource
 
 /** One Kafka record as the connector's v2 source would surface it —
   * same columns as [[EventsStream.kafkaWireSchema]]. */
@@ -72,10 +75,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
     val raw = eventsWithUs
-    val watched = Files.createTempDirectory(s"graft_fmgws_$chunks")
+    val watched = tempDir(s"graft_fmgws_$chunks")
 
     def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_fmgws_part")
+      val tmp = tempDir("graft_fmgws_part")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -144,12 +147,12 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
     val raw = eventsWithUs
-    val watched = Files.createTempDirectory("graft_fmgws_restart")
-    val outDir = Files.createTempDirectory("graft_fmgws_out").toString
-    val cpDir = Files.createTempDirectory("graft_fmgws_cp").toString
+    val watched = tempDir("graft_fmgws_restart")
+    val outDir = tempDir("graft_fmgws_out").toString
+    val cpDir = tempDir("graft_fmgws_cp").toString
 
     def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_fmgws_rpart")
+      val tmp = tempDir("graft_fmgws_rpart")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -248,9 +251,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // emit only the new rows, and a row older than the watermark horizon
     // must vanish instead of corrupting an already-emitted window
     val raw = eventsWithUs
-    val watched = Files.createTempDirectory("graft_incr")
+    val watched = tempDir("graft_incr")
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_incr_part")
+      val tmp = tempDir("graft_incr_part")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -510,7 +513,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // freezes its file listing at planning time, so only the
     // re-resolving foreachBatch variant can see a snapshot overwrite
     // that lands while the query runs
-    val dimPath = Files.createTempDirectory("graft_dim_refresh").toString
+    val dimPath = tempDir("graft_dim_refresh").toString
     Seq((1L, "segA")).toDF("user_id", "segment")
       .write.mode("overwrite").parquet(dimPath)
     val ms = MemoryStream[Long](spark)
@@ -581,11 +584,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
     val raw = eventsWithUs
-    val watched = Files.createTempDirectory("graft_ssj_restart")
-    val outDir = Files.createTempDirectory("graft_ssj_out").toString
-    val cpDir = Files.createTempDirectory("graft_ssj_cp").toString
+    val watched = tempDir("graft_ssj_restart")
+    val outDir = tempDir("graft_ssj_out").toString
+    val cpDir = tempDir("graft_ssj_cp").toString
     def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_ssj_part")
+      val tmp = tempDir("graft_ssj_part")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -695,8 +698,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .as[DocRow].collect().toIndexedSeq
     val b2 = all.filter($"doc_id" >= 375).as[DocRow].collect().toIndexedSeq
 
-    val idxPath = Files.createTempDirectory("graft_ingest_idx").toString
-    val corpusPath = Files.createTempDirectory("graft_ingest_corpus")
+    val idxPath = tempDir("graft_ingest_idx").toString
+    val corpusPath = tempDir("graft_ingest_corpus")
       .resolve("kept").toString
     Dedup.minhashBandIndex(seed, k = 5, numHashes = 32, bands = 8)
       .write.mode("overwrite").parquet(idxPath)
@@ -758,9 +761,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val b2 = (novel2 :+ DocRow(9004L, "a fresh streamed doc") :+
       DocRow(9005L, seedTexts(1).text)).toIndexedSeq
 
-    val idxPath = Files.createTempDirectory("graft_ex_ingest_idx").toString
-    val bloomPath = Files.createTempDirectory("graft_ex_ingest_bloom").toString
-    val corpusPath = Files.createTempDirectory("graft_ex_ingest_corpus")
+    val idxPath = tempDir("graft_ex_ingest_idx").toString
+    val bloomPath = tempDir("graft_ex_ingest_bloom").toString
+    val corpusPath = tempDir("graft_ex_ingest_corpus")
       .resolve("kept").toString
     val idx0 = Dedup.exactHashIndex(seed)
     idx0.write.mode("overwrite").parquet(idxPath)
@@ -828,11 +831,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .as[DocRow].collect() :+ DocRow(9002L, "a fresh streamed doc"))
       .toIndexedSeq
 
-    val idxPath = Files.createTempDirectory("graft_ex_manifest_idx")
+    val idxPath = tempDir("graft_ex_manifest_idx")
       .resolve("index").toString
-    val bloomPath = Files.createTempDirectory("graft_ex_manifest_bloom")
+    val bloomPath = tempDir("graft_ex_manifest_bloom")
       .toString
-    val corpusPath = Files.createTempDirectory("graft_ex_manifest_corpus")
+    val corpusPath = tempDir("graft_ex_manifest_corpus")
       .resolve("kept").toString
     Dedup.saveExactIndex(Dedup.exactHashIndex(seed), idxPath, files = 2)
     Dedup.exactIndexBloom(Dedup.readExactIndex(spark, idxPath),
@@ -887,20 +890,21 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val b1 = embRows($"vec_id" % 3 === 1)
     val b2 = embRows($"vec_id" % 3 === 2)
 
-    val path = Files.createTempDirectory("graft_emb_ingest").toString
-    val p0 = Similarity.ivfPostings(seed, model, cellCap = 16)
+    val path = tempDir("graft_emb_ingest").toString
+    val p0 = Similarity.ivfPostings(seed, Flat(model), cellCap = 16)
     Similarity.saveIvfPostings(p0, path)
 
     val ms = MemoryStream[EmbRow](spark)
-    val q = CorpusIngest.embeddingIngest(ms.toDF(), model, path).start()
+    val q = CorpusIngest.embeddingIngest(ms.toDF(), Flat(model), path,
+      InPlace).start()
     try {
       ms.addData(b1); q.processAllAvailable()
       ms.addData(b2); q.processAllAvailable()
       ms.addData(b1); q.processAllAvailable() // replay converges
     } finally q.stop()
 
-    val p1 = Similarity.appendToIvfPostings(p0, model, b1.toDF())
-    val want = Similarity.appendToIvfPostings(p1, model, b2.toDF())
+    val p1 = Similarity.appendToIvfPostings(p0, Flat(model), b1.toDF())
+    val want = Similarity.appendToIvfPostings(p1, Flat(model), b2.toDF())
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -908,7 +912,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "streamed postings must equal sequential batch appends, replay absorbed")
     // the rolled-forward artifact still serves
     val served = Similarity.ivfTopKFromPostings(
-      emb.limit(20), model, spark.read.parquet(path), probes = 4, k = 3)
+      emb.limit(20), Flat(model),
+      PostingsSource.Frame(spark.read.parquet(path)), probes = 4, k = 3)
     assert(served.count() > 0)
   }
 
@@ -932,12 +937,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val b1 = embRows($"vec_id" % 3 === 1)
     val b2 = embRows($"vec_id" % 3 === 2)
 
-    val path = Files.createTempDirectory("graft_emb_ingest_2l").toString
+    val path = tempDir("graft_emb_ingest_2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(seed, gcs, gp, cellCap = 16), path)
+      Similarity.ivfPostings(seed, TwoLevel(gcs, gp), cellCap = 16), path)
 
     val ms = MemoryStream[EmbRow](spark)
-    val q = CorpusIngest.embeddingIngestGrouped(ms.toDF(), gcs, path, gp)
+    val q = CorpusIngest.embeddingIngest(ms.toDF(), TwoLevel(gcs, gp), path,
+      InPlace)
       .start()
     try {
       ms.addData(b1); q.processAllAvailable()
@@ -945,13 +951,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       ms.addData(b1); q.processAllAvailable() // replay converges
     } finally q.stop()
 
-    val batchPath = Files.createTempDirectory("graft_emb_batch_2l").toString
+    val batchPath = tempDir("graft_emb_batch_2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(seed, gcs, gp, cellCap = 16), batchPath)
-    Similarity.appendIvfPostingsInPlaceGrouped(spark, batchPath, gcs,
-      b1.toDF(), gp)
-    Similarity.appendIvfPostingsInPlaceGrouped(spark, batchPath, gcs,
-      b2.toDF(), gp)
+      Similarity.ivfPostings(seed, TwoLevel(gcs, gp), cellCap = 16), batchPath)
+    Similarity.appendIvfPostings(spark, batchPath, TwoLevel(gcs, gp),
+      b1.toDF(), InPlace)
+    Similarity.appendIvfPostings(spark, batchPath, TwoLevel(gcs, gp),
+      b2.toDF(), InPlace)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
@@ -959,8 +965,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       rows(spark.read.parquet(batchPath)),
       "streamed grouped postings must equal sequential batch appends")
     // and the artifact serves through the grouped route
-    val served = Similarity.ivfTopKFromPostingsGrouped(emb.limit(20), gcs,
-      spark.read.parquet(path), probes = 4, k = 3, groupProbes = gp)
+    val served = Similarity.ivfTopKFromPostings(emb.limit(20), TwoLevel(gcs, gp),
+      PostingsSource.Frame(spark.read.parquet(path)), probes = 4, k = 3)
     assert(served.count() > 0)
   }
 
@@ -983,8 +989,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val b1 = embRows($"vec_id" % 3 === 1)
     val b2 = embRows($"vec_id" % 3 === 2)
 
-    val path = Files.createTempDirectory("graft_emb_ingest_ret").toString
-    val p0 = Similarity.ivfPostings(seed, model, cellCap = 16)
+    val path = tempDir("graft_emb_ingest_ret").toString
+    val p0 = Similarity.ivfPostings(seed, Flat(model), cellCap = 16)
     Similarity.saveIvfPostings(p0, path)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
@@ -994,7 +1000,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val want0 = rows(spark.read.parquet(path))
 
     val ms = MemoryStream[EmbRow](spark)
-    val q = CorpusIngest.embeddingIngestRetained(ms.toDF(), cents, path)
+    val q = CorpusIngest.embeddingIngest(ms.toDF(), Flat(cents), path, Retained)
       .start()
     try {
       ms.addData(b1); q.processAllAvailable()
@@ -1002,7 +1008,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // superseded its files
       assert(rows(snap0) == want0,
         "a pre-trigger snapshot must serve through a retained trigger")
-      val p1 = Similarity.appendToIvfPostings(p0, model, b1.toDF())
+      val p1 = Similarity.appendToIvfPostings(p0, Flat(model), b1.toDF())
       assert(rows(Similarity.readPostings(spark, path)) == rows(p1))
       // a snapshot re-resolved once per trigger interval also survives
       // the NEXT trigger (whose vacuum clears only the epoch before it)
@@ -1012,7 +1018,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(rows(snap1) == want1,
         "a per-trigger-refreshed snapshot must survive the next trigger")
       ms.addData(b1); q.processAllAvailable() // replay converges
-      val want = Similarity.appendToIvfPostings(p1, model, b2.toDF())
+      val want = Similarity.appendToIvfPostings(p1, Flat(model), b2.toDF())
       assert(rows(Similarity.readPostings(spark, path)) == rows(want),
         "retained streamed postings must equal sequential appends, replay absorbed")
     } finally q.stop()
@@ -1052,12 +1058,12 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
       trainFraction = 0.5)
     val cents = model.clusterCenters.map(_.toArray)
-    val flatPath = Files.createTempDirectory("graft_emb_frag").toString
+    val flatPath = tempDir("graft_emb_frag").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostings(seed, model, cellCap = 16), flatPath)
+      Similarity.ivfPostings(seed, Flat(model), cellCap = 16), flatPath)
     val msF = MemoryStream[EmbRow](spark)
-    val qF = CorpusIngest.embeddingIngestFragment(msF.toDF(), cents,
-      flatPath).start()
+    val qF = CorpusIngest.embeddingIngest(msF.toDF(), Flat(cents),
+      flatPath, Fragment).start()
     try {
       msF.addData(b1); qF.processAllAvailable()
       msF.addData(b2); qF.processAllAvailable()
@@ -1081,7 +1087,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(rows(servingSnapshot) == fragmentedRows,
       "open snapshot must serve through the overlapped compaction")
     assert(rows(Similarity.readPostings(spark, flatPath)) ==
-      rows(Similarity.ivfPostings(emb, model, cellCap = 16)),
+      rows(Similarity.ivfPostings(emb, Flat(model), cellCap = 16)),
       "compacted fragment-mode stream must equal the from-scratch build")
     // a follow-up retained pass PRESERVES the newest window (the
     // uniform age-law) — the snapshot still serves — and quiescence
@@ -1094,19 +1100,19 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(droppedF > 0)
     spark.catalog.refreshByPath(flatPath)
     assert(rows(spark.read.parquet(flatPath)) ==
-      rows(Similarity.ivfPostings(emb, model, cellCap = 16)))
+      rows(Similarity.ivfPostings(emb, Flat(model), cellCap = 16)))
 
     // two-level artifact through the grouped fragment seam (assignment
     // rides the artifact's own embedded iv_gp)
     val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
       cellsPerGroup = 4, trainFraction = 0.5)
     val gp = 2
-    val path2l = Files.createTempDirectory("graft_emb_frag_2l").toString
+    val path2l = tempDir("graft_emb_frag_2l").toString
     Similarity.saveIvfPostings(
-      Similarity.ivfPostingsTwoLevel(seed, gcs, gp, cellCap = 16), path2l)
+      Similarity.ivfPostings(seed, TwoLevel(gcs, gp), cellCap = 16), path2l)
     val msG = MemoryStream[EmbRow](spark)
-    val qG = CorpusIngest.embeddingIngestFragmentGrouped(msG.toDF(), gcs,
-      path2l).start()
+    val qG = CorpusIngest.embeddingIngest(msG.toDF(), TwoLevel(gcs, gp),
+      path2l, Fragment).start()
     try {
       msG.addData(b1); qG.processAllAvailable()
       msG.addData(b2); qG.processAllAvailable()
@@ -1114,7 +1120,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     } finally qG.stop()
     assert(Similarity.compactIvfPostings(spark, path2l)._1 > 0)
     assert(rows(spark.read.parquet(path2l)) ==
-      rows(Similarity.ivfPostingsTwoLevel(emb, gcs, gp, cellCap = 16)),
+      rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gp), cellCap = 16)),
       "compacted grouped fragment-mode stream must equal the two-level rebuild")
   }
 
@@ -1166,7 +1172,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .orderBy($"vec_id")
       .as[(Long, Seq[Double])].collect().map(_._2.toArray)
     val cs = Similarity.pqCodebooksFromHeadResidual(emb, cents, m = 8, k = 16)
-    val path = Files.createTempDirectory("graft_emb_frag_pq").toString
+    val path = tempDir("graft_emb_frag_pq").toString
     Similarity.saveIvfPqPostings(
       Similarity.ivfPqPostings(seed, cents, cs, cellCap = 16), path, cs)
     val ms = MemoryStream[EmbRow](spark)
@@ -1218,9 +1224,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val all = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text")
     val seed = all.filter($"doc_id" < 100)
-    val idxPath = Files.createTempDirectory("graft_compact_idx").toString
-    val bloomPath = Files.createTempDirectory("graft_compact_bloom").toString
-    val corpusPath = Files.createTempDirectory("graft_compact_corpus")
+    val idxPath = tempDir("graft_compact_idx").toString
+    val bloomPath = tempDir("graft_compact_bloom").toString
+    val corpusPath = tempDir("graft_compact_corpus")
       .resolve("kept").toString
     val idx0 = Dedup.exactHashIndex(seed)
     // the saveSorted zone-map layout, directly to the watched directory
@@ -1289,8 +1295,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     val all = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text")
-    val idxPath = Files.createTempDirectory("graft_growth_idx").toString
-    val corpusPath = Files.createTempDirectory("graft_growth_corpus")
+    val idxPath = tempDir("graft_growth_idx").toString
+    val corpusPath = tempDir("graft_growth_corpus")
       .resolve("kept").toString
     Dedup.minhashBandIndex(all.filter($"doc_id" < 50), k = 5,
       numHashes = 32, bands = 8).write.mode("overwrite").parquet(idxPath)
@@ -1340,7 +1346,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // the same file exactly. (Spark's file source itself rejects a
     // NOT-YET-CREATED path at query start, so empty-but-existing is
     // the earliest a stream can start.)
-    val parent = Files.createTempDirectory("graft_declared_enc")
+    val parent = tempDir("graft_declared_enc")
     val watched = parent.resolve("incoming")
     Files.createDirectory(watched) // empty at stream start
     val stream = EventsStream.readEvents(spark, watched.toString,
@@ -1359,7 +1365,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // batch twin over the same file (staged in the <table>.parquet
       // layout Tables.load expects)
-      val batchDir = Files.createTempDirectory("graft_declared_enc_batch")
+      val batchDir = tempDir("graft_declared_enc_batch")
       Files.copy(watched.resolve("000.parquet"),
         batchDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
       val batch = Tables.load(spark, batchDir.toString, "events")

@@ -16,7 +16,7 @@ class TextQueriesSpec extends AnyFunSuite with SparkSpec {
   /** Write a documents fixture to a temp dir so the query functions
     * (which read `dir/documents.parquet`) can load it. */
   private def stageDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_textq").toString
+    val dir = tempDir("graft_textq").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length($"text"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -19,7 +19,7 @@ class VocabEmbeddingSpec extends AnyFunSuite with SparkSpec {
   private val vocab = Seq("mayo", "stanford", "nih", "mgh")
 
   test("vocab file loads positionally (index = line number)") {
-    val f = java.nio.file.Files.createTempFile("graft_vocab", ".txt")
+    val f = tempDir("graft_vocab").resolve("vocab.txt")
     java.nio.file.Files.writeString(f, "mayo\nstanford\nnih\nmgh\n")
     assert(VocabEmbedding.loadVocab(spark, f.toString) == vocab)
   }

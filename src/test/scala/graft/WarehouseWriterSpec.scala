@@ -15,7 +15,7 @@ class WarehouseWriterSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def fixture = Seq(
     (1L, "plain text", "Completed", 10),
@@ -234,7 +234,7 @@ class WarehouseWriterSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("properties config seam parses and renders k=v pairs (S2)") {
-    val f = Files.createTempFile("graft", ".properties")
+    val f = tempDir("graft_conf").resolve("graft.properties")
     Files.writeString(f, "host=localhost\nport=5432\ndbname=aact\n")
     val conf = Config.fromFile(f.toString)
     assert(conf == Map("host" -> "localhost", "port" -> "5432", "dbname" -> "aact"))

@@ -10,10 +10,16 @@ includes untracked files that git does not ignore.
 
     python3 tools/loc.py <rev>          # one line per source set
     python3 tools/loc.py <rev> --files  # plus every file whose count moved
+    python3 tools/loc.py <rev> --defs   # plus public defs per changed file
+
+A public def is a `def` declared directly in a class, object or trait body
+(at any nesting of template bodies, not inside a method body or an
+anonymous class) without a `private` or `protected` modifier.
 """
 
 import argparse
 import os
+import re
 import subprocess
 import sys
 
@@ -91,27 +97,126 @@ def code_lines(text):
     return count
 
 
+def strip_comments(text):
+    """`text` with comments removed and string/char literal bodies blanked,
+    line structure kept."""
+    out = []
+    depth = 0
+    in_str = None
+    i, n = 0, len(text)
+    while i < n:
+        c = text[i]
+        if depth:
+            if text.startswith("*/", i):
+                depth -= 1
+                i += 2
+            elif text.startswith("/*", i):
+                depth += 1
+                i += 2
+            else:
+                if c == "\n":
+                    out.append(c)
+                i += 1
+            continue
+        if in_str:
+            if in_str == '"""' and text.startswith('"""', i):
+                i += 3
+                while i < n and text[i] == '"':
+                    i += 1
+                in_str = None
+                out.append('"')
+            elif in_str == '"' and c == "\\":
+                i += 2
+            elif in_str == '"' and c == '"':
+                in_str = None
+                out.append('"')
+                i += 1
+            else:
+                if c == "\n":
+                    out.append(c)
+                i += 1
+            continue
+        if text.startswith("//", i):
+            while i < n and text[i] != "\n":
+                i += 1
+            continue
+        if text.startswith("/*", i):
+            depth = 1
+            i += 2
+            continue
+        if text.startswith('"""', i):
+            in_str = '"""'
+            out.append('"')
+            i += 3
+            continue
+        if c == '"':
+            in_str = '"'
+            out.append('"')
+            i += 1
+            continue
+        if c == "'" and i + 2 < n and (text[i + 2] == "'" or text[i + 1] == "\\"):
+            end = text.find("'", i + 2 if text[i + 1] == "\\" else i + 1)
+            out.append("' '")
+            i = (end + 1) if end > 0 else i + 1
+            continue
+        out.append(c)
+        i += 1
+    return "".join(out)
+
+
+TEMPLATE = re.compile(r"\b(class|object|trait)\b")
+DEF = re.compile(r"\bdef\s")
+HIDDEN = re.compile(r"\b(private|protected)\b[^\n]*$")
+
+
+def public_defs(text):
+    """Number of public member defs (see the module doc)."""
+    code = strip_comments(text)
+    stack = []        # one bool per open brace: is it a template body?
+    seg_start = 0     # start of the text since the last brace or `;`
+    count = 0
+    for m in re.finditer(r"[{};]|\bdef\s", code):
+        tok = m.group(0)
+        if tok == "{":
+            head = code[seg_start:m.start()]
+            stack.append(bool(TEMPLATE.search(head)) and
+                         not head.rstrip().endswith("=") and
+                         not re.search(r"\bnew\b", head))
+            seg_start = m.end()
+        elif tok == "}":
+            if stack:
+                stack.pop()
+            seg_start = m.end()
+        elif tok == ";":
+            seg_start = m.end()
+        elif stack and all(stack):
+            line_head = code[code.rfind("\n", 0, m.start()) + 1:m.start()]
+            if not HIDDEN.search(line_head):
+                count += 1
+    return count
+
+
 def git(*args):
     return subprocess.run(("git",) + args, check=True, capture_output=True,
                           text=True).stdout
 
 
-def rev_counts(rev, root):
+def rev_counts(rev, root, measure=code_lines):
     out = {}
     for path in git("ls-tree", "-r", "--name-only", rev, "--", root).split("\n"):
         if path.endswith(".scala"):
-            out[path] = code_lines(git("show", f"{rev}:{path}"))
+            out[path] = measure(git("show", f"{rev}:{path}"))
     return out
 
 
-def tree_counts(root):
+def tree_counts(root, measure=code_lines):
     out = {}
     listed = git("ls-files", "--cached", "--others", "--exclude-standard",
                  "--", root)
     for path in listed.split("\n"):
         if path.endswith(".scala") and os.path.isfile(path):
             with open(path, encoding="utf-8") as f:
-                out[path] = code_lines(f.read())
+                out[path] = measure(f.read())
     return out
 
 
@@ -120,6 +225,8 @@ def main():
     ap.add_argument("rev", help="git revision to compare the work tree with")
     ap.add_argument("--files", action="store_true",
                     help="also list every file whose count changed")
+    ap.add_argument("--defs", action="store_true",
+                    help="also list public defs of every changed file")
     args = ap.parse_args()
     os.chdir(git("rev-parse", "--show-toplevel").strip())
     print(f"{'source set':<10} {args.rev[:12]:>12} {'work tree':>10} {'net':>7}")
@@ -133,6 +240,17 @@ def main():
                 if d:
                     print(f"  {path}: {before.get(path, 0)} -> "
                           f"{after.get(path, 0)} ({d:+})")
+        if args.defs:
+            changed = sorted(p for p in set(git(
+                "diff", "--name-only", args.rev, "--", root).split("\n") +
+                git("ls-files", "--others", "--exclude-standard", "--",
+                    root).split("\n")) if p.endswith(".scala"))
+            defs_b = rev_counts(args.rev, root, public_defs)
+            defs_a = tree_counts(root, public_defs)
+            for path in changed:
+                print(f"  public defs {path}: {defs_b.get(path, 0)} -> "
+                      f"{defs_a.get(path, 0)} "
+                      f"({defs_a.get(path, 0) - defs_b.get(path, 0):+})")
     return 0
 
 
