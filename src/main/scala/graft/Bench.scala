@@ -271,8 +271,9 @@ object Bench {
           val model = graft.operators.Similarity.fitIvfIndex(
             embDf, 32, trainFraction = 0.25)
           val cents = model.clusterCenters.map(_.toArray)
-          val cs = graft.operators.Similarity.fitPqCodebooksResidual(
-            embDf, cents, m = 8, k = 256, iters = 10)
+          val cs = graft.operators.Similarity.fitPqCodebooks(
+            embDf, m = 8, k = 256, iters = 10,
+            residual = Some(graft.operators.CoarseQuantizer.Flat(cents)))
           graft.operators.Similarity.ivfPqRecallAtK(embDf,
             org.apache.spark.sql.functions.lit(true),
             graft.operators.Similarity.centroidTableOf(spark, cents),

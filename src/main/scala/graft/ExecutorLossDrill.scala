@@ -109,7 +109,7 @@ object ExecutorLossDrill {
       ClusterHarness.builder("local-cluster[2,2,2048]")) { spark =>
       import spark.implicits._
       val appId = spark.sparkContext.applicationId
-      val ckptDir = Files.createTempDirectory("graft_execloss_ckpt").toString
+      val ckptDir = ScratchDir("graft_execloss_ckpt").toString
       spark.sparkContext.setCheckpointDir(ckptDir)
       waitFor("both executors to register") {
         spark.sparkContext.statusTracker.getExecutorInfos.length >= 3
@@ -188,15 +188,15 @@ object ExecutorLossDrill {
         val sz = (n + nBatches - 1) / nBatches
         def slice(i: Int): DataFrame =
           d.filter($"doc_id" >= i * sz && $"doc_id" < (i + 1) * sz)
-        val staging = Files.createTempDirectory("graft_execloss_stage").toString
+        val staging = ScratchDir("graft_execloss_stage").toString
         (1 until nBatches).foreach { i =>
           slice(i).coalesce(1).write.mode("append").parquet(staging)
           Thread.sleep(1100)
         }
-        val idx = Files.createTempDirectory("graft_execloss_idx").toString
-        val bloom = Files.createTempDirectory("graft_execloss_bloom").toString
-        val corpus = Files.createTempDirectory("graft_execloss_corp").toString
-        val sCkpt = Files.createTempDirectory("graft_execloss_sckpt").toString
+        val idx = ScratchDir("graft_execloss_idx").toString
+        val bloom = ScratchDir("graft_execloss_bloom").toString
+        val corpus = ScratchDir("graft_execloss_corp").toString
+        val sCkpt = ScratchDir("graft_execloss_sckpt").toString
         val seed = Dedup.exactHashIndex(slice(0))
         seed.write.mode("overwrite").parquet(idx)
         Dedup.exactIndexBloom(seed, expectedItems = 2L * n)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -71,7 +69,7 @@ object IngestBench {
 
     // one parquet FILE per micro-batch, written in arrival order so the
     // file source's mtime ordering replays the same sequence
-    val staging = Files.createTempDirectory("graft_ingestbench_stage").toString
+    val staging = ScratchDir("graft_ingestbench_stage").toString
     (1 until nBatches).foreach { i =>
       slice(i).coalesce(1).write.mode("append").parquet(staging)
       Thread.sleep(1100) // distinct mtimes -> deterministic file order
@@ -90,8 +88,8 @@ object IngestBench {
     }
 
     // ---- near-dup seam: MinHash band index rolls forward per batch
-    val ndIdx = Files.createTempDirectory("graft_ingestbench_ndidx").toString
-    val ndCorpus = Files.createTempDirectory("graft_ingestbench_ndcorp").toString
+    val ndIdx = ScratchDir("graft_ingestbench_ndidx").toString
+    val ndCorpus = ScratchDir("graft_ingestbench_ndcorp").toString
     Dedup.minhashBandIndex(slice(0), k = 5, numHashes = 32, bands = 8,
       hashedShingles = true).write.mode("overwrite").parquet(ndIdx)
     val nd = streamedBatches { src =>
@@ -100,9 +98,9 @@ object IngestBench {
     }
 
     // ---- exact seam: hash index + bloom roll forward per batch
-    val exIdx = Files.createTempDirectory("graft_ingestbench_exidx").toString
-    val exBloom = Files.createTempDirectory("graft_ingestbench_exbloom").toString
-    val exCorpus = Files.createTempDirectory("graft_ingestbench_excorp").toString
+    val exIdx = ScratchDir("graft_ingestbench_exidx").toString
+    val exBloom = ScratchDir("graft_ingestbench_exbloom").toString
+    val exCorpus = ScratchDir("graft_ingestbench_excorp").toString
     val seedIdx = Dedup.exactHashIndex(slice(0))
     seedIdx.write.mode("overwrite").parquet(exIdx)
     Dedup.exactIndexBloom(seedIdx, expectedItems = 2L * n)
@@ -121,13 +119,13 @@ object IngestBench {
     def embSlice(i: Int): DataFrame =
       emb.filter($"vec_id" >= i * szE && $"vec_id" < (i + 1) * szE)
     val embStaging =
-      Files.createTempDirectory("graft_ingestbench_embstage").toString
+      ScratchDir("graft_ingestbench_embstage").toString
     (1 until nBatches).foreach { i =>
       embSlice(i).coalesce(1).write.mode("append").parquet(embStaging)
       Thread.sleep(1100)
     }
     val postingsPath =
-      Files.createTempDirectory("graft_ingestbench_postings").toString
+      ScratchDir("graft_ingestbench_postings").toString
     // clamp the cell count and sample to the seed slice so the
     // fixture-scale smoke (hundreds of vectors) fits the same code
     // path the sf1+ runs measure
@@ -178,7 +176,7 @@ object IngestBench {
     def embSlice(i: Int): DataFrame =
       emb.filter($"vec_id" >= i * szE && $"vec_id" < (i + 1) * szE)
     val staging =
-      Files.createTempDirectory("graft_ingestbench_2lstage").toString
+      ScratchDir("graft_ingestbench_2lstage").toString
     (1 until nBatches).foreach { i =>
       embSlice(i).coalesce(1).write.mode("append").parquet(staging)
       Thread.sleep(1100)
@@ -186,7 +184,7 @@ object IngestBench {
     val gcs = Similarity.fitIvfHierarchical(embSlice(0), groups,
       cellsPerGroup, trainFraction = 0.25)
     val postingsPath =
-      Files.createTempDirectory("graft_ingestbench_2lpost").toString
+      ScratchDir("graft_ingestbench_2lpost").toString
     val quantizer = CoarseQuantizer.TwoLevel(gcs, groupProbes)
     Similarity.saveIvfPostings(Similarity.ivfPostings(embSlice(0), quantizer),
       postingsPath)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps._
 import graft.expressions.IvfAssignKernel
-import graft.operators.{Dedup, Similarity, Validate}
+import graft.operators.{Dedup, PostingsCodec, Similarity, Validate}
 import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
 import graft.operators.Similarity.MaintenanceMode.{Fragment, Retained}
 import graft.operators.Similarity.PostingsSource
@@ -434,8 +434,8 @@ object EmbeddingQueries {
     val centroids = e.filter($"vec_id" < q34Cells)
       .select($"vec_id".cast("int").as("cell"),
         asDouble($"embedding").as("centroid"))
-    val cs = Similarity.pqCodebooksFromHeadResidual(e, centArr,
-      m = q89M, k = q89Codes)
+    val cs = Similarity.pqCodebooksFromHead(e, m = q89M, k = q89Codes,
+      residual = Some(Flat(centArr)))
     Similarity.ivfPqTopKWithCentroids(e, $"vec_id" < 20, centroids, cs,
       probes = q34Probes, k = q89K, fetch = q90Fetch, cellCap = q34CellCap)
   }
@@ -450,49 +450,53 @@ object EmbeddingQueries {
   val q91Fetch = 5
 
   // ---------------------------------------------------------------- q91
-  /** The PQ index-artifact LIFECYCLE, oracle-checked end-to-end — the
-    * r18 VERDICT's top item landed as a declared query: build the
-    * coded `(cell, cand_id, d2, codes)` postings artifact over an 80%
-    * seed ([[Similarity.saveIvfPqPostings]] — cell-partitioned, born
-    * with a [[graft.operators.PostingsManifest]] and the checksummed
-    * [[graft.operators.PqCodebookStore]] sidecar carrying the
-    * codebooks + residual law), fragment-append the two remaining 10%
-    * batches (O(batch) writes, assignment + residual encode under the
-    * artifact's OWN frozen centroids/codebooks), re-append the first
-    * batch (an at-least-once redelivery), compact (dedup replay,
-    * re-apply the binding cap over the union on the stored coarse d2),
-    * then SERVE through [[Similarity.ivfPqTopKFromPostings]] — the
-    * steady-state route: queries alone are assigned, the artifact scan
-    * is manifest-planned and pruned to probed cells, ADC ranks against
-    * the STORED codes, floats reappear only in the fetch-deep exact
-    * re-rank. The oracle is the from-scratch residual IVFADC serve
-    * over the whole corpus in plain SQL, so the hash match pins
-    * build → append → replay → compact → serve ≡ rebuild — the
-    * contract that makes the artifact maintainable. Reference
-    * analogue: the monthly-dump rebuild cadence
-    * (docker/aact/Dockerfile:20-22). */
+  /** The PQ index-artifact LIFECYCLE, oracle-checked end-to-end: build
+    * the IVF postings artifact under the residual PQ codec over an 80%
+    * seed ([[Similarity.saveIvfPostings]] with
+    * [[graft.operators.PostingsCodec.Pq]] — coded
+    * `(cell, cand_id, d2, codes)` rows, cell-partitioned, born with a
+    * [[graft.operators.PostingsManifest]] and the checksummed
+    * `_pq_codebooks` sidecar carrying the codebooks + residual law),
+    * fragment-append the two remaining 10% batches through
+    * [[Similarity.appendIvfPostings]] (O(batch) writes, assignment +
+    * residual encode under the artifact's OWN frozen centroids and
+    * codebooks, read from the artifact), re-append the first batch (an
+    * at-least-once redelivery), compact (dedup replay, re-apply the
+    * binding cap over the union on the stored coarse d2), then SERVE:
+    * [[Similarity.ivfTopKFromPostings]] over the `Classic` path is the
+    * steady-state ADC preselect — queries alone are assigned, the
+    * artifact scan is manifest-planned and pruned to probed cells, ADC
+    * ranks against the STORED codes to [[q91Fetch]] depth — and
+    * [[Similarity.rerankExactL2]] re-ranks it against the float
+    * vectors. The oracle is the from-scratch residual IVFADC serve over
+    * the whole corpus in plain SQL, so the hash match pins build →
+    * append → replay → compact → serve ≡ rebuild — the contract that
+    * makes the artifact maintainable. Reference analogue: the
+    * monthly-dump rebuild cadence (docker/aact/Dockerfile:20-22). */
   def q91PqPostingsLifecycle(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val cents = e.filter($"vec_id" < q34Cells)
+    val q = Flat(e.filter($"vec_id" < q34Cells)
       .select($"vec_id", asDouble($"embedding").as("v"))
       .orderBy($"vec_id")
-      .collect().map(_.getSeq[Double](1).toArray)
-    val cs = Similarity.pqCodebooksFromHeadResidual(e, cents,
-      m = q89M, k = q89Codes)
+      .collect().map(_.getSeq[Double](1).toArray))
+    val codec = PostingsCodec.Pq(Similarity.pqCodebooksFromHead(e,
+      m = q89M, k = q89Codes, residual = Some(q)))
     val seed = e.filter($"vec_id" % 10 >= 2)
     val b1 = e.filter($"vec_id" % 10 === 0)
     val b2 = e.filter($"vec_id" % 10 === 1)
     val path = graft.ScratchDir("graft_q91")
       .resolve("pq_postings").toString
-    Similarity.saveIvfPqPostings(
-      Similarity.ivfPqPostings(seed, cents, cs, q78CellCap), path, cs)
-    Similarity.appendIvfPqPostingsFragment(spark, path, cents, b1)
-    Similarity.appendIvfPqPostingsFragment(spark, path, cents, b2)
-    Similarity.appendIvfPqPostingsFragment(spark, path, cents, b1) // redelivery
-    Similarity.compactIvfPqPostings(spark, path)
-    Similarity.ivfPqTopKFromPostings(e.filter($"vec_id" < 20), e, cents,
-      path, probes = q34Probes, k = q89K, fetch = q91Fetch)
+    Similarity.saveIvfPostings(
+      Similarity.ivfPostings(seed, q, q78CellCap, codec), path, codec)
+    Similarity.appendIvfPostings(spark, path, q, b1, Fragment)
+    Similarity.appendIvfPostings(spark, path, q, b2, Fragment)
+    Similarity.appendIvfPostings(spark, path, q, b1, Fragment) // redelivery
+    Similarity.compactIvfPostings(spark, path)
+    val queries = e.filter($"vec_id" < 20)
+    Similarity.rerankExactL2(e, queries, Similarity.ivfTopKFromPostings(
+      queries, q, PostingsSource.Classic(path), probes = q34Probes,
+      k = q91Fetch), k = q89K)
   }
 
   // ---------------------------------------------------------------- q48

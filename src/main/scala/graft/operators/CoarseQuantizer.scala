@@ -196,13 +196,14 @@ object CoarseQuantizer {
   /** One broadcast per (live context, payload key): a fresh
     * `broadcast()` per call accumulates driver/executor blocks until
     * the GC-driven ContextCleaner happens to reclaim them. Weak context
-    * keys let a stopped session's entries vanish with it. */
+    * keys let a stopped session's entries vanish with it. The PQ
+    * codebooks ([[PostingsCodec.Pq.broadcast]]) share this cache. */
   private val bcCache =
     new java.util.WeakHashMap[SparkContext,
       scala.collection.mutable.Map[Any, Broadcast[_]]]()
 
-  private def cachedBroadcast[T: scala.reflect.ClassTag](sc: SparkContext,
-      key: Any, payload: => T): Broadcast[T] =
+  private[operators] def cachedBroadcast[T: scala.reflect.ClassTag](
+      sc: SparkContext, key: Any, payload: => T): Broadcast[T] =
     bcCache.synchronized {
       val perCtx = Option(bcCache.get(sc)).getOrElse {
         val m = scala.collection.mutable.Map.empty[Any, Broadcast[_]]

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The postings artifact's MANIFEST SIDECAR — a tiny driver-written
   * text file inside the artifact (`<artifact>/_manifest`, invisible to
@@ -206,9 +207,12 @@ object PostingsManifest extends ManifestLog {
 
   /** The params one postings part-file's rows carry as iv_ columns —
     * identical in every row of every file by construction, so one head
-    * row of one file is the artifact's. */
-  def paramsOfFile(spark: SparkSession, file: Path): Params = {
+    * row of one file is the artifact's. `checkSchema` sees the footer's
+    * schema, already in hand. */
+  def paramsOfFile(spark: SparkSession, file: Path,
+      checkSchema: StructType => Unit = _ => ()): Params = {
     val head = spark.read.parquet(file.toString)
+    checkSchema(head.schema)
     val hr = head.select(col("iv_cells"), col("iv_cap"), col("iv_ck")).take(1)
     require(hr.nonEmpty,
       s"empty IVF postings file $file — build with saveIvfPostings")

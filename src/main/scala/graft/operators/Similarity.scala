@@ -572,12 +572,22 @@ object Similarity {
     * `groupProbes` is embedded as `iv_gp`, and every later append must
     * use the SAME law ([[CoarseQuantizer.requireAppendLaw]]), or
     * append≡rebuild breaks. With `groupProbes >= numGroups` it is
-    * row-equal to the flat build (modulo the iv_gp column). */
+    * row-equal to the flat build (modulo the iv_gp column).
+    *
+    * `codec` picks the payload ([[PostingsCodec]]): the float vector,
+    * or under `Pq(cs, residual)` the PQ codes of the (residual) vector
+    * plus the codebook checksum `pq_ck` — the residual subtract and the
+    * encode ride the assignment projection, and the float vector is
+    * dropped before the cap, so nothing vector-sized is written or
+    * shuffled. Save a PQ frame with the SAME codec ([[saveIvfPostings]]
+    * writes its codebook sidecar). */
   def ivfPostings(emb: DataFrame, q: CoarseQuantizer,
-      cellCap: Int = Int.MaxValue): DataFrame =
-    CoarseQuantizer.stamp(
-      cappedByCell(q.home(prepared(emb)), q.numCells, cellCap),
-      q.params(cellCap))
+      cellCap: Int = Int.MaxValue,
+      codec: PostingsCodec = PostingsCodec.Float): DataFrame =
+    codec.stamp(CoarseQuantizer.stamp(
+      cappedByCell(codec.payload(q.home(prepared(emb)), q), q.numCells,
+        cellCap),
+      q.params(cellCap)))
 
   /** [[ivfPostings]] under `Flat(cents)`, for callers holding a raw
     * centroid matrix. */
@@ -628,10 +638,10 @@ object Similarity {
   /** The embedded parameters of a postings DIRECTORY. With a clean
     * [[PostingsManifest]] they ride the manifest (one small-file read,
     * zero artifact listings); otherwise [[paramsFromFooter]]. */
-  private def postingsParamsAtPath(spark: SparkSession,
-      path: String): CoarseQuantizer.Params =
+  private def postingsParamsAtPath(spark: SparkSession, path: String,
+      codec: PostingsCodec): CoarseQuantizer.Params =
     PostingsManifest.readClean(spark, path).map(_.params)
-      .getOrElse(paramsFromFooter(spark, path))
+      .getOrElse(paramsFromFooter(spark, path, codec))
 
   /** The embedded parameters of a manifest-less postings directory,
     * read from ONE part-file: `spark.read.parquet(dir)` on a
@@ -645,9 +655,10 @@ object Similarity {
     * The constants are identical in every row of every file by
     * construction, so one FS-level root listing (∝ cells), one
     * cell-directory listing, one footer read replace the full
-    * enumeration. */
-  private def paramsFromFooter(spark: SparkSession,
-      path: String): CoarseQuantizer.Params = timed("params_at_path") {
+    * enumeration. The footer's schema must carry `codec`'s payload
+    * ([[PostingsCodec.requireCarriedBy]]). */
+  private def paramsFromFooter(spark: SparkSession, path: String,
+      codec: PostingsCodec): CoarseQuantizer.Params = timed("params_at_path") {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDir = fs.listStatus(hPath)
@@ -658,7 +669,8 @@ object Similarity {
       .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
     require(part.nonEmpty,
       s"postings cell directory holds no part-files: ${cellDir.get.getPath}")
-    PostingsManifest.paramsOfFile(spark, part.get.getPath)
+    PostingsManifest.paramsOfFile(spark, part.get.getPath,
+      codec.requireCarriedBy(_, path))
   }
 
   /** Roll a postings FRAME forward for newly arrived vectors —
@@ -676,6 +688,7 @@ object Similarity {
     * determinism of d2). */
   def appendToIvfPostings(postings: DataFrame, q: CoarseQuantizer,
       newEmb: DataFrame): DataFrame = {
+    PostingsCodec.requireFloatFrame(postings, "appendToIvfPostings")
     val p = postingsParams(postings)
     q.requireAppendLaw(p)
     val delta = CoarseQuantizer.stamp(q.home(prepared(newEmb)), p)
@@ -743,24 +756,6 @@ object Similarity {
       .drop("cellRank")
   }
 
-  /** The postings data files' schema (partition column excluded) — what
-    * [[ivfPostings]] writes; a two-level build adds `iv_gp`.
-    * Manifest-served reads derive it from the manifest params instead
-    * of opening a footer. */
-  private def postingsDataSchema(hasGp: Boolean):
-      org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    val base = StructType(Seq(
-      StructField("cand_id", LongType),
-      StructField("cv", ArrayType(DoubleType)),
-      StructField("cn", DoubleType),
-      StructField("d2", DoubleType),
-      StructField("iv_cells", IntegerType),
-      StructField("iv_cap", IntegerType),
-      StructField("iv_ck", LongType)))
-    if (hasGp) base.add(StructField("iv_gp", IntegerType)) else base
-  }
-
   /** Open a postings DIRECTORY for serving — the read every
     * postings-served route should start from. With a clean
     * [[PostingsManifest]] the scan is planned from a
@@ -782,13 +777,14 @@ object Similarity {
     * append and [[compactIvfPostingsRetained]] retire superseded files
     * instead of deleting them, which is the compact-WHILE-serve mode —
     * a snapshot opened before them keeps serving correctly through them
-    * (StreamingSpec-pinned). */
+    * (StreamingSpec-pinned). A PQ artifact opens under its coded
+    * schema: the codec comes from the artifact ([[PostingsCodec.at]]). */
   def readPostings(spark: SparkSession, path: String): DataFrame =
-    readPostingsAs(spark, path,
-      st => postingsDataSchema(st.params.gp.nonEmpty))
+    openPostings(spark, path, PostingsCodec.at(spark, path))
 
-  /** The one postings reader, over a family's data schema (float or
-    * PQ-coded). A DIRTY artifact's directory is not serving truth by
+  /** The one postings reader, over the artifact's codec (its data
+    * schema; the discovering read checks the files carry its payload).
+    * A DIRTY artifact's directory is not serving truth by
     * itself: with retained maintenance the directory legitimately holds
     * tombstoned files (and, after a crash mid-op, possibly half-staged
     * recap files next to the rows they supersede), so a raw read
@@ -802,16 +798,17 @@ object Similarity {
     * skips the fold: it never ran a retained op (those require a
     * manifest), so its listing is truth and the extra shuffle would be
     * pure cost. */
-  private def readPostingsAs(spark: SparkSession, path: String,
-      dataSchema: PostingsManifest.State =>
-        org.apache.spark.sql.types.StructType): DataFrame =
+  private def openPostings(spark: SparkSession, path: String,
+      codec: PostingsCodec): DataFrame =
     PostingsManifest.readClean(spark, path) match {
       case Some(st) =>
         org.apache.spark.sql.GraftColumnBridge.parquetOverFileIndex(spark,
-          new graft.plans.PostingsFileIndex(path, st), dataSchema(st))
+          new graft.plans.PostingsFileIndex(path, st),
+          codec.dataSchema(st.params.gp.nonEmpty))
       case None =>
         spark.catalog.refreshByPath(path)
         val raw = spark.read.parquet(path)
+        codec.requireCarriedBy(raw.schema, path)
         if (!MaintenanceProtocol.isDirty(spark, path)) raw
         else {
           val head = raw.select(col("iv_cap")).take(1)
@@ -831,7 +828,7 @@ object Similarity {
       org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(StructField("cell", IntegerType) +:
-      postingsDataSchema(hasGp).fields)
+      PostingsCodec.Float.dataSchema(hasGp).fields)
   }
 
   /** Persist postings in the CELL-GROUP ("packed") layout: one
@@ -866,6 +863,7 @@ object Similarity {
       cellsPerPack: Int = 128): Unit = {
     val spark = postings.sparkSession
     require(cellsPerPack > 0, s"cellsPerPack=$cellsPerPack")
+    PostingsCodec.requireFloatFrame(postings, "the packed layout")
     val CoarseQuantizer.Params(cells, cap, ck, gp) = postingsParams(postings)
     val packs = (cells + cellsPerPack - 1) / cellsPerPack
     MaintenanceProtocol.withLease(spark, path, "build_packed") {
@@ -961,14 +959,24 @@ object Similarity {
       .collectFirst { case Literal(v: Int, _) => v }
   }
 
-  def saveIvfPostings(postings: DataFrame, path: String): Unit =
+  /** Persist an [[ivfPostings]] frame as a self-contained artifact,
+    * under the codec it was built with: a `Pq` frame must carry these
+    * codebooks' checksum (fail-fast), and its codebooks + encoding law
+    * land in the `_pq_codebooks` sidecar, so the artifact serves and
+    * appends from its path alone. */
+  def saveIvfPostings(postings: DataFrame, path: String,
+      codec: PostingsCodec = PostingsCodec.Float): Unit =
     // The lease is a SIBLING file, so it survives the full overwrite
     // below — a rebuild of a live artifact fails fast against a
     // concurrent maintainer instead of wiping the files under it.
     MaintenanceProtocol.withLease(postings.sparkSession, path, "build") {
+      codec.requireCarriedBy(postings.schema, "the postings frame")
+      val pq = Some(codec).collect { case c: PostingsCodec.Pq => c }
+      pq.foreach(_.requireOwnCodes(postings, "the postings frame"))
       byCellPinned(postings,
         ivCellsFromPlan(postings).getOrElse(Int.MaxValue))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
+      pq.foreach(PostingsCodec.save(postings.sparkSession, path, _))
       // Born with a manifest: one listing + one footer-bounded count job
       // at build time (the overwrite just wiped any prior sidecar along
       // with the data) buys every later append/compact/serve its
@@ -1095,7 +1103,7 @@ object Similarity {
     * probe and the lease — the stale-roll-forward seam the lease
     * exists to close. */
   private def recapRetained(spark: SparkSession, path: String,
-      delta0: DataFrame, cap: Int): Unit =
+      delta0: DataFrame, cap: Int, codec: PostingsCodec): Unit =
     MaintenanceProtocol.withLease(spark, path, "recap_retained") {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
@@ -1125,7 +1133,7 @@ object Similarity {
           .parquetOverFileIndex(spark,
             new graft.plans.PostingsFileIndex(path,
               st.copy(files = st.files.filter(f => touchedExisting(f.cell)))),
-            postingsDataSchema(st.params.gp.nonEmpty))
+            codec.dataSchema(st.params.gp.nonEmpty))
       // single-pass fold (guide §1.2): consumed once by the staged
       // write; per-cell rows ride the landed footers (stageIntoCells),
       // so the old localCheckpoint + count pair of jobs is gone
@@ -1298,29 +1306,34 @@ object Similarity {
     * a from-scratch build would, and dedups on (cell, cand_id), so a
     * crash-replayed batch converges. Read side and write side are both
     * ∝ touched cells (params from the manifest or one part-file, old
-    * rows from the touched cells only). Spec-pinned: every mode (+
-    * compaction for `Fragment`) ≡ the [[ivfPostings]] rebuild over the
-    * union, under either quantizer. */
+    * rows from the touched cells only). The batch is encoded under the
+    * artifact's own codec ([[PostingsCodec.at]]: a PQ artifact's
+    * codebooks and encoding law come from its sidecar). Spec-pinned:
+    * every mode (+ compaction for `Fragment`) ≡ the [[ivfPostings]]
+    * rebuild over the union, under either quantizer and either codec. */
   def appendIvfPostings(spark: SparkSession, path: String,
       q: CoarseQuantizer, newEmb: DataFrame,
       mode: MaintenanceMode): AppendRoute = {
     val state0 = PostingsManifest.readClean(spark, path)
-    val p = state0.map(_.params).getOrElse(paramsFromFooter(spark, path))
+    val codec = PostingsCodec.at(spark, path)
+    val p = state0.map(_.params)
+      .getOrElse(paramsFromFooter(spark, path, codec))
     q.requireAppendLaw(p)
-    val delta = CoarseQuantizer.stamp(q.home(prepared(newEmb)), p)
+    val delta = codec.stamp(CoarseQuantizer.stamp(
+      codec.payload(q.home(prepared(newEmb)), q), p))
     def fixed(route: String) = AppendRoute(route, -1L, -1L, Double.NaN)
     mode match {
       case MaintenanceMode.Fragment =>
         appendFragmentFiles(spark, path, delta)
         fixed("fragment")
       case MaintenanceMode.Retained if state0.nonEmpty =>
-        recapRetained(spark, path, delta, p.cap)
+        recapRetained(spark, path, delta, p.cap, codec)
         fixed("recap_retained")
       case MaintenanceMode.InPlace | MaintenanceMode.Retained =>
         recapTouchedDirsAndOverwrite(spark, path, delta, p.cap)
         fixed("recap")
       case MaintenanceMode.Auto(threshold) =>
-        routeAppend(spark, path, delta, p.cap, state0, threshold)
+        routeAppend(spark, path, delta, p.cap, state0, threshold, codec)
     }
   }
 
@@ -1339,7 +1352,7 @@ object Similarity {
     * the same cost class the routes pay anyway. */
   private def routeAppend(spark: SparkSession, path: String,
       delta: DataFrame, cap: Int, state0: Option[PostingsManifest.State],
-      fragmentThreshold: Double): AppendRoute = {
+      fragmentThreshold: Double, codec: PostingsCodec): AppendRoute = {
     import spark.implicits._
     val perCellBatch = timed("route_probe")(
       delta.groupBy(col("cell").cast("int").as("cell")).count()
@@ -1357,7 +1370,7 @@ object Similarity {
       appendFragmentFiles(spark, path, delta)
       AppendRoute("fragment", batchRows, touchedRows, ratio)
     } else if (state0.nonEmpty) {
-      recapRetained(spark, path, delta, cap)
+      recapRetained(spark, path, delta, cap, codec)
       AppendRoute("recap_retained", batchRows, touchedRows, ratio)
     } else {
       recapTouchedDirsAndOverwrite(spark, path, delta, cap)
@@ -1399,10 +1412,7 @@ object Similarity {
     * re-acquire (the lease is deliberately non-reentrant: a second
     * acquire is exactly the corruption signal it exists to raise). */
   private def compactIvfPostingsLocked(spark: SparkSession,
-      path: String,
-      dataSchema: PostingsManifest.State =>
-        org.apache.spark.sql.types.StructType = st =>
-        postingsDataSchema(st.params.gp.nonEmpty)): (Int, Int, Int) = {
+      path: String): (Int, Int, Int) = {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1434,7 +1444,7 @@ object Similarity {
           .parquetOverFileIndex(spark,
             new graft.plans.PostingsFileIndex(path,
               st.copy(files = st.files.filter(f => fragmented(f.cell)))),
-            dataSchema(st))
+            PostingsCodec.at(spark, path).dataSchema(st.params.gp.nonEmpty))
         val folded = capFold(frag, cap, fragmented.size)
         MaintenanceProtocol.markDirty(spark, path)
         val counts = overwriteTouchedCells(spark, path, folded,
@@ -1556,7 +1566,8 @@ object Similarity {
               .parquetOverFileIndex(spark,
                 new graft.plans.PostingsFileIndex(path,
                   st.copy(files = st.files.filter(f => fragmented(f.cell)))),
-                postingsDataSchema(st.params.gp.nonEmpty))
+                PostingsCodec.at(spark, path)
+                  .dataSchema(st.params.gp.nonEmpty))
             // single-pass fold: consumed once by the staged write;
             // per-cell rows ride the landed footers (stageIntoCells)
             val entries = stageIntoCells(spark, path,
@@ -1679,7 +1690,7 @@ object Similarity {
           .parquetOverFileIndex(spark,
             new graft.plans.PostingsFileIndex(path,
               st.copy(files = st.files.filter(f => fragmented(f.cell)))),
-            postingsDataSchema(st.params.gp.nonEmpty))
+            PostingsCodec.at(spark, path).dataSchema(st.params.gp.nonEmpty))
         Some(frag.count() -
           frag.dropDuplicates(Seq("cell", "cand_id")).count())
       }
@@ -1743,21 +1754,34 @@ object Similarity {
     * to cells OUTSIDE the collected probe set on the second pass and
     * silently lose results — materialize such a frame first. (A shared
     * localCheckpoint would pin executor storage for the life of the
-    * returned lazy plan with no safe unpersist point.) */
+    * returned lazy plan with no safe unpersist point.)
+    *
+    * A PQ artifact ([[PostingsCodec.Pq]], served from `Classic(path)`
+    * only) ranks its candidates by asymmetric distance against the
+    * STORED codes — one lookup table per (query, probed cell) under the
+    * residual law, codebooks and law from the artifact's sidecar, a
+    * foreign `pq_ck` in the probed files fails fast — and returns
+    * `(vec_id, neighbor_id, ad2, rn)`: the `k`-deep ADC preselect that
+    * [[rerankExactL2]] re-ranks against the float corpus (the IVFADC
+    * two-stage serve; q91 composes it). */
   def ivfTopKFromPostings(queryEmb: DataFrame, q: CoarseQuantizer,
       source: PostingsSource, probes: Int, k: Int): DataFrame = {
     val spark = queryEmb.sparkSession
     import spark.implicits._
-    val (postings, params, packCpp) = source match {
-      case PostingsSource.Frame(df) => (df, postingsParams(df), None)
+    val (postings, params, packCpp, codec) = source match {
+      case PostingsSource.Frame(df) =>
+        PostingsCodec.requireFloatFrame(df, "a PostingsSource.Frame serve")
+        (df, postingsParams(df), None, PostingsCodec.Float)
       case PostingsSource.Classic(path) =>
-        (readPostings(spark, path), postingsParamsAtPath(spark, path), None)
+        val codec = PostingsCodec.at(spark, path)
+        (openPostings(spark, path, codec),
+          postingsParamsAtPath(spark, path, codec), None, codec)
       case PostingsSource.Packed(path) =>
         // manifest-clean: params ride the sidecar, zero data-page jobs
         // on the serve path; the fallback derives them from the data
         readPackedPostingsWithCpp(spark, path) match {
-          case (df, Some((p, cpp))) => (df, p, Some(cpp))
-          case (df, None) => (df, postingsParams(df), None)
+          case (df, Some((p, cpp))) => (df, p, Some(cpp), PostingsCodec.Float)
+          case (df, None) => (df, postingsParams(df), None, PostingsCodec.Float)
         }
     }
     q.requireServes(params)
@@ -1770,7 +1794,16 @@ object Similarity {
         packCpp.fold(byCell)(cpp =>
           byCell.filter($"pack".isin(probed.map(_ / cpp).distinct: _*)))
     }
-    serveQueriesOverPostings(queries, candidates, k)
+    codec match {
+      case PostingsCodec.Float => serveQueriesOverPostings(queries, candidates, k)
+      case pq: PostingsCodec.Pq =>
+        pq.requireOwnCodes(candidates, "the PQ postings")
+        // each candidate lives under ONE home cell and a query probes
+        // distinct cells, so a (query, candidate) pair meets once
+        adcTopK(pq.probeLuts(queries, q)
+          .join(candidates.select($"cell", $"cand_id", $"codes"), Seq("cell"))
+          .filter($"vec_id" =!= $"cand_id"), pq, "vec_id", "cand_id", k)
+    }
   }
 
   /** [[ivfTopKFromPostings]] under `Flat(cents)` over a postings frame,
@@ -1827,22 +1860,44 @@ object Similarity {
   // query stays un-quantized, one m×k lookup table is computed per query,
   // and every (query, candidate) pair costs m array lookups instead of a
   // dim-length float scan. Codebooks are driver-side index metadata
-  // (m×k×dsub doubles) broadcast to the codegen kernels — the
-  // [[graft.expressions.IvfCentroidSet]] stance.
+  // (m×k×dsub doubles) broadcast to the codegen kernels once per codebook
+  // identity ([[PostingsCodec.Pq.broadcast]]). The persisted IVF+PQ index
+  // is the postings artifact under [[PostingsCodec.Pq]]: [[ivfPostings]]
+  // / [[saveIvfPostings]] build it, [[appendIvfPostings]] and the
+  // compactions maintain it, [[ivfTopKFromPostings]] + [[rerankExactL2]]
+  // serve it.
+
+  /** The vectors a codebook fit quantizes, `(vec_id, v)` over a
+    * [[prepared]] frame: the raw vectors, or under `residual = Some(q)`
+    * the residuals `v − centroid(home cell)` — home assignment through
+    * the quantizer's kernel (d2 and tie-breaks bit-equal to the
+    * window-ranked form and the SQL oracle; PqSpec-pinned), the subtract
+    * the same ascending `zip_with` the codec encodes with. */
+  private def trainingVectors(corpus: DataFrame,
+      residual: Option[CoarseQuantizer]): DataFrame =
+    residual.fold(corpus.select(col("vec_id"), col("v")))(q =>
+      PostingsCodec.withCentroid(q.home(corpus), q)
+        .select(col("cand_id").as("vec_id"),
+          PostingsCodec.residualOf(col("cv"), col("centroid")).as("v")))
 
   /** Oracle-twin PQ codebooks: subspace `s`'s codeword `c` = the s-th
     * dsub-slice of the c-th corpus vector (vec_id ascending) — plain
     * SQL both sides, exactly the q34 fixed-centroid stance (the trained
     * path is [[fitPqCodebooks]], spec-verified for reconstruction
-    * error). Driver-side collect of k vectors — bounded index
-    * metadata. */
-  def pqCodebooksFromHead(emb: DataFrame, m: Int, k: Int):
+    * error). Under `residual = Some(q)` the slices are of the first k
+    * vectors' RESIDUALS against their home cells under `q` — the space
+    * the IVFADC composition quantizes. Driver-side collect of k
+    * vectors — bounded index metadata. */
+  def pqCodebooksFromHead(emb: DataFrame, m: Int, k: Int,
+      residual: Option[CoarseQuantizer] = None):
       graft.expressions.PqCodebookSet = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val head = prepared(emb).orderBy($"vec_id").limit(k)
+    val head = trainingVectors(prepared(emb).orderBy($"vec_id").limit(k),
+      residual).orderBy($"vec_id")
       .select($"v").as[Seq[Double]].collect().map(_.toArray)
-    require(head.length == k, s"corpus has only ${head.length} < k=$k rows")
+    require(head.length == k,
+      s"corpus has only ${head.length} < k=$k assignable rows")
     val dim = head(0).length
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val dsub = dim / m
@@ -1866,27 +1921,24 @@ object Similarity {
     * membership depends only on its key, never on the partition it
     * sits in; `DataFrame.sample` is seeded per partition index and
     * would reshuffle the selection with the input layout), then
-    * GLOBALLY ordered before collect. */
+    * GLOBALLY ordered before collect. `residual = Some(q)` fits the
+    * residuals `v − centroid(home cell)` instead — what a production
+    * IVF+PQ build fits (FAISS `IndexIVFPQ.train`). */
   def fitPqCodebooks(emb: DataFrame, m: Int, k: Int, iters: Int = 10,
       seed: Long = 42L, trainFraction: Double = 1.0,
-      sampleCap: Int = 65536): graft.expressions.PqCodebookSet = {
+      sampleCap: Int = 65536, residual: Option[CoarseQuantizer] = None):
+      graft.expressions.PqCodebookSet = {
     val spark = emb.sparkSession
     import spark.implicits._
     require(iters >= 1, s"iters=$iters")
-    val sampled =
-      (if (trainFraction >= 1.0) prepared(emb)
-       else prepared(emb).filter(
-         pmod(xxhash64($"vec_id", lit(seed)), lit(1000000L))
-           < lit((trainFraction * 1000000L).toLong)))
-        .orderBy($"vec_id").limit(sampleCap)
-        .select($"v").as[Seq[Double]].collect().map(_.toArray)
-    fitCodebooksFromSample(sampled, m, k, iters)
-  }
-
-  /** The per-subspace Lloyd tail shared by the raw and residual fits:
-    * m independent k-means fits over the sample's dsub-slices. */
-  private def fitCodebooksFromSample(sampled: Array[Array[Double]],
-      m: Int, k: Int, iters: Int): graft.expressions.PqCodebookSet = {
+    val base =
+      if (trainFraction >= 1.0) prepared(emb)
+      else prepared(emb).filter(
+        pmod(xxhash64($"vec_id", lit(seed)), lit(1000000L))
+          < lit((trainFraction * 1000000L).toLong))
+    val sampled = trainingVectors(base, residual)
+      .orderBy($"vec_id").limit(sampleCap)
+      .select($"v").as[Seq[Double]].collect().map(_.toArray)
     require(sampled.nonEmpty, "PQ fit saw an empty sample — raise " +
       "trainFraction or check the corpus")
     val dim = sampled(0).length
@@ -1910,95 +1962,6 @@ object Similarity {
     graft.expressions.PqCodebookSet(m, dsub, k, codes)
   }
 
-  /** Elementwise `v − centroid` — THE residual the IVFADC composition
-    * quantizes (Jégou et al. TPAMI 2011 §IV; FAISS `IndexIVFPQ`
-    * likewise encodes residuals): within one coarse cell every member
-    * shares the centroid offset, so codebook capacity describes the
-    * small within-cell geometry instead of re-describing the coarse
-    * layout the quantizer already captured — at high cell counts
-    * raw-vector codes waste most codewords on between-cell variance
-    * and the recall knee sags (the r18 16k-cell 0.649 flat). A
-    * codegen'd `zip_with`: one double subtract per dim, ascending —
-    * bit-identical to the oracle's `list_transform((x,i) → x − c[i])`. */
-  private def residualOf(v: Column, centroid: Column): Column =
-    zip_with(v, centroid, (a, b) => a - b)
-
-  /** The per-row home-cell frame `(…, cell, centroid, d2)` used by the
-    * residual fits/codebooks: assignment by the same window formula as
-    * [[CoarseQuantizer.home]] (d2 bit-identical to the kernel and the SQL
-    * oracle), centroid KEPT so the residual can be computed. */
-  private def homeWithCentroid(emb: DataFrame,
-      cents: Array[Array[Double]]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val c2 = centroidTableOf(spark, cents)
-      .withColumn("cn2", dot($"centroid", $"centroid"))
-    val byDist = Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cell".asc)
-    prepared(emb)
-      .join(broadcast(c2))
-      .withColumn("d2",
-        $"nrm" * $"nrm" + $"cn2" - lit(2.0) * dot($"v", $"centroid"))
-      .filter($"d2".isNotNull)
-      .withColumn("cr", row_number().over(byDist))
-      .filter($"cr" === 1)
-  }
-
-  /** Oracle-twin RESIDUAL codebooks for the IVF+PQ composition:
-    * subspace `s`'s codeword `c` = the s-th dsub-slice of the c-th
-    * corpus vector's RESIDUAL `v − centroid(home cell)` (vec_id
-    * ascending) — the [[pqCodebooksFromHead]] stance applied to the
-    * residual space the composed serve actually quantizes. Home
-    * assignment runs IN the engine (same window formula as every
-    * assignment route — bit-identical d2, same tie-breaks), so the
-    * collected codewords match the plain-SQL oracle's to the bit. */
-  def pqCodebooksFromHeadResidual(emb: DataFrame,
-      cents: Array[Array[Double]], m: Int, k: Int):
-      graft.expressions.PqCodebookSet = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val resid = homeWithCentroid(emb.orderBy($"vec_id").limit(k), cents)
-      .select($"vec_id", residualOf($"v", $"centroid").as("r"))
-      .orderBy($"vec_id")
-      .select($"r").as[Seq[Double]].collect().map(_.toArray)
-    require(resid.length == k, s"corpus has only ${resid.length} < k=$k " +
-      "assignable rows")
-    val dim = resid(0).length
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val codes = Array.tabulate(m * k) { r =>
-      val s = r / k
-      val c = r % k
-      java.util.Arrays.copyOfRange(resid(c), s * dsub, (s + 1) * dsub)
-    }
-    graft.expressions.PqCodebookSet(m, dsub, k, codes)
-  }
-
-  /** Trained RESIDUAL codebooks: [[fitPqCodebooks]]'s per-subspace
-    * Lloyd's over residuals `v − centroid(home cell)` instead of raw
-    * vectors — what a production IVF+PQ build fits (FAISS
-    * `IndexIVFPQ.train`). Assignment runs in the engine (one bounded
-    * sample job); the m sub-fits are driver arithmetic over the same
-    * capped, content-hash-selected, globally-ordered sample law as the
-    * raw fit — deterministic across reruns and partitionings. */
-  def fitPqCodebooksResidual(emb: DataFrame, cents: Array[Array[Double]],
-      m: Int, k: Int, iters: Int = 10, seed: Long = 42L,
-      trainFraction: Double = 1.0, sampleCap: Int = 65536):
-      graft.expressions.PqCodebookSet = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    require(iters >= 1, s"iters=$iters")
-    val base =
-      if (trainFraction >= 1.0) emb
-      else emb.filter(
-        pmod(xxhash64(col("vec_id"), lit(seed)), lit(1000000L))
-          < lit((trainFraction * 1000000L).toLong))
-    val sampled = homeWithCentroid(base, cents)
-      .select($"vec_id", residualOf($"v", $"centroid").as("r"))
-      .orderBy($"vec_id").limit(sampleCap)
-      .select($"r").as[Seq[Double]].collect().map(_.toArray)
-    fitCodebooksFromSample(sampled, m, k, iters)
-  }
-
   /** One-scan corpus encode: `(vec_id, label, codes array<int>, pq_ck)`
     * — per-row kernel work inside whole-stage codegen, no shuffle. The
     * constant `pq_ck` column carries the codebook checksum (RLE's to
@@ -2009,44 +1972,43 @@ object Similarity {
       cs: graft.expressions.PqCodebookSet): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val bc = spark.sparkContext.broadcast(cs)
+    val pq = PostingsCodec.Pq(cs, residual = false)
     prepared(emb).select($"vec_id", $"label",
-      GraftColumnBridge.column(graft.expressions.PqEncode(bc,
-        GraftColumnBridge.expression($"v"))).as("codes"),
-      lit(cs.checksum).as("pq_ck"))
+      pq.encode(spark, $"v").as("codes"), lit(cs.checksum).as("pq_ck"))
   }
+
+  /** The ADC-scored candidate tail every PQ serve ends in: `pairs`
+    * carry a lookup table `lut` and a code array `codes` per (qCol,
+    * cCol) pair. Ranking and output both use the 4-dp-rounded ADC
+    * distance (ascending, candidate-id tie-break) so cross-engine float
+    * differences cannot flip near-tie neighbors — the
+    * [[graft.functions.VectorOps.roundedSim]] stance. The heap ranks
+    * the NEGATED distance: all-zero distances negate to a uniform -0.0,
+    * so it never compares mixed zero signs. Output
+    * `(vec_id, neighbor_id, ad2, rn)`. */
+  private def adcTopK(pairs: DataFrame, pq: PostingsCodec.Pq, qCol: String,
+      cCol: String, k: Int): DataFrame =
+    topKPerQuery(pairs.select(col(qCol), col(cCol),
+        (-(round(pq.adc(col("lut"), col("codes")), 4) + lit(0.0))).as("sim")),
+        qCol, cCol, k)
+      .select(col(qCol).as("vec_id"), col("neighbor_id"),
+        ((-col("sim")) + lit(0.0)).as("ad2"), col("rn"))
 
   /** ADC top-k from an already-encoded code relation (the serve path a
     * deployment runs per query batch — the corpus is encoded ONCE, this
     * never touches a corpus vector): queries compute their m×k lookup
     * table in one scan, the broadcast query block fans across the code
-    * relation, and each pair costs m lookups
-    * ([[graft.expressions.PqAdc]]). Ranking and output both use the
-    * 4-dp-rounded ADC distance (ascending, cand_id tie-break) so
-    * cross-engine float differences cannot flip near-tie neighbors —
-    * the [[graft.functions.VectorOps.roundedSim]] stance. Fails fast on
-    * a code relation carrying a foreign codebook checksum. */
+    * relation, and each pair costs m lookups ([[adcTopK]]). Fails fast
+    * on a code relation carrying a foreign codebook checksum. */
   def pqTopKFromCodes(codes: DataFrame, queries: DataFrame,
       cs: graft.expressions.PqCodebookSet, k: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.GraftColumnBridge
-    // distinct, not first-row: a UNION of code relations encoded under
-    // different codebooks must fail here too (mixed codes are each
-    // individually meaningless against the wrong lut). The checksum
-    // column is constant per encode, so the distinct collapses
-    // map-side to ≤1 value per input file.
-    val foreign = codes.select($"pq_ck").distinct()
-      .as[Long].collect().filterNot(_ == cs.checksum)
-    require(foreign.isEmpty,
-      s"code relation carries codebook checksum(s) ${foreign.mkString(",")}, " +
-        s"serve asked for ${cs.checksum} — re-encode or load the " +
-        "matching codebooks")
-    val bc = spark.sparkContext.broadcast(cs)
+    val pq = PostingsCodec.Pq(cs, residual = false)
+    pq.requireOwnCodes(codes, "the code relation")
     val q = queries.select($"vec_id".as("query_id"),
-      GraftColumnBridge.column(graft.expressions.PqLut(bc,
-        GraftColumnBridge.expression(asDouble($"embedding")))).as("lut"))
+      pq.lut(spark, asDouble($"embedding")).as("lut"))
     // the broadcast join fans out |queries|× — pre-split a narrow or
     // single-file code scan to the cluster's parallelism first (the
     // bruteForceTopK stance; code rows are ~m ints so the exchange is
@@ -2058,18 +2020,8 @@ object Similarity {
         val bytes = GraftColumnBridge.planSizeBytes(codes)
         if (bytes < (32L << 20)) codes else codes.repartition(par)
       }
-    val pairs = corpus
-      .join(broadcast(q), $"vec_id" =!= $"query_id")
-      .withColumn("ad2r", round(GraftColumnBridge.column(
-        graft.expressions.PqAdc(GraftColumnBridge.expression($"lut"),
-          GraftColumnBridge.expression($"codes"), cs.k)), 4) + lit(0.0))
-      // rank ASCENDING via the bounded-heap top-k aggregate (negated
-      // score — all-zero distances negate to a uniform -0.0, so the
-      // heap never compares mixed zero signs)
-      .select($"query_id", $"vec_id", (-$"ad2r").as("sim"))
-    topKPerQuery(pairs, "query_id", "vec_id", k)
-      .select($"query_id".as("vec_id"), $"neighbor_id",
-        ((-$"sim") + lit(0.0)).as("ad2"), $"rn")
+    adcTopK(corpus.join(broadcast(q), $"vec_id" =!= $"query_id"), pq,
+      "query_id", "vec_id", k)
   }
 
   /** PQ ADC top-k end-to-end: encode the corpus (one scan) and serve
@@ -2083,52 +2035,38 @@ object Similarity {
   /** PQ serve with exact RE-RANK — the production two-stage shape
     * (FAISS's `IndexPQ + refine`): ADC preselects `fetch ≥ k`
     * candidates from the compressed codes (cheap, memory-bound), then
-    * ONLY those ~queries×fetch rows join back to the full-vector
-    * corpus for an exact L2 re-rank. The quantizer bounds which rows
-    * are ever looked at; the float vectors are touched ∝ fetch, never
-    * ∝ corpus — at 100 TB the re-rank join is a broadcast of the
-    * (query, cand) preselect list against the id-sorted corpus, a
-    * pushed-down point-lookup scan. Within-cell ADC ties (all members
-    * of one quantization region score identically) stop mattering:
-    * the re-rank restores exact order, so recall is governed by
-    * `fetch`, not by tie-break luck. */
+    * [[rerankExactL2]] ranks ONLY those against the full vectors.
+    * Within-cell ADC ties (all members of one quantization region
+    * score identically) stop mattering: the re-rank restores exact
+    * order, so recall is governed by `fetch`, not by tie-break luck. */
   def pqTopKRerank(emb: DataFrame, queryPred: Column,
       cs: graft.expressions.PqCodebookSet, k: Int, fetch: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     require(fetch >= k, s"fetch=$fetch must be >= k=$k")
-    val pre = pqTopKAdc(emb, queryPred, cs, fetch)
-      .select($"vec_id".as("query_id"), $"neighbor_id")
-    rerankExactL2(emb, queryPred, pre, k)
+    rerankExactL2(emb, emb.filter(queryPred),
+      pqTopKAdc(emb, queryPred, cs, fetch), k)
   }
 
-  /** Exact-L2 re-rank of a preselected `(query_id, neighbor_id)` pair
-    * list: only those rows join back to the full-vector corpus, ranked
-    * on the 4-dp-rounded squared distance ascending (cand_id
-    * tie-break). Output `(vec_id, neighbor_id, d2, rn)`. The float
-    * vectors are touched ∝ |pre|, never ∝ corpus — at scale the pair
-    * list broadcasts and the corpus side is a pushed-down point-lookup
-    * scan. Shared tail of every two-stage serve
-    * ([[pqTopKRerank]], [[ivfPqTopKWithCentroids]]). */
-  private def rerankExactL2(emb: DataFrame, queryPred: Column,
-      pre: DataFrame, k: Int): DataFrame =
-    rerankExactL2Frames(emb, prepared(emb).filter(queryPred), pre, k)
-
-  /** [[rerankExactL2]] with the query set as its own PREPARED frame
-    * (`vec_id, v, nrm`) — the form the artifact-served routes use,
-    * where queries arrive as a separate relation rather than a
-    * predicate over the corpus. */
-  private def rerankExactL2Frames(emb: DataFrame, preparedQueries: DataFrame,
-      pre: DataFrame, k: Int): DataFrame = {
-    val spark = emb.sparkSession
+  /** Exact-L2 re-rank of a preselected pair list — the second stage of
+    * every two-stage PQ serve ([[pqTopKRerank]],
+    * [[ivfPqTopKWithCentroids]], and [[ivfTopKFromPostings]] over a PQ
+    * artifact). `pre` is any top-k output `(vec_id, neighbor_id, …)`
+    * for the queries in `queryEmb`; only those pairs join back to the
+    * full-vector `corpus`, ranked on the 4-dp-rounded squared distance
+    * ascending (neighbor-id tie-break). Output
+    * `(vec_id, neighbor_id, d2, rn)`. The float vectors are touched
+    * ∝ |pre|, never ∝ corpus — at scale the query block broadcasts and
+    * the corpus side is a pushed-down point-lookup scan. */
+  def rerankExactL2(corpus: DataFrame, queryEmb: DataFrame, pre: DataFrame,
+      k: Int): DataFrame = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    val corpus = prepared(emb)
+    val vectors = prepared(corpus)
       .select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val queries = preparedQueries
+    val queries = prepared(queryEmb)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val pairs = pre
+    val pairs = pre.select($"vec_id".as("query_id"), $"neighbor_id")
       .join(broadcast(queries), Seq("query_id"))
-      .join(corpus, Seq("neighbor_id"))
+      .join(vectors, Seq("neighbor_id"))
       .withColumn("d2r",
         round($"qn" * $"qn" + $"cn" * $"cn" - lit(2.0) * dot($"qv", $"cv"), 4)
           + lit(0.0))
@@ -2138,42 +2076,34 @@ object Similarity {
         ((-$"sim") + lit(0.0)).as("d2"), $"rn")
   }
 
-  /** IVF+PQ serve — the full FAISS `IndexIVFPQ` composition, both
-    * bounds at once: the coarse quantizer prunes WHICH candidates are
-    * scored (a query meets only its `probes` nearest cells' members,
-    * hot cells capped — the compute bound), PQ compresses WHAT the
-    * index side carries (`(cell, cand_id, codes)` — m ints per vector,
-    * no floats — the memory bound), ADC ranks the pruned candidates
-    * with m lookups per pair, and the `fetch`-deep preselect re-ranks
-    * exactly against the full vectors ([[rerankExactL2]] — touched
-    * ∝ queries×fetch, never ∝ corpus). Fixed `centroids` make the
-    * whole route SQL-expressible (the q34/q89 oracle stance; trained
-    * paths compose [[fitIvfIndex]]/[[fitPqCodebooksResidual]] into the
-    * same serve). At 100 TB: the index side is one scan assigning +
-    * encoding (both codegen kernels over broadcast artifacts),
-    * candidates fan through the cell join ∝ probed-cell populations,
-    * and nothing vector-sized ever shuffles — codes rows are ~4×m
-    * bytes.
+  /** IVF+PQ serve in the WINDOW-RANKED form — the oracle-expressible
+    * reference of the IVFADC composition (the q34/q90 stance, as
+    * [[ivfTopKWithCentroids]] is for the float postings): the coarse
+    * quantizer prunes WHICH candidates are scored (a query meets only
+    * its `probes` nearest cells' members, hot cells capped), PQ
+    * compresses WHAT the index side carries (`(cell, cand_id, codes)`),
+    * ADC ranks the pruned candidates to `fetch` depth ([[adcTopK]]),
+    * and [[rerankExactL2]] re-ranks exactly against the full vectors.
+    * Fixed `centroids` make the whole route SQL-expressible; the
+    * deployable form is the persisted artifact under
+    * [[PostingsCodec.Pq]] (spec-pinned equal to this at the same
+    * geometry).
     *
     * `residual = true` (default) is the published IVFADC form: the
     * index side PQ-encodes `v − centroid(cell)` and each (query,
     * probed cell) pair builds its lookup table against
-    * `q − centroid(cell)` — per-CELL LUTs, probes per query instead of
-    * one, the price of codebooks that describe within-cell geometry
-    * instead of re-describing the coarse layout (pass codebooks fitted
-    * on residuals: [[fitPqCodebooksResidual]] /
-    * [[pqCodebooksFromHeadResidual]]). `residual = false` keeps the
-    * raw-vector form (one LUT per query) for A/B and the q90-era
-    * sweep baselines. */
+    * `q − centroid(cell)` — pass codebooks fitted on residuals
+    * ([[fitPqCodebooks]] / [[pqCodebooksFromHead]] with `residual`).
+    * `residual = false` keeps the raw-vector form (one LUT per query)
+    * for A/B. */
   def ivfPqTopKWithCentroids(emb: DataFrame, queryPred: Column,
       centroids: DataFrame, cs: graft.expressions.PqCodebookSet,
       probes: Int, k: Int, fetch: Int,
       cellCap: Int = Int.MaxValue, residual: Boolean = true): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
     require(fetch >= k, s"fetch=$fetch must be >= k=$k")
-    val bc = spark.sparkContext.broadcast(cs)
+    val pq = PostingsCodec.Pq(cs, residual)
     val corpus = prepared(emb)
     val cents = centroids
       .withColumn("cn2", dot($"centroid", $"centroid"))
@@ -2187,8 +2117,6 @@ object Similarity {
         $"nrm" * $"nrm" + $"cn2" - lit(2.0) * dot($"v", $"centroid"))
       .filter($"d2".isNotNull)
       .withColumn("cr", row_number().over(byDist))
-    def encodeInput(v: Column): Column =
-      if (residual) residualOf(v, $"centroid") else v
     // index side: home cell, capped, ENCODED — the float vector is
     // dropped here and never carried again until the re-rank
     val byCell = Window.partitionBy($"cell").orderBy($"d2".asc, $"vec_id".asc)
@@ -2196,27 +2124,15 @@ object Similarity {
       .withColumn("cellRank", row_number().over(byCell))
       .filter($"cellRank" <= cellCap)
       .select($"cell", $"vec_id".as("cand_id"),
-        GraftColumnBridge.column(graft.expressions.PqEncode(bc,
-          GraftColumnBridge.expression(encodeInput($"v")))).as("codes"))
+        pq.encode(spark, pq.input($"v", $"centroid")).as("codes"))
     // query side: probed cells + an ADC lookup table per query (per
-    // probed CELL under residual encoding — the LUT depends on the
-    // cell's centroid there)
+    // probed CELL under residual encoding)
     val queries = ranked.filter($"cr" <= probes && queryPred)
       .select($"cell", $"vec_id",
-        GraftColumnBridge.column(graft.expressions.PqLut(bc,
-          GraftColumnBridge.expression(encodeInput($"v")))).as("lut"))
-    // each candidate lives under exactly ONE home cell and a query
-    // probes distinct cells, so a (query, candidate) pair meets once
-    val pairs = queries
-      .join(indexed, Seq("cell"))
-      .filter($"vec_id" =!= $"cand_id")
-      .withColumn("ad2r", round(GraftColumnBridge.column(
-        graft.expressions.PqAdc(GraftColumnBridge.expression($"lut"),
-          GraftColumnBridge.expression($"codes"), cs.k)), 4) + lit(0.0))
-      .select($"vec_id", $"cand_id", (-$"ad2r").as("sim"))
-    val pre = topKPerQuery(pairs, "vec_id", "cand_id", fetch)
-      .select($"vec_id".as("query_id"), $"neighbor_id")
-    rerankExactL2(emb, queryPred, pre, k)
+        pq.lut(spark, pq.input($"v", $"centroid")).as("lut"))
+    val pre = adcTopK(queries.join(indexed, Seq("cell"))
+      .filter($"vec_id" =!= $"cand_id"), pq, "vec_id", "cand_id", fetch)
+    rerankExactL2(emb, emb.filter(queryPred), pre, k)
   }
 
   /** Mean squared reconstruction error of the codebooks over the corpus
@@ -2229,15 +2145,9 @@ object Similarity {
       cs: graft.expressions.PqCodebookSet): Double = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val bc = spark.sparkContext.broadcast(cs)
-    prepared(emb).select(
-      GraftColumnBridge.column(graft.expressions.PqAdc(
-        GraftColumnBridge.expression(GraftColumnBridge.column(
-          graft.expressions.PqLut(bc, GraftColumnBridge.expression($"v")))),
-        GraftColumnBridge.expression(GraftColumnBridge.column(
-          graft.expressions.PqEncode(bc, GraftColumnBridge.expression($"v")))),
-        cs.k)).as("e"))
+    val pq = PostingsCodec.Pq(cs, residual = false)
+    prepared(emb)
+      .select(pq.adc(pq.lut(spark, $"v"), pq.encode(spark, $"v")).as("e"))
       .agg(avg($"e")).as[Double].collect()(0)
   }
 
@@ -2306,217 +2216,5 @@ object Similarity {
       .select($"vec_id".as("query_id"), $"neighbor_id")
     val hits = truth.join(approx, Seq("query_id", "neighbor_id")).count()
     hits.toDouble / (nQueries * k)
-  }
-
-  // ------------------------------------------------ PQ index artifact
-  // The PERSISTED IVF+PQ index — what makes the PQ family deployable
-  // (the r18 gap): codebooks live in a checksummed driver-written
-  // sidecar ([[PqCodebookStore]]), coded postings `(cell, cand_id, d2,
-  // codes)` live in the classic cell-partitioned layout under the SAME
-  // [[PostingsManifest]] machinery as the float postings family
-  // (incremental `_manifest_log`, fragment appends ∝ batch, fold-style
-  // compaction, zero-listing manifest-planned serve scans) — and the
-  // serve re-assigns QUERIES only, never the corpus, closing the r18
-  // "re-assigns the corpus per call" seam. FAISS lineage: this is
-  // `IndexIVFPQ` written as a lake artifact. Payload per posting is
-  // ~4·m bytes + the stored coarse d2 (which is what lets a later
-  // append re-apply the hot-cell cap EXACTLY as a from-scratch build
-  // would — the q78 contract, unchanged).
-
-  /** The coded postings data files' schema (partition column `cell`
-    * excluded) — what [[ivfPqPostings]] writes. */
-  private def pqPostingsDataSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("cand_id", LongType),
-      StructField("d2", DoubleType),
-      StructField("codes", ArrayType(IntegerType, containsNull = false)),
-      StructField("iv_cells", IntegerType),
-      StructField("iv_cap", IntegerType),
-      StructField("iv_ck", LongType),
-      StructField("pq_ck", LongType)))
-  }
-
-  /** Buildable CODED postings: every vector under its home cell (hot
-    * cells capped, closest-to-centroid win — d2 stored so later
-    * appends re-cap exactly), carrying its PQ codes instead of the
-    * float vector. One kernel scan assigns
-    * ([[graft.expressions.IvfNearestCells]] — no corpus×cells
-    * expansion), the residual subtract + encode ride the same
-    * projection inside whole-stage codegen (the centroid join is a
-    * broadcast of the numCells-row table), and the float vector is
-    * DROPPED here — nothing vector-sized is ever written or shuffled.
-    * Embedded params: the coarse ones every postings artifact carries
-    * (`iv_cells`/`iv_cap`/`iv_ck`) plus the codebook checksum `pq_ck`
-    * (constant per encode — RLEs to nothing in parquet; the q89
-    * fail-fast stance). */
-  def ivfPqPostings(emb: DataFrame, cents: Array[Array[Double]],
-      cs: graft.expressions.PqCodebookSet, cellCap: Int = Int.MaxValue,
-      residual: Boolean = true): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    val q = CoarseQuantizer.Flat(cents)
-    val bcCs = spark.sparkContext.broadcast(cs)
-    val home = q.home(prepared(emb))
-    def encode(v: Column): Column = GraftColumnBridge.column(
-      graft.expressions.PqEncode(bcCs, GraftColumnBridge.expression(v)))
-    val encoded =
-      (if (residual)
-        home.join(broadcast(centroidTableOf(spark, cents)), Seq("cell"))
-          .withColumn("codes", encode(residualOf($"cv", $"centroid")))
-      else home.withColumn("codes", encode($"cv")))
-        .select($"cell", $"cand_id", $"d2", $"codes")
-    CoarseQuantizer.stamp(cappedByCell(encoded, q.numCells, cellCap),
-      q.params(cellCap))
-      .withColumn("pq_ck", lit(cs.checksum))
-  }
-
-  /** Persist a coded postings frame as a self-contained PQ index
-    * artifact: cell-partitioned data (1 file per cell), the
-    * [[PqCodebookStore]] sidecar (codebooks + encoding law — the
-    * artifact must be serveable from the path alone), and a born-with
-    * [[PostingsManifest]] — same lease + manifest discipline as
-    * [[saveIvfPostings]]. Fails fast on a frame encoded under a
-    * different codebook set than the one being persisted. */
-  def saveIvfPqPostings(postings: DataFrame, path: String,
-      cs: graft.expressions.PqCodebookSet,
-      residual: Boolean = true): Unit = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    MaintenanceProtocol.withLease(spark, path, "build_pq") {
-      val foreign = postings.select($"pq_ck").distinct()
-        .as[Long].collect().filterNot(_ == cs.checksum)
-      require(foreign.isEmpty,
-        s"postings frame carries codebook checksum(s) " +
-          s"${foreign.mkString(",")}, save asked for ${cs.checksum} — " +
-          "pass the codebook set the frame was encoded under")
-      byCellPinned(postings,
-        ivCellsFromPlan(postings).getOrElse(Int.MaxValue))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-      PqCodebookStore.save(spark, path, cs, residual)
-      timed("save_manifest")(
-        PostingsManifest.rebuildAndWrite(spark, path))
-    }
-  }
-
-  /** Persist codebooks ALONE (no postings) — the plain-PQ deployment
-    * unit for [[pqEncodeCorpus]]/[[pqTopKFromCodes]] pipelines that
-    * keep their code relation elsewhere: `path` becomes a directory
-    * holding just the checksummed sidecar. `residual = false` is the
-    * plain-PQ law (no coarse quantizer, nothing to subtract). */
-  def savePqCodebooks(spark: SparkSession, path: String,
-      cs: graft.expressions.PqCodebookSet,
-      residual: Boolean = false): Unit = {
-    MaintenanceProtocol.fsOf(spark, path)
-      .mkdirs(new org.apache.hadoop.fs.Path(path.stripSuffix("/")))
-    PqCodebookStore.save(spark, path, cs, residual)
-  }
-
-  /** Load (+ checksum-verify) a persisted codebook set; returns the
-    * set and the encoding law it was saved under. Refuses a corrupted
-    * sidecar — see [[PqCodebookStore.load]]. */
-  def loadPqCodebooks(spark: SparkSession,
-      path: String): (graft.expressions.PqCodebookSet, Boolean) =
-    PqCodebookStore.load(spark, path)
-
-  /** Open a PQ postings DIRECTORY for serving — [[readPostings]] over
-    * the coded schema. */
-  def readPqPostings(spark: SparkSession, path: String): DataFrame =
-    readPostingsAs(spark, path, _ => pqPostingsDataSchema)
-
-  /** FRAGMENT append for the PQ artifact — O(batch) maintenance, the
-    * `Fragment` append's economics verbatim: the batch is
-    * assigned + encoded under the ARTIFACT's own centroids, codebooks,
-    * and encoding law (all read from the artifact — one manifest read
-    * + one sidecar read, no data head), staged in by rename, manifest
-    * rolled forward incrementally. Same at-least-once posture: a
-    * replayed batch appends duplicate rows; [[compactIvfPqPostings]]
-    * dedups them and re-applies the cap over the accumulated union —
-    * codes are deterministic per (vector, home cell), so replay rows
-    * are EXACT duplicates and the fold converges to the from-scratch
-    * build. */
-  def appendIvfPqPostingsFragment(spark: SparkSession, path: String,
-      cents: Array[Array[Double]], newEmb: DataFrame): Unit = {
-    val p = postingsParamsAtPath(spark, path)
-    CoarseQuantizer.Flat(cents).requireAppendLaw(p)
-    val (cs, residual) = PqCodebookStore.load(spark, path)
-    appendFragmentFiles(spark, path,
-      ivfPqPostings(newEmb, cents, cs, Int.MaxValue, residual)
-        .withColumn("iv_cap", lit(p.cap))) // artifact's cap, not the delta's
-  }
-
-  /** Fold a fragment-appended PQ artifact back to 1-file-per-cell —
-    * [[compactIvfPostings]]'s body over the coded schema: dedup
-    * replayed (cell, cand_id) rows, re-apply the hot-cell cap over the
-    * accumulated union on the stored coarse d2 (codes ride the
-    * surviving rows), restore the layout, fold the manifest log. */
-  def compactIvfPqPostings(spark: SparkSession,
-      path: String): (Int, Int, Int) =
-    MaintenanceProtocol.withLease(spark, path, "compact_pq")(
-      compactIvfPostingsLocked(spark, path, _ => pqPostingsDataSchema))
-
-  /** STEADY-STATE IVF+PQ serve from the persisted artifact — the
-    * ∝-queries route the r18 VERDICT named as the family's missing
-    * piece: the corpus is never re-assigned or re-encoded (its codes
-    * live in the artifact), queries alone pay assignment (one codegen
-    * kernel scan) + one ADC lookup table per probed cell, the
-    * artifact scan is manifest-planned AND partition-pruned to the
-    * probed cells (the [[PostingsSource.Classic]] stance — serving
-    * I/O ∝ queries, not ∝ corpus), ADC ranks candidates to `fetch`
-    * depth, and only those ~queries×fetch pairs touch float vectors in
-    * the exact re-rank. Codebooks, encoding law, and coarse params all
-    * come from the artifact; the passed centroids are checksum-
-    * verified against it, and a foreign `pq_ck` in the data fails fast
-    * (the [[pqTopKFromCodes]] stance).
-    *
-    * `queryEmb` must be deterministic under re-evaluation (its plan
-    * runs for the probe-set collect and again in the lazy serve) —
-    * the documented contract of every pruned route. */
-  def ivfPqTopKFromPostings(queryEmb: DataFrame, corpus: DataFrame,
-      cents: Array[Array[Double]], path: String, probes: Int, k: Int,
-      fetch: Int): DataFrame = {
-    val spark = queryEmb.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
-    require(fetch >= k, s"fetch=$fetch must be >= k=$k")
-    val q = CoarseQuantizer.Flat(cents)
-    q.requireServes(postingsParamsAtPath(spark, path))
-    val (cs, residual) = PqCodebookStore.load(spark, path)
-    val codes = readPqPostings(spark, path)
-    val bcCs = spark.sparkContext.broadcast(cs)
-    val probedQ = q.probe(prepared(queryEmb), probes)
-    def lut(v: Column): Column = GraftColumnBridge.column(
-      graft.expressions.PqLut(bcCs, GraftColumnBridge.expression(v)))
-    val queries =
-      if (residual)
-        probedQ.join(broadcast(centroidTableOf(spark, cents)), Seq("cell"))
-          .select($"cell", $"vec_id",
-            lut(residualOf($"v", $"centroid")).as("lut"))
-      else probedQ.select($"cell", $"vec_id", lut($"v").as("lut"))
-    // probed-cell partition prune: driver-side collect of
-    // ≤ queries×probes ints pushed as an IN filter on the partition
-    // column — the artifact scan reads only probed cells' files
-    val probed = queries.select($"cell").distinct()
-      .as[Int].collect().toSeq
-    val scan = codes.filter($"cell".isin(probed: _*))
-      .select($"cell", $"cand_id", $"codes", $"pq_ck")
-    // fail fast on codes from a foreign codebook set — distinct over a
-    // per-file-constant column, collapsed map-side
-    val foreign = scan.select($"pq_ck").distinct()
-      .as[Long].collect().filterNot(_ == cs.checksum)
-    require(foreign.isEmpty,
-      s"PQ postings carry codebook checksum(s) ${foreign.mkString(",")}, " +
-        s"sidecar says ${cs.checksum} — rebuild the artifact")
-    val pairs = queries
-      .join(scan.drop("pq_ck"), Seq("cell"))
-      .filter($"vec_id" =!= $"cand_id")
-      .withColumn("ad2r", round(GraftColumnBridge.column(
-        graft.expressions.PqAdc(GraftColumnBridge.expression($"lut"),
-          GraftColumnBridge.expression($"codes"), cs.k)), 4) + lit(0.0))
-      .select($"vec_id", $"cand_id", (-$"ad2r").as("sim"))
-    val pre = topKPerQuery(pairs, "vec_id", "cand_id", fetch)
-      .select($"vec_id".as("query_id"), $"neighbor_id")
-    rerankExactL2Frames(corpus, prepared(queryEmb), pre, k)
   }
 }

@@ -178,7 +178,14 @@ object CorpusIngest {
     * [[Similarity.saveIvfPostings]] over the seed corpus (or an empty
     * frame) under the quantizer this stream will run; retrain +
     * rebuild when drift erodes recall (the SURVEY §6.2 knee is the
-    * signal), exactly as a batch deployment would. */
+    * signal), exactly as a batch deployment would.
+    *
+    * A PQ-coded artifact (saved under [[graft.operators.PostingsCodec.Pq]])
+    * streams through the same seam under a `Flat` quantizer: each
+    * micro-batch is assigned AND encoded under the artifact's own frozen
+    * centroids and codebook sidecar. A replayed batch re-appends EXACT
+    * duplicate rows (codes are deterministic per (vector, home cell)),
+    * so every mode's convergence argument holds unchanged. */
   def embeddingIngest(embStream: DataFrame, q: CoarseQuantizer,
       postingsPath: String,
       mode: Similarity.MaintenanceMode): DataStreamWriter[Row] =
@@ -189,27 +196,6 @@ object CorpusIngest {
           batch, mode)
         ()
       } finally batch.unpersist()
-    }
-
-  /** Fragment-mode ingest for the PERSISTED PQ (coded) postings
-    * artifact — [[embeddingIngest]]'s `Fragment` economics over
-    * [[Similarity.appendIvfPqPostingsFragment]]: each micro-batch is
-    * assigned AND residual-encoded under the artifact's own frozen
-    * centroids + codebook sidecar (one manifest read + one sidecar
-    * read per trigger, no data head), landed as one file per touched
-    * cell. The at-least-once posture transfers intact: a
-    * checkpoint-recovery replay double-appends EXACT duplicate rows
-    * (codes are deterministic per (vector, home cell)), folded by the
-    * next [[Similarity.compactIvfPqPostings]] — compact-before-serve,
-    * same as the flat fragment seam. */
-  def embeddingIngestFragmentPq(embStream: DataFrame,
-      cents: Array[Array[Double]],
-      postingsPath: String): DataStreamWriter[Row] =
-    embStream.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
-      val batch = batch0.persist()
-      try Similarity.appendIvfPqPostingsFragment(batch.sparkSession,
-        postingsPath, cents, batch)
-      finally batch.unpersist()
     }
 
   /** Parquet-directory convenience sink: kept docs append to

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.{PqAdc, PqCodebookSet, PqEncode, PqKernel, PqLut}
 import graft.functions.VectorOps._
 import graft.operators.Similarity
+import graft.operators.CoarseQuantizer.Flat
 
 /** Product-quantization family: encode argmin semantics (incl.
   * tie-breaks), ADC arithmetic, the checksum fail-fast, recall on a
@@ -234,8 +235,8 @@ class PqSpec extends AnyFunSuite with SparkSpec {
       .select($"vec_id".cast("int").as("cell"),
         asDouble($"embedding").as("centroid"))
     val rawCs = Similarity.fitPqCodebooks(e, m = 4, k = 4, iters = 10)
-    val resCs = Similarity.fitPqCodebooksResidual(e, centArr,
-      m = 4, k = 4, iters = 10)
+    val resCs = Similarity.fitPqCodebooks(e, m = 4, k = 4, iters = 10,
+      residual = Some(Flat(centArr)))
     val pred = $"vec_id" < 40
     val raw = Similarity.ivfPqRecallAtK(e, pred, cents, rawCs,
       probes = 1, k = 4, fetch = 6, residual = false)
@@ -243,14 +244,14 @@ class PqSpec extends AnyFunSuite with SparkSpec {
       probes = 1, k = 4, fetch = 6, residual = true)
     assert(res >= raw, s"residual recall $res < raw $raw")
     // determinism: the residual fit is content-addressed like the raw one
-    val refit = Similarity.fitPqCodebooksResidual(e, centArr,
-      m = 4, k = 4, iters = 10)
+    val refit = Similarity.fitPqCodebooks(e, m = 4, k = 4, iters = 10,
+      residual = Some(Flat(centArr)))
     assert(refit.checksum == resCs.checksum)
     // head-slice residual codebooks (the oracle twin) reconstruct the
     // residual corpus strictly better than RAW head slices do — raw
     // codewords sit a cluster-offset away from every residual
-    val headRes = Similarity.pqCodebooksFromHeadResidual(e, centArr,
-      m = 4, k = 8)
+    val headRes = Similarity.pqCodebooksFromHead(e, m = 4, k = 8,
+      residual = Some(Flat(centArr)))
     val headRaw = Similarity.pqCodebooksFromHead(e, m = 4, k = 8)
     def residCorpus = {
       // residual frame as its own corpus for the reconstruction metric
@@ -301,6 +302,45 @@ class PqSpec extends AnyFunSuite with SparkSpec {
         }.min
       }.sum
       assert(math.abs(selfD2 - truth) < 1e-9)
+    }
+  }
+
+  test("residual codebooks: the kernel home assignment gives every " +
+      "vector the residual the window-ranked form computes, bit for bit") {
+    // the window-ranked home assignment + residual, INLINE (the pre-
+    // kernel shape and the DuckDB oracle's form), independent of the
+    // code under test; a head codebook with k = corpus size carries
+    // every vector's residual slices as its codewords
+    import org.apache.spark.sql.expressions.Window
+    val e = embTable
+    val n = e.count().toInt
+    val centArr = e.filter($"vec_id" < 8)
+      .select($"vec_id", asDouble($"embedding").as("v"))
+      .orderBy($"vec_id")
+      .collect().map(_.getSeq[Double](1).toArray)
+    val cdf = Similarity.centroidTableOf(spark, centArr)
+      .withColumn("cn2", dot($"centroid", $"centroid"))
+    val window = Similarity.prepared(e)
+      .crossJoin(broadcast(cdf))
+      .withColumn("d2",
+        $"nrm" * $"nrm" + $"cn2" - lit(2.0) * dot($"v", $"centroid"))
+      .filter($"d2".isNotNull)
+      .withColumn("cr", row_number().over(
+        Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cell".asc)))
+      .filter($"cr" === 1)
+      .orderBy($"vec_id")
+      .select(zip_with($"v", $"centroid", (a, b) => a - b))
+      .as[Seq[Double]].collect().map(_.toArray)
+    assert(window.length == n)
+    val cs = Similarity.pqCodebooksFromHead(e, m = 8, k = n,
+      residual = Some(Flat(centArr)))
+    val dsub = cs.dsub
+    window.zipWithIndex.foreach { case (r, c) =>
+      (0 until cs.m).foreach { s =>
+        assert(java.util.Arrays.equals(cs.codeword(s, c),
+          java.util.Arrays.copyOfRange(r, s * dsub, (s + 1) * dsub)),
+          s"vector #$c subspace $s: kernel residual != window residual")
+      }
     }
   }
 }

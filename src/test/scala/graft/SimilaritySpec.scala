@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.IvfAssignKernel
-import graft.operators.{CoarseQuantizer, Similarity}
+import graft.operators.{CoarseQuantizer, PostingsCodec, Similarity}
 import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
 import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace}
 import graft.operators.Similarity.PostingsSource
@@ -850,14 +850,21 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("appends in one session reuse one centroid broadcast per quantizer") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
     import graft.expressions.{IvfGroupedCentroidSet, IvfNearestCells,
-      IvfNearestCellsTwoLevel}
-    // the kernel broadcast ids in every plan `body` runs; listener events
-    // arrive asynchronously, so a marker query's event bounds the wait
-    def kernelBroadcastIds(body: => Unit): Set[Long] = {
+      IvfNearestCellsTwoLevel, PqEncode, PqLut}
+    val centroidBc: PartialFunction[Expression, Long] = {
+      case e: IvfNearestCells => e.bc.id
+      case e: IvfNearestCellsTwoLevel => e.bc.id
+    }
+    // the broadcast ids `pick` finds in every plan `body` runs; listener
+    // events arrive asynchronously, so a marker query's event bounds
+    // the wait
+    def kernelBroadcastIds(body: => Unit,
+        pick: PartialFunction[Expression, Long] = centroidBc): Set[Long] = {
       val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
       @volatile var markerSeen = false
       val marker = s"bc_ids_marker_${System.nanoTime()}"
@@ -865,11 +872,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         override def onSuccess(funcName: String, qe: QueryExecution,
             durationNs: Long): Unit =
           if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
-          else qe.analyzed.foreach(_.expressions.foreach(_.foreach {
-            case e: IvfNearestCells => ids.add(e.bc.id)
-            case e: IvfNearestCellsTwoLevel => ids.add(e.bc.id)
-            case _ => ()
-          }))
+          else qe.analyzed.foreach(_.expressions.foreach(_.foreach(e =>
+            pick.lift(e).foreach(ids.add))))
         override def onFailure(funcName: String, qe: QueryExecution,
             exception: Exception): Unit = ()
       }
@@ -910,5 +914,26 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     }
     assert(used.distinct.size == 2,
       "flat and two-level payloads must not share a broadcast")
+    // the PQ codebooks follow the same law: a build, two appends (the
+    // codec re-read from the sidecar each time) and a serve share one
+    // codebook broadcast
+    val cs = Similarity.pqCodebooksFromHead(emb, m = 8, k = 16,
+      residual = Some(Flat(cents)))
+    def freshPq() = PostingsCodec.Pq(cs.copy(codes = cs.codes.map(_.clone)))
+    val pqPath = tempDir("graft_bc_pq").toString
+    val pqIds = kernelBroadcastIds({
+      Similarity.saveIvfPostings(Similarity.ivfPostings(
+        emb.filter($"vec_id" % 3 === 0), Flat(cents), codec = freshPq()),
+        pqPath, freshPq())
+      Similarity.appendIvfPostings(spark, pqPath, Flat(cents),
+        emb.filter($"vec_id" % 3 === 1), Fragment)
+      Similarity.appendIvfPostings(spark, pqPath, Flat(cents),
+        emb.filter($"vec_id" % 3 === 2), Auto())
+      Similarity.ivfTopKFromPostings(emb.filter($"vec_id" < 5), Flat(cents),
+        PostingsSource.Classic(pqPath), probes = 2, k = 3).collect()
+      ()
+    }, { case e: PqEncode => e.bc.id; case e: PqLut => e.bc.id })
+    assert(pqIds == Set(freshPq().broadcast(spark).id),
+      s"a PQ build, two appends and a serve used codebook broadcasts $pqIds")
   }
 }

@@ -1171,13 +1171,16 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .select($"vec_id", graft.functions.VectorOps.asDouble($"embedding"))
       .orderBy($"vec_id")
       .as[(Long, Seq[Double])].collect().map(_._2.toArray)
-    val cs = Similarity.pqCodebooksFromHeadResidual(emb, cents, m = 8, k = 16)
+    val codec = graft.operators.PostingsCodec.Pq(Similarity
+      .pqCodebooksFromHead(emb, m = 8, k = 16, residual = Some(Flat(cents))))
+    val cs = codec.cs
     val path = tempDir("graft_emb_frag_pq").toString
-    Similarity.saveIvfPqPostings(
-      Similarity.ivfPqPostings(seed, cents, cs, cellCap = 16), path, cs)
+    Similarity.saveIvfPostings(
+      Similarity.ivfPostings(seed, Flat(cents), cellCap = 16, codec), path,
+      codec)
     val ms = MemoryStream[EmbRow](spark)
-    val q = CorpusIngest.embeddingIngestFragmentPq(ms.toDF(), cents,
-      path).start()
+    val q = CorpusIngest.embeddingIngest(ms.toDF(), Flat(cents), path,
+      Fragment).start()
     try {
       ms.addData(b1); q.processAllAvailable()
       ms.addData(b2); q.processAllAvailable()
@@ -1194,17 +1197,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // replay rows are EXACT duplicates (codes deterministic per
     // (vector, home cell)) — the fold converges to the from-scratch
     // coded build; compact-before-serve is the seam's contract
-    assert(Similarity.compactIvfPqPostings(spark, path)._1 > 0)
-    assert(rows(Similarity.readPqPostings(spark, path)) ==
-      rows(Similarity.ivfPqPostings(emb, cents, cs, cellCap = 16)),
+    assert(Similarity.compactIvfPostings(spark, path)._1 > 0)
+    assert(rows(Similarity.readPostings(spark, path)) ==
+      rows(Similarity.ivfPostings(emb, Flat(cents), cellCap = 16, codec)),
       "compacted PQ fragment stream must equal the from-scratch build")
     // and the steady-state serve runs off the maintained artifact
     val centTable = emb.filter($"vec_id" < 8)
       .select($"vec_id".cast("int").as("cell"),
         graft.functions.VectorOps.asDouble($"embedding").as("centroid"))
-    val got = Similarity.ivfPqTopKFromPostings(
-      emb.filter($"vec_id" < 10), emb, cents, path,
-      probes = 2, k = 3, fetch = 5)
+    val queries = emb.filter($"vec_id" < 10)
+    val got = Similarity.rerankExactL2(emb, queries,
+      Similarity.ivfTopKFromPostings(queries, Flat(cents),
+        PostingsSource.Classic(path), probes = 2, k = 5), k = 3)
       .select($"vec_id", $"neighbor_id", $"d2", $"rn")
       .as[(Long, Long, Double, Int)].collect().toSet
     val want = Similarity.ivfPqTopKWithCentroids(

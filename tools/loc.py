@@ -9,7 +9,8 @@ counts when anything but whitespace is left on it. The work tree side
 includes untracked files that git does not ignore.
 
     python3 tools/loc.py <rev>          # one line per source set
-    python3 tools/loc.py <rev> --files  # plus every file whose count moved
+    python3 tools/loc.py <rev> --files  # plus every file whose count moved,
+                                        # and a subtotal per package dir
     python3 tools/loc.py <rev> --defs   # plus public defs per changed file
 
 A public def is a `def` declared directly in a class, object or trait body
@@ -196,6 +197,15 @@ def public_defs(text):
     return count
 
 
+def package_dir(path, root):
+    """`operators/`, `streaming/`, ... for a file under `<root>/scala/graft/`;
+    `graft/` for the root package; the full package path otherwise."""
+    rel = os.path.dirname(os.path.relpath(path, os.path.join(root, "scala")))
+    if rel.startswith("graft" + os.sep):
+        rel = rel[len("graft" + os.sep):]
+    return rel + "/"
+
+
 def git(*args):
     return subprocess.run(("git",) + args, check=True, capture_output=True,
                           text=True).stdout
@@ -240,6 +250,13 @@ def main():
                 if d:
                     print(f"  {path}: {before.get(path, 0)} -> "
                           f"{after.get(path, 0)} ({d:+})")
+            pkgs = {}
+            for counts, i in ((before, 0), (after, 1)):
+                for path, n in counts.items():
+                    pkgs.setdefault(package_dir(path, root), [0, 0])[i] += n
+            for pkg, (pb, pa) in sorted(pkgs.items()):
+                pct = f" ({(pa - pb) / pb:+.1%})" if pb else ""
+                print(f"  package {pkg}: {pb} -> {pa} ({pa - pb:+}){pct}")
         if args.defs:
             changed = sorted(p for p in set(git(
                 "diff", "--name-only", args.rev, "--", root).split("\n") +
