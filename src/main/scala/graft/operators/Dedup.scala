@@ -886,7 +886,13 @@ object Dedup {
     val spark = newDocs.sparkSession
     import spark.implicits._
     val (k, numHashes, bands, hashed) = params
-    // both the candidate joins and the verify joins consume each side
+    // both the candidate joins and the verify joins consume each side.
+    // LAZY persists, on purpose — both alternatives measured worse on
+    // the curation cycle's near-dup screen (4-core box): an eager
+    // persist turns the ~8 concurrent cache-fill jobs into 2 counts,
+    // but its stage went 2.41 → 2.89 s and the cycle's shuffle write
+    // 16.1 → 26.5 MB; no persist re-runs each side per consumer
+    // (3.5–3.7 s)
     val idx = CacheScope.persist(index.select($"doc_id", $"sh", $"bk"))
     val batch = CacheScope.persist(
       minhashSignatures(newDocs, k, numHashes, bands)
@@ -997,13 +1003,27 @@ object Dedup {
     * lease + born-with-a-manifest discipline as the other artifact
     * families. No sort: the band screen joins on exploded band keys —
     * there is no point-lookup pushdown to lay out for (unlike the
-    * hash/fingerprint families). */
-  def saveMinhashIndex(index: DataFrame, path: String,
-      files: Int = 8): Unit = {
+    * hash/fingerprint families).
+    *
+    * The params come from the frame's plan literals (a head row only
+    * for a frame without them), so the build runs the write job alone;
+    * an empty corpus builds a legal empty artifact (one schema-only
+    * file, params in the manifest) that screens find nothing in and
+    * appends roll forward. No layout exchange either: the files are
+    * the kernel stage's partitions — the thin docs [[Spread]] spread,
+    * or the input's own splits — and a repartition after the kernel
+    * would shuffle every `(sh, bk)` signature row once more for
+    * nothing but a file count. */
+  def saveMinhashIndex(index: DataFrame, path: String): Unit = {
     val spark = index.sparkSession
-    val (k, numHashes, bands, hashed) = minhashIndexParams(index)
+    val (k, numHashes, bands, hashed) =
+      PlanLiterals(index, "mh_k", "mh_hashes", "mh_bands", "mh_hashed") match {
+        case Some(Seq(k: Int, h: Int, b: Int, hashed: Boolean)) =>
+          (k, h, b, hashed)
+        case _ => minhashIndexParams(index)
+      }
     MaintenanceProtocol.withLease(spark, path, "build") {
-      index.repartition(files).write.mode("overwrite").parquet(path)
+      index.write.mode("overwrite").parquet(path)
       ArtifactManifest.rebuildAndWrite(spark, path, MinhashIndexFamily,
         Map("k" -> k.toString, "hashes" -> numHashes.toString,
           "bands" -> bands.toString, "hashed" -> hashed.toString))
@@ -1018,9 +1038,16 @@ object Dedup {
     * rows, which [[nearDupAgainstArtifact]] folds at the pair level
     * and [[compactMinhashIndex]] folds physically — no fresh-id
     * precondition on the artifact route (the in-memory
-    * [[appendToMinhashIndex]] path keeps its checked contract). */
+    * [[appendToMinhashIndex]] path keeps its checked contract).
+    *
+    * Like [[saveMinhashIndex]], the delta's files are the kernel
+    * stage's partitions: a layout step after the kernel would either
+    * shuffle the signature rows (the old `repartition(1)`) or, as a
+    * coalesce, run the kernel in one task (the curation cycle's
+    * append stage +27 %, ten pairs on a 4-core box). Compaction folds
+    * the files. */
   def appendMinhashIndexDelta(spark: org.apache.spark.sql.SparkSession,
-      path: String, newDocs: DataFrame, files: Int = 1): Unit =
+      path: String, newDocs: DataFrame): Unit =
     ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) {
       state0 =>
         val (k, numHashes, bands, hashed) = state0 match {
@@ -1032,8 +1059,7 @@ object Dedup {
         }
         val delta = minhashBandIndex(newDocs, k, numHashes, bands, hashed)
         dest =>
-          delta.repartition(files)
-            .write.mode(if (dest == path) "append" else "overwrite")
+          delta.write.mode(if (dest == path) "append" else "overwrite")
             .parquet(dest)
     }
 
@@ -1044,12 +1070,15 @@ object Dedup {
     * so the delta is computed before the sink runs. Routing it through
     * the staged protocol keeps a manifest-carrying artifact's sidecar
     * true under streaming appends (a raw `mode("append")` staled it
-    * without tripping the dirty flag). */
+    * without tripping the dirty flag). Each trigger lands `files`
+    * files: `coalesce`, not `repartition`, so the delta's signature
+    * rows reach them without a shuffle (a micro-batch's kernel is
+    * small enough for `files` tasks). */
   def appendMinhashIndexDeltaFrame(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, files: Int = 1): Unit =
     ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) { _ =>
       dest =>
-        delta.repartition(files)
+        delta.coalesce(files)
           .write.mode(if (dest == path) "append" else "overwrite")
           .parquet(dest)
     }
@@ -1719,10 +1748,15 @@ object Dedup {
     * an [[ArtifactManifest]] sidecar carrying the winnowing params
     * (`wf_k`/`wf_w`/`wf_algo`), so appends and screens never open a
     * footer for them; the whole build runs under the family's writer
-    * lease. */
+    * lease. The params come from the frame's plan literals (no head-row
+    * job), so an empty corpus builds a legal empty artifact, as
+    * [[saveMinhashIndex]] does. */
   def saveWinnowIndex(index: DataFrame, path: String, files: Int = 8): Unit = {
     val spark = index.sparkSession
-    val (k, w, algo) = winnowIndexParams(index)
+    val (k, w, algo) = PlanLiterals(index, "wf_k", "wf_w", "wf_algo") match {
+      case Some(Seq(k: Int, w: Int, algo: String)) => (k, w, algo)
+      case _ => winnowIndexParams(index)
+    }
     MaintenanceProtocol.withLease(spark, path, "build") {
       index
         .repartitionByRange(files, org.apache.spark.sql.functions.col("fingerprint"))

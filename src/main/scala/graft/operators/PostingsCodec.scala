@@ -154,13 +154,19 @@ object PostingsCodec {
           "_pq_codebooks sidecar")
 
     /** Codes assigned under other codebooks are meaningless against
-      * these: refuse a relation carrying any foreign `pq_ck`. Distinct,
-      * not first-row, so a union of differently-encoded relations fails
-      * too; the column is constant per encode, so the distinct collapses
-      * map-side to at most one value per input file. */
+      * these: refuse a relation carrying any foreign `pq_ck`. A frame
+      * whose plan stamps it ([[PlanLiterals]] — every branch of a union
+      * agreeing) is checked with no job; otherwise distinct, not
+      * first-row, so a union of differently-encoded relations fails
+      * too — the column is constant per encode, so the distinct
+      * collapses map-side to at most one value per input file. */
     def requireOwnCodes(codes: DataFrame, what: String): Unit = {
-      val foreign = codes.select(col("pq_ck")).distinct()
-        .collect().map(_.getLong(0)).filterNot(_ == cs.checksum)
+      val carried = PlanLiterals(codes, "pq_ck") match {
+        case Some(Seq(ck: Long)) => Seq(ck)
+        case _ => codes.select(col("pq_ck")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+      }
+      val foreign = carried.filterNot(_ == cs.checksum)
       require(foreign.isEmpty,
         s"$what carries codebook checksum(s) ${foreign.mkString(",")}, " +
           s"the codebooks are ${cs.checksum} — re-encode under the " +

@@ -186,10 +186,12 @@ object PostingsManifest extends ManifestLog {
     * footers for per-file row counts (no data pages, no per-file reader
     * initialization — a DataFrame groupBy(input_file_name).count() paid
     * ~10 ms of full reader initialization per file, 23.6 s of a 74 s
-    * build over 15.5 k files, §6.1 r15). Params come from one part-file
-    * footer, NOT from the manifest (this is what REBUILDS the manifest,
-    * so it must not trust it). */
-  def rebuild(spark: SparkSession, path: String): State = {
+    * build over 15.5 k files, §6.1 r15). Params come from the writer
+    * when it passes the ones it just stamped (the build), else from one
+    * part-file, NOT from the manifest (this is what REBUILDS the
+    * manifest, so it must not trust it). */
+  def rebuild(spark: SparkSession, path: String,
+      written: Option[Params] = None): State = {
     import MaintenanceProtocol.timed
     val listed = timed("  rebuild_list")(
       ManifestLog.listTruth(MaintenanceProtocol.fsOf(spark, path), path))
@@ -198,7 +200,8 @@ object PostingsManifest extends ManifestLog {
     val rows = timed("  rebuild_counts")(
       ManifestLog.footerRows(spark, listed.map(_._2.getPath)))
     State(
-      timed("  rebuild_params")(paramsOfFile(spark, listed.head._2.getPath)),
+      written.getOrElse(timed("  rebuild_params")(
+        paramsOfFile(spark, listed.head._2.getPath))),
       listed.zip(rows).map { case ((dir, f), n) =>
         FileEntry(dir.stripPrefix("cell=").toInt, f.getPath.getName,
           f.getLen, n)
@@ -207,26 +210,28 @@ object PostingsManifest extends ManifestLog {
 
   /** The params one postings part-file's rows carry as iv_ columns —
     * identical in every row of every file by construction, so one head
-    * row of one file is the artifact's. `checkSchema` sees the footer's
-    * schema, already in hand. */
+    * row of one file is the artifact's: ONE job, its schema read from
+    * the file's footer on the driver (no inference job). `checkSchema`
+    * sees that schema. */
   def paramsOfFile(spark: SparkSession, file: Path,
       checkSchema: StructType => Unit = _ => ()): Params = {
-    val head = spark.read.parquet(file.toString)
+    val head = graft.Tables.read(spark, file.toString)
     checkSchema(head.schema)
-    val hr = head.select(col("iv_cells"), col("iv_cap"), col("iv_ck")).take(1)
+    val hasGp = head.columns.contains("iv_gp")
+    val hr = head.select((Seq("iv_cells", "iv_cap", "iv_ck") ++
+      (if (hasGp) Seq("iv_gp") else Nil)).map(col): _*).take(1)
     require(hr.nonEmpty,
       s"empty IVF postings file $file — build with saveIvfPostings")
-    val gp =
-      if (head.columns.contains("iv_gp"))
-        Some(head.select(col("iv_gp")).take(1)(0).getInt(0))
-      else None
-    Params(hr(0).getInt(0), hr(0).getInt(1), hr(0).getLong(2), gp)
+    Params(hr(0).getInt(0), hr(0).getInt(1), hr(0).getLong(2),
+      if (hasGp) Some(hr(0).getInt(3)) else None)
   }
 
   /** Rebuild from truth, persist, clear any stranded dirty flag
-    * ([[ManifestLog.writeRebuilt]]). */
-  def rebuildAndWrite(spark: SparkSession, path: String): State =
-    writeRebuilt(spark, path, rebuild(spark, path))
+    * ([[ManifestLog.writeRebuilt]]). `written` = the params the caller
+    * just wrote, as [[rebuild]] takes them. */
+  def rebuildAndWrite(spark: SparkSession, path: String,
+      written: Option[Params] = None): State =
+    writeRebuilt(spark, path, rebuild(spark, path, written))
 
   /** List `cells`' directories (∝ touched, never ∝ artifact) into
     * per-file entries with the given per-cell row counts — the

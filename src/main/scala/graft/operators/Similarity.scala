@@ -622,6 +622,21 @@ object Similarity {
     }
   }
 
+  /** The parameters a postings frame's PLAN stamps
+    * ([[CoarseQuantizer.stamp]]'s literals, through [[PlanLiterals]]) —
+    * None for a frame read from storage, or a union whose branches
+    * disagree. No job, so also none of [[postingsParams]]' empty-frame
+    * fail-fast. */
+  private def planParams(postings: DataFrame): Option[CoarseQuantizer.Params] =
+    PlanLiterals(postings, (Seq("iv_cells", "iv_cap", "iv_ck") ++
+        (if (postings.columns.contains("iv_gp")) Seq("iv_gp") else Nil)): _*)
+      .collect {
+        case Seq(cells: Int, cap: Int, ck: Long) =>
+          CoarseQuantizer.Params(cells, cap, ck, None)
+        case Seq(cells: Int, cap: Int, ck: Long, gp: Int) =>
+          CoarseQuantizer.Params(cells, cap, ck, Some(gp))
+      }
+
   /** The parameters embedded in a postings FRAME (fail-fast seam): one
     * head row, with `iv_gp` when the frame carries it. */
   private def postingsParams(postings: DataFrame): CoarseQuantizer.Params = {
@@ -944,21 +959,6 @@ object Similarity {
   def readPackedPostings(spark: SparkSession, path: String): DataFrame =
     readPackedPostingsWithCpp(spark, path)._1
 
-  /** The `iv_cells` literal embedded in a postings frame's plan (every
-    * builder stamps `withColumn("iv_cells", lit(n))`) — lets the
-    * build-time write bound its task count by the file count WITHOUT a
-    * data job. None for frames that carry it some other way (the
-    * pinned default applies then). */
-  private def ivCellsFromPlan(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    df.queryExecution.analyzed
-      .collect { case p => p.expressions }.flatten
-      .flatMap(_.collect {
-        case a: Alias if a.name == "iv_cells" => a.child
-      })
-      .collectFirst { case Literal(v: Int, _) => v }
-  }
-
   /** Persist an [[ivfPostings]] frame as a self-contained artifact,
     * under the codec it was built with: a `Pq` frame must carry these
     * codebooks' checksum (fail-fast), and its codebooks + encoding law
@@ -973,18 +973,21 @@ object Similarity {
       codec.requireCarriedBy(postings.schema, "the postings frame")
       val pq = Some(codec).collect { case c: PostingsCodec.Pq => c }
       pq.foreach(_.requireOwnCodes(postings, "the postings frame"))
-      byCellPinned(postings,
-        ivCellsFromPlan(postings).getOrElse(Int.MaxValue))
+      // the params the writer stamped: they bound the write's task
+      // count by the file count, and the manifest records them
+      // without reading a part-file back
+      val params = planParams(postings)
+      byCellPinned(postings, params.fold(Int.MaxValue)(_.cells))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
       pq.foreach(PostingsCodec.save(postings.sparkSession, path, _))
-      // Born with a manifest: one listing + one footer-bounded count job
-      // at build time (the overwrite just wiped any prior sidecar along
-      // with the data) buys every later append/compact/serve its
-      // zero-listing path. Build is the one moment an O(artifact)
-      // metadata pass is already being paid — the write itself created
-      // exactly these files.
+      // Born with a manifest: one listing + driver-side footer row
+      // counts at build time (the overwrite just wiped any prior
+      // sidecar along with the data) buys every later
+      // append/compact/serve its zero-listing path. Build is the one
+      // moment an O(artifact) metadata pass is already being paid — the
+      // write itself created exactly these files.
       timed("save_manifest")(
-        PostingsManifest.rebuildAndWrite(postings.sparkSession, path))
+        PostingsManifest.rebuildAndWrite(postings.sparkSession, path, params))
     }
 
   /** The touched-cells-only recap for the DIRECTORY routes: the delta
@@ -1464,7 +1467,8 @@ object Similarity {
       case None =>
         spark.catalog.refreshByPath(path)
         val postings = spark.read.parquet(path)
-        val cap = postingsParams(postings).cap
+        val params = postingsParams(postings)
+        val cap = params.cap
         val perCellFiles = fs.listStatus(hPath)
           .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
           .map(d => d.getPath.getName.stripPrefix("cell=").toInt ->
@@ -1490,7 +1494,7 @@ object Similarity {
               filesBefore - perCellFiles.view.filterKeys(fragmented)
                 .values.sum + fragmented.size)
           }
-        PostingsManifest.rebuildAndWrite(spark, path)
+        PostingsManifest.rebuildAndWrite(spark, path, Some(params))
         result
     }
   }

@@ -633,8 +633,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // sibling tmp present — then read: must heal, not PATH_NOT_FOUND
     val mh = tempDir("graft_mh_swap")
       .resolve("index").toString
-    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), mh,
-      files = 2)
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), mh)
     val expected = pairSet(Dedup.nearDupAgainstArtifact(spark, mh, batch, 0.4))
     val f = new org.apache.hadoop.fs.Path(mh)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -969,7 +968,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val path = tempDir("graft_mh_art")
       .resolve("index").toString
     Dedup.saveMinhashIndex(
-      Dedup.minhashBandIndex(seed, 5, 32, 8), path, files = 2)
+      Dedup.minhashBandIndex(seed, 5, 32, 8), path)
     Dedup.appendMinhashIndexDelta(spark, path, b1)
     Dedup.appendMinhashIndexDelta(spark, path, b1) // replay
 

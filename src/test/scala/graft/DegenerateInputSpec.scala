@@ -91,6 +91,37 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.contaminationAgainstIndex(degenerate, wfIdx).count() == 0L)
   }
 
+  test("an empty corpus builds legal empty minhash and winnow artifacts, " +
+      "even over a live one, that screen nothing and take appends") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val empty = docs.limit(0)
+    val batch = docs.filter($"doc_id" % 5 === 0)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_a", $"doc_b").collect().map(_.toSeq).toSet
+
+    // the params ride the plan, so the build needs no head row: the
+    // rebuild replaces the live artifact instead of throwing after it
+    val mh = tempDir("graft_degen_mh").resolve("index").toString
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(docs, 5, 32, 8), mh)
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(empty, 5, 32, 8), mh)
+    assert(Dedup.readMinhashIndex(spark, mh).count() == 0L)
+    // no corpus side: the screen reports only the batch's own pairs
+    assert(pairs(Dedup.nearDupAgainstArtifact(spark, mh, batch, 0.4)) ==
+      pairs(Dedup.minhashLsh(batch, 5, 32, 8, 0.4)))
+    Dedup.appendMinhashIndexDelta(spark, mh, batch)
+    assert(Dedup.readMinhashIndex(spark, mh).count() ==
+      Dedup.minhashBandIndex(batch, 5, 32, 8).count())
+
+    val wn = tempDir("graft_degen_wn").resolve("index").toString
+    Dedup.saveWinnowIndex(Dedup.winnowIndex(docs, 3, 4, "md5_60"), wn)
+    Dedup.saveWinnowIndex(Dedup.winnowIndex(empty, 3, 4, "md5_60"), wn)
+    assert(Dedup.readWinnowIndex(spark, wn).count() == 0L)
+    assert(Dedup.contaminationAgainstArtifact(spark, wn, docs).count() == 0L)
+    Dedup.appendWinnowIndexDelta(spark, wn, batch)
+    assert(Dedup.readWinnowIndex(spark, wn).count() ==
+      Dedup.winnowIndex(batch, 3, 4, "md5_60").count())
+  }
+
   test("bloom-screened exact dedup: empty and null-text batches, both routes") {
     val docs = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text")

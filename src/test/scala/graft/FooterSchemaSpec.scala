@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,34 +27,6 @@ class FooterSchemaSpec extends AnyFunSuite with SparkSpec {
   private def stage(resource: String, to: Path): Unit = {
     val res = getClass.getResourceAsStream(resource)
     try Files.copy(res, to) finally res.close()
-  }
-
-  /** Jobs started while `body` runs. The listener bus delivers events in
-    * order, so once a marker job started afterwards has been seen, every
-    * job `body` started has been counted. Returns their first stages'
-    * names (the call site, e.g. `parquet at Tables.scala:21`). */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val marker = "footer-schema-spec-marker"
-    val started = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("") -> e.stageInfos.headOption.fold("")(_.name))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.asScala.exists(_._1 == marker),
-        "the listener bus never delivered the marker job")
-      started.asScala.toSeq.filter(_._1 != marker).map(_._2)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def fieldTypes(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSeq

@@ -406,7 +406,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Dedup
     val (docs, seed, batch) = halves
     val path = artifactPath("graft_minhash_compact_shape")
-    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path, files = 2)
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path)
     Dedup.appendMinhashIndexDelta(spark, path, batch)
     Dedup.appendMinhashIndexDelta(spark, path, batch) // a replayed delta
     assertOneLayoutExchange("compactMinhashIndex",
@@ -414,6 +414,42 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       "hashpartitioning(doc_id#")
     assert(Dedup.readMinhashIndex(spark, path).count() ==
       Dedup.minhashBandIndex(docs, 5, 32, 8).count())
+  }
+
+  /** A minhash artifact write moves no signature rows: in its one final
+    * plan nothing above the kernel's projection is an exchange, and
+    * below it at most the input spread shuffles. */
+  private def assertNoSignatureShuffle(op: String, plans: Seq[String]): Unit = {
+    assert(plans.size == 1, s"$op wrote ${plans.size} times")
+    val p = plans.head.split("== Initial Plan ==")(0)
+    val at = p.indexOf("graft_minhash_band_keys(")
+    assert(at >= 0, s"$op's write plan runs no minhash kernel:\n$p")
+    val above = p.substring(0, at)
+    assert(!above.contains("Exchange") && !above.contains("ShuffleQueryStage"),
+      s"$op: an exchange sits above the minhash kernel:\n$p")
+    assert(spreadExchanges(p) <= 1 && keyedExchanges(p) == 0,
+      s"$op shuffles more than its input spread:\n$p")
+  }
+
+  test("minhash index build: no exchange moves signature rows") {
+    import graft.operators.Dedup
+    val (_, seed, _) = halves
+    assertNoSignatureShuffle("saveMinhashIndex", writePlans(
+      Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8),
+        artifactPath("graft_minhash_build_shape"))))
+  }
+
+  test("minhash index delta appends move no signature rows") {
+    import graft.operators.Dedup
+    val (_, seed, batch) = halves
+    val path = artifactPath("graft_minhash_append_shape")
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path)
+    assertNoSignatureShuffle("appendMinhashIndexDelta",
+      writePlans(Dedup.appendMinhashIndexDelta(spark, path, batch)))
+    val delta = Dedup.minhashIndexDelta(
+      Dedup.readMinhashIndex(spark, path), batch)
+    assertNoSignatureShuffle("appendMinhashIndexDeltaFrame",
+      writePlans(Dedup.appendMinhashIndexDeltaFrame(spark, path, delta)))
   }
 
   test("winnow index compaction shuffles once, on the range layout") {

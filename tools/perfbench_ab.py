@@ -5,8 +5,8 @@ Usage (from any directory):
 
     python3 tools/perfbench_ab.py --parent ../parent --change . \\
         --workload bi_mix --pairs 10 [--seed0 11] [--seconds 5] [--trace 0] \\
-        [--record ab.jsonl]
-    python3 tools/perfbench_ab.py --from ab.jsonl     # re-print a table
+        [--record ab.jsonl] [--ops]
+    python3 tools/perfbench_ab.py --from ab.jsonl [--ops]   # re-print a table
 
 Each pair runs `perfbench/run.py` once in each checkout with the same
 seed (seed0 + pair index), and pairs are matched by that seed, so
@@ -26,6 +26,12 @@ better in at least nine of ten pairs, and the medians apart by more
 than the parent's IQR, over at least ten pairs — and, for end-to-end
 metrics, flags a change whose median is worse than the parent's by
 more than the metric's bound.
+
+Every record also keeps the run's per-operation medians (the
+`details.ops` of the line before the result). `--ops` prints them side
+by side under the metric table — the medians over the pairs of each
+operation's per-run median, the parent's IQR and the pairs the change
+won — so an untraced A/B names the stages that moved.
 """
 import argparse
 import json
@@ -57,8 +63,10 @@ def run_once(checkout, args, seed):
         raise SystemExit(f"perfbench_ab: run failed in {checkout} "
                          f"(seed {seed}, exit {r.returncode})")
     res = json.loads(lines[-1])
+    ops = json.loads(lines[-2])["details"].get("ops", {}) if len(lines) > 1 else {}
     return {"correct": res["correct"], "failed": res["failed"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+            "ops": {k: v["median"] for k, v in ops.items() if v.get("n")}}
 
 
 def iqr(xs):
@@ -68,26 +76,44 @@ def iqr(xs):
     return q[2] - q[0]
 
 
-def table(records, spec, trace):
-    declared = spec["per_layer"] if trace else spec["end_to_end"]
-    # a pair is the two sides' runs on one seed: keyed by seed, batches
-    # appended to one record (each starting its pair index at 0, with
-    # --seed0 moved on) keep all their pairs
+def paired(records):
+    """A pair is the two sides' runs on one seed: keyed by seed, batches
+    appended to one record (each starting its pair index at 0, with
+    --seed0 moved on) keep all their pairs."""
     pairs = {}
     for r in records:
         pairs.setdefault(r["seed"], {})[r["side"]] = r
-    done = [p for p in sorted(pairs) if len(pairs[p]) == 2]
+    return [pairs[p] for p in sorted(pairs) if len(pairs[p]) == 2]
+
+
+def compare(par, chg, lower):
+    """Medians, delta, parent IQR and pair wins of one measure."""
+    pm, cm = statistics.median(par), statistics.median(chg)
+    wins = sum((c < p) if lower else (c > p) for p, c in zip(par, chg))
+    delta = (cm - pm) / pm if pm else 0.0
+    return pm, cm, delta, iqr(par), wins
+
+
+def render(rows):
+    widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
+    out = ["| " + " | ".join(c.ljust(w) for c, w in zip(r, widths)) + " |"
+           for r in rows]
+    out.insert(1, "| " + " | ".join("-" * w for w in widths) + " |")
+    return out
+
+
+def table(records, spec, trace):
+    declared = spec["per_layer"] if trace else spec["end_to_end"]
+    done = paired(records)
     n = len(done)
     need = math.ceil(0.9 * n)
     rows = [("metric", "parent median", "change median", "delta",
              "parent IQR", "change better", "verdict")]
     for m in declared:
         name, lower = m["name"], m["better"] == "lower"
-        par = [pairs[p]["parent"]["metrics"][name] for p in done]
-        chg = [pairs[p]["change"]["metrics"][name] for p in done]
-        pm, cm, spread = statistics.median(par), statistics.median(chg), iqr(par)
-        wins = sum((c < p) if lower else (c > p) for p, c in zip(par, chg))
-        delta = (cm - pm) / pm if pm else 0.0
+        pm, cm, delta, spread, wins = compare(
+            [p["parent"]["metrics"][name] for p in done],
+            [p["change"]["metrics"][name] for p in done], lower)
         worse = delta if lower else -delta
         if wins >= need and abs(cm - pm) > spread and worse < 0:
             verdict = "gain" if n >= 10 else f"better (only {n} pairs)"
@@ -99,14 +125,31 @@ def table(records, spec, trace):
             verdict = "flat"
         rows.append((name, f"{pm:.4g}", f"{cm:.4g}", f"{100 * delta:+.1f} %",
                      f"{spread:.3g}", f"{wins}/{n}", verdict))
-    widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
-    out = ["| " + " | ".join(c.ljust(w) for c, w in zip(r, widths)) + " |"
-           for r in rows]
-    out.insert(1, "| " + " | ".join("-" * w for w in widths) + " |")
+    out = render(rows)
     bad = [f"{r['side']} seed {r['seed']}"
            for r in records if not r["correct"]]
     out.append(f"{n} pairs; runs not correct: {bad or 'none'}")
     return "\n".join(out)
+
+
+def ops_table(records):
+    """Per-operation medians (seconds, lower is better), side by side."""
+    done = paired(records)
+    names = sorted({op for p in done for op in p["parent"].get("ops", {})}
+                   & {op for p in done for op in p["change"].get("ops", {})})
+    if not names:
+        return "no per-operation medians in the record"
+    rows = [("operation", "parent median s", "change median s", "delta",
+             "parent IQR", "change better")]
+    for op in names:
+        both = [p for p in done
+                if op in p["parent"].get("ops", {}) and op in p["change"].get("ops", {})]
+        pm, cm, delta, spread, wins = compare(
+            [p["parent"]["ops"][op] for p in both],
+            [p["change"]["ops"][op] for p in both], True)
+        rows.append((op, f"{pm:.4g}", f"{cm:.4g}", f"{100 * delta:+.1f} %",
+                     f"{spread:.3g}", f"{wins}/{len(both)}"))
+    return "\n".join(render(rows))
 
 
 def main():
@@ -122,6 +165,8 @@ def main():
     ap.add_argument("--record", help="append every run's result here (JSON lines)")
     ap.add_argument("--from", dest="from_file",
                     help="print the table of a recorded A/B instead of running one")
+    ap.add_argument("--ops", action="store_true",
+                    help="also print the per-operation medians side by side")
     args = ap.parse_args()
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "BENCHMARK.json")) as f:
@@ -131,6 +176,8 @@ def main():
         with open(args.from_file) as f:
             records = [json.loads(line) for line in f if line.strip()]
         print(table(records, spec, records[0]["trace"]))
+        if args.ops:
+            print(ops_table(records))
         return
     if not (args.parent and args.change and args.workload):
         ap.error("--parent, --change and --workload are required to run an A/B")
@@ -152,6 +199,8 @@ def main():
                 f"{k}={v:.4g}" for k, v in r["metrics"].items()),
                 file=sys.stderr, flush=True)
     print(table(records, spec, args.trace))
+    if args.ops:
+        print(ops_table(records))
 
 
 if __name__ == "__main__":
