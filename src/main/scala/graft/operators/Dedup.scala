@@ -1005,11 +1005,14 @@ object Dedup {
     * there is no point-lookup pushdown to lay out for (unlike the
     * hash/fingerprint families).
     *
-    * The params come from the frame's plan literals (a head row only
-    * for a frame without them), so the build runs the write job alone;
-    * an empty corpus builds a legal empty artifact (one schema-only
-    * file, params in the manifest) that screens find nothing in and
-    * appends roll forward. No layout exchange either: the files are
+    * The params come from the frame's plan literals, so the build runs
+    * the write job alone; an empty corpus builds a legal empty artifact
+    * (one schema-only file, params in the manifest) that screens find
+    * nothing in and appends roll forward. A frame without the literals
+    * (a scan of a stored index, a checkpoint) pays one head-row job for
+    * them instead, and an EMPTY one has no row to read them from: it
+    * fails fast there, before the lease, so the artifact at `path` is
+    * left as it was. No layout exchange either: the files are
     * the kernel stage's partitions — the thin docs [[Spread]] spread,
     * or the input's own splits — and a repartition after the kernel
     * would shuffle every `(sh, bk)` signature row once more for
@@ -1044,8 +1047,11 @@ object Dedup {
     * stage's partitions: a layout step after the kernel would either
     * shuffle the signature rows (the old `repartition(1)`) or, as a
     * coalesce, run the kernel in one task (the curation cycle's
-    * append stage +27 %, ten pairs on a 4-core box). Compaction folds
-    * the files. */
+    * append stage +27 %, ten pairs on a 4-core box). So the file count
+    * per append follows the cluster, not the batch: `defaultParallelism`
+    * files when [[Spread]] spreads a small batch, the batch's own
+    * partition count otherwise. Capping it would cap the kernel's
+    * parallelism with it; [[compactMinhashIndex]] folds the files. */
   def appendMinhashIndexDelta(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame): Unit =
     ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) {
@@ -1070,16 +1076,18 @@ object Dedup {
     * so the delta is computed before the sink runs. Routing it through
     * the staged protocol keeps a manifest-carrying artifact's sidecar
     * true under streaming appends (a raw `mode("append")` staled it
-    * without tripping the dirty flag). Each trigger lands `files`
-    * files: `coalesce`, not `repartition`, so the delta's signature
-    * rows reach them without a shuffle (a micro-batch's kernel is
-    * small enough for `files` tasks). */
+    * without tripping the dirty flag).
+    *
+    * The delta lands its own partitions — those of the kept rows it was
+    * fingerprinted from, so a trigger adds as many index files as
+    * corpus files. A `repartition(1)` would shuffle the signature rows;
+    * a `coalesce(1)` would pull the kernel into one task whenever the
+    * kept rows span several partitions. */
   def appendMinhashIndexDeltaFrame(spark: org.apache.spark.sql.SparkSession,
-      path: String, delta: DataFrame, files: Int = 1): Unit =
+      path: String, delta: DataFrame): Unit =
     ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) { _ =>
       dest =>
-        delta.coalesce(files)
-          .write.mode(if (dest == path) "append" else "overwrite")
+        delta.write.mode(if (dest == path) "append" else "overwrite")
           .parquet(dest)
     }
 
@@ -1749,8 +1757,9 @@ object Dedup {
     * (`wf_k`/`wf_w`/`wf_algo`), so appends and screens never open a
     * footer for them; the whole build runs under the family's writer
     * lease. The params come from the frame's plan literals (no head-row
-    * job), so an empty corpus builds a legal empty artifact, as
-    * [[saveMinhashIndex]] does. */
+    * job), so an empty corpus builds a legal empty artifact, and a
+    * frame without them reads a head row — failing fast, before the
+    * lease, when it is empty — as [[saveMinhashIndex]] does. */
   def saveWinnowIndex(index: DataFrame, path: String, files: Int = 8): Unit = {
     val spark = index.sparkSession
     val (k, w, algo) = PlanLiterals(index, "wf_k", "wf_w", "wf_algo") match {

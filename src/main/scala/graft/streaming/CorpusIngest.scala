@@ -203,8 +203,9 @@ object CorpusIngest {
     * hold a non-empty [[Dedup.minhashBandIndex]] before the stream
     * starts — the artifact carries the signature parameters).
     *
-    * Both directories accrue one file per micro-batch — the standard
-    * streaming-sink debt; fold the corpus periodically with
+    * Both directories accrue the same number of files per micro-batch,
+    * one per partition of the kept rows (one, for a small trigger) —
+    * the standard streaming-sink debt; fold the corpus periodically with
     * [[graft.sources.WarehouseWriter.compactParquet]] and the index
     * with [[Dedup.compactMinhashIndex]] (which also re-adopts the
     * manifest a [[Dedup.saveMinhashIndex]]-built artifact carries),

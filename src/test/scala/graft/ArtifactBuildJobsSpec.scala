@@ -58,6 +58,66 @@ class ArtifactBuildJobsSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.readMinhashIndex(spark, p).count() == index.count())
   }
 
+  /** `build` reads its params back with exactly one `take(1)` job. */
+  private def assertHeadRowRead(what: String)(build: => Unit): Unit = {
+    val jobs = jobsDuring(build)
+    assert(jobs.count(_.startsWith("take at Dedup.scala")) == 1,
+      s"$what should read one head row: ${jobs.mkString(", ")}")
+  }
+
+  test("a frame without plan literals reads its params from a head row; " +
+      "empty, it fails before the live artifact is touched") {
+    // a stored artifact's scan carries the params as data, not literals
+    val mh = Dedup.minhashBandIndex(docs, 5, 32, 8)
+    val mhSrc = path("graft_jobs_mh_src")
+    Dedup.saveMinhashIndex(mh, mhSrc)
+    val mhStored = Dedup.readMinhashIndex(spark, mhSrc)
+    assert(PlanLiterals(mhStored, "mh_k").isEmpty)
+    val mhDst = path("graft_jobs_mh_dst")
+    assertHeadRowRead("saveMinhashIndex(stored)")(
+      Dedup.saveMinhashIndex(mhStored, mhDst))
+    assert(Dedup.readMinhashIndex(spark, mhDst).count() == mh.count())
+    val mhEx = intercept[IllegalArgumentException](
+      Dedup.saveMinhashIndex(mhStored.limit(0), mhDst))
+    assert(mhEx.getMessage.contains("empty minhash index"))
+    assert(Dedup.readMinhashIndex(spark, mhDst).count() == mh.count())
+
+    val wn = Dedup.winnowIndex(docs, 5, 4)
+    val wnSrc = path("graft_jobs_wn_src")
+    Dedup.saveWinnowIndex(wn, wnSrc)
+    val wnStored = Dedup.readWinnowIndex(spark, wnSrc)
+    val wnDst = path("graft_jobs_wn_dst")
+    assertHeadRowRead("saveWinnowIndex(stored)")(
+      Dedup.saveWinnowIndex(wnStored, wnDst))
+    assert(Dedup.readWinnowIndex(spark, wnDst).count() == wn.count())
+    val wnEx = intercept[IllegalArgumentException](
+      Dedup.saveWinnowIndex(wnStored.limit(0), wnDst))
+    assert(wnEx.getMessage.contains("empty winnow index"))
+    assert(Dedup.readWinnowIndex(spark, wnDst).count() == wn.count())
+  }
+
+  test("a minhash delta lands one file per kernel task") {
+    def liveFiles(p: String) = graft.operators.ArtifactManifest
+      .readClean(spark, p, "minhash_band_index").get.totalFiles
+    val p = path("graft_jobs_mh_append")
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(
+      docs.filter($"doc_id" % 2 === 0), 5, 32, 8), p)
+    // a one-file batch: Spread runs its kernel across every core, and
+    // each kernel task writes its own file
+    val before = liveFiles(p)
+    Dedup.appendMinhashIndexDelta(spark, p, docs.filter($"doc_id" % 2 === 1))
+    assert(liveFiles(p) - before == spark.sparkContext.defaultParallelism)
+    // the streaming sink's delta keeps its kept rows' partitioning, so a
+    // trigger adds as many index files as corpus files, its kernel
+    // neither shuffled nor narrowed to fewer tasks
+    val kept = docs.filter($"doc_id" % 2 === 1).repartition(2, $"doc_id")
+      .localCheckpoint(true)
+    val before2 = liveFiles(p)
+    Dedup.appendMinhashIndexDeltaFrame(spark, p,
+      Dedup.minhashIndexDelta(Dedup.readMinhashIndex(spark, p), kept))
+    assert(liveFiles(p) - before2 == 2)
+  }
+
   test("a winnow index build runs only its write") {
     val index = Dedup.winnowIndex(docs, 5, 4)
     val p = path("graft_jobs_winnow")
@@ -83,5 +143,18 @@ class ArtifactBuildJobsSpec extends AnyFunSuite with SparkSpec {
     assertJobs("saveIvfPostings(Pq)", 3)(
       Similarity.saveIvfPostings(coded, pp, codec))
     assert(Similarity.readPostings(spark, pp).count() == coded.count())
+
+    // a stored artifact's scan carries pq_ck as data: the codes check
+    // falls back to its distinct job, and the foreign check still holds
+    val stored = Similarity.readPostings(spark, pp)
+    assert(PlanLiterals(stored, "pq_ck").isEmpty)
+    val rp = path("graft_jobs_pq_resave")
+    Similarity.saveIvfPostings(stored, rp, codec)
+    assert(Similarity.readPostings(spark, rp).count() == coded.count())
+    val other = PostingsCodec.Pq(Similarity.pqCodebooksFromHead(e, m = 8,
+      k = 8, residual = Some(Flat(cents))))
+    val ex = intercept[IllegalArgumentException](
+      Similarity.saveIvfPostings(stored, path("graft_jobs_pq_foreign"), other))
+    assert(ex.getMessage.contains("re-encode"))
   }
 }
