@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * strings, and every data file with exact bytes + footer row counts.
   *
   * What it buys, same as the postings family: serve-time planning with
-  * ZERO filesystem listings ([[readFlat]] plans the scan from a
+  * ZERO filesystem listings ([[readFlatFromState]] plans the scan from a
   * [[graft.plans.ManifestFileIndex]] snapshot — a
   * `spark.read.parquet(dir)` lists every file before the first task,
   * the measured serving term as file counts grow), params without a
@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rebuilds), and the sibling writer lease (single-writer maintenance,
   * fail-fast on a second writer). Flat artifacts carry no retention/
   * tombstone machinery — their compactions are overwrite-style swaps
-  * ([[graft.sources.WarehouseWriter.compactParquet]]'s durable-swap
-  * discipline), so there is nothing to retire.
+  * ([[graft.sources.WarehouseWriter.overwriteParquetAtomic]]), so there
+  * is nothing to retire. [[FlatIndex]] runs the index families'
+  * lifecycle over this codec.
   *
   * Reference analogue: the warehouse's reliance on DB catalogs instead
   * of directory walks (init-user-db.sh:119-120), the same move Delta
@@ -175,30 +176,12 @@ object ArtifactManifest extends ManifestLog {
           "to read it as the wrong artifact kind")
     }
 
-  /** Open a flat artifact for serving: with a clean manifest the scan
-    * is planned from a [[graft.plans.ManifestFileIndex]] snapshot —
-    * zero listings, exact byte sizes for the optimizer, pushed-down
-    * data filters reaching the parquet row groups exactly as on a
-    * discovered read. Falls back to the DISCOVERING
-    * `spark.read.parquet` for manifest-less or dirty artifacts (flat
-    * families have no tombstones, so the listing IS truth there) —
-    * schema-less deliberately, so a genuinely foreign directory fails
-    * at column resolution instead of serving typed nulls; a PRESENT
-    * manifest of another family throws before any scan. */
-  def readFlat(spark: SparkSession, path: String, family: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    readClean(spark, path, family) match {
-      case Some(st) => readFlatFromState(spark, path, st, schema)
-      case None =>
-        requireFamilyOrUnknown(spark, path, family)
-        spark.catalog.refreshByPath(path)
-        spark.read.parquet(path)
-    }
-
-  /** [[readFlat]]'s manifest-planned scan over a State the caller
-    * ALREADY read — for consumers that need params AND the scan from
-    * one sidecar read (re-running readClean cost a second read plus a
-    * small TOCTOU between the two on every serve-time open). */
+  /** A clean manifest's scan: planned from a
+    * [[graft.plans.ManifestFileIndex]] snapshot of the State the caller
+    * ALREADY read ([[FlatIndex.open]] takes params and scan from one
+    * sidecar read) — zero listings, exact byte sizes for the optimizer,
+    * pushed-down data filters reaching the row groups exactly as on a
+    * discovered read. */
   def readFlatFromState(spark: SparkSession, path: String, st: State,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val root = new Path(path.stripSuffix("/"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps._
 import graft.functions.VectorOps._
+import graft.sources.WarehouseWriter.rangeSorted
 
 /** Deduplication operators for a training-data pipeline, over a
   * `documents(doc_id, text, ...)` relation.
@@ -343,32 +344,20 @@ object Dedup {
   def appendToExactIndex(index: DataFrame, keptDocs: DataFrame): DataFrame =
     index.unionByName(exactIndexDelta(keptDocs))
 
-  /** The exact-hash index's family tag and data schema in its
-    * [[ArtifactManifest]] sidecar (one 16-byte column — see
-    * [[exactHashIndex]]). */
-  private val ExactIndexFamily = "exact_hash_index"
-  private val exactIndexSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("text_hash",
-      org.apache.spark.sql.types.StringType)))
-
   /** Open a persisted [[saveExactIndex]] directory for screening — the
     * read every serve-time consumer ([[dedupAgainstIndex]] /
-    * [[dedupAgainstIndexScreened]]) should start from. With a clean
-    * [[ArtifactManifest]] the scan plans from a
-    * [[graft.plans.ManifestFileIndex]] snapshot: ZERO filesystem
+    * [[dedupAgainstIndexScreened]]) should start from
+    * ([[FlatIndex.open]]): with a clean manifest, ZERO filesystem
     * listings — at one listing per INGEST BATCH on a monthly-dump
     * cadence (docker/aact/Dockerfile:20-22) over a 10⁵⁺-file object
     * store artifact, discovery was the screen's last
     * artifact-proportional metadata term — and the screened route's
     * pushed-down IN predicate prunes row groups off the manifest's
     * exact byte extents the same way it does off a discovered index
-    * (DedupSpec's census pins it). Falls back to the discovering read
-    * for manifest-less or dirty artifacts (flat artifact: the listing
-    * is truth). */
+    * (DedupSpec's census pins it). */
   def readExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    ArtifactManifest.readFlat(spark, path, ExactIndexFamily,
-      exactIndexSchema)
+    FlatIndex.Exact.open(spark, path)._1
 
   /** Persist an [[exactHashIndex]] as a range-sorted parquet DIRECTORY
     * — the artifact layout [[dedupAgainstIndexScreened]]'s point-lookup
@@ -376,30 +365,16 @@ object Dedup {
     * row group's min/max stats tight, so a pushed-down IN predicate
     * reads ∝ candidates, not ∝ index (the
     * [[graft.sources.WarehouseWriter.saveSorted]] physics, applied to
-    * a path-addressed artifact). Born with an [[ArtifactManifest]]
-    * sidecar (one listing + one footer job at build time — the one
-    * moment an O(artifact) metadata pass is already being paid), so
-    * every later append/serve plans zero-listing; the sibling writer
-    * lease makes a rebuild of a live artifact fail fast against a
-    * concurrent maintainer. */
+    * a path-addressed artifact), born with its manifest under the
+    * writer lease ([[FlatIndex.build]]). */
   def saveExactIndex(index: DataFrame, path: String, files: Int = 8): Unit =
-    MaintenanceProtocol.withLease(index.sparkSession, path, "build") {
-      index
-        .repartitionByRange(files,
-          org.apache.spark.sql.functions.col("text_hash"))
-        .sortWithinPartitions("text_hash")
-        .write.mode("overwrite").parquet(path)
-      ArtifactManifest.rebuildAndWrite(index.sparkSession, path,
-        ExactIndexFamily, Map.empty)
-    }
+    FlatIndex.Exact.build(index, path)(rangeSorted(_, files, "text_hash"))
 
   /** Roll a persisted [[saveExactIndex]] directory forward with an
     * ingest round's kept rows — cost ∝ BATCH, nothing ∝ the index:
     * the delta lands as `files` new part-files (sorted within
-    * themselves, so their OWN row-group stats stay tight), staged into
-    * a sibling temp dir and RENAMED in — the standing artifact is
-    * never listed, and the manifest rolls forward from the staging
-    * listing alone (entries ∝ batch). The LSM debt this accrues is
+    * themselves, so their OWN row-group stats stay tight), staged in by
+    * rename ([[FlatIndex.append]]). The LSM debt this accrues is
     * bounded and OBSERVABLE, not silent: every appended file spans
     * ~the full hash range, so file-level zone pruning erodes with
     * append count (row-group pruning inside each sorted file survives)
@@ -429,46 +404,26 @@ object Dedup {
     * folded without a hash exchange of its own. */
   def appendExactIndexDeltaFrame(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, files: Int = 1): Unit =
-    ArtifactManifest.appendStaged(spark, path, ExactIndexFamily) { _ =>
-      dest =>
-        delta
-          .repartitionByRange(files, col("text_hash"))
-          .distinct()
-          .sortWithinPartitions("text_hash")
-          .write.mode(if (dest == path) "append" else "overwrite")
-          .parquet(dest)
-    }
+    FlatIndex.Exact.append(spark, path)(_ =>
+      rangeSorted(delta, files, "text_hash", distinct = true))
 
   /** Fold a delta-appended [[saveExactIndex]] directory back to the
-    * pristine layout: distinct (replayed deltas fold away) + global
-    * range-sort, so file-level AND row-group zone pruning both hold
-    * again — on ONE range exchange on `text_hash`, which the distinct
-    * rides (no schema-inference job either). Same swap discipline and
-    * concurrency stance as
-    * [[graft.sources.WarehouseWriter.compactParquet]] (which does the
-    * work — this names the dedup+sort recipe for the exact-index
-    * artifact), then the manifest is rebuilt from the fresh directory
-    * (the swap replaced the whole directory, sidecar included — and
-    * compaction is the flat families' manifest ADOPTION point, like
-    * the postings family's). Returns (files before, files after,
+    * pristine layout ([[FlatIndex.compact]]): distinct (replayed deltas
+    * fold away) + global range-sort, so file-level AND row-group zone
+    * pruning both hold again — on ONE range exchange on `text_hash`,
+    * which the distinct rides. The output file count is
+    * ceil(input bytes / `targetFileBytes`) — an upper-bound shape: the
+    * distinct only shrinks files. Returns (files before, files after,
     * input bytes). */
   def compactExactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetFileBytes: Long = 128L << 20): (Int, Int, Long) =
-    MaintenanceProtocol.withLease(spark, path, "compact") {
-      ManifestLog.sweepStaleDeltas(spark, path)
-      // the rename-staged appends bypass Spark's FileStatusCache
-      // invalidation — compacting from a stale cached listing would
-      // silently DROP the appended rows and certify the truncated
-      // artifact as clean (the siblings refresh too)
-      spark.catalog.refreshByPath(path)
-      MaintenanceProtocol.markDirty(spark, path)
-      val r = graft.sources.WarehouseWriter.compactParquet(spark, path,
-        targetFileBytes, sortCol = Some("text_hash"), dedup = true)
-      if (r._1 == 0) MaintenanceProtocol.clearDirty(spark, path) // empty dir
-      else ArtifactManifest.rebuildAndWrite(spark, path, ExactIndexFamily,
-        Map.empty)
-      r
+      path: String, targetFileBytes: Long = 128L << 20): (Int, Int, Long) = {
+    require(targetFileBytes > 0, s"targetFileBytes must be positive")
+    FlatIndex.Exact.compact(spark, path) { (stored, _, bytes) =>
+      rangeSorted(stored, math.max(1L,
+        (bytes + targetFileBytes - 1) / targetFileBytes).toInt,
+        "text_hash", distinct = true)
     }
+  }
 
   /** Distinct k-token shingles per doc (docs shorter than k dropped). */
   def shingleTable(docs: DataFrame, k: Int): DataFrame = {
@@ -813,13 +768,10 @@ object Dedup {
       bands: Int, hashedShingles: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    minhashSignatures(docs, k, numHashes, bands)
+    FlatIndex.Minhash.stamp(minhashSignatures(docs, k, numHashes, bands)
       .withColumn("sh",
-        if (hashedShingles) transform($"sh", s => xxhash64(s)) else $"sh")
-      .withColumn("mh_k", lit(k))
-      .withColumn("mh_hashes", lit(numHashes))
-      .withColumn("mh_bands", lit(bands))
-      .withColumn("mh_hashed", lit(hashedShingles))
+        if (hashedShingles) transform($"sh", s => xxhash64(s)) else $"sh"),
+      Seq(k, numHashes, bands, hashedShingles))
   }
 
   /** Append an ingest batch (typically the rows [[nearDupAgainstIndex]]
@@ -835,22 +787,15 @@ object Dedup {
     * embedded parameters. For an index stored as a parquet directory
     * this is the frame to `append` (cost and bytes ∝ batch); the union
     * form exists for in-memory composition and specs. */
-  def minhashIndexDelta(index: DataFrame, newDocs: DataFrame): DataFrame = {
-    val (k, numHashes, bands, hashed) = minhashIndexParams(index)
-    minhashBandIndex(newDocs, k, numHashes, bands, hashed)
-  }
+  def minhashIndexDelta(index: DataFrame, newDocs: DataFrame): DataFrame =
+    minhashDelta(FlatIndex.Minhash.headParams(index), newDocs)
 
-  /** The signature parameters embedded in a [[minhashBandIndex]] — one
-    * single-row read of the artifact (fail-fast seam: an empty index
-    * has no parameters to screen with; build it with
-    * [[minhashBandIndex]] first). */
-  private def minhashIndexParams(index: DataFrame): (Int, Int, Int, Boolean) = {
-    val head = index.select("mh_k", "mh_hashes", "mh_bands", "mh_hashed")
-      .take(1)
-    require(head.nonEmpty,
-      "empty minhash index — build it with minhashBandIndex over the initial corpus")
-    val p = head(0)
-    (p.getInt(0), p.getInt(1), p.getInt(2), p.getBoolean(3))
+  /** `newDocs` fingerprinted under minhash params `p`. The in-memory
+    * routes read `p` from the index's head row — one job, and an EMPTY
+    * index fails fast: it has no parameters to screen with. */
+  private def minhashDelta(p: Seq[Any], newDocs: DataFrame): DataFrame = {
+    val Seq(k: Int, numHashes: Int, bands: Int, hashed: Boolean) = p
+    minhashBandIndex(newDocs, k, numHashes, bands, hashed)
   }
 
   /** Incremental near-dup screening of an ingest batch against a
@@ -876,16 +821,17 @@ object Dedup {
     * verification is also corpus-scan-free and candidate-proportional. */
   def nearDupAgainstIndex(newDocs: DataFrame, index: DataFrame,
       threshold: Double): DataFrame =
-    nearDupWithParams(newDocs, index, minhashIndexParams(index), threshold)
+    nearDupWithParams(newDocs, index, FlatIndex.Minhash.headParams(index),
+      threshold)
 
   /** [[nearDupAgainstIndex]] under signature params the caller already
     * holds — the artifact route passes the manifest's, so no data-head
     * job reads them again. */
   private def nearDupWithParams(newDocs: DataFrame, index: DataFrame,
-      params: (Int, Int, Int, Boolean), threshold: Double): DataFrame = {
+      params: Seq[Any], threshold: Double): DataFrame = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val (k, numHashes, bands, hashed) = params
+    val Seq(k: Int, numHashes: Int, bands: Int, hashed: Boolean) = params
     // both the candidate joins and the verify joins consume each side.
     // LAZY persists, on purpose — both alternatives measured worse on
     // the curation cycle's near-dup screen (4-core box): an eager
@@ -933,77 +879,22 @@ object Dedup {
 
   // --------------------------------------------- minhash-index artifact
 
-  /** The minhash band-key index's family tag and data schema in its
-    * [[ArtifactManifest]] sidecar (see [[minhashBandIndex]]; the
-    * shingle column's element type follows the `hashed`
-    * representation). */
-  private val MinhashIndexFamily = "minhash_band_index"
-  private def minhashIndexSchema(hashed: Boolean)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("sh",
-        ArrayType(if (hashed) LongType else StringType)),
-      StructField("bk", ArrayType(LongType)),
-      StructField("mh_k", IntegerType),
-      StructField("mh_hashes", IntegerType),
-      StructField("mh_bands", IntegerType),
-      StructField("mh_hashed", BooleanType)))
-  }
-
-  /** Open a persisted [[saveMinhashIndex]] directory for screening:
-    * with a clean [[ArtifactManifest]] the scan plans from a
-    * [[graft.plans.ManifestFileIndex]] snapshot — ZERO filesystem
-    * listings at any corpus age (the band screen scans the index once
-    * per ingest and never shuffles it; discovery was its one
-    * artifact-proportional metadata term). Falls back to the
-    * discovering read for manifest-less or dirty artifacts. Heals a
-    * compaction that crashed inside its swap's delete→install window
-    * first ([[graft.sources.WarehouseWriter.recoverSwap]] — this
-    * family's compaction swaps via overwriteParquetAtomic, and the
-    * dirty flag lived inside the deleted directory, so nothing else
-    * would signal recovery); the scan plans from ONE sidecar read
-    * (params and file list from the same State — no repeat read, no
-    * TOCTOU between them). */
+  /** Open a persisted [[saveMinhashIndex]] directory for screening
+    * ([[FlatIndex.open]]): with a clean manifest the scan plans with
+    * ZERO filesystem listings at any corpus age (the band screen scans
+    * the index once per ingest and never shuffles it; discovery was
+    * its one artifact-proportional metadata term), after healing a
+    * compaction that crashed inside its swap window. */
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    minhashIndexWithParams(spark, path)._1
+    FlatIndex.Minhash.open(spark, path)._1
 
-  /** The minhash artifact's (scan, params thunk) from ONE manifest
-    * read — shared by the serve, screen, and compaction paths. The
-    * params half is LAZY on the manifest-less fallback (a data-head
-    * `take(1)` job): read-only callers ([[readMinhashIndex]]) keep the
-    * plain discovering scan — no extra Spark job, and an empty
-    * manifest-less index still returns its (empty) frame instead of
-    * throwing at open. */
-  private def minhashIndexWithParams(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, () => (Int, Int, Int, Boolean)) = {
-    graft.sources.WarehouseWriter.recoverSwap(spark, path)
-    ArtifactManifest.readClean(spark, path, MinhashIndexFamily) match {
-      case Some(st) =>
-        val params = (st.params("k").toInt, st.params("hashes").toInt,
-          st.params("bands").toInt, st.params("hashed").toBoolean)
-        (ArtifactManifest.readFlatFromState(spark, path, st,
-          minhashIndexSchema(params._4)), () => params)
-      case None =>
-        ArtifactManifest.requireFamilyOrUnknown(spark, path,
-          MinhashIndexFamily)
-        spark.catalog.refreshByPath(path)
-        val df = spark.read.parquet(path)
-        lazy val p = minhashIndexParams(df)
-        (df, () => p)
-    }
-  }
-
-  /** Persist a [[minhashBandIndex]] with an [[ArtifactManifest]]
-    * sidecar carrying the signature params (`k`/`hashes`/`bands`/
-    * `hashed`), so appends never open a data head for them; same
-    * lease + born-with-a-manifest discipline as the other artifact
-    * families. No sort: the band screen joins on exploded band keys —
-    * there is no point-lookup pushdown to lay out for (unlike the
-    * hash/fingerprint families).
+  /** Persist a [[minhashBandIndex]] with its manifest carrying the
+    * signature params (`k`/`hashes`/`bands`/`hashed`), so appends
+    * never open a data head for them ([[FlatIndex.build]]). No sort:
+    * the band screen joins on exploded band keys — there is no
+    * point-lookup pushdown to lay out for (unlike the hash/fingerprint
+    * families).
     *
     * The params come from the frame's plan literals, so the build runs
     * the write job alone; an empty corpus builds a legal empty artifact
@@ -1017,26 +908,14 @@ object Dedup {
     * or the input's own splits — and a repartition after the kernel
     * would shuffle every `(sh, bk)` signature row once more for
     * nothing but a file count. */
-  def saveMinhashIndex(index: DataFrame, path: String): Unit = {
-    val spark = index.sparkSession
-    val (k, numHashes, bands, hashed) =
-      PlanLiterals(index, "mh_k", "mh_hashes", "mh_bands", "mh_hashed") match {
-        case Some(Seq(k: Int, h: Int, b: Int, hashed: Boolean)) =>
-          (k, h, b, hashed)
-        case _ => minhashIndexParams(index)
-      }
-    MaintenanceProtocol.withLease(spark, path, "build") {
-      index.write.mode("overwrite").parquet(path)
-      ArtifactManifest.rebuildAndWrite(spark, path, MinhashIndexFamily,
-        Map("k" -> k.toString, "hashes" -> numHashes.toString,
-          "bands" -> bands.toString, "hashed" -> hashed.toString))
-    }
-  }
+  def saveMinhashIndex(index: DataFrame, path: String): Unit =
+    FlatIndex.Minhash.build(index, path)(identity)
 
   /** Roll a persisted [[saveMinhashIndex]] directory forward with an
     * ingest batch — cost ∝ BATCH: the batch is fingerprinted under the
     * ARTIFACT's params (manifest read, no data head), staged in by
-    * rename, manifest rolled forward from the staging listing alone.
+    * rename, manifest rolled forward from the staging listing alone
+    * ([[FlatIndex.append]]).
     * REPLAY-TOLERANT: a crash-redelivered batch appends exact duplicate
     * rows, which [[nearDupAgainstArtifact]] folds at the pair level
     * and [[compactMinhashIndex]] folds physically — no fresh-id
@@ -1054,20 +933,7 @@ object Dedup {
     * parallelism with it; [[compactMinhashIndex]] folds the files. */
   def appendMinhashIndexDelta(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame): Unit =
-    ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) {
-      state0 =>
-        val (k, numHashes, bands, hashed) = state0 match {
-          case Some(st) => (st.params("k").toInt, st.params("hashes").toInt,
-            st.params("bands").toInt, st.params("hashed").toBoolean)
-          case None =>
-            spark.catalog.refreshByPath(path)
-            minhashIndexParams(spark.read.parquet(path))
-        }
-        val delta = minhashBandIndex(newDocs, k, numHashes, bands, hashed)
-        dest =>
-          delta.write.mode(if (dest == path) "append" else "overwrite")
-            .parquet(dest)
-    }
+    FlatIndex.Minhash.append(spark, path)(p => minhashDelta(p(), newDocs))
 
   /** [[appendMinhashIndexDelta]] for an ALREADY-FINGERPRINTED delta
     * (rows shaped by [[minhashIndexDelta]] under the artifact's own
@@ -1085,47 +951,21 @@ object Dedup {
     * kept rows span several partitions. */
   def appendMinhashIndexDeltaFrame(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame): Unit =
-    ArtifactManifest.appendStaged(spark, path, MinhashIndexFamily) { _ =>
-      dest =>
-        delta.write.mode(if (dest == path) "append" else "overwrite")
-          .parquet(dest)
-    }
+    FlatIndex.Minhash.append(spark, path)(_ => delta)
 
-  /** Fold a delta-appended [[saveMinhashIndex]] directory: whole-row
-    * distinct (replayed deltas are exact duplicates) under the durable
-    * swap, manifest rebuilt over the fresh directory. The fold shuffles
-    * its rows ONCE — hash on `doc_id` into `files` partitions, which
-    * the distinct rides (identical rows share a doc_id) — so the
-    * compacted files are laid out by doc_id hash. The directory is read
-    * once, with its schema from one footer (no inference job). Returns
-    * (files before, files after). */
+  /** Fold a delta-appended [[saveMinhashIndex]] directory
+    * ([[FlatIndex.compact]]): whole-row distinct (replayed deltas are
+    * exact duplicates). The fold shuffles its rows ONCE — hash on
+    * `doc_id` into `files` partitions, which the distinct rides
+    * (identical rows share a doc_id) — so the compacted files are laid
+    * out by doc_id hash. Returns (files before, files after). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Int = 8): (Int, Int) =
-    MaintenanceProtocol.withLease(spark, path, "compact") {
-      // heal a previous compaction that crashed inside its swap window
-      // BEFORE reading — the artifact directory may be entirely absent
-      graft.sources.WarehouseWriter.recoverSwap(spark, path)
-      ManifestLog.sweepStaleDeltas(spark, path)
-      val (k, numHashes, bands, hashed) = minhashArtifactParams(spark, path)
-      spark.catalog.refreshByPath(path)
-      val stored = graft.Tables.read(spark, path)
-      val before = stored.inputFiles.length
-      MaintenanceProtocol.markDirty(spark, path)
-      val folded = stored.repartition(files, col("doc_id")).distinct()
-      graft.sources.WarehouseWriter.overwriteParquetAtomic(folded, path)
-      val st = ArtifactManifest.rebuildAndWrite(spark, path,
-        MinhashIndexFamily,
-        Map("k" -> k.toString, "hashes" -> numHashes.toString,
-          "bands" -> bands.toString, "hashed" -> hashed.toString))
-      (before, st.totalFiles)
+      path: String, files: Int = 8): (Int, Int) = {
+    val (before, after, _) = FlatIndex.Minhash.compact(spark, path) {
+      (stored, _, _) => stored.repartition(files, col("doc_id")).distinct()
     }
-
-  /** Signature params from the artifact's manifest — no data-head
-    * read; manifest-less artifacts fall back to one head read. */
-  private def minhashArtifactParams(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int, Int, Boolean) =
-    minhashIndexWithParams(spark, path)._2()
+    (before, after)
+  }
 
   /** [[nearDupAgainstIndex]] THROUGH a persisted artifact: the index
     * side resolves via the manifest-planned [[readMinhashIndex]] (zero
@@ -1139,7 +979,7 @@ object Dedup {
     * Everything else is the in-memory screen verbatim. */
   def nearDupAgainstArtifact(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, threshold: Double): DataFrame = {
-    val (index, params) = minhashIndexWithParams(spark, path)
+    val (index, params) = FlatIndex.Minhash.open(spark, path)
     nearDupWithParams(newDocs, index, params(), threshold)
       .dropDuplicates(Seq("doc_a", "doc_b"))
   }
@@ -1589,10 +1429,8 @@ object Dedup {
     * far smaller than the text it indexes. */
   def winnowIndex(docs: DataFrame, k: Int, w: Int,
       algo: String = "xx64"): DataFrame =
-    withDf(winnowFingerprints(docs, k, w, algo))
-      .withColumn("wf_k", lit(k))
-      .withColumn("wf_w", lit(w))
-      .withColumn("wf_algo", lit(algo))
+    FlatIndex.Winnow.stamp(withDf(winnowFingerprints(docs, k, w, algo)),
+      Seq(k, w, algo))
 
   /** Attach each fingerprint's document frequency as a stored column —
     * ONE shuffle at index-build/append time so that every screen can
@@ -1608,14 +1446,11 @@ object Dedup {
       org.apache.spark.sql.expressions.Window.partitionBy($"fingerprint")))
   }
 
-  /** The winnowing parameters embedded in a [[winnowIndex]] — one
-    * single-row read of the artifact (fail-fast seam, mirroring
-    * [[minhashIndexParams]]). */
-  private def winnowIndexParams(index: DataFrame): (Int, Int, String) = {
-    val head = index.select("wf_k", "wf_w", "wf_algo").take(1)
-    require(head.nonEmpty,
-      "empty winnow index — build it with winnowIndex over the training corpus")
-    (head(0).getInt(0), head(0).getInt(1), head(0).getString(2))
+  /** `docs` winnowed under winnow params `p` — [[minhashDelta]]'s
+    * counterpart (the in-memory routes read `p` from a head row). */
+  private def winnowDelta(p: Seq[Any], docs: DataFrame): DataFrame = {
+    val Seq(k: Int, w: Int, algo: String) = p
+    winnowFingerprints(docs, k, w, algo)
   }
 
   /** Append newly ingested training docs to a standing [[winnowIndex]]
@@ -1636,7 +1471,7 @@ object Dedup {
   def appendToWinnowIndex(index: DataFrame, newDocs: DataFrame): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val (k, w, algo) = winnowIndexParams(index)
+    val p = FlatIndex.Winnow.headParams(index)
     val colliding = newDocs.select($"doc_id")
       .join(index.select($"doc_id"), Seq("doc_id"), "left_semi")
       .take(3)
@@ -1648,11 +1483,8 @@ object Dedup {
     // df must be recomputed over the UNION (a fingerprint's frequency
     // changes when new docs carry it) — one shuffle per append, paid on
     // the rare side of the build-once/screen-often asymmetry
-    withDf(index.select($"doc_id", $"fingerprint")
-      .unionByName(winnowFingerprints(newDocs, k, w, algo)))
-      .withColumn("wf_k", lit(k))
-      .withColumn("wf_w", lit(w))
-      .withColumn("wf_algo", lit(algo))
+    FlatIndex.Winnow.stamp(withDf(index.select($"doc_id", $"fingerprint")
+      .unionByName(winnowDelta(p, newDocs))), p)
   }
 
   /** Incremental train/eval contamination screening against a standing
@@ -1676,9 +1508,8 @@ object Dedup {
       maxDF: Int = 100, minShared: Int = 2): DataFrame = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val (k, w, algo) = winnowIndexParams(index)
     val capped = index.filter($"df" <= maxDF)
-    winnowFingerprints(newDocs, k, w, algo)
+    winnowDelta(FlatIndex.Winnow.headParams(index), newDocs)
       .select($"fingerprint", $"doc_id".as("new_id"))
       .join(capped.select($"fingerprint", $"doc_id".as("corpus_id")),
         "fingerprint")
@@ -1689,99 +1520,33 @@ object Dedup {
 
   // ---------------------------------------------- winnow-index artifact
 
-  /** The winnow index's family tag and data schema in its
-    * [[ArtifactManifest]] sidecar (see [[winnowIndex]]). */
-  private val WinnowIndexFamily = "winnow_index"
-  private val winnowIndexSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("fingerprint", LongType),
-      StructField("df", LongType),
-      StructField("wf_k", IntegerType),
-      StructField("wf_w", IntegerType),
-      StructField("wf_algo", StringType)))
-  }
-
-  /** Open a persisted [[saveWinnowIndex]] directory for screening: with
-    * a clean [[ArtifactManifest]] the scan plans from a
-    * [[graft.plans.ManifestFileIndex]] snapshot — ZERO filesystem
-    * listings at any corpus age, with the screen's pushed-down
-    * fingerprint/df predicates pruning row groups off the manifest's
-    * exact byte extents exactly as on a discovered read. Falls back to
-    * the discovering read for manifest-less or dirty artifacts (flat
-    * artifact: the listing is truth). */
+  /** Open a persisted [[saveWinnowIndex]] directory for screening
+    * ([[FlatIndex.open]]): with a clean manifest the scan plans with
+    * ZERO filesystem listings at any corpus age, the screen's
+    * pushed-down fingerprint/df predicates pruning row groups off the
+    * manifest's exact byte extents exactly as on a discovered read. */
   def readWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    winnowIndexWithParams(spark, path)._1
-
-  /** The winnow artifact's (scan, params) from ONE manifest read —
-    * shared by the serve, screen, and compaction paths. Heals a
-    * compaction that crashed inside its swap's delete→install window
-    * first (this family's compaction swaps via overwriteParquetAtomic,
-    * and the dirty flag lived inside the deleted directory, so nothing
-    * else would signal recovery). */
-  private def winnowIndexWithParams(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, () => (Int, Int, String)) = {
-    graft.sources.WarehouseWriter.recoverSwap(spark, path)
-    ArtifactManifest.readClean(spark, path, WinnowIndexFamily) match {
-      case Some(st) =>
-        val params = (st.params("wf_k").toInt, st.params("wf_w").toInt,
-          st.params("wf_algo"))
-        (ArtifactManifest.readFlatFromState(spark, path, st,
-          winnowIndexSchema), () => params)
-      case None =>
-        ArtifactManifest.requireFamilyOrUnknown(spark, path,
-          WinnowIndexFamily)
-        spark.catalog.refreshByPath(path)
-        val df = spark.read.parquet(path)
-        // lazy (a take(1) job): read-only callers keep the plain scan
-        lazy val p = winnowIndexParams(df)
-        (df, () => p)
-    }
-  }
-
-  /** Winnowing params from the artifact's manifest — no footer read,
-    * no take(1) job; falls back to one data-head read for manifest-less
-    * artifacts. */
-  private def winnowArtifactParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int, String) =
-    winnowIndexWithParams(spark, path)._2()
+    FlatIndex.Winnow.open(spark, path)._1
 
   /** Persist a [[winnowIndex]] as a range-sorted parquet DIRECTORY —
     * sorted on `fingerprint` so the screen's candidate-fingerprint IN
     * predicate prunes to ∝-candidate row groups (the
-    * [[saveExactIndex]] physics on the contamination side). Born with
-    * an [[ArtifactManifest]] sidecar carrying the winnowing params
-    * (`wf_k`/`wf_w`/`wf_algo`), so appends and screens never open a
-    * footer for them; the whole build runs under the family's writer
-    * lease. The params come from the frame's plan literals (no head-row
-    * job), so an empty corpus builds a legal empty artifact, and a
-    * frame without them reads a head row — failing fast, before the
-    * lease, when it is empty — as [[saveMinhashIndex]] does. */
-  def saveWinnowIndex(index: DataFrame, path: String, files: Int = 8): Unit = {
-    val spark = index.sparkSession
-    val (k, w, algo) = PlanLiterals(index, "wf_k", "wf_w", "wf_algo") match {
-      case Some(Seq(k: Int, w: Int, algo: String)) => (k, w, algo)
-      case _ => winnowIndexParams(index)
-    }
-    MaintenanceProtocol.withLease(spark, path, "build") {
-      index
-        .repartitionByRange(files, org.apache.spark.sql.functions.col("fingerprint"))
-        .sortWithinPartitions("fingerprint")
-        .write.mode("overwrite").parquet(path)
-      ArtifactManifest.rebuildAndWrite(spark, path, WinnowIndexFamily,
-        Map("wf_k" -> k.toString, "wf_w" -> w.toString, "wf_algo" -> algo))
-    }
-  }
+    * [[saveExactIndex]] physics on the contamination side), born with
+    * a manifest carrying the winnowing params (`wf_k`/`wf_w`/`wf_algo`)
+    * under the writer lease ([[FlatIndex.build]]). The params come from
+    * the frame's plan literals (no head-row job), so an empty corpus
+    * builds a legal empty artifact, and a frame without them reads a
+    * head row — failing fast, before the lease, when it is empty — as
+    * [[saveMinhashIndex]] does. */
+  def saveWinnowIndex(index: DataFrame, path: String, files: Int = 8): Unit =
+    FlatIndex.Winnow.build(index, path)(rangeSorted(_, files, "fingerprint"))
 
   /** Roll a persisted [[saveWinnowIndex]] directory forward with a
     * newly ingested training batch — cost ∝ BATCH, nothing ∝ the
     * index: the batch is winnowed with the ARTIFACT'S params (manifest
-    * read, no footer), lands as new sorted part-files staged in by
-    * rename (the standing artifact is never listed), and the manifest
-    * rolls forward from the staging listing alone.
+    * read, no footer) and lands as new sorted part-files staged in by
+    * rename ([[FlatIndex.append]]).
     *
     * The df law that makes this ∝ batch: delta rows store their
     * BATCH-LOCAL document frequency — a LOWER BOUND of the global df,
@@ -1797,83 +1562,38 @@ object Dedup {
     * (doc_id, fingerprint) rows, which the screen dedups and the
     * compaction folds — so no fresh-doc precondition is needed (the
     * in-memory route needs one precisely because its df recompute
-    * double-counts replays). */
+    * double-counts replays).
+    *
+    * The df window rides the write's own range exchange (r20, guide
+    * §2.4): range partitioning on fingerprint already clusters equal
+    * fingerprints, and the in-file sort is the window's required
+    * ordering, so the batch-local df costs no exchange of its own. */
   def appendWinnowIndexDelta(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, files: Int = 1): Unit =
-    ArtifactManifest.appendStaged(spark, path, WinnowIndexFamily) {
-      state0 =>
-        val (k, w, algo) = state0 match {
-          case Some(st) => (st.params("wf_k").toInt, st.params("wf_w").toInt,
-            st.params("wf_algo"))
-          case None =>
-            spark.catalog.refreshByPath(path)
-            winnowIndexParams(spark.read.parquet(path))
-        }
-        // df window ON TOP of the write's own range exchange (r20,
-        // guide §2.4): range partitioning on fingerprint already
-        // clusters equal fingerprints (and the sort below is the
-        // window's required ordering), so the batch-local df costs no
-        // exchange of its own — the old shape shuffled the delta twice
-        // (hash for the window, range for the layout). Values
-        // unchanged: a window count over range-clustered fingerprints
-        // is the same batch-global count.
-        val delta = winnowFingerprints(newDocs, k, w, algo)
-          .repartitionByRange(files,
-            org.apache.spark.sql.functions.col("fingerprint"))
-          .sortWithinPartitions("fingerprint")
-          .withColumn("df", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("fingerprint"))))
-          .select(col("doc_id"), col("fingerprint"), col("df"))
-          .withColumn("wf_k", lit(k))
-          .withColumn("wf_w", lit(w))
-          .withColumn("wf_algo", lit(algo))
-        dest =>
-          delta
-            .write.mode(if (dest == path) "append" else "overwrite")
-            .parquet(dest)
+    FlatIndex.Winnow.append(spark, path) { p =>
+      FlatIndex.Winnow.stamp(withDf(
+        rangeSorted(winnowDelta(p(), newDocs), files, "fingerprint")), p())
     }
 
   /** Fold a delta-appended [[saveWinnowIndex]] directory back to the
-    * pristine layout: dedup (doc_id, fingerprint) — replayed deltas
-    * fold away — RECOMPUTE the exact global df (the one O(index)
-    * shuffle, paid here on the rare side of the build-once/screen-often
-    * asymmetry instead of per append), and re-sort globally on
-    * fingerprint so file-level zone pruning holds again. That one
-    * shuffle is the layout's range exchange on fingerprint: the dedup
-    * and the df window both run on its partitioning, the
-    * [[appendWinnowIndexDelta]] shape. The directory is read once,
-    * with its schema from one footer (no inference job). Durable-swap
-    * discipline via [[graft.sources.WarehouseWriter
-    * .overwriteParquetAtomic]]; the manifest is rebuilt over the fresh
-    * directory (compaction is the family's adoption point). Returns
-    * (files before, files after). */
+    * pristine layout ([[FlatIndex.compact]]): dedup (doc_id,
+    * fingerprint) — replayed deltas fold away — RECOMPUTE the exact
+    * global df (the one O(index) shuffle, paid here on the rare side of
+    * the build-once/screen-often asymmetry instead of per append), and
+    * re-sort globally on fingerprint so file-level zone pruning holds
+    * again. That one shuffle is the layout's range exchange on
+    * fingerprint: the dedup and the df window both run on its
+    * partitioning, the [[appendWinnowIndexDelta]] shape. Returns (files
+    * before, files after). */
   def compactWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Int = 8): (Int, Int) =
-    MaintenanceProtocol.withLease(spark, path, "compact") {
-      import spark.implicits._
-      // heal a previous compaction that crashed inside its swap window
-      // BEFORE reading — the artifact directory may be entirely absent
-      graft.sources.WarehouseWriter.recoverSwap(spark, path)
-      ManifestLog.sweepStaleDeltas(spark, path)
-      val (k, w, algo) = winnowArtifactParams(spark, path)
-      spark.catalog.refreshByPath(path)
-      val stored = graft.Tables.read(spark, path)
-      val before = stored.inputFiles.length
-      MaintenanceProtocol.markDirty(spark, path)
-      val folded = withDf(stored.select($"doc_id", $"fingerprint")
-        .repartitionByRange(files, $"fingerprint")
-        .distinct()
-        .sortWithinPartitions("fingerprint"))
-        .withColumn("wf_k", lit(k))
-        .withColumn("wf_w", lit(w))
-        .withColumn("wf_algo", lit(algo))
-      graft.sources.WarehouseWriter.overwriteParquetAtomic(folded, path)
-      val st = ArtifactManifest.rebuildAndWrite(spark, path,
-        WinnowIndexFamily,
-        Map("wf_k" -> k.toString, "wf_w" -> w.toString, "wf_algo" -> algo))
-      (before, st.totalFiles)
+      path: String, files: Int = 8): (Int, Int) = {
+    val (before, after, _) = FlatIndex.Winnow.compact(spark, path) {
+      (stored, p, _) => FlatIndex.Winnow.stamp(withDf(rangeSorted(
+        stored.select(col("doc_id"), col("fingerprint")), files,
+        "fingerprint", distinct = true)), p)
     }
+    (before, after)
+  }
 
   /** Incremental contamination screening against a PERSISTED
     * [[saveWinnowIndex]] artifact — [[contaminationAgainstIndex]]'s
@@ -1910,10 +1630,8 @@ object Dedup {
       minShared: Int = 2, inListLimit: Int = 1000): DataFrame = {
     import spark.implicits._
     // one sidecar read serves both the params and the planned scan
-    val (index, paramsFn) = winnowIndexWithParams(spark, path)
-    val (k, w, algo) = paramsFn()
-    val candFp = winnowFingerprints(newDocs, k, w, algo)
-      .localCheckpoint(true)
+    val (index, params) = FlatIndex.Winnow.open(spark, path)
+    val candFp = winnowDelta(params(), newDocs).localCheckpoint(true)
     val candSet = candFp.select($"fingerprint").distinct()
       .localCheckpoint(true)
     // same pushdown economics as dedupAgainstIndexScreened, via the

@@ -102,9 +102,19 @@ object WarehouseWriter {
     * amortized over every subsequent scan. */
   def saveSorted(df: DataFrame, table: String, sortCol: String,
       files: Int = 8): Unit =
-    df.repartitionByRange(files, col(sortCol))
-      .sortWithinPartitions(sortCol)
+    rangeSorted(df, files, sortCol)
       .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
+
+  /** [[saveSorted]]'s layout as a frame: range-partitioned into `files`
+    * on `key`, sorted within each. `distinct` folds whole-row
+    * duplicates on that one exchange — equal rows share their key, so
+    * every copy of a row lands in one range partition and the distinct
+    * needs no exchange of its own. */
+  private[graft] def rangeSorted(df: DataFrame, files: Int, key: String,
+      distinct: Boolean = false): DataFrame = {
+    val ranged = df.repartitionByRange(files, col(key))
+    (if (distinct) ranged.distinct() else ranged).sortWithinPartitions(key)
+  }
 
   /** Compact a parquet DIRECTORY that has accumulated many small files
     * into ~`targetFileBytes`-sized ones — the maintenance pass every
@@ -117,26 +127,28 @@ object WarehouseWriter {
     * `sortCol` additionally restores the [[saveSorted]] zone-map
     * layout (range-partitioned, sorted within files) — what the
     * bloom-screen's point-lookup pushdown
-    * ([[graft.operators.Dedup.dedupAgainstIndexScreened]]) wants the
-    * index directory to look like after many deltas blurred it. With
-    * `dedup` too, the rewrite shuffles its rows ONCE: the range
-    * exchange on `sortCol`, which the whole-row distinct runs on.
+    * ([[graft.operators.Dedup.dedupAgainstIndexScreened]]) wants a
+    * directory to look like after many deltas blurred it.
     *
     * Output file count = ceil(input bytes / targetFileBytes), computed
     * from the actual file listing — compression can make real output
     * files smaller, the target is an upper-bound shape, not a promise.
-    * The swap is rewrite-to-sibling + two renames + delete: NOT atomic
+    * The swap is [[overwriteParquetAtomic]]'s, healed first
+    * ([[recoverSwap]]) when an earlier compaction died inside its
+    * delete→install window: a crash at any point leaves the original,
+    * the rewrite, or a committed tmp the next call installs. NOT atomic
     * for concurrent readers (a reader planning in the swap window sees
     * a missing path). Run it between ingest rounds — for
     * [[graft.streaming.CorpusIngest]], while the stream is stopped or
     * between micro-batches; under a live multi-reader catalog this job
-    * belongs to a transactional table format instead. Returns
+    * belongs to a transactional table format instead. The schema comes
+    * from one footer read on the driver: no inference job. Returns
     * (files before, files after, input bytes). */
   def compactParquet(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20,
-      sortCol: Option[String] = None,
-      dedup: Boolean = false): (Int, Int, Long) = {
+      sortCol: Option[String] = None): (Int, Int, Long) = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive")
+    recoverSwap(spark, path)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(hPath)
@@ -144,34 +156,11 @@ object WarehouseWriter {
     if (files.isEmpty) return (0, 0, 0L) // nothing to fold — no-op, not a failed read
     val bytes = files.map(_.getLen).sum
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // dedup = fold whole-row duplicates (an at-least-once sink's
-    // replayed deltas) while the directory is being rewritten anyway —
-    // the exact-index artifact's compaction
-    // ([[graft.operators.Dedup.compactExactIndex]]); nOut stays sized
-    // from INPUT bytes (upper bound — dedup only shrinks files below
-    // target, never above). The schema comes from one footer read on
-    // the driver: no inference job.
     val df = graft.Tables.read(spark, path)
-    val out = sortCol match {
-      // equal rows share their sortCol value, so every copy of a row
-      // lands in one range partition: the distinct needs no exchange
-      case Some(c) =>
-        val ranged = df.repartitionByRange(nOut, col(c))
-        (if (dedup) ranged.distinct() else ranged).sortWithinPartitions(c)
-      case None => (if (dedup) df.distinct() else df).repartition(nOut)
-    }
-    val tmp = new org.apache.hadoop.fs.Path(hPath.getParent,
-      s".${hPath.getName}.compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(hPath.getParent,
-      s".${hPath.getName}.compact-old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    out.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // the rewrite is fully durable before the original is touched; a
-    // crash mid-swap leaves either the original or the finished tmp on
-    // disk, never a partial mix
-    require(fs.rename(hPath, old), s"compact swap failed renaming $path aside")
-    require(fs.rename(tmp, hPath), s"compact swap failed installing $tmp")
-    fs.delete(old, true)
+    overwriteParquetAtomic(sortCol match {
+      case Some(c) => rangeSorted(df, nOut, c)
+      case None => df.repartition(nOut)
+    }, path)
     (files.length, nOut, bytes)
   }
 
@@ -199,7 +188,8 @@ object WarehouseWriter {
     * window: if the target is missing but a fully-committed tmp (has
     * `_SUCCESS`) is present, install it. Call before READING an
     * artifact maintained by the atomic overwrite (the streaming
-    * provider does); a no-op in every healthy state. */
+    * provider, [[compactParquet]] and every flat index family's open
+    * and compaction do); a no-op in every healthy state. */
   def recoverSwap(spark: SparkSession, path: String): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -61,7 +61,7 @@ class ArtifactBuildJobsSpec extends AnyFunSuite with SparkSpec {
   /** `build` reads its params back with exactly one `take(1)` job. */
   private def assertHeadRowRead(what: String)(build: => Unit): Unit = {
     val jobs = jobsDuring(build)
-    assert(jobs.count(_.startsWith("take at Dedup.scala")) == 1,
+    assert(jobs.count(_.startsWith("take at FlatIndex.scala")) == 1,
       s"$what should read one head row: ${jobs.mkString(", ")}")
   }
 
@@ -116,6 +116,84 @@ class ArtifactBuildJobsSpec extends AnyFunSuite with SparkSpec {
     Dedup.appendMinhashIndexDeltaFrame(spark, p,
       Dedup.minhashIndexDelta(Dedup.readMinhashIndex(spark, p), kept))
     assert(liveFiles(p) - before2 == 2)
+  }
+
+  /** What a flat artifact's files look like: each data file's parquet
+    * schema on one line (distinct), the data file count, and the
+    * manifest's `family`/`param` lines. */
+  private def layout(p: String): (Set[String], Int, Seq[String]) = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(p).getFileSystem(conf)
+    val files = fs.listStatus(new Path(p))
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    val schemas = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+      try r.getFooter.getFileMetaData.getSchema.toString
+        .replaceAll("\\s+", " ").trim
+      finally r.close()
+    }.toSet
+    val in = fs.open(graft.operators.ArtifactManifest.manifestPath(p))
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    (schemas, files.length,
+      lines.filter(l => l.startsWith("family\t") || l.startsWith("param\t")))
+  }
+
+  /** One family's build → staged append → compaction over the sf0.001
+    * documents' even and odd halves: the jobs each op starts, then the
+    * files the three ops leave. */
+  private def assertLifecycle(family: String, jobs: (Int, Int, Int),
+      schema: String, files: Int, manifest: Seq[String])(
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      append: (org.apache.spark.sql.DataFrame, String) => Unit,
+      compact: String => Unit): Unit = {
+    val p = path(s"graft_jobs_${family}_cycle")
+    val (seed, batch) =
+      (docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1))
+    val ran = (jobsDuring(build(seed, p)).size,
+      jobsDuring(append(batch, p)).size, jobsDuring(compact(p)).size)
+    val got = (ran, layout(p))
+    assert(got == ((jobs, (Set(schema), files, manifest))), s"$family: $got")
+  }
+
+  test("exact index build, append and compaction: jobs and files") {
+    assertLifecycle("exact_hash_index", (4, 2, 2),
+      "message spark_schema { optional binary text_hash (STRING); }", 1,
+      Seq("family\texact_hash_index", "param\t_base_files\t1"))(
+      (d, p) => Dedup.saveExactIndex(Dedup.exactHashIndex(d), p),
+      (d, p) => Dedup.appendExactIndexDelta(spark, p, d),
+      p => Dedup.compactExactIndex(spark, p))
+  }
+
+  test("minhash index build, append and compaction: jobs and files") {
+    assertLifecycle("minhash_band_index", (2, 2, 2),
+      "message spark_schema { optional int64 doc_id; optional group sh " +
+        "(LIST) { repeated group list { optional binary element (STRING); " +
+        "} } optional group bk (LIST) { repeated group list { optional " +
+        "int64 element; } } optional int32 mh_k; optional int32 " +
+        "mh_hashes; optional int32 mh_bands; optional boolean mh_hashed; }",
+      8, Seq("family\tminhash_band_index", "param\t_base_files\t8",
+        "param\tbands\t8", "param\thashed\tfalse", "param\thashes\t32",
+        "param\tk\t5"))(
+      (d, p) => Dedup.saveMinhashIndex(Dedup.minhashBandIndex(d, 5, 32, 8), p),
+      (d, p) => Dedup.appendMinhashIndexDelta(spark, p, d),
+      p => Dedup.compactMinhashIndex(spark, p))
+  }
+
+  test("winnow index build, append and compaction: jobs and files") {
+    assertLifecycle("winnow_index", (5, 3, 3),
+      "message spark_schema { optional int64 doc_id; optional int64 " +
+        "fingerprint; required int64 df; required int32 wf_k; required " +
+        "int32 wf_w; required binary wf_algo (STRING); }",
+      8, Seq("family\twinnow_index", "param\t_base_files\t8",
+        "param\twf_algo\txx64", "param\twf_k\t5", "param\twf_w\t4"))(
+      (d, p) => Dedup.saveWinnowIndex(Dedup.winnowIndex(d, 5, 4), p),
+      (d, p) => Dedup.appendWinnowIndexDelta(spark, p, d),
+      p => Dedup.compactWinnowIndex(spark, p))
   }
 
   test("a winnow index build runs only its write") {

@@ -623,7 +623,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       rc.getAs[String]("manifest") == "clean", s"post-compaction: $rc")
   }
 
-  test("minhash/winnow compaction swap crash heals on the next read (recoverSwap)") {
+  test("exact/minhash/winnow compaction swap crash heals on the next read (recoverSwap)") {
     import java.nio.file.Files
     val seed = docs.filter($"doc_id" % 2 === 0)
     val batch = docs.filter($"doc_id" % 2 === 1)
@@ -671,6 +671,31 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(f.exists(hWn) &&
       Dedup.readWinnowIndex(spark, wn).count() == wnRows,
       "compaction must heal the crashed swap before folding")
+
+    // exact: the same window, healed by the read and, crashed again, by
+    // the compaction before it folds — an unhealed compaction would
+    // recreate the path around its dirty flag alone and certify an
+    // empty index
+    val ex = tempDir("graft_ex_swap").resolve("index").toString
+    Dedup.saveExactIndex(Dedup.exactHashIndex(seed), ex, files = 2)
+    Dedup.appendExactIndexDelta(spark, ex, batch)
+    def exRows = Dedup.readExactIndex(spark, ex).as[String].collect().toSet
+    val exWant = exRows
+    val hEx = new org.apache.hadoop.fs.Path(ex)
+    val exTmp = new org.apache.hadoop.fs.Path(hEx.getParent,
+      s".${hEx.getName}.swap-tmp")
+    spark.read.parquet(ex).write.parquet(exTmp.toString)
+    f.delete(hEx, true)
+    assert(exRows == exWant && f.exists(hEx),
+      "the exact read must install the committed tmp")
+    spark.read.parquet(ex).write.parquet(exTmp.toString)
+    f.delete(hEx, true)
+    Dedup.compactExactIndex(spark, ex)
+    assert(exRows == exWant,
+      "exact compaction must heal the crashed swap before folding")
+    assert(Dedup.readExactIndex(spark, ex).queryExecution.executedPlan
+      .toString.contains("ManifestFileIndex"),
+      "compaction must re-adopt a manifest over the healed artifact")
   }
 
   /** Row groups in `dir` whose text_hash [min,max] could contain a

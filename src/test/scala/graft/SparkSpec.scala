@@ -73,7 +73,13 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Drops the suite's temp dirs and every cache it left in the shared
+    * session: a later suite must plan over the files, not over an
+    * `InMemoryRelation` this one cached (`Spread` spreads only scans,
+    * so plan-shape and job-count pins would depend on suite order). */
   override protected def afterAll(): Unit =
-    try tempDirs.forEach(dir => ScratchDir.deleteTree(dir))
-    finally super.afterAll()
+    try {
+      spark.catalog.clearCache()
+      tempDirs.forEach(dir => ScratchDir.deleteTree(dir))
+    } finally super.afterAll()
 }

@@ -198,6 +198,30 @@ class WarehouseWriterSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == before)
   }
 
+  test("compactParquet heals a crashed swap before folding") {
+    val docs = Tables.load(spark, sf0001, "documents")
+      .select($"doc_id", $"text")
+    val dir = tempDir("graft_compact_heal").resolve("data").toString
+    (0L until 4L).foreach { i =>
+      docs.filter($"doc_id" % 4 === i).write.mode("append").parquet(dir)
+    }
+    val before = spark.read.parquet(dir).collect().map(_.toSeq).toSet
+    // a compaction that died inside its delete→install window: the
+    // target is gone, its rewrite committed (with _SUCCESS) at the tmp
+    val hp = new org.apache.hadoop.fs.Path(dir)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val swapTmp = new org.apache.hadoop.fs.Path(hp.getParent,
+      s".${hp.getName}.swap-tmp")
+    spark.read.parquet(dir).write.parquet(swapTmp.toString)
+    fs.delete(hp, true)
+    val (nBefore, nAfter, _) =
+      WarehouseWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30)
+    assert(nBefore > 1 && nAfter == 1,
+      s"the next compaction must fold the healed files: $nBefore -> $nAfter")
+    assert(!fs.exists(swapTmp), "the committed tmp must be installed")
+    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == before)
+  }
+
   test("overwriteParquetAtomic installs new contents; recoverSwap heals a torn swap") {
     val dir = tmp("graft_atomic") + "/artifact"
     val hp = new org.apache.hadoop.fs.Path(dir)
