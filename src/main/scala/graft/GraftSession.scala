@@ -33,12 +33,31 @@ object GraftSession {
     * hundred codegen stages), forcing Janino recompiles of code that
     * was already compiled moments ago — measured as 40%+ inflation on
     * interleaved reruns. 1000 entries of generated classes is a few
-    * tens of MB on a driver/executor that runs a query mix. */
+    * tens of MB on a driver/executor that runs a query mix.
+    *
+    * `shuffle.sort.bypassMergeThreshold` = 0 (core `SparkConf`, so the
+    * same rule: it applies only when this builder creates the JVM's
+    * SparkContext; an application that brings its own context sets it
+    * there): every exchange of at most this many reduce partitions
+    * without map-side combine — here, every SQL exchange, since
+    * `shuffle.partitions` is the core count — would otherwise take the
+    * bypass-merge writer. That writer writes one temp file per reduce
+    * partition and then copies them all into the map output file, so
+    * each shuffled byte reaches the disk twice. At 0, SQL exchanges
+    * take the serialized writer: it sorts record pointers by partition
+    * id and, with no spill, moves its one sorted file into place as
+    * the map output. Measured on a cold `bi_mix` pass at sf0.01 from
+    * the JVM's own `/proc/self/io`: bytes written per shuffle byte
+    * 2.00 → 1.00, with Spark's shuffle-write bytes unchanged (they
+    * never counted the copy). A sorter that spills merges into the
+    * output, which is at most the old 2×. Rows, plans and partition
+    * counts do not change. */
   def defaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       // AQE coalescing is parallelism-first (it aims partition sizes at
       // total/defaultParallelism before the 64 MB advisory), but the
       // target is FLOORED at coalescePartitions.minPartitionSize —

@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local session for all suites (one JVM, getOrCreate reuses). */
@@ -45,18 +47,30 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
     dir
   }
 
-  /** Jobs started while `body` runs. The listener bus delivers events in
-    * order, so once a marker job started afterwards has been seen, every
-    * job `body` started has been counted. Returns their first stages'
-    * names (the call site, e.g. `parquet at Tables.scala:21`). */
+  /** Jobs started while `body` runs, each named by the call site of the
+    * SQL execution that started it (e.g. `parquet at FlatIndex.scala:102`),
+    * or by its first stage's name when it ran outside one. AQE submits
+    * a query's shuffle stages from its own thread pool, so their first
+    * stages carry that pool's frame (`$anonfun$withThreadLocalCaptured$2
+    * at CompletableFuture.java:1768`); the execution's start event keeps
+    * the call site of the action that planned it. The listener bus
+    * delivers events in order, so once a marker job started afterwards
+    * has been seen, every job `body` started has been counted. */
   def jobsDuring(body: => Unit): Seq[String] = {
     val marker = "spark-spec-jobs-marker"
-    val started = new ConcurrentLinkedQueue[(String, String)]()
+    val sites = new ConcurrentHashMap[String, String]()
+    val started = new ConcurrentLinkedQueue[(String, Option[String], String)]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("") -> e.stageInfos.headOption.fold("")(_.name))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        started.add((prop("spark.job.description").getOrElse(""),
+          prop(SQLExecution.EXECUTION_ID_KEY), e.stageInfos.headOption.fold("")(_.name)))
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -69,7 +83,9 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
         Thread.sleep(10)
       assert(started.asScala.exists(_._1 == marker),
         "the listener bus never delivered the marker job")
-      started.asScala.toSeq.filter(_._1 != marker).map(_._2)
+      started.asScala.toSeq.filter(_._1 != marker).map { case (_, execution, stage) =>
+        execution.flatMap(id => Option(sites.get(id))).getOrElse(stage)
+      }
     } finally sc.removeSparkListener(listener)
   }
 
