@@ -111,7 +111,7 @@ object IngestBench {
     }
 
     // ---- embedding seam: cell-partitioned IVF postings roll forward
-    // in place (touched-cell overwrite) per batch
+    // per batch (touched-cell recap, superseded files retired)
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select($"vec_id", $"embedding", $"label")
     val nEmb = emb.count()
@@ -141,7 +141,7 @@ object IngestBench {
       val src = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(embStaging)
       val q = CorpusIngest.embeddingIngest(src, CoarseQuantizer.Flat(model),
-        postingsPath, graft.operators.Similarity.MaintenanceMode.InPlace)
+        postingsPath, graft.operators.Similarity.MaintenanceMode.Retained)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.recentProgress.toSeq.filter(_.numInputRows > 0).map(p =>
@@ -151,7 +151,9 @@ object IngestBench {
     Result(nd, ex, iv,
       ndKept = spark.read.parquet(ndCorpus).count(),
       exKept = spark.read.parquet(exCorpus).count(),
-      ivPostings = spark.read.parquet(postingsPath).count(),
+      // through the manifest: a retained directory also holds tombstones
+      ivPostings = graft.operators.Similarity.readPostings(spark,
+        postingsPath).count(),
       docs = n)
   }
 
@@ -195,7 +197,7 @@ object IngestBench {
     // two numbers TOGETHER are the mode's whole bill)
     val writer = CorpusIngest.embeddingIngest(src, quantizer, postingsPath,
       if (fragment) Similarity.MaintenanceMode.Fragment
-      else Similarity.MaintenanceMode.InPlace)
+      else Similarity.MaintenanceMode.Retained)
     val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0).map(p =>
@@ -206,7 +208,7 @@ object IngestBench {
         graft.operators.Similarity.compactIvfPostings(spark, postingsPath)
         (System.nanoTime() - t0) / 1e9
       } else None
-    (prog, spark.read.parquet(postingsPath).count(), compactSec)
+    (prog, Similarity.readPostings(spark, postingsPath).count(), compactSec)
   }
 
   def main(args: Array[String]): Unit = {

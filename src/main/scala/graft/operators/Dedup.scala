@@ -67,9 +67,8 @@ object Dedup {
     * copies (keep the lowest doc_id) are dropped in one pass. The
     * index side joins as a left-anti on the 16-byte hash (broadcast
     * when small, hash-shuffle otherwise — never a corpus scan);
-    * [[appendToExactIndex]] (in memory) or [[appendExactIndexDelta]]
-    * (persisted artifact, ∝ batch) rolls the index forward with the
-    * kept rows for the next ingest. */
+    * [[appendExactIndexDelta]] (persisted artifact, ∝ batch) rolls the
+    * index forward with the kept rows for the next ingest. */
   def dedupAgainstIndex(newDocs: DataFrame, index: DataFrame): DataFrame = {
     val spark = newDocs.sparkSession
     import spark.implicits._
@@ -323,27 +322,6 @@ object Dedup {
 
   // ---------------------------------------------------- exact-index artifact
 
-  /** Just the rows an index append would ADD — the ingest round's
-    * index delta, mirroring [[minhashIndexDelta]]: the distinct hashes
-    * of `keptDocs`, which are the rows [[dedupAgainstIndex]] /
-    * [[dedupAgainstIndexScreened]] KEPT, so their hashes are not in
-    * the index by construction and no index scan (let alone the old
-    * `union().distinct()` full-index shuffle) is ever needed — cost
-    * and bytes ∝ batch. An at-least-once caller that replays a batch
-    * appends duplicate hashes; they are harmless to every screen
-    * (anti/semi-join and IN semantics are set semantics) and are folded
-    * by [[compactExactIndex]] — the same posture as the postings
-    * fragment route. */
-  def exactIndexDelta(keptDocs: DataFrame): DataFrame =
-    exactHashIndex(keptDocs)
-
-  /** The in-memory/spec composition form: standing index ∪ delta. For
-    * a parquet-deployed index use [[appendExactIndexDelta]] — this
-    * union's lazy lineage re-reads the whole standing index when
-    * materialized. */
-  def appendToExactIndex(index: DataFrame, keptDocs: DataFrame): DataFrame =
-    index.unionByName(exactIndexDelta(keptDocs))
-
   /** Open a persisted [[saveExactIndex]] directory for screening — the
     * read every serve-time consumer ([[dedupAgainstIndex]] /
     * [[dedupAgainstIndexScreened]]) should start from
@@ -384,7 +362,10 @@ object Dedup {
     * Dirty-bracketed: a crash mid-append strands the flag, readers
     * degrade to the discovering read (truth — appends are add-only),
     * and the next compaction re-adopts. A manifest-less (legacy)
-    * artifact appends the same files without sidecar bookkeeping. */
+    * artifact appends the same files without sidecar bookkeeping. An
+    * at-least-once caller that replays a batch appends duplicate
+    * hashes: harmless to every screen (anti/semi-join and IN are set
+    * semantics), folded by [[compactExactIndex]]. */
   def appendExactIndexDelta(spark: org.apache.spark.sql.SparkSession,
       path: String, keptDocs: DataFrame, files: Int = 1): Unit =
     appendExactIndexDeltaFrame(spark, path, textHashes(keptDocs), files)

@@ -91,16 +91,21 @@ final class FlatIndex(family: String, params: Seq[FlatIndex.Param],
     * of a live artifact fails fast against a concurrent maintainer),
     * through the family's `layout`, born with a manifest carrying the
     * params (one listing + footer pass, at the one moment an
-    * O(artifact) metadata pass is already being paid). The params are
+    * O(artifact) metadata pass is already being paid). Data and
+    * manifest land in the swap stage and install together
+    * ([[WarehouseWriter.overwriteParquetAtomic]]): a build that fails
+    * or crashes leaves the previous artifact serving. The params are
     * read BEFORE the lease: a frame without plan literals that is empty
-    * fails there, leaving the artifact at `path` as it was. */
+    * fails there. */
   def build(index: DataFrame, path: String)(
       layout: DataFrame => DataFrame): Unit = {
     val spark = index.sparkSession
     val p = paramsOf(index)
     MaintenanceProtocol.withLease(spark, path, "build") {
-      layout(index).write.mode("overwrite").parquet(path)
-      ArtifactManifest.rebuildAndWrite(spark, path, family, manifestParams(p))
+      WarehouseWriter.overwriteParquetAtomic(spark, path) { tmp =>
+        layout(index).write.parquet(tmp)
+        ArtifactManifest.rebuildAndWrite(spark, tmp, family, manifestParams(p))
+      }
     }
   }
 
@@ -127,13 +132,12 @@ final class FlatIndex(family: String, params: Seq[FlatIndex.Param],
     * from one footer, no inference job; the catalog refresh first — the
     * rename-staged appends bypass Spark's FileStatusCache, and folding
     * a stale listing would silently DROP appended rows and certify the
-    * truncated artifact clean), then mark dirty, write the family's
-    * `fold(stored, params, input bytes)` through the healed
-    * delete→install swap ([[WarehouseWriter.overwriteParquetAtomic]]),
-    * and rebuild the manifest over the fresh directory (compaction is
-    * the flat families' manifest ADOPTION point). A missing directory
-    * fails at the read, before anything is written. Returns (files
-    * before, files after, input bytes). */
+    * truncated artifact clean), then install the family's
+    * `fold(stored, params, input bytes)` with a manifest rebuilt over
+    * it, as a build does (compaction is the flat families' manifest
+    * ADOPTION point). A missing directory fails at the read, before
+    * anything is written. Returns (files before, files after, input
+    * bytes). */
   def compact(spark: SparkSession, path: String)(
       fold: (DataFrame, Seq[Any], Long) => DataFrame): (Int, Int, Long) =
     MaintenanceProtocol.withLease(spark, path, "compact") {
@@ -149,10 +153,10 @@ final class FlatIndex(family: String, params: Seq[FlatIndex.Param],
         case r: LogicalRelation => r.relation
       }.collect { case fs: HadoopFsRelation => fs.location }.get
       val bytes = listed.sizeInBytes
-      MaintenanceProtocol.markDirty(spark, path)
-      WarehouseWriter.overwriteParquetAtomic(fold(stored, p, bytes), path)
-      val st = ArtifactManifest.rebuildAndWrite(spark, path, family,
-        manifestParams(p))
+      val st = WarehouseWriter.overwriteParquetAtomic(spark, path) { tmp =>
+        fold(stored, p, bytes).write.parquet(tmp)
+        ArtifactManifest.rebuildAndWrite(spark, tmp, family, manifestParams(p))
+      }
       (listed.inputFiles.length, st.totalFiles, bytes)
     }
 }

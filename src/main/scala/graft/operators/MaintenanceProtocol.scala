@@ -56,9 +56,9 @@ object MaintenanceProtocol {
 
   /** The writer lease lives as a SIBLING of the artifact
     * (`<artifact>__maint_lease`, like the `__delta_*` staging dirs) so
-    * it survives even a full-overwrite rebuild of the directory — a
-    * lease inside the artifact would be deleted by the very
-    * `mode("overwrite")` build it is guarding. */
+    * it survives a rebuild's install, which replaces the whole
+    * directory — a lease inside the artifact would be deleted by the
+    * very build it is guarding. */
   def leasePath(path: String): Path =
     new Path(path.stripSuffix("/") + "__maint_lease")
 

@@ -92,15 +92,6 @@ object PostingsManifest extends ManifestLog {
     def perCellRows: Map[Int, Long] =
       live.groupBy(_.cell).view.mapValues(_.map(_.rows).sum).toMap
     def totalFiles: Int = live.size
-    /** Replace every entry of `cells` with `entries` (the post-rewrite
-      * truth for those cells) — the roll-forward all overwrite-style
-      * maintenance shares. Retired entries of those cells drop too: the
-      * dynamic partition overwrite that triggers this replaced the
-      * whole cell DIRECTORY, retired files included (an overwrite-style
-      * op ends any retention window for the cells it touches). */
-    def replacingCells(cells: Set[Int], entries: Seq[FileEntry]): State =
-      copy(files = files.filterNot(f => cells(f.cell)) ++ entries,
-        epoch = epoch + 1)
     /** Add fragment entries (one new file per touched cell). */
     def adding(entries: Seq[FileEntry]): State =
       copy(files = files ++ entries, epoch = epoch + 1)
@@ -232,23 +223,4 @@ object PostingsManifest extends ManifestLog {
   def rebuildAndWrite(spark: SparkSession, path: String,
       written: Option[Params] = None): State =
     writeRebuilt(spark, path, rebuild(spark, path, written))
-
-  /** List `cells`' directories (∝ touched, never ∝ artifact) into
-    * per-file entries with the given per-cell row counts — the
-    * post-overwrite bookkeeping for maintenance that just rewrote those
-    * cells to one file each. A cell directory with files but no count
-    * is a bug and fails fast instead of recording 0 rows. */
-  def entriesFromDirs(spark: SparkSession, path: String, cells: Set[Int],
-      rowsPerCell: Map[Int, Long]): Seq[FileEntry] = {
-    val fs = MaintenanceProtocol.fsOf(spark, path)
-    cells.toSeq.flatMap { c =>
-      val d = new Path(path.stripSuffix("/"), s"cell=$c")
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .map(f => FileEntry(c, f.getPath.getName, f.getLen,
-          rowsPerCell.getOrElse(c, sys.error(
-            s"no row count for rewritten cell $c of $path"))))
-    }
-  }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorOps._
 import graft.operators.MaintenanceProtocol.timed
+import graft.sources.WarehouseWriter
 
 /** Similarity search over an `embeddings(vec_id, embedding array<float>,
   * label)` relation.
@@ -215,7 +216,8 @@ object Similarity {
     * k-means iterations run on a few million sampled vectors while
     * index + probe still cover every vector. Convenience form of
     * [[fitIvfIndex]] + [[ivfTopKWithCentroids]]; production persists the
-    * fit via [[saveIvfIndex]]/[[loadIvfIndex]] instead of refitting. */
+    * fit as the postings artifact ([[saveIvfPostings]]) instead of
+    * refitting. */
   def ivfTopK(emb: DataFrame, numCells: Int, probes: Int, k: Int,
       cellCap: Int = Int.MaxValue, seed: Long = 42L,
       trainFraction: Double = 1.0): DataFrame =
@@ -223,10 +225,9 @@ object Similarity {
       fitIvfIndex(emb, numCells, seed, trainFraction)), probes, k, cellCap)
 
   /** Fit the IVF coarse quantizer (seeded k-means, optionally on a
-    * corpus sample). The returned model IS the index artifact: fit
-    * once per corpus build, [[saveIvfIndex]] it, and serve every
-    * subsequent query load from [[loadIvfIndex]] — at 100 TB the fit
-    * runs on a few million sampled vectors and is then amortized
+    * corpus sample): fit once per corpus build and serve every
+    * subsequent query load from the postings it assigns — at 100 TB the
+    * fit runs on a few million sampled vectors and is then amortized
     * across the index's whole serving life, never per query. */
   def fitIvfIndex(emb: DataFrame, numCells: Int, seed: Long = 42L,
       trainFraction: Double = 1.0): KMeansModel = {
@@ -238,14 +239,6 @@ object Similarity {
     new KMeans().setK(numCells).setSeed(seed).setFeaturesCol("fv")
       .fit(sampled.withColumn("fv", array_to_vector($"v")))
   }
-
-  /** Persist / restore the fitted index. Spark ML's native writer
-    * (parquet metadata + centroid data under `path`) — cluster-FS
-    * friendly and versioned by Spark itself. */
-  def saveIvfIndex(model: KMeansModel, path: String): Unit =
-    model.write.overwrite().save(path)
-
-  def loadIvfIndex(path: String): KMeansModel = KMeansModel.load(path)
 
   /** The model's centroids as the `(cell, centroid)` relation
     * [[ivfTopKWithCentroids]] consumes — numCells rows, driver-side by
@@ -469,49 +462,6 @@ object Similarity {
       .agg(avg($"d2")).as[Double].head()
   }
 
-  /** Persist / restore a grouped (two-level) index as a plain parquet
-    * artifact: one row per group (`kind='group'`, its centroid and
-    * member-cell list) and one per cell (`kind='cell'`, its centroid).
-    * Doubles round-trip parquet exactly, and the self-dots are
-    * recomputed on load with the same index-order summation
-    * [[graft.expressions.IvfAssignKernel.centroidSet]] always uses, so
-    * a restored index serves bit-identically to the fitted one
-    * (spec-pinned). */
-  def saveIvfGrouped(spark: SparkSession,
-      gcs: graft.expressions.IvfGroupedCentroidSet, path: String): Unit = {
-    import spark.implicits._
-    val groups = gcs.gCents.zipWithIndex.map { case (c, j) =>
-      ("group", j, c.toSeq, gcs.members(j).toSeq)
-    }.toSeq
-    val cells = gcs.flat.cents.zipWithIndex.map { case (c, i) =>
-      ("cell", i, c.toSeq, Seq.empty[Int])
-    }.toSeq
-    (groups ++ cells).toDF("kind", "id", "centroid", "members")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadIvfGrouped(spark: SparkSession,
-      path: String): graft.expressions.IvfGroupedCentroidSet = {
-    import spark.implicits._
-    val rows = spark.read.parquet(path)
-      .select($"kind", $"id", $"centroid", $"members")
-      .as[(String, Int, Seq[Double], Seq[Int])]
-      .collect()
-    val cells = rows.filter(_._1 == "cell").sortBy(_._2)
-      .map(_._3.toArray)
-    val gRows = rows.filter(_._1 == "group").sortBy(_._2)
-    val gCents = gRows.map(_._3.toArray)
-    val members = gRows.map(_._4.toArray)
-    val gn2 = gCents.map { a =>
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * a(i); i += 1 }
-      s
-    }
-    graft.expressions.IvfGroupedCentroidSet(
-      graft.expressions.IvfAssignKernel.centroidSet(cells), gCents, gn2,
-      members)
-  }
-
   /** Candidate join + top-k window shared by the kernel-assigned
     * routes: element 0 of `nc` is the home cell (index side), the full
     * list the probe set (query side). No index-side exchange when the
@@ -717,7 +667,7 @@ object Similarity {
   }
 
   /** Persist postings PARTITIONED BY CELL — the directory layout that
-    * makes in-place maintenance and cell-pruned serving possible
+    * makes per-cell maintenance and cell-pruned serving possible
     * (a probe of 12 cells reads 12 directories). The frame is
     * repartitioned BY CELL first so each cell directory holds ONE file
     * instead of one per upstream task — with 32 upstream partitions
@@ -756,9 +706,8 @@ object Similarity {
     * build caps by. The rows shuffle ONCE: [[byCellPinned]] goes first
     * and the dedup and the rank window both run on its cell
     * partitioning, which is also the one-file-per-cell layout the
-    * cell-partitioned writes need, so [[stageIntoCells]] and
-    * [[overwriteTouchedCells]] write the fold as it stands. An uncapped
-    * artifact skips the window. */
+    * cell-partitioned writes need, so [[stageIntoCells]] writes the
+    * fold as it stands. An uncapped artifact skips the window. */
   private def capFold(df: DataFrame, cap: Int,
       cells: Int = Int.MaxValue): DataFrame = {
     val deduped = byCellPinned(df, cells)
@@ -781,21 +730,30 @@ object Similarity {
     * and partition pruning against the manifest's cell values — so
     * [[ivfTopKFromPostings]] over a `Classic` source touches only
     * probed cells' FILES, no directory ever opened. Falls back to the
-    * discovering read for manifest-less or dirty artifacts.
+    * discovering read for manifest-less or dirty artifacts. Heals a
+    * build that crashed inside its swap's delete→install window first.
     *
     * The frame is a SNAPSHOT: maintenance committed after this call is
     * invisible until the caller re-opens. Whether the snapshot SURVIVES
-    * overlapped maintenance depends on the maintenance mode: the
-    * overwrite-style ops (the `InPlace` append,
-    * [[compactIvfPostings]]) DELETE the files they replace at commit,
-    * so they keep the between-serving-epochs contract; the `Retained`
-    * append and [[compactIvfPostingsRetained]] retire superseded files
-    * instead of deleting them, which is the compact-WHILE-serve mode —
-    * a snapshot opened before them keeps serving correctly through them
-    * (StreamingSpec-pinned). A PQ artifact opens under its coded
-    * schema: the codec comes from the artifact ([[PostingsCodec.at]]). */
+    * overlapped maintenance depends on the op: the `Retained` and
+    * `Auto` appends and [[compactIvfPostingsRetained]] retire superseded
+    * files instead of deleting them, which is the compact-WHILE-serve
+    * mode — a snapshot opened before them keeps serving correctly
+    * through them (StreamingSpec-pinned); [[compactIvfPostings]] and
+    * [[vacuumPostings]] delete what they retire, and a rebuild replaces
+    * the whole directory, so those keep the between-serving-epochs
+    * contract. A PQ artifact opens under its coded schema: the codec
+    * comes from the artifact ([[PostingsCodec.at]]). */
   def readPostings(spark: SparkSession, path: String): DataFrame =
-    openPostings(spark, path, PostingsCodec.at(spark, path))
+    openPostings(spark, path, healedCodec(spark, path))
+
+  /** The codec of the artifact at `path`, after healing a build that
+    * crashed inside its swap ([[WarehouseWriter.recoverSwap]]: the
+    * sidecar lives inside the directory the swap deleted). */
+  private def healedCodec(spark: SparkSession, path: String): PostingsCodec = {
+    WarehouseWriter.recoverSwap(spark, path)
+    PostingsCodec.at(spark, path)
+  }
 
   /** The one postings reader, over the artifact's codec (its data
     * schema; the discovering read checks the files carry its payload).
@@ -869,8 +827,8 @@ object Similarity {
     * layout — the append/compact/retain machinery is deliberately not
     * duplicated here.
     *
-    * Same lease + born-with-a-manifest discipline as the classic
-    * build; the sidecar is an [[ArtifactManifest]] (family
+    * Same lease, born-with-a-manifest and staged-install discipline as
+    * the classic build; the sidecar is an [[ArtifactManifest]] (family
     * `ivf_postings_packed`) carrying cells/cap/ck/gp/cellsPerPack, so
     * packed serving never opens a footer for params and never lists a
     * directory. */
@@ -882,20 +840,22 @@ object Similarity {
     val CoarseQuantizer.Params(cells, cap, ck, gp) = postingsParams(postings)
     val packs = (cells + cellsPerPack - 1) / cellsPerPack
     MaintenanceProtocol.withLease(spark, path, "build_packed") {
-      postings
-        .withColumn("pack", (col("cell") / cellsPerPack).cast("int"))
-        .repartition(packs, col("pack"))
-        .sortWithinPartitions("pack", "cell", "d2", "cand_id")
-        .write.mode("overwrite").partitionBy("pack").parquet(path)
-      // one listing + one footer read at build time (the one moment an
-      // O(artifact) pass is already paid — and the artifact is only
-      // ~packs files here)
-      val params = Map(
-        "cells" -> cells.toString, "cap" -> cap.toString,
-        "ck" -> ck.toString, "cpp" -> cellsPerPack.toString) ++
-        gp.map(g => "gp" -> g.toString)
-      ArtifactManifest.write(spark, path, ArtifactManifest.rebuild(spark,
-        path, PackedPostingsFamily, params))
+      WarehouseWriter.overwriteParquetAtomic(spark, path) { tmp =>
+        postings
+          .withColumn("pack", (col("cell") / cellsPerPack).cast("int"))
+          .repartition(packs, col("pack"))
+          .sortWithinPartitions("pack", "cell", "d2", "cand_id")
+          .write.partitionBy("pack").parquet(tmp)
+        // one listing + one footer read at build time (the one moment an
+        // O(artifact) pass is already paid — and the artifact is only
+        // ~packs files here)
+        val params = Map(
+          "cells" -> cells.toString, "cap" -> cap.toString,
+          "ck" -> ck.toString, "cpp" -> cellsPerPack.toString) ++
+          gp.map(g => "gp" -> g.toString)
+        ArtifactManifest.write(spark, tmp, ArtifactManifest.rebuild(spark,
+          tmp, PackedPostingsFamily, params))
+      }
     }
   }
 
@@ -921,9 +881,11 @@ object Similarity {
     * discovering fallback still answers exactly (pack is a discovered
     * partition column); it plans from a listing and its caller derives
     * params from the data. The params come back with the cells-per-pack
-    * count, as the manifest carries them. */
+    * count, as the manifest carries them. Heals a build that crashed
+    * inside its swap first, as [[readPostings]] does. */
   private def readPackedPostingsWithCpp(spark: SparkSession,
-      path: String): (DataFrame, Option[(CoarseQuantizer.Params, Int)]) =
+      path: String): (DataFrame, Option[(CoarseQuantizer.Params, Int)]) = {
+    WarehouseWriter.recoverSwap(spark, path)
     ArtifactManifest.readClean(spark, path, PackedPostingsFamily) match {
       case Some(st) =>
         val root = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
@@ -955,6 +917,7 @@ object Similarity {
         spark.catalog.refreshByPath(path)
         (spark.read.parquet(path), None)
     }
+  }
 
   def readPackedPostings(spark: SparkSession, path: String): DataFrame =
     readPackedPostingsWithCpp(spark, path)._1
@@ -963,13 +926,18 @@ object Similarity {
     * under the codec it was built with: a `Pq` frame must carry these
     * codebooks' checksum (fail-fast), and its codebooks + encoding law
     * land in the `_pq_codebooks` sidecar, so the artifact serves and
-    * appends from its path alone. */
+    * appends from its path alone. Data, sidecar and manifest land in the
+    * swap stage and install together
+    * ([[WarehouseWriter.overwriteParquetAtomic]]): a build that fails —
+    * an empty frame fails at its manifest, which needs files — or
+    * crashes leaves the previous artifact serving. */
   def saveIvfPostings(postings: DataFrame, path: String,
-      codec: PostingsCodec = PostingsCodec.Float): Unit =
-    // The lease is a SIBLING file, so it survives the full overwrite
-    // below — a rebuild of a live artifact fails fast against a
-    // concurrent maintainer instead of wiping the files under it.
-    MaintenanceProtocol.withLease(postings.sparkSession, path, "build") {
+      codec: PostingsCodec = PostingsCodec.Float): Unit = {
+    val spark = postings.sparkSession
+    // The lease is a SIBLING file, so it survives the install — a
+    // rebuild of a live artifact fails fast against a concurrent
+    // maintainer instead of replacing the files under it.
+    MaintenanceProtocol.withLease(spark, path, "build") {
       codec.requireCarriedBy(postings.schema, "the postings frame")
       val pq = Some(codec).collect { case c: PostingsCodec.Pq => c }
       pq.foreach(_.requireOwnCodes(postings, "the postings frame"))
@@ -977,128 +945,33 @@ object Similarity {
       // count by the file count, and the manifest records them
       // without reading a part-file back
       val params = planParams(postings)
-      byCellPinned(postings, params.fold(Int.MaxValue)(_.cells))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-      pq.foreach(PostingsCodec.save(postings.sparkSession, path, _))
-      // Born with a manifest: one listing + driver-side footer row
-      // counts at build time (the overwrite just wiped any prior
-      // sidecar along with the data) buys every later
-      // append/compact/serve its zero-listing path. Build is the one
-      // moment an O(artifact) metadata pass is already being paid — the
-      // write itself created exactly these files.
-      timed("save_manifest")(
-        PostingsManifest.rebuildAndWrite(postings.sparkSession, path, params))
+      WarehouseWriter.overwriteParquetAtomic(spark, path) { tmp =>
+        byCellPinned(postings, params.fold(Int.MaxValue)(_.cells))
+          .write.partitionBy("cell").parquet(tmp)
+        pq.foreach(PostingsCodec.save(spark, tmp, _))
+        // Born with a manifest: one listing + driver-side footer row
+        // counts at build time buys every later append/compact/serve
+        // its zero-listing path. Build is the one moment an O(artifact)
+        // metadata pass is already being paid — the write itself
+        // created exactly these files.
+        timed("save_manifest")(
+          PostingsManifest.rebuildAndWrite(spark, tmp, params))
+      }
     }
-
-  /** The touched-cells-only recap for the DIRECTORY routes: the delta
-    * (already home-assigned, batch-sized) is materialized once, its
-    * touched-cell set collected (bounded by numCells), and the old rows
-    * come from reading ONLY those cells' directories — so a trigger's
-    * read AND listing are ∝ touched cells, never ∝ the artifact. The
-    * previous shape (read the whole directory, left-semi to touched)
-    * listed and opened every cell's file per append: fine at 10³ cells
-    * on local disk, the dominant term at 10⁴⁺ cells on an object store
-    * — the same O(artifact-metadata) class the fragment route's param
-    * read was measured paying. Union–dedup–recap semantics are byte-
-    * identical to [[appendToIvfPostings]]'s (spec-pinned: in-place ≡ the
-    * DataFrame append route ≡ a from-scratch rebuild). */
-  private def recapTouchedDirsAndOverwrite(spark: SparkSession,
-      path: String, delta0: DataFrame, cap: Int): Unit =
-    MaintenanceProtocol.withLease(spark, path, "recap") {
-    import spark.implicits._
-    val state0 = PostingsManifest.readClean(spark, path)
-    val delta = timed("recap_delta_ckpt")(delta0.localCheckpoint(true))
-    try {
-      val touched = timed("recap_touched")(
-        delta.select($"cell").distinct().as[Int].collect())
-      // which touched cells already exist: from the manifest when clean
-      // (zero listings), else one root listing
-      val existing = state0 match {
-        case Some(st) => st.perCellFiles.keySet
-        case None =>
-          val hPath = new org.apache.hadoop.fs.Path(path)
-          val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.listStatus(hPath)
-            .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-            .map(_.getPath.getName.stripPrefix("cell=").toInt).toSet
-      }
-      val dirs = touched.filter(existing).map(c => s"$path/cell=$c")
-      // a batch can touch only never-seen cells — then the old side is
-      // empty and the recap is the capped delta alone
-      val old =
-        if (dirs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[
-            org.apache.spark.sql.Row], delta.schema)
-        else spark.read.option("basePath", path).parquet(dirs.toSeq: _*)
-      val recapped = capFold(
-        old.select(delta.columns.map(col): _*).unionByName(delta),
-        cap, touched.length)
-      if (state0.nonEmpty) MaintenanceProtocol.markDirty(spark, path)
-      val counts = timed("recap_overwrite")(
-        overwriteTouchedCells(spark, path, recapped,
-          wantCounts = state0.nonEmpty))
-      state0.foreach { st =>
-        timed("recap_manifest_roll") {
-          val entries = PostingsManifest.entriesFromDirs(
-            spark, path, counts.keySet, counts)
-          PostingsManifest.commit(spark, path, st,
-            st.replacingCells(counts.keySet, entries))
-          MaintenanceProtocol.clearDirty(spark, path)
-        }
-      }
-    } finally org.apache.spark.sql.GraftColumnBridge
-      .unpersistLocalCheckpoint(delta)
   }
 
-  /** Dynamic-partition-overwrite of the touched cells' directories —
-    * the write half shared by the in-place append routes. The frame is
-    * a [[capFold]], already partitioned BY CELL, and is materialized
-    * first (a plain-parquet overwrite may not read its own input); the
-    * checkpoint keeps the fold's partitions, so each rewritten cell
-    * directory holds ONE file with no second exchange — the in-place
-    * routes PRESERVE the
-    * [[saveIvfPostings]] 1-file-per-cell layout, append after append
-    * (spec-pinned; [[compactIvfPostings]] exists for the fragment
-    * route, not for these). */
-  private def overwriteTouchedCells(spark: SparkSession, path: String,
-      recapped: DataFrame, wantCounts: Boolean = false): Map[Int, Long] = {
-    import spark.implicits._
-    val materialized = recapped.localCheckpoint(true)
-    try {
-      // per-cell row counts for the manifest roll-forward — one small
-      // aggregation over the already-materialized (touched-cells-sized)
-      // frame; skipped entirely for manifest-less artifacts
-      val counts =
-        if (!wantCounts) Map.empty[Int, Long]
-        else materialized.groupBy(col("cell").cast("int").as("cell"))
-          .count().as[(Int, Long)].collect().toMap
-      val saved = spark.conf.getOption(
-        "spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try materialized
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-      finally saved match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset(
-          "spark.sql.sources.partitionOverwriteMode")
-      }
-      counts
-    } finally org.apache.spark.sql.GraftColumnBridge
-      .unpersistLocalCheckpoint(materialized)
-  }
-
-  /** The retained recap's write half: vacuum tombstones at least one
-    * full maintenance epoch old (the SAME window law as
-    * [[vacuumPostings]] at its default — the previous op's own
-    * tombstones, age 0, stay on disk so a snapshot opened before that
-    * op serves through THIS one too), fold old∪delta per touched cell
-    * (byte-identical union–dedup–cap to the in-place route), stage the
-    * result as new files, and swap the manifest with the touched
-    * cells' old live entries RETIRED. Reads the old side through the
-    * manifest-planned [[graft.plans.PostingsFileIndex]] restricted to
-    * the touched cells' LIVE files — zero listings, and retired files
-    * are never re-read (a directory read would double-count them).
+  /** The recap: vacuum tombstones at least one full maintenance epoch
+    * old (the SAME window law as [[vacuumPostings]] at its default —
+    * the previous op's own tombstones, age 0, stay on disk so a
+    * snapshot opened before that op serves through THIS one too), fold
+    * old∪delta per touched cell (the union–dedup–cap of
+    * [[appendToIvfPostings]]), stage the result as new files, and swap
+    * the manifest with the touched cells' old live entries RETIRED. The
+    * old side and the delta are both ∝ touched cells, never ∝ the
+    * artifact: the old side is read through the manifest-planned
+    * [[graft.plans.PostingsFileIndex]] restricted to the touched cells'
+    * LIVE files — zero listings, and retired files are never re-read (a
+    * directory read would double-count them).
     *
     * The manifest is re-read INSIDE the lease: the caller's pre-lease
     * read only chose the route, and rolling forward from that snapshot
@@ -1247,31 +1120,25 @@ object Similarity {
   sealed trait MaintenanceMode
 
   object MaintenanceMode {
-    /** Recap the touched cells and overwrite only their directories
-      * (dynamic partition overwrite): the artifact keeps its
-      * 1-file-per-cell layout append after append. Concurrent readers
-      * see per-partition swaps, not one atomic commit — run between
-      * serving epochs (the
-      * [[graft.sources.WarehouseWriter.compactParquet]] stance). */
-    case object InPlace extends MaintenanceMode
-
-    /** The same recap, landed as NEW uniquely-named files with the
+    /** Recap the touched cells — the hot-cell cap re-applied over
+      * old ∪ new — landed as NEW uniquely-named files with the
       * superseded ones RETIRED in the manifest, so a [[readPostings]]
       * snapshot opened before the append keeps serving its own state
-      * THROUGH it. Tombstones survive at least one full maintenance
-      * epoch (the next retained op vacuums only older ones — the
+      * THROUGH it, and each cell keeps ONE live file append after
+      * append. Tombstones survive at least one full maintenance epoch
+      * (the next retained op vacuums only older ones — the
       * [[vacuumPostings]] window law); plain discovering reads
-      * double-count during the window. Needs a clean manifest: without
-      * one it runs as `InPlace` (correct, not snapshot-isolated). */
+      * double-count during the window. A manifest-less or dirty
+      * artifact is adopted first ([[compactIvfPostingsRetained]]). */
     case object Retained extends MaintenanceMode
 
     /** APPEND the batch into the touched cells' directories, no recap
       * and no rewrite of existing rows: per-call cost ∝ batch alone, at
       * the price of deferred maintenance settled by
-      * [[compactIvfPostings]] — one more file per touched cell per call,
-      * a SUPERSET served between compactions (the cap is re-applied
-      * over old ∪ new at compaction; recall never drops), and a
-      * crash-REPLAYED batch double-appends until compaction dedups it,
+      * [[compactIvfPostingsRetained]] — one more file per touched cell
+      * per call, a SUPERSET served between compactions (the cap is
+      * re-applied over old ∪ new at compaction; recall never drops), and
+      * a crash-REPLAYED batch double-appends until compaction dedups it,
       * so under at-least-once delivery compact before serving. */
     case object Fragment extends MaintenanceMode
 
@@ -1289,10 +1156,8 @@ object Similarity {
       * delta's home cells); the manifest's per-cell rows make the
       * touched populations free. The recap leg is `Retained` — the r15
       * A/B measured the retained recap 1.9× FASTER than the overwrite
-      * recap (SURVEY §6.1), so `manifest present ⟹ retained`; a
-      * manifest-less or dirty artifact routes to the `InPlace` recap
-      * (the ratio is unobservable, and recap is the conservative
-      * always-serveable default). Both legs land the same logical
+      * recap (SURVEY §6.1) — and a manifest-less or dirty artifact is
+      * adopted first, as for `Retained`. Both legs land the same logical
       * artifact (spec-pinned: either path + compaction ≡ rebuild). */
     final case class Auto(fragmentThreshold: Double = 4.0)
         extends MaintenanceMode
@@ -1317,7 +1182,10 @@ object Similarity {
   def appendIvfPostings(spark: SparkSession, path: String,
       q: CoarseQuantizer, newEmb: DataFrame,
       mode: MaintenanceMode): AppendRoute = {
-    val state0 = PostingsManifest.readClean(spark, path)
+    val state0 =
+      if (mode == MaintenanceMode.Fragment)
+        PostingsManifest.readClean(spark, path)
+      else Some(adoptedState(spark, path))
     val codec = PostingsCodec.at(spark, path)
     val p = state0.map(_.params)
       .getOrElse(paramsFromFooter(spark, path, codec))
@@ -1329,16 +1197,27 @@ object Similarity {
       case MaintenanceMode.Fragment =>
         appendFragmentFiles(spark, path, delta)
         fixed("fragment")
-      case MaintenanceMode.Retained if state0.nonEmpty =>
+      case MaintenanceMode.Retained =>
         recapRetained(spark, path, delta, p.cap, codec)
         fixed("recap_retained")
-      case MaintenanceMode.InPlace | MaintenanceMode.Retained =>
-        recapTouchedDirsAndOverwrite(spark, path, delta, p.cap)
-        fixed("recap")
       case MaintenanceMode.Auto(threshold) =>
-        routeAppend(spark, path, delta, p.cap, state0, threshold, codec)
+        routeAppend(spark, path, delta, p.cap, state0.get, threshold, codec)
     }
   }
+
+  /** The clean manifest a recap rolls forward from. A manifest-less or
+    * dirty artifact is ADOPTED first: [[compactIvfPostingsRetained]]
+    * rebuilds its manifest from directory truth and folds every cell
+    * that truth holds more than once, so no resurrected tombstone or
+    * half-staged file is ever committed as live. */
+  private def adoptedState(spark: SparkSession,
+      path: String): PostingsManifest.State =
+    PostingsManifest.readClean(spark, path).getOrElse {
+      compactIvfPostingsRetained(spark, path)
+      PostingsManifest.readClean(spark, path).getOrElse(
+        throw new IllegalStateException(s"manifest at $path is untrusted " +
+          "right after its adoption (a concurrent writer crashed mid-op?)"))
+    }
 
   /** [[appendIvfPostings]] under `Flat(cents)` in `Auto` mode, for
     * callers holding a raw centroid matrix. */
@@ -1354,153 +1233,42 @@ object Similarity {
     * the delta's assignment plan — deterministic, O(batch) arithmetic,
     * the same cost class the routes pay anyway. */
   private def routeAppend(spark: SparkSession, path: String,
-      delta: DataFrame, cap: Int, state0: Option[PostingsManifest.State],
+      delta: DataFrame, cap: Int, st: PostingsManifest.State,
       fragmentThreshold: Double, codec: PostingsCodec): AppendRoute = {
     import spark.implicits._
     val perCellBatch = timed("route_probe")(
       delta.groupBy(col("cell").cast("int").as("cell")).count()
         .as[(Int, Long)].collect())
     val batchRows = perCellBatch.map(_._2).sum
-    val touchedRows = state0 match {
-      case Some(st) =>
-        val pop = st.perCellRows
-        perCellBatch.map { case (c, _) => pop.getOrElse(c, 0L) }.sum
-      case None => 0L
-    }
+    val pop = st.perCellRows
+    val touchedRows = perCellBatch.map { case (c, _) => pop.getOrElse(c, 0L) }.sum
     val ratio =
       if (batchRows == 0) 0.0 else touchedRows.toDouble / batchRows
-    if (state0.nonEmpty && ratio >= fragmentThreshold) {
+    if (ratio >= fragmentThreshold) {
       appendFragmentFiles(spark, path, delta)
       AppendRoute("fragment", batchRows, touchedRows, ratio)
-    } else if (state0.nonEmpty) {
+    } else {
       recapRetained(spark, path, delta, cap, codec)
       AppendRoute("recap_retained", batchRows, touchedRows, ratio)
-    } else {
-      recapTouchedDirsAndOverwrite(spark, path, delta, cap)
-      AppendRoute("recap", batchRows, touchedRows, ratio)
     }
   }
 
   /** Cell-partition-aware compaction of a [[saveIvfPostings]]
-    * directory: folds every FRAGMENTED cell (more than one file, or
-    * over-cap after fragment appends) back to the 1-file-per-cell
-    * contract, deduping replayed rows on (cell, cand_id) and
-    * re-applying the hot-cell cap over the accumulated union — so
-    * fragment-appends + compact lands the exact from-scratch-rebuild
-    * rows (spec-pinned). Clean cells are NOT rewritten (their files
-    * stay byte-identical — at 10⁴ cells and dozens touched, the
-    * maintenance write is ∝ fragmented cells, like the append itself),
-    * which is also why this never replaces [[WarehouseWriter
-    * .compactParquet]]: that one folds FLAT directories and would
-    * flatten the partition layout serving prunes on. Same concurrency
-    * stance as the in-place append: per-partition swaps, run between
-    * serving epochs. Returns (fragmented cells rewritten, files
-    * before, files after).
-    *
-    * With a clean [[PostingsManifest]] the whole detection phase is one
-    * small read — no artifact listing, no per-cell listStatus, no
-    * footer-count job (the O(files) terms that made the r14
-    * trickle-posture compaction 183 s over 68 k files) — and only the
-    * fragmented cells' directories are ever opened. Without one (legacy
-    * artifact, or a stranded dirty flag after a crash) it falls back to
-    * directory truth and then writes a fresh manifest, so one slow
-    * compaction ADOPTS the artifact into the fast path. */
-  def compactIvfPostings(spark: SparkSession, path: String): (Int, Int, Int) =
-    MaintenanceProtocol.withLease(spark, path, "compact")(
-      compactIvfPostingsLocked(spark, path))
-
-  /** [[compactIvfPostings]]'s body with the writer lease ALREADY HELD —
-    * shared with [[compactIvfPostingsRetained]]'s manifest-less
-    * fallback, which runs under its own lease and must not
-    * re-acquire (the lease is deliberately non-reentrant: a second
-    * acquire is exactly the corruption signal it exists to raise). */
-  private def compactIvfPostingsLocked(spark: SparkSession,
-      path: String): (Int, Int, Int) = {
-    import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ManifestLog.sweepStaleDeltas(spark, path)
-    PostingsManifest.readClean(spark, path) match {
-      // ---- manifest route: fragmented-set detection from ONE small
-      // read — no artifact listing, no per-cell listStatus, no
-      // footer-count job; the only artifact I/O left is reading the
-      // fragmented cells themselves. This is what turned the r14
-      // trickle-posture compaction from O(files) to O(fragmented).
-      case Some(st) =>
-        val cap = st.params.cap
-        val pcFiles = st.perCellFiles
-        val filesBefore = st.totalFiles
-        val multiFile = pcFiles.filter(_._2 > 1).keySet
-        // a single fragment can overfill an EMPTY cell past the cap —
-        // file count alone can't see it; the manifest's physical row
-        // counts (replay dups included) can
-        val overCap =
-          if (cap == Int.MaxValue) Set.empty[Int]
-          else st.perCellRows.filter(_._2 > cap).keySet
-        val fragmented = multiFile ++ overCap
-        if (fragmented.isEmpty) return (0, filesBefore, filesBefore)
-        // the fold's input scan is planned from the manifest snapshot
-        // restricted to the fragmented cells — zero listings even here
-        // (safe against the overwrite below: overwriteTouchedCells
-        // materializes the fold before any file is replaced)
-        val frag = org.apache.spark.sql.GraftColumnBridge
-          .parquetOverFileIndex(spark,
-            new graft.plans.PostingsFileIndex(path,
-              st.copy(files = st.files.filter(f => fragmented(f.cell)))),
-            PostingsCodec.at(spark, path).dataSchema(st.params.gp.nonEmpty))
-        val folded = capFold(frag, cap, fragmented.size)
-        MaintenanceProtocol.markDirty(spark, path)
-        val counts = overwriteTouchedCells(spark, path, folded,
-          wantCounts = true)
-        val entries = PostingsManifest.entriesFromDirs(
-          spark, path, fragmented, counts)
-        PostingsManifest.write(spark, path,
-          st.replacingCells(fragmented, entries))
-        MaintenanceProtocol.clearDirty(spark, path)
-        (fragmented.size, filesBefore,
-          filesBefore - fragmented.toSeq.map(pcFiles).sum + fragmented.size)
-
-      // ---- listing route: no manifest, or a stranded dirty flag says
-      // it can't be trusted — fall back to directory truth (the old
-      // O(files) shape), then ADOPT: rebuild a clean manifest from the
-      // just-compacted directory so every later op gets the fast path.
-      case None =>
-        spark.catalog.refreshByPath(path)
-        val postings = spark.read.parquet(path)
-        val params = postingsParams(postings)
-        val cap = params.cap
-        val perCellFiles = fs.listStatus(hPath)
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-          .map(d => d.getPath.getName.stripPrefix("cell=").toInt ->
-            fs.listStatus(d.getPath)
-              .count(f => f.isFile && f.getPath.getName.startsWith("part-")))
-          .toMap
-        val filesBefore = perCellFiles.values.sum
-        val multiFile = perCellFiles.filter(_._2 > 1).keySet
-        // over-cap detection: row-group-metadata count, not a data scan
-        val overCap =
-          if (cap == Int.MaxValue) Set.empty[Int]
-          else postings.groupBy($"cell").count()
-            .filter($"count" > cap).select($"cell".cast("int"))
-            .as[Int].collect().toSet
-        val fragmented = multiFile ++ overCap
-        val result =
-          if (fragmented.isEmpty) (0, filesBefore, filesBefore)
-          else {
-            overwriteTouchedCells(spark, path, capFold(
-              postings.filter($"cell".isin(fragmented.toSeq: _*)),
-              cap, fragmented.size))
-            (fragmented.size, filesBefore,
-              filesBefore - perCellFiles.view.filterKeys(fragmented)
-                .values.sum + fragmented.size)
-          }
-        PostingsManifest.rebuildAndWrite(spark, path, Some(params))
-        result
-    }
+    * directory between serving epochs: [[compactIvfPostingsRetained]],
+    * then a [[vacuumPostings]] of every tombstone, so the directory
+    * itself is back to one file per cell. Fragment-appends + compact
+    * land the exact from-scratch-rebuild rows (spec-pinned), and clean
+    * cells are not rewritten. A snapshot opened before it may lose
+    * files it planned; [[compactIvfPostingsRetained]] alone is the
+    * compact-WHILE-serve form. Returns (fragmented cells folded, files
+    * before, files after). */
+  def compactIvfPostings(spark: SparkSession, path: String): (Int, Int, Int) = {
+    val folded = compactIvfPostingsRetained(spark, path)
+    vacuumPostings(spark, path, 0L)
+    folded
   }
 
-  /** COMPACT-WHILE-SERVE: the retained variant of [[compactIvfPostings]]
-    * for manifest-backed artifacts — a reader that opened
+  /** COMPACT-WHILE-SERVE, the one postings fold — a reader that opened
     * [[readPostings]] BEFORE this compaction keeps serving correctly
     * THROUGH it, because nothing that snapshot references is deleted:
     *
@@ -1508,83 +1276,91 @@ object Similarity {
     *     marked retired (their window — at least one full epoch, the
     *     same law as [[vacuumPostings]]'s default — ends here; the
     *     newest epoch's tombstones stay for its in-flight snapshots);
-    *  2. fold the fragmented cells exactly as [[compactIvfPostings]]
-    *     does, but land the compacted files as NEW uniquely-named files
-    *     next to the fragments they replace ([[stageIntoCells]], no
-    *     dynamic-partition-overwrite delete);
+    *  2. fold every FRAGMENTED cell (more than one live file, or over
+    *     cap after fragment appends) back to one file: dedup replayed
+    *     rows on (cell, cand_id) and re-apply the hot-cell cap over the
+    *     accumulated union, landing the compacted files as NEW
+    *     uniquely-named files next to the ones they replace
+    *     ([[stageIntoCells]]); clean cells are NOT rewritten — at 10⁴
+    *     cells and dozens touched, the write is ∝ fragmented cells;
     *  3. swap the manifest: compacted entries live, superseded
     *     fragments RETIRED (on disk, invisible to new
     *     [[readPostings]] snapshots — the Delta tombstone move).
     *
+    * With a clean [[PostingsManifest]] the whole detection phase is one
+    * small read — no artifact listing, no per-cell listStatus, no
+    * footer-count job (the O(files) terms that made the r14
+    * trickle-posture compaction 183 s over 68 k files) — and only the
+    * fragmented cells' files are ever opened. A manifest-less or dirty
+    * artifact is ADOPTED: its manifest is rebuilt in memory from
+    * directory truth, where tombstones and half-staged files are live
+    * entries that leave their cells multi-file, so step 2 folds them
+    * too; the dirty flag stays set until the folded manifest commits.
+    * Resurrected retired rows are ABSORBED — they are exact
+    * (cell, cand_id) duplicates or capped-out rows of the live state
+    * (cap-over-union is idempotent; spec-pinned).
+    *
     * New snapshots opened after the swap see exactly the compacted
     * artifact; old snapshots keep their files for at least one full
     * maintenance epoch (vacuumed by the first retained op of a LATER
-    * epoch, or by [[vacuumPostings]]). The costs, stated: the directory temporarily
-    * holds old+new files (bytes, not correctness), and a PLAIN
-    * `spark.read.parquet(dir)` during the retention window double-reads
-    * the superseded fragments — retained compaction is for deployments
-    * whose readers resolve through the manifest ([[readPostings]]),
-    * which is also why it REQUIRES a clean manifest (falls back to the
-    * classic overwrite compaction otherwise, which has no retention to
-    * offer). The dirty flag brackets the whole operation: a crash
-    * anywhere leaves dirty → readers fall back to directory truth and
-    * the next compaction rebuilds; resurrection of retired rows by that
-    * rebuild is ABSORBED — they are exact (cell, cand_id) duplicates or
-    * capped-out rows of the live state, so the very next fold converges
-    * back (cap-over-union is idempotent; spec-pinned).
-    * Returns (fragmented cells folded, live files before, live after). */
+    * epoch, or by [[vacuumPostings]]). The costs, stated: the directory
+    * temporarily holds old+new files (bytes, not correctness), and a
+    * PLAIN `spark.read.parquet(dir)` during the retention window
+    * double-reads the superseded fragments — read through
+    * [[readPostings]]. Heals a build that crashed inside its swap
+    * first. This is also not [[WarehouseWriter.compactParquet]]: that
+    * one folds FLAT directories and would flatten the partition layout
+    * serving prunes on. Returns (fragmented cells folded, live files
+    * before, live after). */
   def compactIvfPostingsRetained(spark: SparkSession,
       path: String): (Int, Int, Int) = {
-    import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     MaintenanceProtocol.withLease(spark, path, "compact_retained") {
+      WarehouseWriter.recoverSwap(spark, path)
       ManifestLog.sweepStaleDeltas(spark, path)
-      PostingsManifest.readClean(spark, path) match {
-        case None => compactIvfPostingsLocked(spark, path)
-        case Some(st0) =>
-          MaintenanceProtocol.markDirty(spark, path)
-          // vacuum tombstones at least one maintenance epoch old — the
-          // same window law as vacuumPostings(1): the latest op's own
-          // tombstones (age 0) survive this op too, so a snapshot
-          // opened before that op serves THROUGH this one. A quiesced
-          // artifact's final window closes via vacuumPostings.
-          val aged = st0.files.filter(f =>
-            f.retired && f.retiredAt < st0.epoch)
-          MaintenanceProtocol.bulkDeleteFiles(fs, hPath, aged.map(e =>
-            new org.apache.hadoop.fs.Path(
-              path.stripSuffix("/") + s"/cell=${e.cell}/${e.file}")))
-          val st = st0.copy(files = st0.files.filterNot(aged.toSet))
-          val cap = st.params.cap
-          val pcFiles = st.perCellFiles
-          val filesBefore = st.totalFiles
-          val fragmented = pcFiles.filter(_._2 > 1).keySet ++
-            (if (cap == Int.MaxValue) Set.empty[Int]
-             else st.perCellRows.filter(_._2 > cap).keySet)
-          if (fragmented.isEmpty) {
-            PostingsManifest.write(spark, path, st)
-            MaintenanceProtocol.clearDirty(spark, path)
-            (0, filesBefore, filesBefore)
-          } else {
-            val frag = org.apache.spark.sql.GraftColumnBridge
-              .parquetOverFileIndex(spark,
-                new graft.plans.PostingsFileIndex(path,
-                  st.copy(files = st.files.filter(f => fragmented(f.cell)))),
-                PostingsCodec.at(spark, path)
-                  .dataSchema(st.params.gp.nonEmpty))
-            // single-pass fold: consumed once by the staged write;
-            // per-cell rows ride the landed footers (stageIntoCells)
-            val entries = stageIntoCells(spark, path,
-              capFold(frag, cap, fragmented.size))
-            val next = st.retiringCells(fragmented, entries)
-            PostingsManifest.write(spark, path, next)
-            MaintenanceProtocol.clearDirty(spark, path)
-            logRetiredDebt(path, next)
-            (fragmented.size, filesBefore,
-              filesBefore - fragmented.toSeq.map(pcFiles).sum +
-                fragmented.size)
-          }
-      }
+      val st0 = PostingsManifest.readClean(spark, path)
+        .getOrElse(PostingsManifest.rebuild(spark, path))
+      MaintenanceProtocol.markDirty(spark, path)
+      // vacuum tombstones at least one maintenance epoch old — the
+      // same window law as vacuumPostings(1): the latest op's own
+      // tombstones (age 0) survive this op too, so a snapshot
+      // opened before that op serves THROUGH this one. A quiesced
+      // artifact's final window closes via vacuumPostings.
+      val aged = st0.files.filter(f =>
+        f.retired && f.retiredAt < st0.epoch)
+      MaintenanceProtocol.bulkDeleteFiles(fs, hPath, aged.map(e =>
+        new org.apache.hadoop.fs.Path(
+          path.stripSuffix("/") + s"/cell=${e.cell}/${e.file}")))
+      val st = st0.copy(files = st0.files.filterNot(aged.toSet))
+      val cap = st.params.cap
+      val pcFiles = st.perCellFiles
+      val filesBefore = st.totalFiles
+      // a single fragment can overfill an EMPTY cell past the cap —
+      // file count alone can't see it; the manifest's physical row
+      // counts (replay dups included) can
+      val fragmented = pcFiles.filter(_._2 > 1).keySet ++
+        (if (cap == Int.MaxValue) Set.empty[Int]
+         else st.perCellRows.filter(_._2 > cap).keySet)
+      val next =
+        if (fragmented.isEmpty) st
+        else {
+          val frag = org.apache.spark.sql.GraftColumnBridge
+            .parquetOverFileIndex(spark,
+              new graft.plans.PostingsFileIndex(path,
+                st.copy(files = st.files.filter(f => fragmented(f.cell)))),
+              PostingsCodec.at(spark, path)
+                .dataSchema(st.params.gp.nonEmpty))
+          // single-pass fold: consumed once by the staged write;
+          // per-cell rows ride the landed footers (stageIntoCells)
+          st.retiringCells(fragmented, stageIntoCells(spark, path,
+            capFold(frag, cap, fragmented.size)))
+        }
+      PostingsManifest.write(spark, path, next)
+      MaintenanceProtocol.clearDirty(spark, path)
+      logRetiredDebt(path, next)
+      (fragmented.size, filesBefore,
+        filesBefore - fragmented.toSeq.map(pcFiles).sum + fragmented.size)
     }
   }
 
@@ -1777,7 +1553,7 @@ object Similarity {
         PostingsCodec.requireFloatFrame(df, "a PostingsSource.Frame serve")
         (df, postingsParams(df), None, PostingsCodec.Float)
       case PostingsSource.Classic(path) =>
-        val codec = PostingsCodec.at(spark, path)
+        val codec = healedCodec(spark, path)
         (openPostings(spark, path, codec),
           postingsParamsAtPath(spark, path, codec), None, codec)
       case PostingsSource.Packed(path) =>

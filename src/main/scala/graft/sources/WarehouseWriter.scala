@@ -157,39 +157,51 @@ object WarehouseWriter {
     val bytes = files.map(_.getLen).sum
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val df = graft.Tables.read(spark, path)
-    overwriteParquetAtomic(sortCol match {
+    overwriteParquetAtomic(spark, path)((sortCol match {
       case Some(c) => rangeSorted(df, nOut, c)
       case None => df.repartition(nOut)
-    }, path)
+    }).write.parquet(_))
     (files.length, nOut, bytes)
   }
 
-  /** Crash-safe directory overwrite for small per-round artifacts (the
-    * streaming bloom sidecar): `mode("overwrite")` DELETES the target
-    * before writing, so a crash mid-write strands the artifact as
-    * missing/partial and the restart's loader fails its non-empty
-    * check. Here the new contents are fully durable (committed, with
-    * `_SUCCESS`) at a sibling tmp path before the target is touched,
-    * and the delete→install window is covered by [[recoverSwap]] — a
-    * crash at any point leaves the old artifact, the new one, or a
-    * recoverable tmp, never a partial directory. */
-  def overwriteParquetAtomic(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
+  /** Crash-safe directory install — the one way a write replaces a
+    * live artifact: every index build and compaction, [[compactParquet]]
+    * and the streaming bloom sidecar. `mode("overwrite")` DELETES the
+    * target before writing, so a crash or a failed job mid-write
+    * strands the artifact missing or partial. Here `write` fills a
+    * fresh sibling stage with EVERYTHING the artifact is born with
+    * (data, sidecars, manifest); only when it returns is the stage
+    * renamed to the swap tmp, so a tmp exists only complete. Then the
+    * target is deleted and the tmp installed, and [[recoverSwap]]
+    * covers that delete→install window: a crash or a failure at any
+    * point leaves the old artifact, the new one, or a complete tmp,
+    * never a partial directory. Returns what `write` returns. */
+  def overwriteParquetAtomic[A](spark: SparkSession, path: String)(
+      write: String => A): A = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = swapTmp(hPath)
-    fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val stage = new org.apache.hadoop.fs.Path(hPath.getParent,
+      s".${hPath.getName}.swap-stage")
+    fs.delete(stage, true)
+    val written =
+      try {
+        val a = write(stage.toString)
+        fs.delete(tmp, true)
+        require(fs.rename(stage, tmp), s"atomic overwrite failed staging $tmp")
+        a
+      } finally fs.delete(stage, true)
     fs.delete(hPath, true)
     require(fs.rename(tmp, hPath), s"atomic overwrite failed installing $tmp")
+    written
   }
 
   /** Heal a crash inside [[overwriteParquetAtomic]]'s delete→install
     * window: if the target is missing but a fully-committed tmp (has
     * `_SUCCESS`) is present, install it. Call before READING an
     * artifact maintained by the atomic overwrite (the streaming
-    * provider, [[compactParquet]] and every flat index family's open
-    * and compaction do); a no-op in every healthy state. */
+    * provider, [[compactParquet]], every index family's open and
+    * compaction do); a no-op in every healthy state. */
   def recoverSwap(spark: SparkSession, path: String): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -134,7 +134,8 @@ object CorpusIngest {
       }) {
       (kept, delta, bloomNext, _) =>
         kept.write.mode("append").parquet(corpusPath)
-        graft.sources.WarehouseWriter.overwriteParquetAtomic(bloomNext, bloomPath)
+        graft.sources.WarehouseWriter.overwriteParquetAtomic(
+          bloomNext.sparkSession, bloomPath)(bloomNext.write.parquet(_))
         // through the staged manifest protocol, NOT a raw append: a
         // stream pointed at a saveExactIndex-built artifact must keep
         // the sidecar true — a plain mode("append") staled it WITHOUT
@@ -152,31 +153,32 @@ object CorpusIngest {
     * [[Similarity.appendIvfPostings]] under the FROZEN quantizer `q`
     * (the artifact's own cells and assignment law, validated per
     * batch) and the maintenance `mode`:
-    *  - `InPlace` (the always-serveable default posture): touched-cell
-    *    partition overwrite, cost ∝ batch + touched cells. Crash
+    *  - `Retained` (the default posture, SERVE-WHILE-INGEST): the
+    *    touched-cell recap lands as new files with the superseded ones
+    *    retired in the manifest, cost ∝ batch + touched cells, so a
+    *    query path holding a [[Similarity.readPostings]] snapshot keeps
+    *    serving its own consistent state through every trigger. Crash
     *    re-deliveries CONVERGE — the recap dedups on (cell, cand_id),
-    *    so replaying a micro-batch reproduces the same directory state.
-    *  - `Retained` (SERVE-WHILE-INGEST): the recap lands as new files
-    *    with the superseded ones retired in the manifest, so a query
-    *    path holding a [[Similarity.readPostings]] snapshot keeps
-    *    serving its own consistent state through every trigger.
+    *    so replaying a micro-batch reproduces the same served state.
     *    Retention is one epoch: each trigger vacuums the previous
     *    trigger's tombstones, so a reader should re-open at least once
     *    per trigger interval — the contract Delta readers have under
-    *    VACUUM. Needs the manifest clean (else the `InPlace` recap).
+    *    VACUUM. A manifest-less or dirty artifact is adopted first.
     *  - `Fragment` (the high-frequency trigger posture): one file per
     *    touched cell, no recap, per-trigger cost ∝ batch alone. A
     *    checkpoint-recovery REPLAY double-appends, folded only at the
-    *    next [[Similarity.compactIvfPostings]] — so under at-least-once
-    *    delivery this seam's contract is compact-before-serve (cost
-    *    ∝ fragmented cells, SURVEY §6.2's maintenance modes table).
+    *    next [[Similarity.compactIvfPostingsRetained]] — so under
+    *    at-least-once delivery this seam's contract is
+    *    compact-before-serve (cost ∝ fragmented cells, SURVEY §6.2's
+    *    maintenance modes table).
     *  - `Auto(t)`: the regime law picks per micro-batch.
     * Under `TwoLevel(gcs, gp)` the per-batch assignment is
     * O(groups + probed members) per row — the term that dominates a
     * 16 384-cell append — against a two-level-built artifact whose
     * embedded `iv_gp` must equal `gp`. Bootstrap `postingsPath` with
-    * [[Similarity.saveIvfPostings]] over the seed corpus (or an empty
-    * frame) under the quantizer this stream will run; retrain +
+    * [[Similarity.saveIvfPostings]] over a non-empty seed corpus (an
+    * empty build fails, leaving any previous artifact in place) under
+    * the quantizer this stream will run; retrain +
     * rebuild when drift erodes recall (the SURVEY §6.2 knee is the
     * signal), exactly as a batch deployment would.
     *

@@ -698,6 +698,32 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       "compaction must re-adopt a manifest over the healed artifact")
   }
 
+  test("an exact index rebuild whose write stage fails keeps the old index") {
+    val path = tempDir("graft_ex_rebuild_fail").resolve("index").toString
+    val old = spark.range(500)
+      .select(md5($"id".cast("string")).as("text_hash"))
+    Dedup.saveExactIndex(old, path, files = 2)
+    def stored() = Dedup.readExactIndex(spark, path).as[String].collect().toSet
+    val want = stored()
+    assert(want.size == 500)
+    // the failure is raised AFTER the range exchange, inside the write
+    // stage — where a mode("overwrite") onto the live path would already
+    // have deleted it
+    intercept[Exception] {
+      graft.operators.FlatIndex.Exact.build(
+        spark.range(500, 900).select(md5($"id".cast("string")).as("text_hash")),
+        path) { df =>
+        graft.sources.WarehouseWriter.rangeSorted(df, 2, "text_hash")
+          .withColumn("text_hash",
+            expr("if(text_hash is not null, raise_error('boom'), text_hash)"))
+      }
+    }
+    assert(stored() == want, "a failed rebuild must leave the old rows serving")
+    assert(Dedup.readExactIndex(spark, path).queryExecution.executedPlan
+      .toString.contains("ManifestFileIndex"),
+      "the old index keeps its clean manifest")
+  }
+
   /** Row groups in `dir` whose text_hash [min,max] could contain a
     * probe, summed over probes — the same footer census
     * StreamingSpec's compactParquet leg uses: a range-sorted layout

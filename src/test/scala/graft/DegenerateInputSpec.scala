@@ -179,4 +179,26 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
     assert(Similarity.bruteForceTopK(empty, lit(true), k = 5).count() == 0L)
     assert(Similarity.blockedNearest(empty, Seq(0, 1)).count() == 0L)
   }
+
+  test("an empty postings rebuild fails before it touches the live artifact") {
+    import graft.operators.CoarseQuantizer.Flat
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
+      trainFraction = 0.5)
+    val path = tempDir("graft_degen_postings").resolve("postings").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(emb, Flat(model)), path)
+    def rows() = Similarity.readPostings(spark, path)
+      .select($"cell", $"cand_id", $"d2").as[(Int, Long, Double)]
+      .collect().toSet
+    val before = rows()
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.saveIvfPostings(
+        Similarity.ivfPostings(emb.limit(0), Flat(model)), path)
+    }
+    assert(ex.getMessage.contains("no postings data"), ex.getMessage)
+    assert(rows() == before && before.nonEmpty,
+      "the failed rebuild must leave the previous artifact serving")
+    assert(graft.operators.PostingsManifest.readClean(spark, path).nonEmpty,
+      "the previous artifact keeps its clean manifest")
+  }
 }

@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MaintenanceProtocol, PostingsManifest, Similarity}
 import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
-import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace,
-  Retained}
+import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, Retained}
 import graft.operators.Similarity.PostingsSource
 
 /** The postings manifest sidecar's one invariant, pinned through every
@@ -110,12 +109,12 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       .perCellFiles.values.forall(_ == 1))
   }
 
-  test("recap in-place appends roll the manifest forward exactly") {
+  test("recap retained appends roll the manifest forward exactly") {
     val (path, model, _) = freshArtifact()
     val emb = Tables.load(spark, sf0001, "embeddings")
     (1 to 3).foreach { i =>
       Similarity.appendIvfPostings(spark, path, Flat(model),
-        emb.filter($"vec_id" % 4 === i), InPlace)
+        emb.filter($"vec_id" % 4 === i), Retained)
       assertManifestIsTruth(path, s"after recap append $i")
     }
   }
@@ -153,16 +152,25 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     // legacy artifact: no sidecar at all
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     assert(PostingsManifest.readClean(spark, path).isEmpty)
-    // footer-path params still drive both append families
+    // footer-path params still drive the fragment append
     Similarity.appendIvfPostings(spark, path, Flat(cents),
       emb.filter($"vec_id" % 4 === 1), Fragment)
-    Similarity.appendIvfPostings(spark, path, Flat(model),
-      emb.filter($"vec_id" % 4 === 2), InPlace)
     assert(PostingsManifest.readClean(spark, path).isEmpty,
-      "appends must not invent a manifest for a legacy artifact")
-    // first compaction adopts: directory-truth fold + fresh manifest
+      "a fragment append must not invent a manifest for a legacy artifact")
+    // a recap append adopts first: the compaction's directory-truth fold
+    // (the fragments included) + a fresh manifest, then the retained recap
+    Similarity.appendIvfPostings(spark, path, Flat(model),
+      emb.filter($"vec_id" % 4 === 2), Retained)
+    assertManifestIsTruth(path, "after the adopting recap append")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"cell", $"cand_id", $"d2").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows(Similarity.readPostings(spark, path)) ==
+      rows(Similarity.ivfPostings(emb.filter($"vec_id" % 4 =!= 3),
+        Flat(model), 16)),
+      "adoption + recap must land the from-scratch build")
     Similarity.compactIvfPostings(spark, path)
-    assertManifestIsTruth(path, "after adopting compaction")
+    assertManifestIsTruth(path, "after compaction")
     // from here on, appends maintain it
     Similarity.appendIvfPostings(spark, path, Flat(cents),
       emb.filter($"vec_id" % 4 === 3), Fragment)
@@ -260,14 +268,16 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     assert(rows(spark.read.parquet(p2)) ==
       rows(Similarity.ivfPostings(emb, Flat(model))))
 
-    // no manifest → the ratio is unobservable → conservative recap
+    // no manifest → adopted first (a directory-truth manifest), so the
+    // ratio is observable and the same trickle fragments
     val p3 = tempDir("graft_auto_n").toString
     Similarity.saveIvfPostings(Similarity.ivfPostings(seed2, Flat(model)), p3)
     fs(p3).delete(PostingsManifest.manifestDir(p3), true)
     val r3 = Similarity.appendIvfPostingsAuto(spark, p3, cents, b2)
-    assert(r3.route == "recap" && r3.touchedRows == 0L)
-    spark.catalog.refreshByPath(p3)
-    assert(rows(spark.read.parquet(p3)) ==
+    assert(r3.route == "fragment" && r3.touchedRows == r2.touchedRows,
+      s"an adopted artifact routes by its populations, got $r3")
+    assertManifestIsTruth(p3, "after the adopting auto append")
+    assert(rows(Similarity.readPostings(spark, p3)) ==
       rows(Similarity.ivfPostings(emb, Flat(model))))
 
     // grouped twin on a two-level artifact: same law, artifact's own gp
@@ -466,7 +476,7 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)
     assert(rows(snapshot) == expect0,
       "a pre-append snapshot must serve THROUGH a retained recap")
-    // a new reader sees exactly the in-place/rebuild state
+    // a new reader sees exactly the rebuild state
     val rebuilt1 = rows(Similarity.ivfPostings(old.union(b1), Flat(model), cap))
     assert(rows(Similarity.readPostings(spark, path)) == rebuilt1)
     assertManifestIsTruth(path, "retained recap retention window")
@@ -504,15 +514,15 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       rows(Similarity.readPostings(spark, path)),
       "plain reads must be clean once every window is vacuumed")
 
-    // manifest-less artifacts fall back to the classic in-place
-    // overwrite: correct rows, no snapshot isolation claimed
+    // a manifest-less artifact is adopted first (a directory-truth
+    // manifest), then takes the same retained recap
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     val b3 = emb.filter($"vec_id" % 4 === 3)
     Similarity.appendIvfPostings(spark, path, Flat(cents), b3, Retained)
-    spark.catalog.refreshByPath(path)
-    assert(rows(spark.read.parquet(path)) ==
+    assert(rows(Similarity.readPostings(spark, path)) ==
       rows(Similarity.ivfPostings(emb, Flat(model), cap)),
-      "manifest-less retained append must land the classic recap")
+      "manifest-less retained append must land the rebuild")
+    assertManifestIsTruth(path, "after the adopting retained append")
   }
 
   test("retained recap append, two-level law: snapshot-safe and ≡ rebuild") {
@@ -560,8 +570,6 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     val exs = Seq(
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Fragment)),
-      intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
-        Similarity.appendIvfPostings(spark, path, Flat(model), b1, InPlace)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
         Similarity.appendIvfPostings(spark, path, Flat(cents), b1, Retained)),
       intercept[MaintenanceProtocol.ConcurrentMaintenanceException](
@@ -833,11 +841,12 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
       "replaying an already-folded delta must be a no-op")
     assertManifestIsTruth(path, "after the crash-window replay")
 
-    // compaction FOLDS: base rewritten, log cleared
+    // compaction FOLDS: base rewritten, log cleared (the retained fold;
+    // compactIvfPostings' closing vacuum logs its dels as a new delta)
     Similarity.appendIvfPostings(spark, path, Flat(cents), b1,
       Fragment) // fragment it
     assert(deltaFiles.nonEmpty)
-    Similarity.compactIvfPostings(spark, path)
+    Similarity.compactIvfPostingsRetained(spark, path)
     assert(deltaFiles.isEmpty, "compaction must fold the log away")
     assert(f.getFileStatus(mp).getModificationTime > baseMod)
     assertManifestIsTruth(path, "after the folding compaction")
@@ -896,6 +905,53 @@ class PostingsManifestSpec extends AnyFunSuite with SparkSpec {
     fs(path).delete(PostingsManifest.manifestDir(path), true)
     assert(rows(Similarity.readPostings(spark, path)) == clean,
       "a manifest-less artifact's listing read stays truth")
+  }
+
+  test("a build that crashed inside its swap heals on the next open, " +
+      "manifest included: postings, packed and exact") {
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
+      trainFraction = 0.5)
+    val postings = Similarity.ivfPostings(emb, Flat(model))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"cell", $"cand_id", $"d2").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
+    // what a crash between the install's delete and its rename leaves:
+    // the target gone, the complete new artifact at the sibling swap tmp
+    def crashInSwap(path: String): Unit = {
+      val p = new Path(path)
+      assert(fs(path).rename(p, new Path(p.getParent, s".${p.getName}.swap-tmp")))
+      assert(!fs(path).exists(p))
+    }
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+
+    val classic = tempDir("graft_swap_c").resolve("p").toString
+    Similarity.saveIvfPostings(postings, classic)
+    val want = rows(Similarity.readPostings(spark, classic))
+    crashInSwap(classic)
+    val healed = Similarity.readPostings(spark, classic)
+    assert(plan(healed).contains("PostingsFileIndex"),
+      "the healed postings must serve from the manifest they were built with")
+    assert(rows(healed) == want)
+
+    val packed = tempDir("graft_swap_p").resolve("p").toString
+    Similarity.saveIvfPostingsPacked(postings, packed, cellsPerPack = 4)
+    crashInSwap(packed)
+    val healedPacked = Similarity.readPackedPostings(spark, packed)
+    assert(plan(healedPacked).contains("ManifestFileIndex"))
+    assert(rows(healedPacked) == want)
+
+    val exact = tempDir("graft_swap_x").resolve("p").toString
+    graft.operators.Dedup.saveExactIndex(
+      graft.operators.Dedup.exactHashIndex(Tables.load(spark, sf0001,
+        "documents")), exact, files = 2)
+    val exWant = graft.operators.Dedup.readExactIndex(spark, exact)
+      .as[String].collect().toSet
+    crashInSwap(exact)
+    val healedExact = graft.operators.Dedup.readExactIndex(spark, exact)
+    assert(plan(healedExact).contains("ManifestFileIndex"))
+    assert(healedExact.as[String].collect().toSet == exWant)
   }
 
   test("packed postings layout: rows ≡ classic, pack-pruned serve, ~packs files") {

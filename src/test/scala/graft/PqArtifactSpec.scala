@@ -8,7 +8,7 @@ import graft.functions.VectorOps._
 import graft.operators.{MaintenanceProtocol, PostingsCodec, PostingsManifest, Similarity}
 import graft.operators.CoarseQuantizer.Flat
 import graft.operators.Similarity.MaintenanceMode
-import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace, Retained}
+import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, Retained}
 import graft.operators.Similarity.PostingsSource
 
 /** The IVF postings artifact under the PQ codec: codebook sidecar
@@ -90,11 +90,13 @@ class PqArtifactSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("checksum"))
   }
 
-  /** Build over an 80% seed, append the two 10% batches and replay the
-    * first under `mode`, then `compact`: the artifact must land exactly
-    * the from-scratch coded build, manifest clean, one live file per
-    * cell, the binding cap held. */
-  private def lifecycle(mode: MaintenanceMode, compact: String => Unit): Unit = {
+  /** Build over an 80% seed (its manifest deleted under `adopt`), append
+    * the two 10% batches and replay the first under `mode`, then
+    * `compact`: the artifact must land exactly the from-scratch coded
+    * build, manifest clean, one live file per cell, the binding cap
+    * held. */
+  private def lifecycle(mode: MaintenanceMode, compact: String => Unit,
+      adopt: Boolean = false): Unit = {
     val e = embTable
     val cents = centArr(e, 8)
     val codec = pqCodec(e, cents)
@@ -106,6 +108,8 @@ class PqArtifactSpec extends AnyFunSuite with SparkSpec {
     val path = tmp("graft_pq_life")
     Similarity.saveIvfPostings(
       Similarity.ivfPostings(seed, Flat(cents), cap, codec), path, codec)
+    if (adopt) MaintenanceProtocol.fsOf(spark, path)
+      .delete(PostingsManifest.manifestDir(path), false)
     Similarity.appendIvfPostings(spark, path, Flat(cents), b1, mode)
     Similarity.appendIvfPostings(spark, path, Flat(cents), b2, mode)
     Similarity.appendIvfPostings(spark, path, Flat(cents), b1, mode) // replay
@@ -135,11 +139,18 @@ class PqArtifactSpec extends AnyFunSuite with SparkSpec {
   // the recap modes read old rows through the codec's data schema: a
   // float schema left on any recap route fails these
   Seq[(String, MaintenanceMode)]("retained" -> Retained,
-      "in-place" -> InPlace, "auto" -> Auto()).foreach { case (name, mode) =>
+      "auto" -> Auto()).foreach { case (name, mode) =>
     test(s"lifecycle under $name appends + replay + retained compaction " +
         "lands exactly the from-scratch coded build") {
       lifecycle(mode, Similarity.compactIvfPostingsRetained(spark, _))
     }
+  }
+
+  test("lifecycle under retained appends that adopt a manifest-less " +
+      "artifact + replay + retained compaction lands exactly the " +
+      "from-scratch coded build") {
+    lifecycle(Retained, Similarity.compactIvfPostingsRetained(spark, _),
+      adopt = true)
   }
 
   test("serve from the persisted artifact equals the transient " +

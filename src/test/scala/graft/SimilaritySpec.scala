@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.IvfAssignKernel
-import graft.operators.{CoarseQuantizer, PostingsCodec, Similarity}
+import graft.operators.{CoarseQuantizer, PostingsCodec, PostingsManifest,
+  Similarity}
 import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
-import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, InPlace}
+import graft.operators.Similarity.MaintenanceMode.{Auto, Fragment, Retained}
 import graft.operators.Similarity.PostingsSource
 
 class SimilaritySpec extends AnyFunSuite with SparkSpec {
@@ -328,49 +329,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       "polish is not run-deterministic")
   }
 
-  test("grouped index artifact: fit → save → load serves identical top-k") {
-    val emb = ScaleData.clusteredEmbeddings(spark, 2000, clusters = 20,
-      spread = 0.35)
-    val gcs = Similarity.fitIvfHierarchical(emb, numGroups = 4,
-      cellsPerGroup = 4, trainFraction = 0.5)
-    val path = tempDir("graft_ivf_grouped").resolve("index").toString
-    Similarity.saveIvfGrouped(spark, gcs, path)
-    val loaded = Similarity.loadIvfGrouped(spark, path)
-    assert(loaded.flat.cents.map(_.toSeq).toSeq ==
-      gcs.flat.cents.map(_.toSeq).toSeq)
-    assert(loaded.gCents.map(_.toSeq).toSeq == gcs.gCents.map(_.toSeq).toSeq)
-    assert(loaded.members.map(_.toSeq).toSeq == gcs.members.map(_.toSeq).toSeq)
-    assert(loaded.flat.cn2.toSeq == gcs.flat.cn2.toSeq &&
-      loaded.gn2.toSeq == gcs.gn2.toSeq,
-      "recomputed self-dots drifted from the fitted ones")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Double, Int)].collect().toSet
-    val served = rows(Similarity.ivfTopKQuantized(emb, TwoLevel(loaded, 2),
-      probes = 2, k = 3))
-    assert(served == rows(Similarity.ivfTopKQuantized(emb, TwoLevel(gcs, 2),
-      probes = 2, k = 3)),
-      "restored grouped index serves differently")
-  }
-
-  test("IVF index artifact: fit → save → load serves identical top-k") {
-    val emb = Tables.load(spark, sf0001, "embeddings")
-    val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
-      trainFraction = 0.5)
-    val inMemory = Similarity.ivfTopKWithCentroids(emb,
-      Similarity.centroidTable(spark, model), probes = 4, k = 3)
-    val path = tempDir("graft_ivf_idx").resolve("index").toString
-    Similarity.saveIvfIndex(model, path)
-    val served = Similarity.ivfTopKWithCentroids(
-      emb, Similarity.centroidTable(spark, Similarity.loadIvfIndex(path)),
-      probes = 4, k = 3)
-    // the restored index must serve bit-identical results — centroids
-    // round-trip exactly (parquet doubles), so assignment, probing, and
-    // ranking can't drift between the fit session and a later serving job
-    assert(inMemory.exceptAll(served).count() === 0)
-    assert(served.exceptAll(inMemory).count() === 0)
-    assert(served.count() > 0)
-  }
-
   test("IVF postings artifact: build → parquet → serve equals the model path") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
@@ -561,7 +519,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(rebuilt.count() < Similarity.ivfPostings(emb, Flat(model)).count())
   }
 
-  test("in-place postings append rewrites only touched cell directories") {
+  test("retained postings append writes only touched cell directories") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 32, seed = 42L,
       trainFraction = 0.5)
@@ -586,24 +544,24 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .map(f => (f.getPath.getName, f.getModificationTime)).toSet
     val before = listing()
 
-    Similarity.appendIvfPostings(spark, path, Flat(model), batch, InPlace)
+    Similarity.appendIvfPostings(spark, path, Flat(model), batch, Retained)
     val want = Similarity.appendToIvfPostings(oldPostings, Flat(model), batch)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(spark.read.parquet(path)) == rows(want))
+    assert(rows(Similarity.readPostings(spark, path)) == rows(want))
     assert(listing() == before,
       "an untouched cell's directory must not be rewritten")
     // crash-replay convergence: the same batch again changes nothing
-    Similarity.appendIvfPostings(spark, path, Flat(model), batch, InPlace)
-    assert(rows(spark.read.parquet(path)) == rows(want))
+    Similarity.appendIvfPostings(spark, path, Flat(model), batch, Retained)
+    assert(rows(Similarity.readPostings(spark, path)) == rows(want))
   }
 
-  test("in-place appends preserve the 1-file-per-cell layout") {
-    // the recap route repartitions by cell under a dynamic partition
-    // overwrite, so touched cells are REPLACED with one file — the
-    // artifact never fragments under it and needs no compaction (that
-    // is the fragment route's debt, tested below)
+  test("retained appends keep one live file per cell") {
+    // the recap folds each touched cell to one new file and retires the
+    // one it replaces, so the live artifact never fragments under it and
+    // needs no compaction (that is the fragment route's debt, tested
+    // below)
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 16, seed = 42L,
       trainFraction = 0.5)
@@ -612,17 +570,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       Similarity.ivfPostings(emb.filter($"vec_id" % 4 === 0), Flat(model)), path)
     (1 to 3).foreach { i =>
       Similarity.appendIvfPostings(spark, path, Flat(model),
-        emb.filter($"vec_id" % 4 === i), InPlace)
+        emb.filter($"vec_id" % 4 === i), Retained)
     }
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val counts = fs.listStatus(hp)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell="))
-      .map(d => d.getPath.getName -> fs.listStatus(d.getPath)
-        .count(f => f.isFile && f.getPath.getName.startsWith("part-")))
-      .filter(_._2 != 1)
-    assert(counts.isEmpty,
-      s"cells fragmented under in-place appends: ${counts.toSeq}")
+    val live = PostingsManifest.readClean(spark, path)
+      .getOrElse(fail("retained appends must leave a clean manifest"))
+      .perCellFiles.filter(_._2 != 1)
+    assert(live.isEmpty,
+      s"cells fragmented under retained appends: ${live.toSeq}")
   }
 
   test("fragment appends + compaction equal a from-scratch rebuild") {
@@ -708,20 +662,20 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     Similarity.saveIvfPostings(
       Similarity.ivfPostings(old, TwoLevel(gcs, gp), cellCap = 16), path)
     Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp),
-      batch, InPlace)
-    assert(rows(spark.read.parquet(path)) ==
+      batch, Retained)
+    assert(rows(Similarity.readPostings(spark, path)) ==
       rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gp), cellCap = 16)),
       "grouped append diverged from the two-level rebuild")
     // replay converges (recap dedups on (cell, cand_id))
     Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp),
-      batch, InPlace)
-    assert(rows(spark.read.parquet(path)) ==
+      batch, Retained)
+    assert(rows(Similarity.readPostings(spark, path)) ==
       rows(Similarity.ivfPostings(emb, TwoLevel(gcs, gp), cellCap = 16)))
 
     // one assignment law per artifact life: gp mismatch rejected
     val eGp = intercept[IllegalArgumentException] {
       Similarity.appendIvfPostings(spark, path, TwoLevel(gcs, gp + 1),
-        batch, InPlace)
+        batch, Retained)
     }
     assert(eGp.getMessage.contains("one assignment law"), eGp.getMessage)
     // exact-built artifacts accept grouped appends only degenerately,
@@ -731,7 +685,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       Similarity.ivfPostings(old, Flat(gcs.flat.cents)), exactPath)
     val eShallow = intercept[IllegalArgumentException] {
       Similarity.appendIvfPostings(spark, exactPath, TwoLevel(gcs, gp),
-        batch, InPlace)
+        batch, Retained)
     }
     assert(eShallow.getMessage.contains("groupProbes >= numGroups"),
       eShallow.getMessage)

@@ -7,7 +7,7 @@ import graft.jobs.EventQueries
 import graft.operators.Dedup
 import graft.streaming.{CorpusIngest, EventsStream}
 import graft.operators.CoarseQuantizer.{Flat, TwoLevel}
-import graft.operators.Similarity.MaintenanceMode.{Fragment, InPlace, Retained}
+import graft.operators.Similarity.MaintenanceMode.{Fragment, Retained}
 import graft.operators.Similarity.PostingsSource
 
 /** One Kafka record as the connector's v2 source would surface it —
@@ -896,7 +896,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     val ms = MemoryStream[EmbRow](spark)
     val q = CorpusIngest.embeddingIngest(ms.toDF(), Flat(model), path,
-      InPlace).start()
+      Retained).start()
     try {
       ms.addData(b1); q.processAllAvailable()
       ms.addData(b2); q.processAllAvailable()
@@ -908,12 +908,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(spark.read.parquet(path)) == rows(want),
+    assert(rows(Similarity.readPostings(spark, path)) == rows(want),
       "streamed postings must equal sequential batch appends, replay absorbed")
     // the rolled-forward artifact still serves
     val served = Similarity.ivfTopKFromPostings(
       emb.limit(20), Flat(model),
-      PostingsSource.Frame(spark.read.parquet(path)), probes = 4, k = 3)
+      PostingsSource.Frame(Similarity.readPostings(spark, path)), probes = 4,
+      k = 3)
     assert(served.count() > 0)
   }
 
@@ -943,7 +944,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     val ms = MemoryStream[EmbRow](spark)
     val q = CorpusIngest.embeddingIngest(ms.toDF(), TwoLevel(gcs, gp), path,
-      InPlace)
+      Retained)
       .start()
     try {
       ms.addData(b1); q.processAllAvailable()
@@ -955,18 +956,19 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     Similarity.saveIvfPostings(
       Similarity.ivfPostings(seed, TwoLevel(gcs, gp), cellCap = 16), batchPath)
     Similarity.appendIvfPostings(spark, batchPath, TwoLevel(gcs, gp),
-      b1.toDF(), InPlace)
+      b1.toDF(), Retained)
     Similarity.appendIvfPostings(spark, batchPath, TwoLevel(gcs, gp),
-      b2.toDF(), InPlace)
+      b2.toDF(), Retained)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"cell", $"cand_id", $"d2").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(spark.read.parquet(path)) ==
-      rows(spark.read.parquet(batchPath)),
+    assert(rows(Similarity.readPostings(spark, path)) ==
+      rows(Similarity.readPostings(spark, batchPath)),
       "streamed grouped postings must equal sequential batch appends")
     // and the artifact serves through the grouped route
     val served = Similarity.ivfTopKFromPostings(emb.limit(20), TwoLevel(gcs, gp),
-      PostingsSource.Frame(spark.read.parquet(path)), probes = 4, k = 3)
+      PostingsSource.Frame(Similarity.readPostings(spark, path)), probes = 4,
+      k = 3)
     assert(served.count() > 0)
   }
 
@@ -978,7 +980,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     // the SERVE-WHILE-INGEST seam: per-trigger retained recap — a
     // reader's snapshot survives the trigger that lands after it (one
-    // epoch of retention), convergence matches the in-place seam
+    // epoch of retention), and the stream converges to the rebuild
     val emb = Tables.load(spark, sf0001, "embeddings")
     val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
       trainFraction = 0.5)

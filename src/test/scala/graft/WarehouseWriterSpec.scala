@@ -228,15 +228,26 @@ class WarehouseWriterSpec extends AnyFunSuite with SparkSpec {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def readIds() = spark.read.parquet(dir).select($"id").as[Long].collect().toSet
 
-    WarehouseWriter.overwriteParquetAtomic(
-      spark.range(3).select($"id"), dir)          // target absent → plain install
+    WarehouseWriter.overwriteParquetAtomic(spark, dir)(
+      spark.range(3).select($"id").write.parquet(_)) // target absent → plain install
     assert(readIds() == Set(0L, 1L, 2L))
-    WarehouseWriter.overwriteParquetAtomic(
-      spark.range(10, 14).select($"id"), dir)     // target present → swap
+    WarehouseWriter.overwriteParquetAtomic(spark, dir)(
+      spark.range(10, 14).select($"id").write.parquet(_)) // target present → swap
     assert(readIds() == Set(10L, 11L, 12L, 13L))
     // no stranded tmp in the healthy path
     val tmpPath = new org.apache.hadoop.fs.Path(hp.getParent, s".${hp.getName}.swap-tmp")
     assert(!fs.exists(tmpPath))
+    // a write that fails after landing data leaves the target as it
+    // was, and neither its stage nor a tmp the next read could install
+    intercept[IllegalStateException] {
+      WarehouseWriter.overwriteParquetAtomic(spark, dir) { t =>
+        spark.range(5).select($"id").write.parquet(t)
+        throw new IllegalStateException("sidecar write failed")
+      }
+    }
+    assert(readIds() == Set(10L, 11L, 12L, 13L))
+    assert(!fs.exists(tmpPath) && fs.listStatus(hp.getParent)
+      .forall(!_.getPath.getName.contains("swap")))
 
     // torn swap: new contents fully committed at the tmp path, target
     // already deleted, crash before the install rename
