@@ -84,10 +84,15 @@ object GraftColumnBridge {
     * `Dataset.unpersist` only talks to the CacheManager, so checkpoint
     * blocks otherwise live until the GC-driven ContextCleaner notices
     * the RDD is unreachable. Only call this once nothing can re-read
-    * the frame — a localCheckpoint has no lineage to recompute from. */
+    * the frame — a localCheckpoint has no lineage to recompute from.
+    * The blocks go through `SparkContext.unpersistRDD` (private[spark]):
+    * `RDD.unpersist` would do the same and also log, on every call, a
+    * WARN that the locally checkpointed lineage is truncated — which the
+    * caller asked for. */
   def unpersistLocalCheckpoint(df: Dataset[Row]): Unit =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD =>
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 

@@ -1062,6 +1062,38 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     graft.operators.MaintenanceProtocol.clearDirty(spark, path)
   }
 
+  test("minhash compaction folds exactly what a whole-index distinct " +
+      "folds: no repeat, a replayed delta, a reused doc_id") {
+    val seed = docs.filter($"doc_id" % 2 === 0)
+    val batch = docs.filter($"doc_id" % 2 === 1)
+    def index(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashBandIndex(d, 5, 32, 8).count()
+    def artifact(name: String, deltas: org.apache.spark.sql.DataFrame*) = {
+      val path = tempDir(name).resolve("index").toString
+      Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path)
+      deltas.foreach(Dedup.appendMinhashIndexDelta(spark, path, _))
+      path
+    }
+
+    // no doc_id repeats: the narrow path keeps every row
+    val (rows, extra, missing) = DedupSpec.compactAgainstDistinct(spark,
+      artifact("graft_mh_fold_norepeat", batch), files = 2)
+    assert((rows, extra, missing) == ((index(seed) + index(batch), 0L, 0L)))
+
+    // a replayed delta: its rows fold back to one copy each
+    val (rr, re, rm) = DedupSpec.compactAgainstDistinct(spark,
+      artifact("graft_mh_fold_replay", batch, batch), files = 2)
+    assert((rr, re, rm) == ((index(seed) + index(batch), 0L, 0L)))
+
+    // a doc_id reused with different text is no duplicate: both rows stay
+    val reused = seed.limit(5).withColumn("text",
+      concat($"text", lit(" revised with some new words")))
+    val (ur, ue, um) = DedupSpec.compactAgainstDistinct(spark,
+      artifact("graft_mh_fold_reuse", reused), files = 2)
+    assert(index(reused) == 5L)
+    assert((ur, ue, um) == ((index(seed) + 5L, 0L, 0L)))
+  }
+
   test("incremental contamination screen via a persisted winnow index matches q47") {
     import java.nio.file.Files
     // q47's decontamination pass, incrementalized: index the train split
@@ -1322,5 +1354,25 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // ~99% shingle overlap ⇒ a few token swaps ⇒ small hamming; allow slack
     assert(hammings.max <= 16, s"hammings: ${hammings.mkString(",")}")
     assert(hammings.count(_ <= 7) >= nearDup.length / 2)
+  }
+}
+
+object DedupSpec {
+
+  /** Compacts the minhash artifact at `path` and sets its rows beside
+    * the whole-index fold the compaction replaced,
+    * `repartition(files, doc_id).distinct()` over the same stored rows:
+    * (rows compacted, rows only the compaction kept, rows only the
+    * whole-index fold kept), the last two as multisets (`exceptAll`). */
+  def compactAgainstDistinct(spark: org.apache.spark.sql.SparkSession,
+      path: String, files: Int): (Long, Long, Long) = {
+    spark.catalog.refreshByPath(path)
+    val whole = spark.read.parquet(path)
+      .repartition(files, col("doc_id")).distinct()
+    val want = spark.createDataFrame(whole.collectAsList(), whole.schema)
+    Dedup.compactMinhashIndex(spark, path, files)
+    val got = Dedup.readMinhashIndex(spark, path)
+      .select(want.columns.map(col): _*)
+    (got.count(), got.exceptAll(want).count(), want.exceptAll(got).count())
   }
 }

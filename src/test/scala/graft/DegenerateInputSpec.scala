@@ -122,6 +122,41 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
       Dedup.winnowIndex(batch, 3, 4, "md5_60").count())
   }
 
+  test("two identical null-doc_id rows in a minhash artifact compact to " +
+      "one, as a whole-index distinct folds them") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val orphan = docs.limit(1).select(lit(null).cast("long").as("doc_id"),
+      $"text")
+    val mh = tempDir("graft_degen_mh_null").resolve("index").toString
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(
+      docs.filter($"doc_id" < 40).select($"doc_id", $"text")
+        .unionByName(orphan), 5, 32, 8), mh)
+    Dedup.appendMinhashIndexDelta(spark, mh, orphan) // a replayed orphan
+    def orphans = Dedup.readMinhashIndex(spark, mh)
+      .filter($"doc_id".isNull).count()
+    assert(orphans == 2L)
+    // a plain `===` split would pass both null-id rows through unfolded
+    val (_, extra, missing) =
+      DedupSpec.compactAgainstDistinct(spark, mh, files = 2)
+    assert((extra, missing) == ((0L, 0L)))
+    assert(orphans == 1L)
+  }
+
+  test("the legal empty minhash artifact compacts to a legal empty artifact") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val batch = docs.filter($"doc_id" % 5 === 0)
+    val mh = tempDir("graft_degen_mh_compact").resolve("index").toString
+    Dedup.saveMinhashIndex(Dedup.minhashBandIndex(docs.limit(0), 5, 32, 8), mh)
+    assert(DedupSpec.compactAgainstDistinct(spark, mh, files = 2) ==
+      ((0L, 0L, 0L)))
+    assert(graft.operators.ArtifactManifest
+      .readClean(spark, mh, "minhash_band_index").exists(_.totalRows == 0L))
+    // still an artifact: its params serve appends
+    Dedup.appendMinhashIndexDelta(spark, mh, batch)
+    assert(Dedup.readMinhashIndex(spark, mh).count() ==
+      Dedup.minhashBandIndex(batch, 5, 32, 8).count())
+  }
+
   test("bloom-screened exact dedup: empty and null-text batches, both routes") {
     val docs = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text")

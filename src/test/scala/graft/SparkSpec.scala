@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -53,13 +53,35 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
     * a query's shuffle stages from its own thread pool, so their first
     * stages carry that pool's frame (`$anonfun$withThreadLocalCaptured$2
     * at CompletableFuture.java:1768`); the execution's start event keeps
-    * the call site of the action that planned it. The listener bus
-    * delivers events in order, so once a marker job started afterwards
-    * has been seen, every job `body` started has been counted. */
+    * the call site of the action that planned it. */
   def jobsDuring(body: => Unit): Seq[String] = {
+    val seen = recordDuring(body)
+    seen.jobs.map(j => j.execution.flatMap(seen.sites.get).getOrElse(j.stage))
+  }
+
+  /** Shuffle bytes written (`shuffleWriteMetrics.bytesWritten`) by the
+    * tasks of the jobs `body` starts. */
+  def shuffleWriteBytesDuring(body: => Unit): Long = {
+    val seen = recordDuring(body)
+    val stages = seen.jobs.flatMap(_.stageIds).toSet
+    seen.shuffleWrite.collect { case (s, b) if stages(s) => b }.sum
+  }
+
+  private case class Job(execution: Option[String], stage: String,
+      stageIds: Seq[Int])
+  private case class Recorded(jobs: Seq[Job], sites: Map[String, String],
+      shuffleWrite: Map[Int, Long])
+
+  /** What the listener bus delivers while `body` runs: the jobs it
+    * starts, the call site of each SQL execution, and the shuffle bytes
+    * each stage's tasks write. The bus delivers events in order, so
+    * once a marker job started afterwards has been seen, every job
+    * `body` started, and every task it ran, has been counted. */
+  private def recordDuring(body: => Unit): Recorded = {
     val marker = "spark-spec-jobs-marker"
     val sites = new ConcurrentHashMap[String, String]()
-    val started = new ConcurrentLinkedQueue[(String, Option[String], String)]()
+    val started = new ConcurrentLinkedQueue[(String, Job)]()
+    val written = new ConcurrentHashMap[Int, java.lang.Long]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
@@ -69,8 +91,14 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         started.add((prop("spark.job.description").getOrElse(""),
-          prop(SQLExecution.EXECUTION_ID_KEY), e.stageInfos.headOption.fold("")(_.name)))
+          Job(prop(SQLExecution.EXECUTION_ID_KEY),
+            e.stageInfos.headOption.fold("")(_.name), e.stageIds)))
       }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          written.merge(e.stageId, m.shuffleWriteMetrics.bytesWritten,
+            (a, b) => a + b)
+        }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -83,9 +111,9 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
         Thread.sleep(10)
       assert(started.asScala.exists(_._1 == marker),
         "the listener bus never delivered the marker job")
-      started.asScala.toSeq.filter(_._1 != marker).map { case (_, execution, stage) =>
-        execution.flatMap(id => Option(sites.get(id))).getOrElse(stage)
-      }
+      Recorded(started.asScala.toSeq.filter(_._1 != marker).map(_._2),
+        sites.asScala.toMap,
+        written.asScala.map { case (s, b) => (s, b.longValue) }.toMap)
     } finally sc.removeSparkListener(listener)
   }
 

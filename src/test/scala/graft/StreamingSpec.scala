@@ -738,6 +738,77 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "rolled-forward index must equal the batch-side union index")
   }
 
+  test("releasing a localCheckpoint frees its blocks without the " +
+      "truncated-lineage WARN: retained recap and streaming sink") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    import graft.operators.Similarity
+    import spark.implicits._
+
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val model = Similarity.fitIvfIndex(emb, numCells = 8, seed = 42L,
+      trainFraction = 0.5)
+    val ivf = tempDir("graft_ckpt_ivf").toString
+    Similarity.saveIvfPostings(Similarity.ivfPostings(
+      emb.filter($"vec_id" % 2 === 0), Flat(model), cellCap = 16), ivf)
+    val all = Tables.load(spark, sf0001, "documents").select($"doc_id", $"text")
+    val idxPath = tempDir("graft_ckpt_idx").toString
+    Dedup.minhashBandIndex(all.filter($"doc_id" < 250), 5, 32, 8)
+      .write.mode("overwrite").parquet(idxPath)
+
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-ckpt-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rddLog = ctx.getConfiguration
+      .getLoggerConfig("org.apache.spark.rdd.MapPartitionsRDD")
+    // the RDDs a localCheckpoint persisted, by the call site they carry
+    val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.flatMap(_.rddInfos).foreach { r =>
+          if (r.callSite.startsWith("localCheckpoint at")) checkpointed.add(r.id)
+        }
+    }
+    val sc = spark.sparkContext
+    rddLog.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    sc.addSparkListener(listener)
+    try {
+      Similarity.appendIvfPostings(spark, ivf, Flat(model),
+        emb.filter($"vec_id" % 2 === 1), Retained)
+      val ms = MemoryStream[DocRow](spark)
+      val q = CorpusIngest.parquetDedupIngest(ms.toDF(), idxPath,
+        tempDir("graft_ckpt_corpus").resolve("kept").toString,
+        threshold = 0.6).start()
+      try {
+        ms.addData(all.filter($"doc_id" >= 250).as[DocRow].collect().toSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+      jobsDuring(()) // drains the listener bus
+    } finally {
+      sc.removeSparkListener(listener)
+      rddLog.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val truncated = logged.asScala.filter(_.contains("lineage has been truncated"))
+    assert(truncated.isEmpty, truncated.mkString("\n"))
+    val ids = checkpointed.asScala.toSet
+    assert(ids.size >= 2, s"expected the recap's and the sink's checkpoints: $ids")
+    assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)),
+      s"checkpoint blocks still persisted: ${ids.filter(sc.getPersistentRDDs.contains)}")
+  }
+
   test("streaming exact dedup ingest rolls corpus, bloom, and index forward") {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
