@@ -937,44 +937,34 @@ object Dedup {
 
   /** Fold a delta-appended [[saveMinhashIndex]] directory
     * ([[FlatIndex.compact]]): whole-row distinct (replayed deltas are
-    * exact duplicates, and identical rows share a doc_id), exchanging
-    * only the rows that could be duplicates. A pre-pass reads the
-    * `doc_id` column alone and collects the doc_ids that occur more
-    * than once: a count over a doc_id window, whose one exchange
+    * exact duplicates, and identical rows share a doc_id). A pre-pass
+    * reads the `doc_id` column alone and asks whether any doc_id occurs
+    * more than once: a count over a doc_id window, whose one exchange
     * carries the 8-byte keys alone (a groupBy count's partial counts
     * would ride beside them, and a map partition rarely holds a doc_id
-    * twice, so partial aggregation folds nothing).
+    * twice, so partial aggregation folds nothing). Only the answer
+    * reaches the driver (`isEmpty`), never the ids.
     *  - None repeats (every month without a replay): the fold is a
     *    narrow `coalesce(files)`, and no exchange moves a signature row.
-    *  - Some repeat: only their rows go through the distinct, split off
-    *    by a broadcast semi join on the collected ids (the driver holds
-    *    the repeated ids alone); every other row passes through narrow.
-    *    The split is null-safe (`<=>`), because the distinct folds two
-    *    identical null-id rows into one.
+    *    The compacted files follow no doc_id layout (the band screen
+    *    joins on exploded band keys; nothing prunes on doc_id), and
+    *    `files` is an upper bound: a narrow coalesce writes no more
+    *    files than its input has partitions.
+    *  - Some repeat (a replayed delta): the whole index shuffles ONCE —
+    *    hash on `doc_id` into `files` partitions, which the distinct
+    *    rides — so the compacted files are laid out by doc_id hash.
     *
-    * The result is the multiset a `distinct()` of the whole index
-    * gives: a doc_id reused with different text keeps both rows. The
-    * compacted files follow no doc_id layout (the band screen joins on
-    * exploded band keys; nothing prunes on doc_id), and `files` is an
-    * upper bound: a narrow coalesce writes no more files than its input
-    * has partitions. Returns (files before, files after). */
+    * A doc_id reused with different text keeps both rows. Returns
+    * (files before, files after). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, files: Int = 8): (Int, Int) = {
     val (before, after, _) = FlatIndex.Minhash.compact(spark, path) {
       (stored, _, _) =>
-        val ids = stored.select(col("doc_id"),
+        val repeats = stored.select(
             count(lit(1)).over(Window.partitionBy("doc_id")).as("n"))
-          .filter(col("n") > 1).select("doc_id").distinct()
-        val repeated = ids.collect()
-        if (repeated.isEmpty) stored.coalesce(files)
-        else {
-          val dup = broadcast(spark.createDataFrame(
-            java.util.Arrays.asList(repeated: _*), ids.schema))
-          val on = stored("doc_id") <=> dup("doc_id")
-          stored.join(dup, on, "left_anti")
-            .unionByName(stored.join(dup, on, "left_semi").distinct())
-            .coalesce(files)
-        }
+          .filter(col("n") > 1)
+        if (repeats.isEmpty) stored.coalesce(files)
+        else stored.repartition(files, col("doc_id")).distinct()
     }
     (before, after)
   }

@@ -135,7 +135,8 @@ class DegenerateInputSpec extends AnyFunSuite with SparkSpec {
     def orphans = Dedup.readMinhashIndex(spark, mh)
       .filter($"doc_id".isNull).count()
     assert(orphans == 2L)
-    // a plain `===` split would pass both null-id rows through unfolded
+    // the pre-pass's doc_id window holds both null-id rows as one key, so
+    // they take the distinct path, which folds them
     val (_, extra, missing) =
       DedupSpec.compactAgainstDistinct(spark, mh, files = 2)
     assert((extra, missing) == ((0L, 0L)))

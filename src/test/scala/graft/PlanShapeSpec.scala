@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -317,22 +316,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     * subtree prints its final plan first. Listener events arrive on the
     * bus asynchronously: a marker query's event, posted after every
     * write's, bounds the wait. */
-  private def writePlans(body: => Unit): Seq[String] =
-    writePlanTrees(body).map(_.toString)
-
-  /** [[writePlans]] as plan trees. */
-  private def writePlanTrees(body: => Unit): Seq[SparkPlan] = {
+  private def writePlans(body: => Unit): Seq[String] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var markerSeen = false
     val marker = s"write_plans_marker_${System.nanoTime()}"
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit = {
-        val p = qe.executedPlan
-        if (p.toString.contains("Execute InsertIntoHadoopFsRelationCommand"))
-          writes.add(p)
+        val p = qe.executedPlan.toString
+        if (p.contains("Execute InsertIntoHadoopFsRelationCommand")) writes.add(p)
         else if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
       }
       override def onFailure(funcName: String, qe: QueryExecution,
@@ -345,7 +339,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
       assert(markerSeen, "the listener bus never delivered the marker query")
-      writes.toArray(Array.empty[SparkPlan]).toSeq
+      writes.toArray(Array.empty[String]).toSeq
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -411,7 +405,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("minhash index compaction without a replay writes through no exchange") {
     import graft.operators.Dedup
     val (docs, seed, batch) = halves
-    val path = artifactPath("graft_minhash_compact_shape")
+    val path = artifactPath("graft_minhash_compact_narrow_shape")
     Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path)
     Dedup.appendMinhashIndexDelta(spark, path, batch)
     val plans = writePlans(Dedup.compactMinhashIndex(spark, path, files = 2))
@@ -423,32 +417,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       Dedup.minhashBandIndex(docs, 5, 32, 8).count())
   }
 
-  test("minhash index compaction with a replay shuffles only the rows of " +
-      "repeated doc_ids") {
+  test("minhash index compaction shuffles once, hashed on doc_id") {
     import graft.operators.Dedup
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val (docs, seed, batch) = halves
-    val path = artifactPath("graft_minhash_compact_replay_shape")
+    val path = artifactPath("graft_minhash_compact_shape")
     Dedup.saveMinhashIndex(Dedup.minhashBandIndex(seed, 5, 32, 8), path)
     Dedup.appendMinhashIndexDelta(spark, path, batch)
     Dedup.appendMinhashIndexDelta(spark, path, batch) // a replayed delta
-    val plans = writePlanTrees(
-      Dedup.compactMinhashIndex(spark, path, files = 2))
-    assert(plans.size == 1, s"compactMinhashIndex wrote ${plans.size} times")
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    // the exchanges that move signature rows, and whether each sits over
-    // the semi join that picks the repeated doc_ids' rows
-    val fat = helper.collect(plans.head) {
-      case e: Exchange if e.output.exists(a => a.name == "sh" || a.name == "bk") =>
-        helper.find(e.child) {
-          case j: BaseJoinExec => j.joinType == LeftSemi
-          case _ => false
-        }.isDefined
-    }
-    assert(fat.nonEmpty && fat.forall(identity),
-      s"an exchange moves rows of unrepeated doc_ids:\n${plans.head}")
+    assertOneLayoutExchange("compactMinhashIndex",
+      writePlans(Dedup.compactMinhashIndex(spark, path, files = 2)),
+      "hashpartitioning(doc_id#")
     assert(Dedup.readMinhashIndex(spark, path).count() ==
       Dedup.minhashBandIndex(docs, 5, 32, 8).count())
   }
